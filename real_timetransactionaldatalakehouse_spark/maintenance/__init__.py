@@ -2,10 +2,11 @@
 delete, table stats — the engine re-platforming of the reference's
 Iceberg procedures (``compact_cold_data.py``).
 
-Format-free design: on plain Parquet, compaction is a predicate-scoped
-read -> repartition-to-target-file-size -> swap rewrite, preserving
-row counts (the reference's invariant).  With Delta on the classpath
-these become ``OPTIMIZE``/``VACUUM``/``DELETE`` fast paths.
+Format-free design: compaction is a predicate-scoped read ->
+repartition-to-target-file-size -> swap rewrite, preserving row counts
+(the reference's invariant).  On a ``tablefmt`` versioned table the
+swap is a snapshot commit, so a rewrite also folds any merge-on-read
+chain back to a full snapshot.
 """
 
 from __future__ import annotations
@@ -85,16 +86,27 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]
     return out
 
 
+def _live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """The table's live parquet files: on a versioned table only the
+    dirs its current snapshot resolves through
+    (``tablefmt.snapshot_dirs`` — the MoR deltas and their bases, not
+    every retained version or orphan ``.tmp`` dir)."""
+    if not tablefmt.is_versioned(path):
+        return _list_parquet_files(spark, path)
+    return [
+        f for d in tablefmt.snapshot_dirs(path) for f in _list_parquet_files(spark, d)
+    ]
+
+
 def table_stats(spark: SparkSession, path: str) -> DataFrame:
     """A10: file-level stats (count / bytes / avg file size) — the
     engine-maintained analogue of the reference's ``tbl$files``
     metadata-table dashboards (lakehouse_monitor.json:117,314).
 
     Versioned tables report the CURRENT snapshot only (matching
-    ``tbl$files``, which lists the live snapshot's files)."""
-    if tablefmt.is_versioned(path):
-        path = tablefmt.version_path(path, tablefmt.current_version(path))
-    files = _list_parquet_files(spark, path)
+    ``tbl$files``, which lists the live snapshot's data and delete
+    files)."""
+    files = _live_files(spark, path)
     df = spark.createDataFrame(files or [("", 0)], "file string, bytes long")
     if not files:
         df = df.filter(F.col("file") != "")
@@ -127,7 +139,7 @@ def compact(
     cold = df.filter(cold_pred) if cold_pred is not None else df
     hot = df.filter(~cold_pred) if cold_pred is not None else None
 
-    total_bytes = sum(b for _f, b in _list_parquet_files(spark, path))
+    total_bytes = sum(b for _f, b in _live_files(spark, path))
     # Size the rewrite off the COLD subset's bytes, not the whole
     # table's: only the cold rows land in these files, so sizing off
     # total_bytes made a half-cold table's rewritten files ~half the
@@ -218,7 +230,6 @@ def run_maintenance(
     expire_older_than_s: float | None = None,
     ttl: dict[str, tuple[str, object]] | None = None,
     zorder: dict[str, list[str]] | None = None,
-    mor_flatten_depth: int | None = None,
 ) -> dict:
     """M5 analogue: the reference's hourly maintenance run
     (``dags/maintenance_dag.py:13-31`` scheduling
@@ -241,19 +252,13 @@ def run_maintenance(
     (reference: 7-day gold TTL, DataModel_SchemaDesign.md:136).
     ``zorder`` maps table name -> column list; those tables rewrite
     through :func:`zorder_compact` (multi-column data-skipping layout)
-    instead of plain bin-packing.
-    ``mor_flatten_depth`` makes the merge-on-read flatten trigger
-    EXPLICIT: a versioned table whose current snapshot resolves
-    through that many or more MoR commits (``tablefmt.mor_chain_depth``)
-    is flattened FIRST (``tablefmt.flatten_mor`` — one full rewrite
-    that resets the chain; reads then pay zero merge anti-joins and
-    expiry can retire the delta versions).  Shallower chains skip the
-    rewrite — the write-amplification control: each skipped run is a
-    full table write saved (default ``None`` keeps the implicit
-    behavior, where compaction's rewrite flattens as a side effect;
-    ``tablefmt.MOR_MAX_CHAIN`` is the recommended trigger).
+    instead of plain bin-packing.  Every versioned table is treated
+    alike: the rewrite commits a full snapshot, which also folds a
+    live merge-on-read chain to depth 0 so expiry can retire its delta
+    versions (writers keep the chain under ``tablefmt.MOR_MAX_CHAIN``
+    between runs).
 
-    Returns ``{table: {mor_flatten?, compact, expired, orphans, ttl}}``
+    Returns ``{table: {compact, expired, orphans, ttl}}``
     — each step's own report, so a scheduler can alert on any
     sub-step."""
     if tables is None:
@@ -265,29 +270,7 @@ def run_maintenance(
         meta = catalog.meta(name)
         path = meta["path"]
         r: dict = {}
-        skip_rewrite = False
-        if mor_flatten_depth is not None and meta.get("versioned"):
-            depth = tablefmt.mor_chain_depth(path)
-            if depth >= mor_flatten_depth:
-                v = tablefmt.flatten_mor(spark, path)
-                r["mor_flatten"] = {"chain_depth": depth, "new_version": v}
-                # the flatten IS this tick's full-table rewrite: falling
-                # through to compact/zorder would rewrite the table a
-                # SECOND time in the same tick (ADVICE r8) — in the
-                # feature whose purpose is write-amplification control.
-                # The freshly flattened snapshot gets bin-packed /
-                # z-ordered on a later tick, when its chain is clean.
-                skip_rewrite = True
-            elif depth > 0:
-                # a shallow live chain: skip this run's rewrite entirely
-                # (compact would flatten implicitly and pay the full
-                # write amplification the explicit trigger exists to
-                # avoid); the chain is re-checked next tick
-                skip_rewrite = True
-                r["mor_flatten"] = {"chain_depth": depth, "skipped": True}
-        if skip_rewrite:
-            pass
-        elif zorder and name in zorder:
+        if zorder and name in zorder:
             r["compact"] = zorder_compact(spark, path, zorder[name])
         else:
             r["compact"] = compact(
@@ -434,7 +417,7 @@ def zorder_compact(
                 F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * scale),
             )
         )
-    total_bytes = sum(b for _f, b in _list_parquet_files(spark, path))
+    total_bytes = sum(b for _f, b in _live_files(spark, path))
     n_files = max(1, round(total_bytes / target_file_bytes))
     keyed = df.withColumn("__z", zorder_key(quantized, bits))
     out = (

@@ -1183,10 +1183,16 @@ def _collapsed_graph(
     from pyspark.sql import Window
 
     w = Window.partitionBy("__fp")
+    # NULL text has no fingerprint: key it by its own id (a ':' never
+    # occurs in an md5 hex digest) so every NULL doc stays a singleton,
+    # as the module's NULL contract requires, instead of one exact-dup
+    # group of all NULL docs
+    fp = F.coalesce(
+        F.md5(F.col(text_col)),
+        F.concat(F.lit("null:"), F.col(id_col).cast("string")),
+    )
     memb = (
-        df.select(
-            F.md5(F.col(text_col)).alias("__fp"), F.col(id_col).alias("id")
-        )
+        df.select(fp.alias("__fp"), F.col(id_col).alias("id"))
         .select(
             "id",
             F.min("id").over(w).alias("__rep"),

@@ -10,11 +10,9 @@ join+coalesce plan:
     matched  -> full-outer join target<->updates
     columns  -> per-column coalesce (update wins; null update keeps old)
 
-which is exactly what a MoR engine materializes at read time.  When
-Delta is on the classpath (``delta_merge_available``), ``delta_merge``
-runs the same semantics through ``DeltaTable.merge`` — a metadata-
-commit MERGE that rewrites only matched files; this container ships no
-Delta jars, so the join+coalesce plan is the tested path.
+which is exactly what a MoR engine materializes at read time.  The
+output commits through ``tablefmt`` (a full snapshot, or a merge-on-
+read delta restricted to the touched keys).
 
 Scale: one shuffle on the merge key for the join; batch-scoped dedup
 shrinks the shuffled update side first (reference rationale
@@ -94,61 +92,6 @@ def latest_state(events: DataFrame, key_cols: list[str], order_col: str,
 
     filled = latest_non_null(events, key_cols, order_col, fill_cols, tiebreak_cols)
     return dedup_latest(filled, key_cols, order_col, tiebreak_cols)
-
-
-def delta_merge_available(spark) -> bool:
-    """Capability check for the Delta fast path (not in this container)."""
-    try:
-        spark._jvm.io.delta.tables.DeltaTable  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
-def delta_merge(
-    spark,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    order_col: str | None = None,
-    tiebreak_cols: list[str] | None = None,
-    update_cols: list[str] | None = None,
-) -> None:
-    """Delta-native MERGE with the same SCD1 semantics as
-    ``merge_upsert`` (reference ``streaming_job.py:137-154``): latest
-    update per key wins, matched rows take ``coalesce(update, target)``
-    on updatable columns, unmatched keys insert.
-
-    Runs only when Delta is on the classpath
-    (``delta_merge_available``); raises ``RuntimeError`` otherwise so
-    callers fall back to the join+coalesce plan explicitly.  At scale
-    this is the fast path: Delta rewrites only the files containing
-    matched keys instead of the whole table.
-    """
-    if not delta_merge_available(spark):
-        raise RuntimeError(
-            "Delta is not on the classpath; use merge_upsert (join+coalesce plan)"
-        )
-    from delta.tables import DeltaTable  # gated import
-
-    if order_col is not None:
-        updates = dedup_latest(updates, key_cols, order_col, tiebreak_cols)
-    data_cols = [c for c in updates.columns if c not in key_cols]
-    updatable = (
-        [c for c in data_cols if c in set(update_cols)]
-        if update_cols is not None
-        else data_cols
-    )
-    tgt = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.`{k}` = u.`{k}`" for k in key_cols)
-    set_expr = {c: f"coalesce(u.`{c}`, t.`{c}`)" for c in updatable}
-    (
-        tgt.alias("t")
-        .merge(updates.alias("u"), cond)
-        .whenMatchedUpdate(set=set_expr)
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
 
 
 def scd2_from_changes(

@@ -232,7 +232,6 @@ def dims_scd1_stream(
     update_cols: list[str] | None = None,
     available_now: bool = True,
     write_mode: str = "cow",
-    flatten_every: int | None = None,
 ):
     """Dims: SCD Type-1 upsert from a CDC envelope stream — the
     reference's stream_dims.py:59-98 foreachBatch MERGE, with the
@@ -254,11 +253,11 @@ def dims_scd1_stream(
       upsert frequency.  SCD1 semantics (keep-latest dedup,
       ``update_cols`` protection, null-coalesce to target values) are
       IDENTICAL: the delta rows are merge_upsert's output restricted
-      to touched keys, not raw updates.  ``flatten_every=N`` folds
-      the chain back to a full snapshot once N un-flattened MoR
-      commits accumulate — the compaction cadence that bounds
-      read-side merge joins, exactly as the reference's hourly
-      maintenance bounds Iceberg delete files.
+      to touched keys, not raw updates.  After each commit
+      ``tablefmt.fold_mor`` folds the chain back to a full snapshot
+      once it reaches ``tablefmt.MOR_MAX_CHAIN`` commits — the one
+      rule that bounds read-side merge joins, as the reference's
+      hourly maintenance bounds Iceberg delete files.
 
     Either way readers never see a partial table and a crash
     mid-write leaves the previous snapshot current; old snapshots
@@ -303,9 +302,7 @@ def dims_scd1_stream(
                 deduped, key_cols, update_cols=update_cols,
             )
             tablefmt.write_mor_upsert(delta, target_path, key_cols)
-            if (flatten_every is not None
-                    and tablefmt.mor_chain_depth(target_path) >= flatten_every):
-                tablefmt.flatten_mor(spark, target_path)
+            tablefmt.fold_mor(spark, target_path)
         finally:
             updates.unpersist()
 

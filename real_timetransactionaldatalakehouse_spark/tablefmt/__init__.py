@@ -36,9 +36,11 @@ pruning inside a version works as for any parquet dir.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -157,10 +159,10 @@ def _read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
     """Resolve a version to rows: full snapshots read directly; MoR
     versions recursively resolve their base, apply the equality-delete
     keys, and union the delta rows.  Chain depth = MoR commits since
-    the last full rewrite (``flatten_mor``), each costing one anti
-    join on the key columns — Iceberg v2's read-side trade, bounded by
-    compaction cadence exactly as the reference's maintenance job
-    bounds delete-file counts."""
+    the last full rewrite, each costing one anti join on the key
+    columns — Iceberg v2's read-side trade, bounded by the one fold
+    rule (:func:`fold_mor` at ``MOR_MAX_CHAIN``) as the reference's
+    maintenance job bounds delete-file counts."""
     vp = version_path(path, version)
     meta = mor_meta(path, version)
     if meta is None:
@@ -196,57 +198,121 @@ def read_table(spark: SparkSession, path: str, version: int | None = None) -> Da
     return df
 
 
+def _commit(
+    path: str, write: Callable[[str], None], fields: list[dict] | None
+) -> int:
+    """The one commit step every writer goes through: allocate version
+    N, let ``write`` materialize ``.tmp-vN`` (raising aborts: tmp
+    removed, pointer untouched), rename it to ``vN``, widen the
+    declared schema with ``fields``, then flip ``_CURRENT`` with an
+    atomic ``os.replace`` — a crash at any step leaves the previous
+    snapshot current.  The schema is initialized on the first commit;
+    later commits APPEND new columns (mergeSchema-style: old snapshots
+    read them as typed nulls, so widening before the flip is never a
+    half-visible state)."""
+    n = max(list_versions(path), default=0) + 1
+    root = _versions_root(path)
+    os.makedirs(root, exist_ok=True)
+    tmp = os.path.join(root, f".tmp-v{n:08d}")
+    try:
+        write(tmp)
+    except Exception:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    os.rename(tmp, version_path(path, n))
+    if fields is not None:
+        declared = declared_schema(path)
+        if declared is None:
+            _save_schema(path, fields)
+        else:
+            known = {f["name"] for f in declared}
+            new = [f for f in fields if f["name"] not in known]
+            if new:
+                _save_schema(path, declared + new)
+    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
+    with open(ptr_tmp, "w") as fh:
+        fh.write(str(n))
+    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
+    return n
+
+
 def write_version(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
     expect_rows: int | None = None,
 ) -> int:
-    """Materialize ``df`` as the next snapshot and flip ``_CURRENT``.
+    """Materialize ``df`` as the next full snapshot and flip
+    ``_CURRENT``.  If ``expect_rows`` is given the tmp output is
+    counted BEFORE anything becomes visible and a mismatch aborts (tmp
+    removed, pointer untouched) — the row-preservation guard every
+    maintenance rewrite commits through."""
 
-    The snapshot is written to a ``.tmp`` dir first; if ``expect_rows``
-    is given the tmp output is counted BEFORE anything becomes visible
-    and a mismatch aborts (tmp removed, pointer untouched) — the
-    row-preservation guard the old rmtree-then-rename swap lacked.
-    The pointer flip is ``os.replace`` (atomic on POSIX): a crash at
-    any step leaves the previous snapshot current.
-    """
-    n = (max(list_versions(path), default=0)) + 1
-    root = _versions_root(path)
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, f".tmp-v{n:08d}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if expect_rows is not None:
-        got = df.sparkSession.read.parquet(tmp).count()
-        if got != expect_rows:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"versioned write aborted: tmp has {got} rows, expected {expect_rows}"
-            )
-    os.rename(tmp, version_path(path, n))
-    # schema-merge on write: initialize the declared schema on the first
-    # commit; later commits APPEND any new columns (mergeSchema-style
-    # evolution — existing columns keep their declared type and order,
-    # so old snapshots stay readable under the widened schema).  Updated
-    # before the pointer flip: a crash in between leaves the widened
-    # schema with the old snapshot current, which reads the new columns
-    # as nulls — never a half-visible state.
-    fields = declared_schema(path)
-    if fields is None:
-        _save_schema(path, _fields_of(df))
-    else:
-        known = {f["name"] for f in fields}
-        new = [f for f in _fields_of(df) if f["name"] not in known]
-        if new:
-            _save_schema(path, fields + new)
-    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
-    return n
+    def write(tmp: str) -> None:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        if expect_rows is not None:
+            got = df.sparkSession.read.parquet(tmp).count()
+            if got != expect_rows:
+                raise RuntimeError(
+                    f"versioned write aborted: tmp has {got} rows, "
+                    f"expected {expect_rows}"
+                )
+
+    return _commit(path, write, _fields_of(df))
+
+
+def _commit_mor(
+    path: str,
+    key_cols: list[str],
+    delta: DataFrame | None,
+    deletes: DataFrame | None,
+) -> int:
+    """Commit a merge-on-read version over the current snapshot: the
+    ``delta`` rows (if any) plus an equality-delete key file holding
+    the delta's keys and the ``deletes`` keys."""
+    base_v = current_version(path)
+    if base_v is None:
+        raise FileNotFoundError(
+            f"no _CURRENT under {path}: the first commit must be a full "
+            "write_version (MoR deltas need a base snapshot)"
+        )
+    spark = (delta if delta is not None else deletes).sparkSession
+    if delta is not None and deletes is not None:
+        # delete wins over a same-key update in the combined batch:
+        # without this anti-join the delta would be unioned back in
+        # AFTER the base anti-join and resurrect the deleted row
+        delta = delta.join(
+            F.broadcast(deletes.select(*key_cols).distinct()),
+            key_cols,
+            "left_anti",
+        )
+
+    def write(tmp: str) -> None:
+        keys = []
+        if delta is not None:
+            delta_p = os.path.join(tmp, MOR_DELTA)
+            delta.write.mode("overwrite").parquet(delta_p)
+            # delete keys come from the MATERIALIZED delta, not the
+            # delta plan: re-executing it would resolve the whole MoR
+            # chain a second time per commit (the plan reads the table)
+            keys.append(spark.read.parquet(delta_p).select(*key_cols))
+        if deletes is not None:
+            keys.append(deletes.select(*key_cols))
+        del_p = os.path.join(tmp, MOR_DELETES)
+        del_keys = functools.reduce(DataFrame.unionByName, keys).distinct()
+        del_keys.write.mode("overwrite").parquet(del_p)
+        meta = {
+            "base": base_v,
+            "key_cols": list(key_cols),
+            "n_deletes": spark.read.parquet(del_p).count(),
+        }
+        with open(os.path.join(tmp, MOR_META), "w") as fh:
+            json.dump(meta, fh, indent=1)
+
+    return _commit(path, write, _fields_of(delta) if delta is not None else None)
 
 
 def write_mor_upsert(
@@ -263,10 +329,10 @@ def write_mor_upsert(
     ``design_doc/PipelineArchitecture.md:235-238``).  At a
     high-frequency upsert cadence this is the write-amplification
     answer: commit cost is O(|delta|) regardless of table size, and
-    readers pay one broadcast anti-join per un-flattened MoR commit
-    (``flatten_mor`` is the compaction that folds the chain back to a
-    full snapshot, on the maintenance cadence that bounds Iceberg's
-    delete-file count).
+    readers pay one broadcast anti-join per un-flattened MoR commit.
+    This primitive never folds the chain; :func:`fold_mor` is the one
+    rule that does (at ``MOR_MAX_CHAIN``), and any maintenance rewrite
+    also leaves a full snapshot.
 
     Semantics: ``MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT
     MATCHED THEN INSERT *`` — matched keys take the update row
@@ -290,85 +356,21 @@ def write_mor_upsert(
     failing fast (no visible data files) — MoR versions are only
     readable through :func:`read_table`'s resolution, like Iceberg
     data files are only readable through a manifest."""
-    base_v = current_version(path)
-    if base_v is None:
-        raise FileNotFoundError(
-            f"no _CURRENT under {path}: the first commit must be a full "
-            "write_version (MoR deltas need a base snapshot)"
-        )
-    n = (max(list_versions(path), default=0)) + 1
-    root = _versions_root(path)
-    tmp = os.path.join(root, f".tmp-v{n:08d}")
-    if deletes is not None:
-        # delete wins over a same-key update in the combined batch:
-        # without this anti-join the delta would be unioned back in
-        # AFTER the base anti-join and resurrect the deleted row
-        updates = updates.join(
-            F.broadcast(deletes.select(*key_cols).distinct()),
-            key_cols,
-            "left_anti",
-        )
-    updates.write.mode("overwrite").parquet(os.path.join(tmp, MOR_DELTA))
-    spark = updates.sparkSession
-    # delete keys come from the MATERIALIZED delta, not the updates
-    # plan: re-executing `updates` would resolve the whole MoR chain a
-    # second time per commit (the delta plan reads the current table)
-    del_keys = spark.read.parquet(os.path.join(tmp, MOR_DELTA)).select(*key_cols)
-    if deletes is not None:
-        del_keys = del_keys.unionByName(deletes.select(*key_cols))
-    del_keys = del_keys.distinct()
-    del_keys.write.mode("overwrite").parquet(os.path.join(tmp, MOR_DELETES))
-    n_deletes = spark.read.parquet(os.path.join(tmp, MOR_DELETES)).count()
-    meta = {"base": base_v, "key_cols": list(key_cols), "n_deletes": n_deletes}
-    with open(os.path.join(tmp, MOR_META), "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.rename(tmp, version_path(path, n))
-    # same mergeSchema-style evolution as write_version: the delta may
-    # carry new columns; old snapshots read them as typed nulls
-    fields = declared_schema(path)
-    if fields is not None:
-        known = {f["name"] for f in fields}
-        new = [f for f in _fields_of(updates) if f["name"] not in known]
-        if new:
-            _save_schema(path, fields + new)
-    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
-    return n
+    return _commit_mor(path, key_cols, updates, deletes)
 
 
 def write_mor_delete(keys: DataFrame, path: str, key_cols: list[str]) -> int:
     """Merge-on-read DELETE commit: an equality-delete key file and no
     delta — O(|keys|) instead of a table rewrite (the reference's
     ``write.delete.mode = merge-on-read``)."""
-    base_v = current_version(path)
-    if base_v is None:
-        raise FileNotFoundError(f"no _CURRENT under {path}")
-    n = (max(list_versions(path), default=0)) + 1
-    root = _versions_root(path)
-    tmp = os.path.join(root, f".tmp-v{n:08d}")
-    del_keys = keys.select(*key_cols).distinct()
-    del_keys.write.mode("overwrite").parquet(os.path.join(tmp, MOR_DELETES))
-    spark = keys.sparkSession
-    n_deletes = spark.read.parquet(os.path.join(tmp, MOR_DELETES)).count()
-    meta = {"base": base_v, "key_cols": list(key_cols), "n_deletes": n_deletes}
-    with open(os.path.join(tmp, MOR_META), "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.rename(tmp, version_path(path, n))
-    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
-    return n
+    return _commit_mor(path, key_cols, None, keys)
 
 
 def flatten_mor(spark: SparkSession, path: str) -> int:
     """Compaction for a MoR chain: materialize the current resolved
     rows as a FULL snapshot (one new version, ``_CURRENT`` flipped),
     after which reads pay zero merge joins and ``expire_snapshots``
-    can reclaim the chain — the rewrite the reference schedules
-    hourly to bound delete-file accumulation."""
+    can reclaim the chain."""
     return write_version(read_table(spark, path), path)
 
 
@@ -380,27 +382,45 @@ def mor_chain_depth(path: str, version: int | None = None) -> int:
     OPTIMIZED plan holds depth*(depth+1)/2 join nodes — execution
     stays ~linear in data (each union branch streams through tiny
     broadcast filters) but plan build/codegen cost is QUADRATIC in
-    depth.  This is the metric a maintenance cadence bounds: keep it
-    under ``MOR_MAX_CHAIN`` (tests/test_tablefmt.py::
-    test_mor_read_plan_depth_contract pins the shape at depth 20)."""
+    depth.  :func:`fold_mor` keeps it below ``MOR_MAX_CHAIN``
+    (tests/test_tablefmt.py::test_mor_read_plan_depth_contract pins
+    the unbounded shape at depth 20)."""
     v = current_version(path) if version is None else version
-    depth = 0
-    while v is not None:
-        meta = mor_meta(path, v)
-        if meta is None:
-            break
-        depth += 1
-        v = int(meta["base"])
-    return depth
+    return 0 if v is None else len(_mor_base_closure(path, {v})) - 1
 
 
-# Recommended flatten trigger: the optimized read plan holds
-# depth*(depth+1)/2 broadcast anti-join nodes (Catalyst pushes each
-# level's anti-join through the accumulated union), so plan size is
-# quadratic in depth.  8 -> 36 join nodes keeps plan build trivial
-# while amortizing the full-rewrite amplification over 8 O(|delta|)
-# commits (SCALING.md r8 MoR table).
+# The one MoR fold rule: a chain that reaches this depth is flattened
+# by fold_mor right after the commit that reached it.  The optimized
+# read plan holds depth*(depth+1)/2 broadcast anti-join nodes (Catalyst
+# pushes each level's anti-join through the accumulated union), so
+# 8 -> at most 36 join nodes keeps plan build trivial while amortizing
+# the full-rewrite amplification over 8 O(|delta|) commits (SCALING.md
+# r8 MoR table).  Maintenance needs no rule of its own: its rewrite of
+# any versioned table leaves a full snapshot.
 MOR_MAX_CHAIN = 8
+
+
+def fold_mor(spark: SparkSession, path: str) -> int | None:
+    """Apply the fold rule after a MoR commit: flatten the chain once
+    it reaches ``MOR_MAX_CHAIN`` commits (returns the new full
+    version), else leave it alone (returns None) — the bound the
+    reference's hourly maintenance puts on Iceberg delete files,
+    enforced at commit time so readers never see a deeper chain."""
+    if mor_chain_depth(path) >= MOR_MAX_CHAIN:
+        return flatten_mor(spark, path)
+    return None
+
+
+def snapshot_dirs(path: str) -> list[str]:
+    """The version dirs the current snapshot resolves through — itself
+    plus every MoR base beneath it.  Their files are the live
+    snapshot's files (Iceberg's ``tbl$files``): what stats report and
+    what a rewrite sizes its output from, unlike every retained
+    version and in-flight ``.tmp`` dir."""
+    v = current_version(path)
+    if v is None:
+        raise FileNotFoundError(f"no _CURRENT pointer under {path}")
+    return [version_path(path, b) for b in sorted(_mor_base_closure(path, {v}))]
 
 
 def _mor_base_closure(path: str, versions: set[int]) -> set[int]:

@@ -1765,6 +1765,23 @@ def test_minhash_null_text_emits_no_rows(spark):
     assert (3, 4) in {(r.id_a, r.id_b) for r in pairs.collect()}
 
 
+def test_collapsed_graph_keeps_null_text_docs_singletons(spark):
+    """NULL-text docs have no fingerprint, so the exact-dup collapse
+    must not group them together: each stays a singleton keep (the
+    NULL contract of the minhash family), never a loser, never a
+    cluster member, and keyed by its own id for leakage-safe splits."""
+    rows = [(1, None), (2, None), (3, None),
+            (4, "alpha beta gamma delta epsilon"),
+            (5, "zeta eta theta iota kappa")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    kw = dict(num_hashes=8, bands=4)
+    assert D.neardup_losers(df, **kw).collect() == []
+    assert D.verified_neardup_clusters(df, **kw).collect() == []
+    keys = {r.doc_id: r["__cluster_key"]
+            for r in D.neardup_cluster_keys(df, **kw).collect()}
+    assert keys == {i: i for i in range(1, 6)}
+
+
 def test_valid_embeddings_enforces_cosine_contract(spark):
     """r10: the module-wide 'nonzero-norm, validated upstream' cosine
     contract has a named filter — NULL, wrong-dim, NaN/inf-poisoned,

@@ -83,22 +83,6 @@ def test_merge_protected_null_column_not_overwritten(spark):
     assert got[3] == (7, "seg-c")       # unmatched key inserts all values
 
 
-def test_delta_merge_gated(spark):
-    """delta_merge raises a clear error when Delta is absent (this
-    container) instead of failing deep inside py4j."""
-    import pytest as _pytest
-
-    from real_timetransactionaldatalakehouse_spark.operators.merge import (
-        delta_merge,
-        delta_merge_available,
-    )
-
-    u = spark.createDataFrame([(1, 1)], "k int, v int")
-    if not delta_merge_available(spark):
-        with _pytest.raises(RuntimeError, match="Delta is not on the classpath"):
-            delta_merge(spark, "/tmp/nonexistent-delta", u, ["k"])
-
-
 @SETTINGS
 @given(data=rows)
 def test_dedup_latest_picks_max_order_tuple(spark, data):

@@ -222,13 +222,14 @@ def test_dims_scd1_stream_and_idempotence(spark, tmp_path):
     )
 
 
-def test_dims_scd1_stream_mor_equals_cow(spark, tmp_path):
+def test_dims_scd1_stream_mor_equals_cow(spark, tmp_path, monkeypatch):
     """write_mode='mor' must land the SAME dimension rows as the CoW
     path on the same CDC replay — including update_cols protection and
     null-coalesce (the delta rows are merge output for touched keys,
-    not raw updates) — while committing only deltas: the post-base
-    version is a MoR commit, flatten_every folds the chain back to a
-    full snapshot, and checkpoint replay is idempotent."""
+    not raw updates) — while committing only deltas.  Over
+    MOR_MAX_CHAIN + 1 CDC batches the chain stays below MOR_MAX_CHAIN
+    after every batch (the commit that reaches it is folded back to a
+    full snapshot), and checkpoint replay is idempotent."""
     from real_timetransactionaldatalakehouse_spark import tablefmt as TF
 
     schema = (
@@ -242,8 +243,14 @@ def test_dims_scd1_stream_mor_equals_cow(spark, tmp_path):
         ("u", 2000, "u2", "VIP", False, None),
         ("d", 3000, "u3", None, None, None),
     ]
-    df0 = spark.createDataFrame(creates, schema)
-    df1 = spark.createDataFrame(batch2, schema)
+    later = [
+        [("u", 3000 + k, f"u{k % 5}", f"Seg{k}", k % 2 == 0, None),
+         ("c", 3000 + k, f"n{k}", None, True, "DE")]
+        for k in range(TF.MOR_MAX_CHAIN - 1)
+    ]
+    batches = [creates, batch2, *later]
+    assert len(batches) == TF.MOR_MAX_CHAIN + 1
+    dfs = [spark.createDataFrame(b, schema) for b in batches]
     now = time.time()
 
     def run(mode_dir, **kw):
@@ -251,15 +258,24 @@ def test_dims_scd1_stream_mor_equals_cow(spark, tmp_path):
         target = str(tmp_path / f"dim_{mode_dir}")
         ckpt = str(tmp_path / f"ckpt_{mode_dir}")
         os.makedirs(src)
-        _write_single_file(df0, os.path.join(src, "b0.parquet"), now)
-        _write_single_file(df1, os.path.join(src, "b1.parquet"), now + 1)
-        stream = file_stream(spark, src, df0.schema)
+        for i, df in enumerate(dfs):
+            _write_single_file(df, os.path.join(src, f"b{i}.parquet"), now + i)
+        stream = file_stream(spark, src, dfs[0].schema)
         dims_scd1_stream(
             stream, target, ckpt, key_cols=["user_id"], order_col="ts_ms",
             update_cols=["ltv_segment", "is_creator", "ts_ms"], **kw,
         )
         return src, target, ckpt
 
+    fold = TF.fold_mor
+    depths = []
+
+    def traced_fold(spark_, path):
+        v = fold(spark_, path)
+        depths.append(TF.mor_chain_depth(path))
+        return v
+
+    monkeypatch.setattr(TF, "fold_mor", traced_fold)
     _, t_cow, _ = run("cow")
     src_m, t_mor, ckpt_m = run("mor", write_mode="mor")
     want = sorted(map(str, TF.read_table(spark, t_cow).collect()))
@@ -269,19 +285,18 @@ def test_dims_scd1_stream_mor_equals_cow(spark, tmp_path):
     assert TF.mor_meta(t_mor, 1) is None
     assert TF.mor_meta(t_mor, 2) is not None
     assert TF.mor_meta(t_mor, 2)["key_cols"] == ["user_id"]
+    # one fold call per MoR batch; the last one reached the bound and
+    # folded the chain to a full snapshot
+    assert depths == list(range(1, TF.MOR_MAX_CHAIN)) + [0]
+    assert TF.mor_meta(t_mor, TF.current_version(t_mor)) is None
     # checkpoint replay: restarting the stream applies nothing new
     v_before = TF.current_version(t_mor)
-    stream = file_stream(spark, src_m, df0.schema)
+    stream = file_stream(spark, src_m, dfs[0].schema)
     dims_scd1_stream(
         stream, t_mor, ckpt_m, key_cols=["user_id"], order_col="ts_ms",
         update_cols=["ltv_segment", "is_creator", "ts_ms"], write_mode="mor",
     )
     assert TF.current_version(t_mor) == v_before
-    # flatten_every=1: every MoR commit immediately folds to a full
-    # snapshot; rows still equal the CoW result
-    _, t_flat, _ = run("morflat", write_mode="mor", flatten_every=1)
-    assert TF.mor_meta(t_flat, TF.current_version(t_flat)) is None
-    assert sorted(map(str, TF.read_table(spark, t_flat).collect())) == want
 
 
 def test_session_stream_equals_batch_after_flush(spark, events_small, tmp_path):

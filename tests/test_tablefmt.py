@@ -524,8 +524,11 @@ def test_maintenance_loop_rejects_nonpositive_interval(spark, tmp_path):
 
 def test_mor_chain_depth_and_flatten_trigger(spark, tmp_path):
     """mor_chain_depth counts un-flattened commits; run_maintenance
-    with mor_flatten_depth flattens AT the trigger and skips the
-    rewrite below it (the explicit write-amplification control)."""
+    treats a versioned table with a live MoR chain like any other:
+    its compaction commits a full snapshot (depth 0, rows preserved)
+    and expiry then retires the delta versions.  fold_mor is the one
+    fold rule: it leaves a chain below MOR_MAX_CHAIN alone and
+    flattens it at MOR_MAX_CHAIN."""
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path / "wh"))
@@ -538,35 +541,34 @@ def test_mor_chain_depth_and_flatten_trigger(spark, tmp_path):
             spark.createDataFrame([(k, k)], "id long, v long"), path, ["id"]
         )
     assert TF.mor_chain_depth(path) == 3
-    # below the trigger: rewrite skipped, chain untouched
-    rep = MT.run_maintenance(spark, cat, tables=["gold.t"], mor_flatten_depth=5)
-    assert rep["gold.t"]["mor_flatten"] == {"chain_depth": 3, "skipped": True}
-    assert "compact" not in rep["gold.t"]
+    assert TF.fold_mor(spark, path) is None
     assert TF.mor_chain_depth(path) == 3
-    # at/over the trigger: explicit flatten, then the chain is reset
-    rep = MT.run_maintenance(spark, cat, tables=["gold.t"], mor_flatten_depth=3)
-    assert rep["gold.t"]["mor_flatten"]["chain_depth"] == 3
-    assert "new_version" in rep["gold.t"]["mor_flatten"]
-    # ADVICE r8: the flatten IS the tick's full rewrite — compact must
-    # NOT run a second full write on the same tick
-    assert "compact" not in rep["gold.t"]
+    rep = MT.run_maintenance(spark, cat, tables=["gold.t"], keep_last=1)
+    assert rep["gold.t"]["compact"]["rows_after"] == 4
     assert TF.mor_chain_depth(path) == 0
     assert TF.read_table(spark, path).count() == 4
+    assert TF.list_versions(path) == [TF.current_version(path)]
+    # the fold rule: depth MOR_MAX_CHAIN - 1 stays, MOR_MAX_CHAIN folds
+    for k in range(10, 10 + TF.MOR_MAX_CHAIN):
+        TF.write_mor_upsert(
+            spark.createDataFrame([(k, k)], "id long, v long"), path, ["id"]
+        )
+        if TF.mor_chain_depth(path) < TF.MOR_MAX_CHAIN:
+            assert TF.fold_mor(spark, path) is None
+    assert TF.mor_chain_depth(path) == TF.MOR_MAX_CHAIN
+    v = TF.fold_mor(spark, path)
+    assert v == TF.current_version(path) and TF.mor_meta(path, v) is None
+    assert TF.read_table(spark, path).count() == 4 + TF.MOR_MAX_CHAIN
 
 
 def test_maintenance_loop_drives_mor_flatten_trigger(spark, tmp_path):
     """VERDICT r8 #7: the CADENCE RUNNER itself (maintenance_loop)
-    drives the explicit flatten trigger end-to-end over a LIVE MoR
-    chain — the reference's hourly DAG runs compaction and expiry
-    together, so the trigger has to behave inside the composed loop,
-    not only as a unit.  A writer lands deltas between ticks (inside
-    the injected sleep, where a streaming job would run):
-
-    tick 0: depth 2 < 4  -> rewrite skipped, chain preserved;
-    tick 1: depth 4 >= 4 -> ONE full rewrite (the flatten), compact
-            skipped on the same tick (ADVICE r8 double-write fix),
-            expiry + orphan sweep still run, chain resets;
-    tick 2: depth 0      -> plain compaction resumes."""
+    runs end-to-end over a LIVE MoR chain — the reference's hourly DAG
+    runs compaction and expiry together.  A writer lands deltas
+    between ticks (inside the injected sleep, where a streaming job
+    would run); every tick compacts the table to a full snapshot
+    (chain depth 0, rows preserved) and still runs expiry and the
+    orphan sweep."""
     from real_timetransactionaldatalakehouse_spark import maintenance as MT
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
@@ -584,14 +586,16 @@ def test_maintenance_loop_drives_mor_flatten_trigger(spark, tmp_path):
     assert TF.mor_chain_depth(path) == 2
 
     state = {"t": 0.0, "tick": 0}
+    depths = []
 
     def clock():
         return state["t"]
 
     def sleep(dt):
         state["t"] += dt
+        depths.append(TF.mor_chain_depth(path))
         if state["tick"] == 0:
-            # the between-tick writer: two more deltas -> depth 4
+            # the between-tick writer: two more deltas -> depth 2 again
             for k in (102, 0):  # one insert, one update of id 0
                 TF.write_mor_upsert(
                     spark.createDataFrame([(k, k + 1)], "id long, v long"),
@@ -601,18 +605,17 @@ def test_maintenance_loop_drives_mor_flatten_trigger(spark, tmp_path):
 
     reports = MT.maintenance_loop(
         spark, cat, interval_s=3600.0, max_runs=3, clock=clock, sleep=sleep,
-        tables=["gold.t"], mor_flatten_depth=4, keep_last=2,
-        on_error="raise",
+        tables=["gold.t"], keep_last=2, on_error="raise",
     )
-    r0, r1, r2 = (r["report"]["gold.t"] for r in reports)
-    assert r0["mor_flatten"] == {"chain_depth": 2, "skipped": True}
-    assert "compact" not in r0
-    assert r1["mor_flatten"]["chain_depth"] == 4
-    assert "new_version" in r1["mor_flatten"]
-    assert "compact" not in r1          # the double-write fix, loop-driven
-    assert "expired" in r1 and "orphans" in r1  # DAG composition intact
-    assert "mor_flatten" not in r2      # chain clean after the flatten
-    assert "compact" in r2              # plain compaction resumes
+    assert [r["scheduled_at_s"] for r in reports] == [0.0, 3600.0, 7200.0]
+    assert depths == [0, 0]             # every tick left a full snapshot
+    assert TF.mor_chain_depth(path) == 0
+    for r in reports:
+        rep = r["report"]["gold.t"]
+        assert set(rep) == {"compact", "expired", "orphans"}
+        assert rep["compact"]["rows_before"] == rep["compact"]["rows_after"]
+    # once no MoR version is among the last 2, expiry keeps just those
+    assert len(TF.list_versions(path)) == 2
     got = {(r.id, r.v) for r in TF.read_table(spark, path).collect()}
     want = {(i, i * 10) for i in range(1, 8)} | {
         (100, 100), (101, 101), (102, 103), (0, 1),
@@ -733,3 +736,45 @@ def test_compact_sizes_files_off_cold_subset(spark, tmp_path):
         for r, _d, ns in _os.walk(path) for n in ns if n.endswith(".parquet")
     )
     assert sizes[-1] >= target * 0.5
+
+
+def _parquet_files(d):
+    return [
+        os.path.getsize(os.path.join(r, n))
+        for r, _d, ns in os.walk(d) for n in ns if n.endswith(".parquet")
+    ]
+
+
+def test_rewrite_sizing_and_stats_follow_the_live_snapshot(spark, tmp_path):
+    """compact / zorder_compact size their output, and table_stats
+    counts files, from the dirs the CURRENT snapshot resolves through:
+    retained older versions and orphan .tmp dirs must not inflate
+    files_target, and a MoR snapshot's stats include its base, not
+    only the newest delta dir."""
+    import shutil
+
+    path = str(tmp_path / "t")
+    df = spark.range(20000).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("pad")
+    )
+    for _ in range(4):
+        TF.write_version(df.coalesce(1), path)
+    live = sum(_parquet_files(TF.version_path(path, 4)))
+    shutil.copytree(TF.version_path(path, 1),
+                    os.path.join(path, "_versions", ".tmp-v00000099"))
+    # five copies of the table on disk, one of them live
+    assert MT.compact(spark, path, target_file_bytes=live)["files_target"] == 1
+    res = MT.zorder_compact(spark, path, ["id"], target_file_bytes=live)
+    assert res["files_target"] == 1
+    assert res["rows_after"] == 20000
+
+    TF.write_mor_upsert(
+        spark.createDataFrame([(5, "x"), (20001, "y")], "id long, pad string"),
+        path, ["id"],
+    )
+    cur = TF.current_version(path)
+    base, delta = (_parquet_files(TF.version_path(path, v))
+                   for v in (TF.mor_meta(path, cur)["base"], cur))
+    st = MT.table_stats(spark, path).first()
+    assert st.n_files == len(base) + len(delta)
+    assert st.total_bytes == sum(base) + sum(delta)

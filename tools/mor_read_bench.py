@@ -4,7 +4,7 @@
 (6.24x fewer bytes than CoW), but the flatten cadence `MOR_MAX_CHAIN`
 was justified only by plan-node counts (d(d+1)/2 broadcast anti-joins
 after Catalyst's PushdownLeftSemiAntiJoin).  This records what a
-READER actually pays at each chain depth, so the recommended depth is
+READER actually pays at each chain depth, so the fold depth is
 re-derived from a measurement:
 
 - full scan: ``read_table`` -> noop sink (plan BUILD INCLUDED in the

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Measure streaming MoR write amplification at replica scale
 (VERDICT r7 #6): replay the SAME synthetic CDC feed through
-``dims_scd1_stream`` with ``write_mode="cow"`` and ``write_mode="mor"
-(flatten_every=N)`` and record, per micro-batch commit:
+``dims_scd1_stream`` with ``write_mode="cow"`` and ``write_mode="mor"``
+and record, per micro-batch commit:
 
 - wall (from version-dir commit mtimes — each non-empty batch commits
   exactly one version, so consecutive mtime deltas are per-batch
@@ -10,8 +10,8 @@
 - bytes written (the version dir's parquet payload — the direct
   write-amplification metric: CoW rewrites ~|table| bytes per batch,
   MoR writes ~|delta|),
-- flatten cost (the full-snapshot versions a ``flatten_every`` cadence
-  interleaves into the MoR chain).
+- flatten cost (the full-snapshot versions the built-in fold rule,
+  ``tablefmt.MOR_MAX_CHAIN``, interleaves into the MoR chain).
 
 Scale: the dimension is ``--keys`` rows (default 750k ~ 50x the sf0.1
 customer table) with a few snowflake columns; each of ``--batches``
@@ -19,7 +19,7 @@ CDC batches updates ``--updates-per-batch`` deterministic keys.
 
 Usage:
   python tools/mor_writeamp_bench.py [--keys 750000] [--batches 12]
-      [--updates-per-batch 5000] [--flatten-every 8]
+      [--updates-per-batch 5000]
 
 Prints one JSON object (also the SCALING.md r8 table's source).
 """
@@ -50,7 +50,6 @@ def main() -> None:
     ap.add_argument("--keys", type=int, default=750_000)
     ap.add_argument("--batches", type=int, default=12)
     ap.add_argument("--updates-per-batch", type=int, default=5_000)
-    ap.add_argument("--flatten-every", type=int, default=8)
     ap.add_argument("--modes", default="cow,mor",
                     help="comma list; run one mode per process for a "
                          "JVM-state-free comparison")
@@ -136,7 +135,7 @@ def main() -> None:
     results = {}
     mode_kw = {
         "cow": {},
-        "mor": {"write_mode": "mor", "flatten_every": args.flatten_every},
+        "mor": {"write_mode": "mor"},
     }
     for mode in args.modes.split(","):
         kw = mode_kw[mode]
@@ -181,7 +180,7 @@ def main() -> None:
         "keys": K,
         "batches": B,
         "updates_per_batch": U,
-        "flatten_every": args.flatten_every,
+        "mor_max_chain": TF.MOR_MAX_CHAIN,
         "results": results,
         "workdir": work,
     }
