@@ -1020,12 +1020,11 @@ FROM (
 """)
 def q_dedup_latest(spark, sf_dir):
     """W1/T7: keep-latest-per-key dedup — the core CDC pattern
-    (reference stream_dims.py:77-80).  Declared via the aggregation
-    form: ``max_by`` gets map-side partial aggregation, so the shuffle
-    carries one candidate per key per task instead of every event (the
-    window form in ``dedup_latest`` sorts the full input; equivalence
-    pinned by test_dedup_latest_agg_equals_window_form)."""
-    out = R.dedup_latest_agg(
+    (reference stream_dims.py:77-80) through ``dedup_latest``, the
+    pipeline's one keep-latest operator: a ``max_by`` aggregation with
+    map-side partial aggregation, so the shuffle carries one candidate
+    per key per task instead of every event."""
+    out = R.dedup_latest(
         _t(spark, sf_dir, "events"), ["user_id"], "ts", tiebreak_cols=["event_id"]
     )
     return out.select("user_id", "event_id", "event_type", LF.ts_second("ts").alias("ts_s"))
@@ -1044,15 +1043,18 @@ SELECT user_id, last_purchase_value FROM (
 """)
 def q_first_value_ignore_nulls(spark, sf_dir):
     """W2: latest non-null value per key over an unbounded frame —
-    the reference's sparse-column fill (streaming_job.py:101-128).
-    Declared via the single-aggregation form: a conditional ``max_by``
-    is IGNORE NULLS + keep-one-row-per-key in one partial+final agg,
-    replacing the two window passes (fill, then ROW_NUMBER) the
-    oracle spells out."""
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "amount", F.when(F.col("event_type") == "purchase", F.col("value"))
+    the reference's sparse-column fill (streaming_job.py:101-128)
+    through ``merge.latest_state``, the medallion gold operator: a
+    conditional ``max_by`` is IGNORE NULLS + keep-one-row-per-key in
+    one partial+final agg, replacing the two window passes (fill, then
+    ROW_NUMBER) the oracle spells out."""
+    # every non-fill column rides in latest_state's row struct, which
+    # the scan cannot prune: project to the columns the query needs
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id",
+        F.when(F.col("event_type") == "purchase", F.col("value")).alias("amount"),
     )
-    one = R.latest_non_null_agg(
+    one = M.latest_state(
         ev, ["user_id"], "ts", ["amount"], tiebreak_cols=["event_id"]
     )
     return one.select("user_id", F.col("amount").alias("last_purchase_value"))

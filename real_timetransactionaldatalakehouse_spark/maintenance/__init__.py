@@ -4,15 +4,17 @@ Iceberg procedures (``compact_cold_data.py``).
 
 Format-free design: compaction is a predicate-scoped read ->
 repartition-to-target-file-size -> swap rewrite, preserving row counts
-(the reference's invariant).  On a ``tablefmt`` versioned table the
-swap is a snapshot commit, so a rewrite also folds any merge-on-read
-chain back to a full snapshot.
+(the reference's invariant) and the partition layout of the table's
+live files.  On a ``tablefmt`` versioned table the swap is a snapshot
+commit, so a rewrite also folds any merge-on-read chain back to a full
+snapshot.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +31,7 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _safe_swap_rewrite(spark: SparkSession, path: str, out: DataFrame,
-                       expect_rows: int, suffix: str) -> None:
+                       expect_rows: int, suffix: str, partition_by: list[str]) -> None:
     """Replace ``path``'s data with ``out``, never destroying the old
     data before the new data is validated.
 
@@ -38,12 +40,13 @@ def _safe_swap_rewrite(spark: SparkSession, path: str, out: DataFrame,
     swap via a ``.bak`` rename — a crash at any step leaves either the
     old or the new data intact and recoverable, and a count mismatch
     aborts BEFORE anything is deleted (the old rmtree-then-rename did
-    the destructive step first and could only report the loss)."""
+    the destructive step first and could only report the loss).  Both
+    write ``partition_by`` (:func:`_partition_cols`) directory levels."""
     if tablefmt.is_versioned(path):
-        tablefmt.write_version(out, path, expect_rows=expect_rows)
+        tablefmt.write_version(out, path, partition_by=partition_by, expect_rows=expect_rows)
         return
     tmp = path.rstrip("/") + suffix
-    out.write.mode("overwrite").parquet(tmp)
+    out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
     got = spark.read.parquet(tmp).count()
     if got != expect_rows:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -59,6 +62,13 @@ def _safe_swap_rewrite(spark: SparkSession, path: str, out: DataFrame,
     shutil.rmtree(bak)
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``path``'s Hadoop FileSystem and fully-qualified Path."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(p)
+
+
 def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """Recursive parquet file listing through the Hadoop FileSystem
     API — resolves whatever scheme the path carries (``file://``,
@@ -67,10 +77,7 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]
     current snapshot has a compactor-bounded file count; a
     metastore-scale deployment reads the table format's metadata
     tables instead of listing storage."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
+    fs, p = _hadoop_path(spark, path)
     out: list[tuple[str, int]] = []
     if not fs.exists(p):
         return out
@@ -96,6 +103,22 @@ def _live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     return [
         f for d in tablefmt.snapshot_dirs(path) for f in _list_parquet_files(spark, d)
     ]
+
+
+def _partition_cols(spark: SparkSession, path: str) -> list[str]:
+    """The table's Hive-style partition columns: the ``name=value``
+    dir levels between a live data root (table dir or snapshot dir)
+    and its parquet files, skipping ``_``/``.`` dirs (MoR deltas) as
+    Spark's file index does.  A rewrite without them loses partition
+    pruning, and a later partitioned append hides the rewritten rows."""
+    roots = tablefmt.snapshot_dirs(path) if tablefmt.is_versioned(path) else [path]
+    for root in roots:
+        prefix = _hadoop_path(spark, root)[1].toString().rstrip("/") + "/"
+        for f, _b in _list_parquet_files(spark, root):
+            dirs = f[len(prefix):].split("/")[:-1]
+            if not any(d.startswith(("_", ".")) for d in dirs):
+                return [unquote(d.split("=", 1)[0]) for d in dirs if "=" in d]
+    return []
 
 
 def table_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -133,6 +156,7 @@ def compact(
     replaced."""
     df = _read_target(spark, path)
     n_before = df.count()
+    parts = _partition_cols(spark, path)
     # null-safe split: where=NULL rows are NOT cold — they stay in the
     # hot (untouched) half instead of silently dropping out of both
     cold_pred = F.coalesce(where, F.lit(False)) if where is not None else None
@@ -152,9 +176,11 @@ def compact(
     cold_bytes = total_bytes * (n_cold / n_before) if n_before else 0
     n_files = max(1, round(cold_bytes / target_file_bytes))
 
-    packed = cold.repartition(n_files)
+    # hashing on the partition columns sends each partition dir to one
+    # task, so it is rewritten as one file instead of one per task
+    packed = cold.repartition(n_files, *parts)
     out = packed.unionByName(hot) if hot is not None else packed
-    _safe_swap_rewrite(spark, path, out, n_before, ".compact-tmp")
+    _safe_swap_rewrite(spark, path, out, n_before, ".compact-tmp", parts)
     n_after = _read_target(spark, path).count()
     return {"rows_before": n_before, "rows_after": n_after,
             "cold_rows": n_cold, "files_target": n_files}
@@ -187,7 +213,7 @@ def ttl_delete(spark: SparkSession, path: str, ts_col: str, cutoff) -> dict:
     n_before = df.count()
     kept = df.filter(F.col(ts_col) >= F.lit(cutoff))
     n_kept = kept.count()
-    _safe_swap_rewrite(spark, path, kept, n_kept, ".ttl-tmp")
+    _safe_swap_rewrite(spark, path, kept, n_kept, ".ttl-tmp", _partition_cols(spark, path))
     n_after = _read_target(spark, path).count()
     return {"rows_before": n_before, "rows_after": n_after}
 
@@ -400,6 +426,7 @@ def zorder_compact(
     """
     df = _read_target(spark, path)
     n_before = df.count()
+    parts = _partition_cols(spark, path)
     # per-column min/max in one pass -> scalar quantization constants
     aggs = []
     for c in cols:
@@ -420,12 +447,14 @@ def zorder_compact(
     total_bytes = sum(b for _f, b in _live_files(spark, path))
     n_files = max(1, round(total_bytes / target_file_bytes))
     keyed = df.withColumn("__z", zorder_key(quantized, bits))
+    # partition columns lead the sort: the partitioned writer needs
+    # that order, and finding it keeps the z-order inside each dir
     out = (
         keyed.repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
+        .sortWithinPartitions(*parts, "__z")
         .drop("__z")
     )
-    _safe_swap_rewrite(spark, path, out, n_before, ".zorder-tmp")
+    _safe_swap_rewrite(spark, path, out, n_before, ".zorder-tmp", parts)
     return {
         "rows_before": n_before,
         "rows_after": _read_target(spark, path).count(),

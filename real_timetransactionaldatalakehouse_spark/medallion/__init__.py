@@ -91,7 +91,8 @@ def build_gold_latest_state(
 ) -> DataFrame:
     """Gold latest-state: one row per key, sparse columns filled from
     the latest non-null event (reference orders_current,
-    streaming_job.py:92-155: W2 fill + W1 dedup)."""
+    streaming_job.py:92-155: W2 fill + W1 dedup), as the one
+    ``latest_state`` aggregation."""
     fills = fill_cols or [
         c for c in order_events.columns if c not in (key, ts_col)
     ]

@@ -1,18 +1,22 @@
-"""MERGE upsert as a format-agnostic DataFrame algorithm (SURVEY.md
-section 2 J1/J2/J6).
+"""MERGE upsert and latest state as format-agnostic DataFrame
+algorithms (SURVEY.md section 2 J1/J2/J6, W1/W2).
 
 The reference MERGEs via Iceberg merge-on-read SQL
 (``streaming_job.py:92-155``, ``stream_dims.py:65-92,113-141``).  With
 no table-format jars in this environment, MERGE semantics are a plain
 join+coalesce plan:
 
-    updates  -> dedup-latest per key within the batch (T7)
+    updates  -> keep-latest per key within the batch (T7,
+                ``relational.dedup_latest``)
     matched  -> full-outer join target<->updates
     columns  -> per-column coalesce (update wins; null update keeps old)
 
 which is exactly what a MoR engine materializes at read time.  The
 output commits through ``tablefmt`` (a full snapshot, or a merge-on-
 read delta restricted to the touched keys).
+
+:func:`latest_state` is the same keep-latest aggregation plus a
+latest-non-null fill (the reference's ``orders_current``).
 
 Scale: one shuffle on the merge key for the join; batch-scoped dedup
 shrinks the shuffled update side first (reference rationale
@@ -25,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .joins import _gen
 from .relational import dedup_latest
 
 
@@ -86,12 +91,27 @@ def merge_upsert(
 def latest_state(events: DataFrame, key_cols: list[str], order_col: str,
                  fill_cols: list[str], tiebreak_cols: list[str] | None = None) -> DataFrame:
     """The reference's orders gold pattern (``streaming_job.py:95-135``):
-    collapse an event log to one row per key — latest row wins, sparse
-    columns filled from the latest non-null occurrence (W2 + W1)."""
-    from .relational import latest_non_null
+    one row per key, each ``fill_cols`` column holding its latest
+    non-null value (``first_value IGNORE NULLS`` ordered by
+    ``(order_col, *tiebreak_cols)`` DESC), the rest from the latest row.
 
-    filled = latest_non_null(events, key_cols, order_col, fill_cols, tiebreak_cols)
-    return dedup_latest(filled, key_cols, order_col, tiebreak_cols)
+    One ``groupBy(keys)`` aggregation, partial+final like
+    :func:`dedup_latest`: a fill column is ``max_by(c, when(c IS NOT
+    NULL, order))`` (``max_by`` skips NULL orderings: IGNORE NULLS);
+    the other columns share one ``max_by(struct(...), order)``, so
+    they come from one row.  Output columns keep the input order."""
+    order = F.struct(F.col(order_col), *[F.col(c) for c in tiebreak_cols or []])
+    fills = {c: f"__fill{i}" for i, c in enumerate(fill_cols)}
+    rest = [c for c in events.columns if c not in fills]
+    picked = events.groupBy(*key_cols).agg(
+        F.max_by(F.struct(*[_gen(c) for c in rest]), order).alias("__row"),
+        *[F.max_by(_gen(c), F.when(_gen(c).isNotNull(), order)).alias(a)
+          for c, a in fills.items()],
+    )
+    return picked.select(*[
+        (F.col(fills[c]) if c in fills else F.col("__row").getField(c)).alias(c)
+        for c in events.columns
+    ])
 
 
 def scd2_from_changes(

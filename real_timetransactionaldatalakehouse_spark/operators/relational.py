@@ -22,87 +22,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .joins import _gen
+
 
 # --------------------------------------------------------------- windows (E*)
 
 def dedup_latest(df: DataFrame, key_cols: list[str], order_col: str,
                  tiebreak_cols: list[str] | None = None) -> DataFrame:
     """W1/T7: keep the latest row per key (reference CDC dedup,
-    ``stream_dims.py:77-80``, ``streaming_job.py:133-135``).
+    ``stream_dims.py:77-80``, ``streaming_job.py:133-135``): the row
+    with the greatest ``(order_col, *tiebreak_cols)`` tuple.
 
-    ROW_NUMBER over (PARTITION BY key ORDER BY order_col DESC,
-    tiebreaks DESC) == 1.  A deterministic tiebreak is mandatory for
-    oracle parity (SURVEY.md section 7.3).
+    One aggregation, ``max_by(struct(*cols), struct(order,
+    *tiebreaks))``: map-side partial aggregation means the shuffle
+    carries at most one candidate row per key per map task, where a
+    ROW_NUMBER window shuffles and sorts every input row.  Struct
+    ordering sorts a NULL field first, so a NULL order or tiebreak
+    value loses (``DESC NULLS LAST``).  A deterministic tiebreak is
+    mandatory for oracle parity (SURVEY.md section 7.3).
     """
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in (tiebreak_cols or [])]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def dedup_latest_agg(df: DataFrame, key_cols: list[str], order_col: str,
-                     tiebreak_cols: list[str] | None = None) -> DataFrame:
-    """W1 as aggregation: same keep-latest-per-key result as
-    :func:`dedup_latest`, expressed as ``max_by(struct(*), struct(order,
-    tiebreaks))``.
-
-    Why it exists: the window form shuffles and per-key sorts EVERY
-    input row; the agg form gets map-side partial aggregation, so the
-    shuffle carries at most one candidate row per key per map task —
-    at 100 TB that is the difference between moving the table and
-    moving the key set.  Null order/tiebreak values sort first (struct
-    ordering), matching the window form's ``DESC NULLS LAST``.
-    Equivalence is pinned by
-    ``test_dedup_latest_agg_equals_window_form``.
-    """
-    ties = tiebreak_cols or []
-    ord_t = F.struct(F.col(order_col), *[F.col(c) for c in ties])
-    picked = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in df.columns]), ord_t).alias("__row")
-    )
-    return picked.select(*[F.col(f"__row.{c}").alias(c) for c in df.columns])
-
-
-def latest_non_null_agg(df: DataFrame, key_cols: list[str], order_col: str,
-                        fill_cols: list[str],
-                        tiebreak_cols: list[str] | None = None) -> DataFrame:
-    """W2 as aggregation: one row per key whose ``fill_cols`` each hold
-    the column's latest non-null value (``max_by`` keyed on a
-    conditional order tuple that is NULL when the value is NULL — null
-    order keys are ignored by ``max_by``, which is exactly IGNORE
-    NULLS).  Same partial-aggregation scale story as
-    :func:`dedup_latest_agg`; use :func:`latest_non_null` when every
-    input row must be kept."""
-    ties = tiebreak_cols or []
-    def ord_for(c: str):
-        return F.when(
-            F.col(c).isNotNull(),
-            F.struct(F.col(order_col), *[F.col(t) for t in ties]),
-        )
-    return df.groupBy(*key_cols).agg(
-        *[F.max_by(F.col(c), ord_for(c)).alias(c) for c in fill_cols]
-    )
-
-
-def latest_non_null(df: DataFrame, key_cols: list[str], order_col: str,
-                    fill_cols: list[str], tiebreak_cols: list[str] | None = None) -> DataFrame:
-    """W2: per key, fill each column with its latest non-null value
-    (reference ``streaming_job.py:101-128``: ``first_value(x) IGNORE
-    NULLS OVER (PARTITION BY k ORDER BY ts DESC ROWS BETWEEN UNBOUNDED
-    PRECEDING AND UNBOUNDED FOLLOWING)``)."""
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in (tiebreak_cols or [])]
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    out = df
-    for c in fill_cols:
-        out = out.withColumn(c, F.first(F.col(c), ignorenulls=True).over(w))
-    return out
+    order = F.struct(F.col(order_col), *[F.col(c) for c in tiebreak_cols or []])
+    row = F.struct(*[_gen(c) for c in df.columns])
+    picked = df.groupBy(*key_cols).agg(F.max_by(row, order).alias("__row"))
+    return picked.select(*[F.col("__row").getField(c).alias(c) for c in df.columns])
 
 
 def max_over_partition(df: DataFrame, key_cols: list[str], col: str, alias: str) -> DataFrame:

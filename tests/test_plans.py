@@ -70,13 +70,20 @@ def test_topk_window_group_limit_partial(spark, sf_medium):
 
 
 def test_keep_latest_declared_as_partial_agg(spark, sf_medium):
-    """W1 fast path: the declared keep-latest query must plan as
+    """W1/W2: the declared keep-latest query and the medallion gold
+    latest state (keep-latest plus latest-non-null fill) must plan as
     partial+final max_by aggregation (shuffle carries one candidate
     per key per task), not as a full-sort window."""
-    df = _Q["q_dedup_latest"](spark, sf_medium)
-    plan = P.formatted_plan(df)
-    assert P.has_partial_aggregation(df), plan
-    assert "Window" not in plan, plan
+    from real_timetransactionaldatalakehouse_spark import medallion as MD
+
+    orders = spark.createDataFrame(
+        [(1, 10, "placed", 5.0), (1, 20, None, None), (2, 15, "paid", 7.5)],
+        "order_id int, event_timestamp int, current_status string, total_amount double",
+    )
+    for df in (_Q["q_dedup_latest"](spark, sf_medium), MD.build_gold_latest_state(orders)):
+        plan = P.formatted_plan(df)
+        assert P.has_partial_aggregation(df), plan
+        assert "Window" not in plan, plan
 
 
 def test_whole_stage_codegen_covers_hot_path(spark, sf_medium):

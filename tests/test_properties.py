@@ -14,12 +14,12 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from real_timetransactionaldatalakehouse_spark.operators.merge import merge_upsert  # noqa: E402
+from real_timetransactionaldatalakehouse_spark.operators.merge import (  # noqa: E402
+    latest_state,
+    merge_upsert,
+)
 from real_timetransactionaldatalakehouse_spark.operators.relational import (  # noqa: E402
     dedup_latest,
-    dedup_latest_agg,
-    latest_non_null,
-    latest_non_null_agg,
     sessionize,
 )
 
@@ -98,34 +98,50 @@ def test_dedup_latest_picks_max_order_tuple(spark, data):
     assert got == expected
 
 
-@SETTINGS
-@given(data=rows)
-def test_dedup_latest_agg_equals_window_form(spark, data):
-    """The max_by aggregation form is a physical-strategy swap, not a
-    semantic one: same rows out as the ROW_NUMBER window form, null
-    tiebreaks included (struct ordering sorts nulls first == DESC
-    NULLS LAST)."""
-    df = _df(spark, data)
-    win = {tuple(r) for r in dedup_latest(df, ["k"], "ts", tiebreak_cols=["v"]).collect()}
-    agg = {tuple(r) for r in dedup_latest_agg(df, ["k"], "ts", tiebreak_cols=["v"]).collect()}
-    assert agg == win
+# (key, ts-or-null, event id, fill value-or-null, status-or-null)
+event = st.tuples(
+    st.integers(min_value=0, max_value=3),
+    st.one_of(st.none(), st.integers(min_value=0, max_value=6)),
+    st.integers(min_value=0, max_value=10**6),
+    st.one_of(st.none(), st.integers(min_value=-50, max_value=50)),
+    st.one_of(st.none(), st.sampled_from(["a", "b", "c"])),
+)
 
 
 @SETTINGS
-@given(data=rows)
-def test_latest_non_null_agg_equals_window_form(spark, data):
-    """One-row-per-key conditional max_by == window IGNORE-NULLS fill
-    followed by keep-latest."""
-    df = _df(spark, data)
-    filled = latest_non_null(df, ["k"], "ts", ["v"], tiebreak_cols=["v"])
-    # NB: tiebreak on the *original* v is unavailable after the fill
-    # overwrites it, so compare on a schema where ties cannot happen:
-    # dedupe (k, ts) first to make order unambiguous.
-    uniq = df.groupBy("k", "ts").agg(F.max("v").alias("v"))
-    filled = latest_non_null(uniq, ["k"], "ts", ["v"])
-    win = {(r.k, r.v) for r in dedup_latest(filled, ["k"], "ts").select("k", "v").collect()}
-    agg = {tuple(r) for r in latest_non_null_agg(uniq, ["k"], "ts", ["v"]).collect()}
-    assert agg == win
+@given(data=st.lists(event, min_size=0, max_size=30, unique_by=lambda e: e[2]))
+def test_latest_state_matches_bruteforce(spark, data):
+    """latest_state against a brute-force reference: per key, order
+    rows by (ts, eid) with a NULL ts sorting below every value (DESC
+    NULLS LAST); the fill column ``v`` holds the first non-null value
+    in that order (first_value IGNORE NULLS), the other columns (ts,
+    eid, and the unfilled ``s`` even when NULL) come from the top row."""
+    df = spark.createDataFrame(data, "k int, ts int, eid int, v int, s string")
+    got = {tuple(r) for r in latest_state(df, ["k"], "ts", ["v"], tiebreak_cols=["eid"]).collect()}
+
+    def rank(e):
+        return (e[1] is not None, e[1] if e[1] is not None else 0, e[2])
+
+    want = set()
+    for k in {e[0] for e in data}:
+        desc = sorted((e for e in data if e[0] == k), key=rank, reverse=True)
+        top = desc[0]
+        fill = next((e[3] for e in desc if e[3] is not None), None)
+        want.add((k, top[1], top[2], fill, top[4]))
+    assert got == want
+
+
+def test_keep_latest_resolves_dotted_column_names(spark):
+    """Column names containing a dot are literal top-level names to
+    dedup_latest and latest_state, never nested-field paths."""
+    df = spark.createDataFrame(
+        [(1, 1, 5.0, "x"), (1, 2, None, "y"), (2, 1, None, None)],
+        "k int, ts int, `px.usd` double, `tag.v` string",
+    )
+    assert {tuple(r) for r in dedup_latest(df, ["k"], "ts").collect()} == {
+        (1, 2, None, "y"), (2, 1, None, None)}
+    assert {tuple(r) for r in latest_state(df, ["k"], "ts", ["px.usd"]).collect()} == {
+        (1, 2, 5.0, "y"), (2, 1, None, None)}
 
 
 @SETTINGS

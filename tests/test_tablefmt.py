@@ -778,3 +778,60 @@ def test_rewrite_sizing_and_stats_follow_the_live_snapshot(spark, tmp_path):
     st = MT.table_stats(spark, path).first()
     assert st.n_files == len(base) + len(delta)
     assert st.total_bytes == sum(base) + sum(delta)
+
+
+def test_rewrites_keep_the_partition_layout(spark, tmp_path):
+    """compact, ttl_delete and zorder_compact rewrite a partitioned
+    table into the layout read off its own live files: the rewritten
+    table keeps its p_date/p_bucket dirs (no root data file), a bucket
+    lookup still plans a p_bucket partition filter, a later
+    partitioned append reads beside the rewritten rows, and a
+    versioned table (full or merge-on-read snapshot) keeps its
+    partition dirs."""
+    import re
+
+    from real_timetransactionaldatalakehouse_spark.serving import bucket_pruned_lookup
+
+    def gold(lo, n=1000):
+        return spark.range(lo, lo + n).select(
+            F.col("id").alias("user_id"),
+            (F.col("id") % 97).alias("v"),
+            F.expr("date_add(DATE'2024-01-01', CAST(id % 3 AS INT))").alias("p_date"),
+            F.pmod(F.xxhash64("id"), F.lit(4)).alias("p_bucket"),
+        )
+
+    def layout(root):
+        files = [os.path.relpath(os.path.join(r, n), root)
+                 for r, _d, ns in os.walk(root) for n in ns if n.endswith(".parquet")]
+        return {tuple(d.split("=")[0] for d in os.path.dirname(f).split(os.sep))
+                for f in files}
+
+    def prunes_bucket(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return re.search(r"PartitionFilters: \[[^\]]*p_bucket", plan) is not None
+
+    path = str(tmp_path / "gold")
+    gold(0).write.partitionBy("p_date", "p_bucket").parquet(path)
+    want = {("p_date", "p_bucket")}
+    assert layout(path) == want
+    res = MT.compact(spark, path)
+    assert res["rows_after"] == 1000
+    assert layout(path) == want
+    assert prunes_bucket(bucket_pruned_lookup(spark.read.parquet(path), "user_id", 7, n_buckets=4))
+    gold(1000).write.mode("append").partitionBy("p_date", "p_bucket").parquet(path)
+    assert spark.read.parquet(path).count() == 2000
+
+    kept = sum(1 for i in range(2000) if i % 97 >= 10)
+    assert MT.ttl_delete(spark, path, "v", 10)["rows_after"] == kept
+    assert layout(path) == want
+    MT.zorder_compact(spark, path, ["user_id", "v"], bits=8)
+    assert layout(path) == want
+    assert spark.read.parquet(path).count() == kept
+
+    tbl = str(tmp_path / "vt")
+    TF.write_version(gold(0), tbl, partition_by=["p_date"])
+    TF.write_mor_upsert(gold(990, 20), tbl, ["user_id"])
+    for _ in range(2):  # over the MoR chain, then over a full snapshot
+        MT.compact(spark, tbl)
+        assert layout(TF.version_path(tbl, TF.current_version(tbl))) == {("p_date",)}
+        assert TF.read_table(spark, tbl).count() == 1010
