@@ -35,11 +35,6 @@ def dsum(col: Column | str, scale: int = 4) -> Column:
     return F.sum(c.cast(f"decimal(28,{scale})")).cast("double")
 
 
-def dsum_sql(expr: str, scale: int = 4) -> str:
-    """DuckDB-side twin of :func:`dsum` (keep in lockstep)."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(28,{scale}))) AS DOUBLE)"
-
-
 def msum(col: Column | str, scale: int = 2) -> Column:
     """Order-independent sum of a fixed-point monetary DOUBLE column.
 
@@ -60,12 +55,6 @@ def msum(col: Column | str, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     m = 10 ** scale
     return F.sum(F.round(c * m).cast("long")) / F.lit(float(m))
-
-
-def msum_sql(expr: str, scale: int = 2) -> str:
-    """DuckDB-side twin of :func:`msum` (keep in lockstep)."""
-    m = 10 ** scale
-    return f"CAST(SUM(CAST(round({expr} * {m}) AS BIGINT)) AS DOUBLE) / {m}.0"
 
 
 def lsum(term: Column, cast_double: bool = True) -> Column:
@@ -113,13 +102,6 @@ def davg(col: Column | str, scale: int = 4) -> Column:
     )
 
 
-def davg_sql(expr: str, scale: int = 4) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(28,{scale}))) AS DOUBLE)"
-        f" / CAST(COUNT({expr}) AS DOUBLE)"
-    )
-
-
 def ts_second(col: Column | str) -> Column:
     """Truncate a timestamp to whole seconds for hash-stable output.
 
@@ -130,8 +112,6 @@ def ts_second(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.date_trunc("second", c)
 
-
-TS_SECOND_SQL = "date_trunc('second', CAST({col} AS TIMESTAMP))"
 
 # ------------------------------------------------------- reference H* surface
 
@@ -152,12 +132,6 @@ def epoch_seconds_to_ts(col: Column | str) -> Column:
     """H7 epoch-seconds LONG -> TIMESTAMP (reference ``streaming_job.py:202``)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.timestamp_seconds(c)
-
-
-def epoch_millis_to_ts(col: Column | str) -> Column:
-    """H7 epoch-millis LONG -> TIMESTAMP (reference ``stream_dims.py:157``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_millis(c)
 
 
 def seconds_between(start: Column, end: Column) -> Column:

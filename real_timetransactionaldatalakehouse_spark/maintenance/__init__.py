@@ -461,91 +461,3 @@ def zorder_compact(
         "files_target": n_files,
         "zorder_by": list(cols),
     }
-
-
-def insert_overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-) -> None:
-    """Idempotent backfill: overwrite ONLY the partitions present in
-    ``df``, leaving every other partition untouched (Spark's dynamic
-    partition-overwrite mode — the standard reprocess-one-day pattern;
-    static mode would wipe the whole table root).
-
-    The mode is set per-write and restored afterwards so a session
-    running mixed workloads keeps its default.  At scale the write
-    parallelism is the input's partitioning; pair with
-    ``repartition(partition_cols)`` upstream when many tasks would
-    otherwise write tiny files into the same partition directory.
-    """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a hash-bucketed (optionally sorted) catalog table — the
-    co-located join layout: two tables bucketed on the same key with
-    the same bucket count join with ZERO exchanges (Spark reads each
-    bucket pair as one task; with sort columns the sort vanishes too).
-    At 100 TB this converts every recurring fact-to-fact join on the
-    bucket key from a full shuffle of both sides into a local merge —
-    the single biggest recurring-ETL saving there is; the cost is one
-    bucketed rewrite paid once at load time.
-
-    Uses ``saveAsTable`` (bucket metadata lives in the catalog;
-    path-based writes cannot carry it).  Plan contract locked by
-    ``tests/test_plans.py::test_bucketed_join_has_no_exchange``.
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
-
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    rows_per_file: int,
-    order_cols: list[str] | None = None,
-    fmt: str = "parquet",
-) -> dict:
-    """Export fixed-size training shards: at most ``rows_per_file``
-    rows per output file (``maxRecordsPerFile`` — the writer rolls
-    files mid-task, so shard size is enforced WITHOUT repartitioning
-    to one-task-per-shard), optionally range-ordered first so shard k
-    covers a contiguous id range (reproducible curriculum/resume
-    semantics for the training loader).
-
-    JSONL delivery (``fmt="json"``) ships the same shards as
-    line-delimited JSON for loaders that do not read parquet.
-    Returns ``{"files": n, "rows": n}`` for the manifest.
-    """
-    out = df
-    if order_cols:
-        out = out.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", rows_per_file)
-        .format(fmt)
-        .save(path)
-    )
-    spark = df.sparkSession
-    back = spark.read.format(fmt).load(path)
-    n_files = back.select(F.input_file_name()).distinct().count()
-    return {"files": int(n_files), "rows": int(back.count())}

@@ -8,8 +8,8 @@ execution modes (reference PipelineArchitecture.md:209-213).
 
 The silver layer is the reference's *declared but unimplemented*
 capability (DataModel_SchemaDesign.md:39-62, features.todo:29): 30-min
-gap sessionization + point-in-time dimension enrichment + completion-
-rate derivation.  Implemented here.
+gap sessionization + point-in-time dimension enrichment.  Implemented
+here; the declared completion-rate column is not derived.
 """
 
 from __future__ import annotations
@@ -17,15 +17,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.joins import asof_join, enrich_left
+from ..operators.joins import asof_join
 from ..operators.merge import latest_state
 from ..operators.relational import sessionize, tumbling_window_counts
 
 
-def build_bronze(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def build_bronze(events: DataFrame) -> DataFrame:
     """Bronze: header columns + raw JSON body untouched, audit stamp —
     schema drift never breaks ingestion (Header+Body pattern,
-    reference PipelineArchitecture.md:24)."""
+    reference PipelineArchitecture.md:24).  The streaming bronze
+    (``streaming.jobs.bronze_append_stream``) runs it per micro-batch."""
     return events.withColumn("ingested_at", F.current_timestamp())
 
 
@@ -97,42 +98,3 @@ def build_gold_latest_state(
         c for c in order_events.columns if c not in (key, ts_col)
     ]
     return latest_state(order_events, [key], ts_col, fills, tiebreak_cols=None)
-
-
-def enrich_gold(gold: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Read-time star join for serving (J3/J4) — dims broadcast."""
-    return enrich_left(gold, dim, on)
-
-
-def content_bronze(parsed: DataFrame) -> DataFrame:
-    """Content-events bronze projection (reference
-    stream_content.py:105-114): typed header columns + the payload
-    struct re-serialized to a JSON string body (Header+Body), audit
-    stamped.  Schema drift in the payload never breaks bronze."""
-    return parsed.select(
-        "event_id",
-        "event_timestamp",
-        "video_id",
-        "user_id",
-        "event_type",
-        F.to_json("payload").alias("raw_payload"),
-    ).withColumn("ingested_at", F.current_timestamp())
-
-
-def derive_completion(
-    df: DataFrame,
-    watch_col: str = "watch_time_ms",
-    duration_col: str = "video_duration_ms",
-    out: str = "completion_rate",
-) -> DataFrame:
-    """Silver completion-rate derivation (reference
-    DataModel_SchemaDesign.md:62): watch_time / video_duration, FLOAT,
-    clamped to [0, 1], null-safe on missing duration."""
-    rate = F.when(
-        F.col(duration_col).isNotNull() & (F.col(duration_col) > 0),
-        F.least(
-            F.col(watch_col).cast("double") / F.col(duration_col).cast("double"),
-            F.lit(1.0),
-        ),
-    )
-    return df.withColumn(out, rate.cast("float"))

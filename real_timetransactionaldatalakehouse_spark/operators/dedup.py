@@ -152,34 +152,6 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     return F.slice(sh, 1, F.greatest(F.size(t) - (n - 1), F.lit(1)))
 
 
-def _seeded_hash(seed: int):
-    # NB: capture via closure, not a defaulted lambda arg — pyspark
-    # treats a 2-parameter transform lambda as (element, index)
-    return lambda s: F.xxhash64(F.lit(seed), s)
-
-
-def minhash_signature(text_col: str, num_hashes: int = 32, n: int = 3) -> Column:
-    """MinHash signature as array<long>, computed per row: for seed i,
-    sig[i] = min over shingles of xxhash64(seed_i, shingle).  Pure
-    expression — whole-stage codegen, zero shuffle.
-
-    NOTE: when computing many signatures, materialize the shingle array
-    into a column first (as minhash_neardup_pairs does) — Catalyst does
-    not CSE the shingle subtree across the per-seed lambdas, and
-    recomputing it num_hashes times is ~13x slower."""
-    sh = F.array_distinct(word_shingles(text_col, n))
-    return F.array(
-        *[F.array_min(F.transform(sh, _seeded_hash(i))) for i in range(num_hashes)]
-    )
-
-
-def minhash_signature_from_shingles(sh: Column, num_hashes: int = 32) -> Column:
-    """Signature from an already-materialized distinct-shingle column."""
-    return F.array(
-        *[F.array_min(F.transform(sh, _seeded_hash(i))) for i in range(num_hashes)]
-    )
-
-
 def _splitmix64(x):
     """Vectorized splitmix64 finalizer over a uint64 numpy array."""
     import numpy as np
@@ -522,36 +494,6 @@ def _bucket_pairs(banded: DataFrame, keys: list[str], max_bucket: int | None) ->
         )
     )
     return g.select(F.explode(half).alias("p"))
-
-
-def simhash_from_hashes(th: Column, bits: int = 64) -> Column:
-    """SimHash from a materialized token-hash array (array<long>):
-    per-bit majority vote folded per row.  Materialize the hashes once
-    — Catalyst does not CSE the token subtree across the 64 per-bit
-    aggregates."""
-
-    def bit_sum(bit: int):
-        def step(acc, h):
-            return acc + F.when(
-                F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return F.aggregate(th, F.lit(0), step)
-
-    sig = F.lit(0).cast("long")
-    for i in range(bits):
-        sig = sig + F.when(
-            bit_sum(i) > 0, F.lit(2**i if i < 63 else -(2**63)).cast("long")
-        ).otherwise(0)
-    return sig
-
-
-def simhash_signature(text_col: str, bits: int = 64) -> Column:
-    """X2-adjacent: SimHash — 64-bit bit-majority over token hashes;
-    BIGINT signature.  For corpus-wide scoring go through
-    simhash_from_hashes on a materialized hash column (13x cheaper)."""
-    th = F.transform(F.array_distinct(tokens(text_col)), lambda tok: F.xxhash64(tok))
-    return simhash_from_hashes(th, bits)
 
 
 def _simhash_sig_udf(bits: int = 64):
@@ -1645,102 +1587,6 @@ def removable_spans_keep_first(
         .select("id", "start", (F.col("start") + L - 1).alias("end"))
     )
     return _merge_islands(hits)
-
-
-def trim_duplicated_spans(
-    df: DataFrame,
-    spans: DataFrame | None = None,
-    min_gram: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
-    keep: str = "none",
-    max_occ: int | None = None,
-) -> DataFrame:
-    """ACT side of :func:`substring_dup_spans`: rebuild each document
-    with duplicated-span tokens removed.  Output: the input columns
-    with ``text_col`` replaced by the trimmed text plus ``n_trimmed``
-    (tokens removed; 0 for untouched docs).
-
-    ``keep`` selects the published semantics (r12, VERDICT r11 #4):
-
-    - ``"none"`` (default, unchanged): remove EVERY marked occurrence
-      — more aggressive than Lee et al., and what boilerplate/chrome
-      trimming wants (all copies are noise).  A document that is one
-      big duplicated span trims to the empty string — gate on
-      ``n_trimmed`` / original length downstream if empties must
-      drop.
-    - ``"first"``: Lee et al.'s keep-one-copy ExactSubstr — the
-      global first occurrence (min ``(id, start)``) of each
-      duplicated gram survives; see
-      :func:`removable_spans_keep_first` for the election and its
-      gram-granularity boundary semantics.
-
-    Scale shape: the span table is duplicated-region-sized (tiny
-    against the corpus); it aggregates to one array per affected doc
-    (collect_list over few spans) and joins back by id — one narrow
-    key shuffle.  The trim itself is a per-row HOF (position-filter
-    over the token array), map-only, codegen.  ``max_occ`` passes
-    through to :func:`substring_dup_spans` (keep="none" only — the
-    keep="first" election is skew-free by construction).
-    """
-    if keep not in ("none", "first"):
-        raise ValueError(f"keep must be 'none' or 'first', got {keep!r}")
-    if keep == "first" and max_occ is not None:
-        raise ValueError(
-            "max_occ applies to the keep='none' COUNT-window path only; "
-            "the keep='first' election is skew-free by construction — "
-            "dropping the argument silently would fake a guard"
-        )
-    if spans is None:
-        if keep == "first":
-            spans = removable_spans_keep_first(
-                df, min_gram, text_col, id_col, hash_fn
-            )
-        else:
-            spans = substring_dup_spans(
-                df, min_gram, text_col, id_col, hash_fn, max_occ=max_occ
-            )
-    elif keep == "first":
-        raise ValueError(
-            "keep='first' elects survivors from the gram stream; a "
-            "precomputed spans frame has no occurrence info — pass "
-            "spans=None"
-        )
-    sp = spans.groupBy("id").agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
-    ).withColumnRenamed("id", "__sid")
-    joined = df.join(
-        sp, F.col(id_col) == F.col("__sid"), "left"
-    ).drop("__sid")
-    t = tokens(text_col)
-    pos = F.transform(
-        t, lambda x, i: F.struct(x.alias("tok"), (i + 1).alias("p"))
-    )
-    kept = F.transform(
-        F.filter(
-            pos,
-            lambda s: ~F.exists(
-                F.col("__spans"),
-                lambda sv: (s["p"] >= sv["span_start"])
-                & (s["p"] <= sv["span_end"]),
-            ),
-        ),
-        lambda s: s["tok"],
-    )
-    out_text = F.when(
-        F.col("__spans").isNull() | F.col(text_col).isNull(),
-        F.col(text_col),
-    ).otherwise(F.concat_ws(" ", kept))
-    n_trimmed = F.when(
-        F.col("__spans").isNull() | F.col(text_col).isNull(), F.lit(0)
-    ).otherwise(F.size(t) - F.size(kept)).cast("long")
-    # n_trimmed FIRST: both expressions read text_col, and withColumn
-    # rebinds later expressions to the REPLACED column (the trimmed
-    # text would make n_trimmed re-trim its own output)
-    return joined.withColumn("n_trimmed", n_trimmed).withColumn(
-        text_col, out_text
-    ).drop("__spans")
 
 
 def drop_repeated_lines(

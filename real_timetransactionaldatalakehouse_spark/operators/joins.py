@@ -249,51 +249,6 @@ def interval_join(
     return matched.unionByName(missing)
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salt: int = 8,
-    how: str = "inner",
-    salt_by: list[str] | None = None,
-) -> DataFrame:
-    """Skew-safe large-large equi-join: the left (skewed) side gets a
-    deterministic salt in ``[0, salt)``, the right side replicates
-    ``salt`` times, and the join key becomes ``(key, salt)`` — a hot
-    key's rows spread over ``salt`` reducers instead of serializing
-    through one.
-
-    AQE's skew-join split handles MOST of this automatically at
-    runtime; reach for explicit salting when the skew is known and
-    extreme (one key = 30% of rows), when AQE is off (streaming
-    micro-batches), or when the downstream stage must inherit the
-    finer partitioning.  Cost: the right side shuffles ``salt``x its
-    size — keep ``salt`` near the hot key's reducer-count need, not
-    higher.
-
-    The salt is ``xxhash64(salt_by or all left columns) % salt`` —
-    deterministic, so task retries re-salt a row identically
-    (``rand()`` salting breaks exactly-once sinks the same way it
-    breaks split assignment).  Consequence: EXACT-duplicate left rows
-    all land on one salt value, so skew caused by replayed identical
-    rows is NOT spread (while the right side still pays salt-x
-    replication) — dedup replays first, or pass ``salt_by`` columns
-    that distinguish the copies (an offset/ingest column).  Only
-    inner/left joins: right rows replicate, so right-preserving joins
-    would duplicate unmatched right rows.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
-    cols = salt_by or [c for c in left.columns]
-    l_salted = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(salt))
-    )
-    r_rep = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    return l_salted.join(r_rep, [on, "__salt"], how).drop("__salt")
-
-
 def asof_join_nearest(
     fact: DataFrame,
     timeline: DataFrame,

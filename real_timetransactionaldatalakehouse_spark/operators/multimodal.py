@@ -1,7 +1,6 @@
 """Multimodal columns (SURVEY.md section 2 X5, north-star EXT):
 image/audio/video as opaque BINARY columns + typed metadata structs,
-with decode / feature-extract / resize / frame-sample as Arrow-batched
-``mapInPandas`` stages.
+with decode / feature-extract as Arrow-batched ``mapInPandas`` stages.
 
 The container has no image/audio codecs, so the *decode kernels* are
 stubbed: ``deterministic_fake_features`` derives a stable feature
@@ -185,45 +184,6 @@ def extract_features(df: DataFrame, payload_col: str = "payload",
             yield pdf
 
     return df.mapInPandas(kernel, out_schema)
-
-
-def resize_images(df: DataFrame, width: int, height: int,
-                  payload_col: str = "payload") -> DataFrame:
-    """Image resize stage via mapInPandas: meta is rewritten to the
-    target dimensions and the payload re-encoded.  The pixel kernel is
-    the FAKE stub (payload passes through, tagged) — the Spark-side
-    contract (schema preserved, Arrow batching, per-task memory bound)
-    is the real thing a codec drops into."""
-    out_schema = df.schema
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            # FAKE resize: a real kernel decodes, resamples to
-            # (width, height), re-encodes; the stub keeps bytes as-is
-            pdf["meta"] = pdf["meta"].map(
-                lambda m: {**m, "width": width, "height": height}
-                if m is not None else None
-            )
-            yield pdf
-
-    return (
-        df.filter(F.col("kind") == "image")
-        .mapInPandas(kernel, out_schema)
-    )
-
-
-def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame offset.
-    Spark-side plumbing is real (posexplode over the sampled offsets);
-    the per-frame decode is the stub."""
-    n_frames = (F.coalesce(F.col("meta.duration_ms"), F.lit(0)) / every_ms).cast("int")
-    offsets = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))
-    return (
-        df.filter(F.col("kind") == "video")
-        .select("media_id", F.explode(offsets).alias("frame_idx"))
-        .withColumn("frame_offset_ms", F.col("frame_idx") * every_ms)
-    )
 
 
 def synthetic_media(spark, documents: DataFrame, n: int = 64) -> DataFrame:

@@ -66,32 +66,6 @@ def topk_per_group(df: DataFrame, group_cols: list[str], order_col: str, k: int,
     )
 
 
-def topk_per_group_salted(df: DataFrame, group_cols: list[str], order_col: str,
-                          k: int, tiebreak_cols: list[str] | None = None,
-                          desc: bool = True, salt: int = 16) -> DataFrame:
-    """W5 under Zipf skew (SURVEY.md section 4 O13): two-phase top-k.
-
-    A plain per-group window sorts each group in ONE partition — a key
-    holding 1% of 100 TB serializes ~1 TB through a single task.  The
-    salted form splits every group into ``salt`` deterministic
-    sub-groups (hash of order+tiebreak cols, so the split needs no
-    extra columns), takes top-k within each, then re-ranks the
-    <= salt*k survivors per group — the second window's partitions are
-    bounded by salt*k rows regardless of key skew.
-
-    Exactly equal to :func:`topk_per_group` whenever (order_col,
-    tiebreak_cols) is a total order within each group (same requirement
-    the plain form needs for determinism anyway).
-    """
-    ties = tiebreak_cols or []
-    salt_col = F.pmod(F.xxhash64(*[F.col(c) for c in [order_col, *ties]]), F.lit(salt))
-    salted = df.withColumn("__salt", salt_col)
-    phase1 = topk_per_group(
-        salted, [*group_cols, "__salt"], order_col, k, tiebreak_cols=ties, desc=desc
-    ).drop("rank", "__salt")
-    return topk_per_group(phase1, group_cols, order_col, k, tiebreak_cols=ties, desc=desc)
-
-
 def sessionize(df: DataFrame, key_col: str, ts_col: str, gap_minutes: int = 30,
                tiebreak_cols: list[str] | None = None,
                session_col: str = "session_id") -> DataFrame:

@@ -678,72 +678,6 @@ def pack_sequences(
     return _attach_layout(_attach_cached(out, [base]), [base])
 
 
-def heavy_hitters(
-    df: DataFrame,
-    col: str,
-    k: int = 10,
-    counters: int = 1024,
-) -> DataFrame:
-    """Approximate frequent items (Misra-Gries / SpaceSaving family):
-    per-partition bounded summaries of ``counters`` counters, merged by
-    key, global top-``k`` — the heavy-hitter sketch that replaces an
-    exact full groupBy when the key cardinality (URLs, n-grams, user
-    agents) dwarfs memory at 100 TB.
-
-    Guarantees (classic MG bound): each partition's summary
-    under-counts any key by at most ``n_p / counters`` (``n_p`` = rows
-    in that partition), so the merged estimate under-counts by at most
-    ``sum_p n_p / counters = N / counters`` and NEVER over-counts.
-    Every key with true count > N / counters survives in at least one
-    summary.  The shuffle carries at most ``counters`` rows per
-    partition — summary-sized, independent of data volume.
-
-    Arrow-batched ``mapInPandas`` keeps the counter dict per partition;
-    the merge is a plain sum-groupBy over the tiny summaries plus a
-    ``TakeOrdered`` top-k.  Estimates are lower bounds; callers needing
-    exact counts re-scan filtered to the candidate set (linear, one
-    pass, k rows out).
-    """
-    import pandas as pd
-
-    out_type = df.schema[col].dataType.simpleString()
-
-    def summarize(batches):
-        counts: dict = {}
-        for pdf in batches:
-            for v in pdf[col]:
-                if v is None:
-                    continue
-                if v in counts:
-                    counts[v] += 1
-                elif len(counts) < counters:
-                    counts[v] = 1
-                else:
-                    # MG decrement step: all counters give one to the
-                    # unseen key; zeroed counters drop out
-                    dead = []
-                    for key in counts:
-                        counts[key] -= 1
-                        if counts[key] == 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counts[key]
-        if counts:
-            yield pd.DataFrame(
-                {col: list(counts), "est": list(counts.values())}
-            )
-
-    summaries = df.select(col).mapInPandas(
-        summarize, schema=f"{col} {out_type}, est long"
-    )
-    return (
-        summaries.groupBy(col)
-        .agg(F.sum("est").alias("est_count"))
-        .orderBy(F.col("est_count").desc(), F.col(col).asc())
-        .limit(k)
-    )
-
-
 def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,

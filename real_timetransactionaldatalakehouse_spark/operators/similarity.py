@@ -316,19 +316,6 @@ def _planes_matrix_expr(n_planes: int, dim: int) -> Column:
     return F.expr(f"array({rows})")
 
 
-def lsh_bucket(vec_col: Column, planes: int = 8, dim: int = 64, table: int = 0) -> Column:
-    """Sign-random-projection bucket id (0..2^planes-1), per row.
-    ``table`` offsets the hyperplane family so independent hash tables
-    see independent projections."""
-    bits = F.transform(
-        _planes_matrix_expr((table + 1) * planes, dim),
-        lambda hp: F.when(dot(vec_col, hp) > 0, F.lit(1)).otherwise(F.lit(0)),
-    )
-    return F.aggregate(
-        F.slice(bits, table * planes + 1, planes), F.lit(0), lambda acc, b: acc * 2 + b
-    )
-
-
 def _np_planes(n_planes: int, dim: int):
     import numpy as np
 
@@ -1388,9 +1375,11 @@ def semantic_dedup(
 
     Output: ``(id, cell, cluster_id, n_members, keep)`` for every
     member of a duplicate group; singletons never enter the pair graph
-    and are implicit keeps (``dedup.neardup_clusters`` contract).
+    and are implicit keeps (``dedup.neardup_clusters`` contract).  An
+    engaged collapse persists its member table and attaches it as a
+    cached dep (release via ``dedup.release_cached``).
     """
-    from .dedup import neardup_clusters
+    from .dedup import _attach_cached, neardup_clusters
 
     import math
 
@@ -1431,7 +1420,10 @@ def semantic_dedup(
         # (rep, group size, group norm) per member via ONE window over
         # the fingerprint instead of groupBy + join-back — one scan and
         # one keyed exchange, not two of each plus an SMJ; group rows
-        # are the id == rep filter of the same frame.
+        # are the id == rep filter of the same frame.  Persisted: the
+        # groups, lone and sizes branches and the member expansion all
+        # read it, and each cold read would rerun the window exchange
+        # (same as dedup._collapsed_graph).
         wfp = Window.partitionBy("__f1", "__f2")
         member = (
             base.select(
@@ -1446,6 +1438,7 @@ def semantic_dedup(
                 F.count(F.lit(1)).over(wfp).alias("__n"),
                 F.min("__vn").over(wfp).alias("__gn"),
             )
+            .persist()
         )
         groups = member.filter(F.col("id") == F.col("__rep")).select(
             "__rep", "__n", "__gn"
@@ -1569,13 +1562,14 @@ def semantic_dedup(
     wk = Window.partitionBy("cluster_id").orderBy(
         F.col("cent_cos").asc(), F.col("id").asc()
     )
-    return members.select(
+    out = members.select(
         "id",
         "cell",
         "cluster_id",
         "n_members",
         (F.row_number().over(wk) == 1).alias("keep"),
     )
+    return _attach_cached(out, [member]) if collapse_exact else out
 
 
 def semantic_contamination(

@@ -381,7 +381,7 @@ def chunk_documents(
     stride = budget - overlap
     # materialize the token array before the explode references it
     # twice (chunk count + slicing) — Catalyst does not CSE the split
-    # across expressions (same note as minhash_signature)
+    # across expressions
     toked = df.select(F.col(id_col), tokens(text_col).alias("__t"))
     n = F.size("__t")
     # NULL text: size(NULL) is NULL and F.greatest skips nulls, so the
@@ -1215,166 +1215,3 @@ def c4_line_filter(
             "n_lines_kept": F.size("__kept").cast("long"),
         }
     ).drop("__lines", "__kept")
-
-
-def _bpe_merge_pair(sym: Column, left: str, right: str) -> Column:
-    """One BPE merge applied to a symbol array: every adjacent
-    (left, right) pair collapses to the concatenated symbol, greedy
-    left-to-right (``a a a`` under merge ``(a, a)`` -> ``aa a`` — the
-    reference algorithm's scan order).  A single ``aggregate`` fold
-    carrying (emitted symbols, pending symbol); all JVM."""
-    start = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-
-    def step(acc, s):
-        take = (
-            acc["pend"].isNotNull()
-            & (acc["pend"] == F.lit(left))
-            & (s == F.lit(right))
-        )
-        return F.struct(
-            F.when(
-                take, F.concat(acc["out"], F.array(F.lit(left + right)))
-            )
-            .otherwise(
-                F.when(
-                    acc["pend"].isNotNull(),
-                    F.concat(acc["out"], F.array(acc["pend"])),
-                ).otherwise(acc["out"])
-            )
-            .alias("out"),
-            F.when(take, F.lit(None).cast("string")).otherwise(s).alias("pend"),
-        )
-
-    def fin(acc):
-        return F.when(
-            acc["pend"].isNotNull(), F.concat(acc["out"], F.array(acc["pend"]))
-        ).otherwise(acc["out"])
-
-    return F.aggregate(sym, start, step, fin)
-
-
-def bpe_learn(
-    df: DataFrame,
-    n_merges: int = 16,
-    text_col: str = "text",
-    min_pair_freq: int = 2,
-    end_of_word: str = "</w>",
-    checkpoint_every: int = 8,
-    repartition: bool = True,
-):
-    """Full BPE merge-rule induction (Sennrich et al. 2016 — the
-    published subword-vocabulary algorithm; extends the single-step
-    ranking of :func:`bpe_pair_counts` to the actual training loop).
-
-    The published algorithm is ALREADY the scalable shape: the corpus
-    contributes exactly ONE full pass (tokenize -> (word, freq) count
-    agg); every merge iteration runs on the WORD table — vocabulary-
-    sized (millions of rows at 100 TB), never corpus-sized — as one
-    pair-count aggregation plus a ONE-ROW argmax collect (metadata-
-    sized driver traffic per iteration, the planner-state rule).  The
-    winning pair maximizes frequency with a (left, right) lexicographic
-    tiebreak so the merge sequence is a pure function of the corpus.
-    Symbol rewriting is a per-row ``aggregate`` fold
-    (:func:`_bpe_merge_pair`); ``localCheckpoint`` every
-    ``checkpoint_every`` merges truncates the growing lineage (the
-    ``neardup_clusters`` discipline — checkpointed blocks stay
-    INTERNAL, reclaimed by RDD garbage collection or session end, the
-    documented price of iterative truncation; the blocks are
-    vocabulary-sized, not corpus-sized).  Iteration stops early when
-    no pair reaches ``min_pair_freq``.
-
-    Declared NON-SQL-expressible (iterative argmax loop) — certified
-    by pytest against a pure-Python reference implementation, the
-    X6ai/streaming precedent for non-oracle surface.
-
-    Returns ``(merges, words)``: ``merges`` is the ordered list of
-    ``(left, right, freq)`` rules; ``words`` the final symbolized word
-    DataFrame ``(w, freq, sym)`` for inspection / downstream
-    segmentation.
-    """
-    if repartition:
-        from ..sources import fan_out
-
-        df = fan_out(df)
-    words = (
-        df.select(
-            F.explode(F.filter(tokens(text_col), lambda t: t != "")).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn(
-            "sym",
-            F.concat(
-                F.split(F.col("w"), ""), F.array(F.lit(end_of_word))
-            ),
-        )
-    )
-    words = words.localCheckpoint(eager=False)
-    merges: list[tuple[str, str, int]] = []
-    for rank in range(n_merges):
-        pair_rows = (
-            words.filter(F.size("sym") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("sym") - 1),
-                        lambda i: F.struct(
-                            F.element_at(F.col("sym"), i).alias("l"),
-                            F.element_at(F.col("sym"), i + F.lit(1)).alias("r"),
-                        ),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not pair_rows or pair_rows[0]["n"] < min_pair_freq:
-            break
-        l, r, n = pair_rows[0]["l"], pair_rows[0]["r"], int(pair_rows[0]["n"])
-        merges.append((l, r, n))
-        words = words.withColumn("sym", _bpe_merge_pair(F.col("sym"), l, r))
-        if (rank + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=False)
-    return merges, words
-
-
-def bpe_segment(
-    df: DataFrame,
-    merges: list[tuple],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-    end_of_word: str = "</w>",
-) -> DataFrame:
-    """Apply a learned BPE merge list to every whitespace token of
-    ``text_col``; adds ``out_col`` (flat subword array, end-of-word
-    markers retained) — the token-counting path under a LEARNED vocab
-    (the regex pre-tokenizer of :func:`token_count_bpe` approximates a
-    FIXED published one).
-
-    Map-only, zero shuffles; each merge rule compiles to one nested
-    ``aggregate`` fold per token, applied in rank order (the published
-    application semantics).  Expression depth grows with the merge
-    list — this is the demonstration/counting path for the vocab sizes
-    the learner produces in-repo (tens of rules); a production
-    tokenizer with 10^4+ rules belongs in a trie-matching Arrow kernel,
-    not nested codegen expressions (documented bound, same honesty rule
-    as the multimodal decode stubs).
-    """
-    toks = F.filter(tokens(text_col), lambda t: t != "")
-
-    def segment_token(t):
-        sym = F.concat(F.split(t, ""), F.array(F.lit(end_of_word)))
-        for l, r, *_ in merges:
-            sym = _bpe_merge_pair(sym, l, r)
-        return sym
-
-    return df.withColumn(
-        out_col, F.flatten(F.transform(toks, segment_token))
-    )

@@ -65,37 +65,3 @@ def quality_stats(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
             for name in rules
         ],
     )
-
-
-def observed_gate(
-    df: DataFrame, rules: dict[str, Column], name: str = "quality"
-):
-    """Quality counters WITHOUT a second scan: attach the per-rule
-    violation counts to the frame as OBSERVED METRICS
-    (``DataFrame.observe``), so the numbers are collected as a
-    side-effect of whatever action materializes the frame — the write
-    itself — instead of :func:`quality_stats`'s separate aggregation
-    pass.  At 100 TB that is one table scan, not two.
-
-    Returns ``(annotated_df, observation)``: run any action on (a
-    derivative of) the returned frame, then read
-    ``observation.get`` -> ``{"n_rows": ..., "n_clean": ...,
-    "fail_<rule>": ...}``.  Works identically under batch; for
-    streaming use the same ``observe`` call and read metrics from
-    each progress event (``StreamingQueryListener``).
-    """
-    from pyspark.sql import Observation
-
-    a = annotate(df, rules)
-    obs = Observation(name)
-    metrics = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.size(VIOLATIONS_COL) == 0, 1)).alias("n_clean"),
-        *[
-            F.count(
-                F.when(F.array_contains(F.col(VIOLATIONS_COL), rule_name), 1)
-            ).alias(f"fail_{rule_name}")
-            for rule_name in rules
-        ],
-    ]
-    return a.observe(obs, *metrics), obs

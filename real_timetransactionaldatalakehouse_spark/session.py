@@ -122,15 +122,3 @@ def streaming_session(app: str = "lakehouse-stream", cpus: int | None = None) ->
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def pin_utc(spark: SparkSession) -> SparkSession:
-    """Pin the session timezone for oracle-deterministic timestamp math.
-
-    The driver supplies its own SparkSession to ``queries()`` callables;
-    timestamps in the testdata are timezone-naive parquet values that
-    Spark interprets in the session zone, so every declared query pins
-    UTC to match DuckDB's naive-UTC reading.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

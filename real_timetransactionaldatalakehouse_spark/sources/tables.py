@@ -40,7 +40,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # TIMESTAMP_NTZ on Spark 4, which rejects numeric casts and diverges
     # from the engine's single-timestamp-type contract.  Normalize to
     # TimestampType at the read boundary: the session zone is pinned UTC
-    # everywhere (``pin_utc``/``_q``), so the wall-clock values are
+    # everywhere (``_q``), so the wall-clock values are
     # unchanged — same semantics DuckDB applies to the same files.
     for c, t in df.dtypes:
         if t == "timestamp_ntz":

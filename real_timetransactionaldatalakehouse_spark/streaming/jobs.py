@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..medallion import build_bronze
 from ..operators.merge import merge_upsert
 from ..operators.relational import tumbling_window_counts
 from .. import tablefmt
@@ -86,7 +87,8 @@ def bronze_append_stream(
     """Bronze: immutable append log (reference streaming_job.py:81-84,
     A4/A5/A7/T5).  Each micro-batch is sorted within partitions by the
     event-time column before append (write clustering) and stamped
-    with an ingest audit column (H4).
+    with an ingest audit column (H4) by the batch bronze,
+    ``medallion.build_bronze``.
 
     The write is partitioned by derived ``p_date``/``p_hour`` columns
     (O1 — reference hidden partitioning ``hours(event_timestamp)``,
@@ -106,7 +108,7 @@ def bronze_append_stream(
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         (
-            batch.withColumn("ingested_at", F.current_timestamp())
+            build_bronze(batch)
             .select("*", *time_partition_cols(ts_col))
             .sortWithinPartitions(ts_col)
             .write.mode("append")

@@ -60,7 +60,7 @@ def test_bronze_vs_gold_consistency(spark):
     """The reference's verify_medallion check: bronze keeps full
     history; gold has one row per key with the max-ts status."""
     ev = _order_events(spark)
-    bronze = MD.build_bronze(ev, ts_col="event_timestamp")
+    bronze = MD.build_bronze(ev)
     assert bronze.count() == ev.count()
     multi = (
         bronze.groupBy("order_id").count().filter(F.col("count") > 1).collect()
@@ -230,69 +230,3 @@ def test_doomscroll_and_cold_start_views(spark, sf_small):
         want_band = ("green" if cs.pct_quality > 0.20
                      else "yellow" if cs.pct_quality >= 0.10 else "red")
         assert cs.band == want_band
-
-
-def test_insert_overwrite_partitions_touches_only_present(spark, tmp_path):
-    """Dynamic partition overwrite must replace only the partitions in
-    the incoming frame — the idempotent backfill contract."""
-    from real_timetransactionaldatalakehouse_spark.maintenance import (
-        insert_overwrite_partitions,
-    )
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [("2024-01-01", 1, 10.0), ("2024-01-01", 2, 20.0),
-         ("2024-01-02", 3, 30.0), ("2024-01-03", 4, 40.0)],
-        "dt string, id int, v double",
-    )
-    insert_overwrite_partitions(base, path, ["dt"])
-    # backfill day 2 with corrected rows only
-    fix = spark.createDataFrame(
-        [("2024-01-02", 3, 33.0), ("2024-01-02", 99, 99.0)],
-        "dt string, id int, v double",
-    )
-    insert_overwrite_partitions(fix, path, ["dt"])
-    got = {(str(r.dt), r.id): r.v for r in spark.read.parquet(path).collect()}
-    assert got == {
-        ("2024-01-01", 1): 10.0, ("2024-01-01", 2): 20.0,
-        ("2024-01-02", 3): 33.0, ("2024-01-02", 99): 99.0,
-        ("2024-01-03", 4): 40.0,
-    }
-    # replay is idempotent
-    insert_overwrite_partitions(fix, path, ["dt"])
-    assert {(str(r.dt), r.id): r.v for r in spark.read.parquet(path).collect()} == got
-    # session default restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
-
-
-def test_write_shards_enforces_rows_per_file(spark, sf_small, tmp_path):
-    """Every shard file must hold at most rows_per_file rows; ordered
-    shards must cover contiguous id ranges; JSONL export round-trips."""
-    from pyspark.sql import functions as F
-
-    from real_timetransactionaldatalakehouse_spark.maintenance import write_shards
-    from real_timetransactionaldatalakehouse_spark.sources import load_table
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    p = str(tmp_path / "shards")
-    stats = write_shards(docs, p, rows_per_file=64, order_cols=["doc_id"])
-    assert stats["rows"] == docs.count()
-    per_file = (
-        spark.read.parquet(p)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("lo"),
-             F.max("doc_id").alias("hi"))
-        .collect()
-    )
-    assert stats["files"] == len(per_file) and len(per_file) >= 8
-    assert all(r.n <= 64 for r in per_file)
-    # contiguous coverage: file id ranges must not interleave
-    spans = sorted((r.lo, r.hi) for r in per_file)
-    for (a_lo, a_hi), (b_lo, b_hi) in zip(spans, spans[1:]):
-        assert a_hi < b_lo or a_hi <= b_hi  # ranges ordered, ties allowed at partition edges
-
-    pj = str(tmp_path / "shards_json")
-    stats_j = write_shards(docs, pj, rows_per_file=128, fmt="json")
-    back = spark.read.json(pj)
-    assert stats_j["rows"] == docs.count()
-    assert back.count() == docs.count()

@@ -138,28 +138,6 @@ def test_bruteforce_knn_operator_broadcasts_query_side(spark, sf_medium):
     assert "BroadcastNestedLoopJoin" in plan, plan
 
 
-def test_salted_topk_equals_plain(spark, sf_medium):
-    from real_timetransactionaldatalakehouse_spark.operators.relational import (
-        topk_per_group,
-        topk_per_group_salted,
-    )
-    from real_timetransactionaldatalakehouse_spark.sources import load_table
-
-    li = load_table(spark, sf_medium, "lineitem").select(
-        "l_returnflag", "l_orderkey", "l_extendedprice"
-    )
-    plain = topk_per_group(
-        li, ["l_returnflag"], "l_extendedprice", 10, tiebreak_cols=["l_orderkey"]
-    )
-    salted = topk_per_group_salted(
-        li, ["l_returnflag"], "l_extendedprice", 10,
-        tiebreak_cols=["l_orderkey"], salt=8,
-    )
-    a = sorted(map(str, plain.collect()))
-    b = sorted(map(str, salted.collect()))
-    assert a == b
-
-
 def test_banded_dedup_is_bucket_local(spark, sf_medium):
     """The minhash/simhash candidate stage must NOT be a join: pairs
     are generated inside each bucket row (one groupBy shuffle), so the
@@ -538,37 +516,6 @@ def test_funnel_is_keyed_aggs_no_cartesian(spark, sf_medium):
     assert "CartesianProduct" not in plan, plan
     assert P.has_partial_aggregation(df), plan
     assert "Window" not in plan, plan
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_small, tmp_path):
-    """Co-located bucketed join: two tables bucketed on the same key
-    with the same bucket count must join WITHOUT any shuffle exchange
-    (each bucket pair reads as one task) — the recurring-ETL join
-    layout at 100 TB."""
-    from real_timetransactionaldatalakehouse_spark.maintenance import (
-        write_bucketed_table,
-    )
-    from real_timetransactionaldatalakehouse_spark.sources import load_table
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load_table(spark, sf_small, "orders")
-        cust = load_table(spark, sf_small, "customer")
-        write_bucketed_table(
-            orders, "b_orders", "o_custkey", n_buckets=8, sort_col="o_custkey"
-        )
-        write_bucketed_table(
-            cust.withColumnRenamed("c_custkey", "o_custkey"),
-            "b_customer", "o_custkey", n_buckets=8, sort_col="o_custkey",
-        )
-        j = spark.table("b_orders").join(spark.table("b_customer"), "o_custkey")
-        plan = P.formatted_plan(j)
-        assert "Exchange" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
 def test_sample_weighted_no_single_partition(spark, sf_medium):

@@ -690,25 +690,6 @@ def test_scd2_matches_python_replay(spark, changes):
     assert got == sorted(expected)
 
 
-def test_salted_join_equals_plain(spark, sf_small):
-    """Salted equi-join must equal the plain join bit-for-bit for
-    inner and left joins, including unmatched left rows."""
-    from real_timetransactionaldatalakehouse_spark.operators.joins import salted_join
-    from real_timetransactionaldatalakehouse_spark.sources import load_table
-
-    ev = load_table(spark, sf_small, "events").select("event_id", "user_id", "value")
-    dim = (
-        load_table(spark, sf_small, "customer")
-        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
-        .filter(F.col("user_id") % 3 == 0)  # leave unmatched left rows
-    )
-    for how in ("inner", "left"):
-        plain = sorted(map(str, ev.join(dim, "user_id", how).collect()))
-        salted = sorted(map(str, salted_join(ev, dim, "user_id", salt=8, how=how)
-                            .select(*ev.join(dim, "user_id", how).columns).collect()))
-        assert salted == plain, how
-
-
 def test_tfidf_hand_computed(spark):
     """TF-IDF on a 3-doc corpus: smoothed idf, exact tf counts, and
     require-all search ranking."""

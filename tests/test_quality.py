@@ -115,36 +115,6 @@ def test_build_silver_expectation_gate(spark, sf_small):
     assert gated.count() == n_pass < ev.count()
 
 
-def test_observed_gate_counts_during_write(spark, tmp_path):
-    """Observed metrics must match quality_stats without a second
-    scan: the counters come from the write action itself."""
-    from pyspark.sql import functions as F
-
-    from real_timetransactionaldatalakehouse_spark.quality import (
-        observed_gate, quality_stats,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 5.0, "en"), (2, -1.0, "en"), (3, None, "zz"), (4, 2.0, "de")],
-        "id int, v double, lang string",
-    )
-    rules = {
-        "v_positive": F.col("v") > 0,
-        "lang_known": F.col("lang").isin("en", "de"),
-    }
-    out, obs = observed_gate(df, rules)
-    out.write.mode("overwrite").parquet(str(tmp_path / "t"))
-    got = obs.get
-    stats = quality_stats(df, rules).collect()[0].asDict()
-    assert got["n_rows"] == stats["n_rows"] == 4
-    assert got["n_clean"] == stats["n_clean"] == 2
-    assert got["fail_v_positive"] == stats["fail_v_positive"] == 2
-    assert got["fail_lang_known"] == stats["fail_lang_known"] == 1
-    # the written table carries the annotation for downstream gating
-    back = spark.read.parquet(str(tmp_path / "t"))
-    assert "_violations" in back.columns
-
-
 def test_observed_gate_streaming_progress_metrics(spark, tmp_path):
     """The SAME observe() call must surface per-batch violation
     counters in the streaming progress events — quality monitoring
