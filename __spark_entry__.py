@@ -839,14 +839,12 @@ def q_agg_percentile(spark, sf_dir):
     runs fully parallel and matches Spark's ``percentile`` and
     DuckDB's ``quantile_cont`` bit-for-bit (same interpolation tree;
     equivalence to the plain aggregate is pytest-pinned).  At 100 TB
-    the documented default is the APPROX form
-    (operators/relational.grouped_percentiles, exact=False, r9 —
-    VERDICT r8 #4): one partial/final Greenwald-Khanna sketch agg,
-    no sort, rank error <= n/accuracy (plan contract + rank-bound
-    pytests); this certified query stays the EXACT form because the
-    sketch returns elements, not interpolated statistics, so only
-    the exact form is oracle-hashable.  HIGH-cardinality groups can
-    also swap back to the plain aggregate (parallelism = groups)."""
+    the swap-in is the ``percentile_approx`` sketch aggregate that
+    ``q_agg_sketches`` runs (one partial/final agg, no sort); this
+    certified query stays the EXACT form because the sketch returns
+    elements, not interpolated statistics, so only the exact form is
+    oracle-hashable.  HIGH-cardinality groups can also swap back to
+    the plain aggregate (parallelism = groups)."""
     from real_timetransactionaldatalakehouse_spark.operators import relational as RL
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1659,7 +1657,7 @@ def q_mor_upsert(spark, sf_dir):
     ``design_doc/PipelineArchitecture.md:235-238``).  Commit cost is
     O(|delta|) at any table size — the write-amplification answer for
     high-frequency upserts — and readers pay one broadcast anti-join
-    per commit until ``flatten_mor`` folds the chain.  The query
+    per commit until a maintenance rewrite folds the chain.  The query
     builds base -> MoR upsert -> MoR delete from deterministic event
     slices and returns the resolved table; the oracle is the
     whole-row MERGE the chain must equal."""
@@ -4098,8 +4096,8 @@ ORDER BY score DESC, doc_id ASC LIMIT 10
 
 @_q("q_bm25_search", _BM25_ORACLE)
 def q_bm25_search(spark, sf_dir):
-    """X4: Okapi BM25 ranked retrieval (operators/text.bm25_scores +
-    search_bm25, published k1=1.2 / b=0.75) — the retrieval-quality
+    """X4: Okapi BM25 ranked retrieval (operators/text.search_bm25,
+    published k1=1.2 / b=0.75) — the retrieval-quality
     upgrade over q_search_ranked's TF-IDF: length-normalized term
     saturation.  Postings are cut to the query terms before ranking;
     shuffles carry (doc, term, count) rows only."""

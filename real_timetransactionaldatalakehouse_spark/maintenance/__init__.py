@@ -146,14 +146,23 @@ def compact(
     where: Column | None = None,
     target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> dict:
-    """M1: bin-packing compaction.  ``where`` scopes the rewrite to
-    cold data only (reference: older than 1 h, compact_cold_data.py:25)
-    — hot partitions are left untouched so the streaming writer never
-    races the compactor.  Returns before/after stats; row count is
-    preserved by construction: the cold/hot split is null-safe (a row
-    whose predicate evaluates NULL counts as hot, i.e. untouched), and
-    the swap validates the rewritten row count before anything is
-    replaced."""
+    """M1: bin-packing compaction.  ``where`` scopes the repacking to
+    cold data only (reference: older than 1 h, compact_cold_data.py:25);
+    hot rows are carried into the rewrite as they are, not repacked.
+    Returns before/after stats; row count is preserved by construction:
+    the cold/hot split is null-safe (a row whose predicate evaluates
+    NULL counts as hot), and the swap validates the rewritten row count
+    before anything is replaced.
+
+    Not safe beside a writer on the same table: the rewrite replaces
+    the whole table with the rows read at the start.  On a plain-dir
+    table ``_safe_swap_rewrite`` renames the whole dir, so rows
+    appended while compaction runs are deleted with the ``.bak`` dir,
+    and no error is raised.  On a versioned table a commit that lands
+    while compaction runs is superseded by the compaction's snapshot
+    (``tablefmt`` assumes one writer per table).  Run it with the
+    table's writer stopped until the streaming sinks commit through
+    ``tablefmt`` with conflict checks."""
     df = _read_target(spark, path)
     n_before = df.count()
     parts = _partition_cols(spark, path)
@@ -272,8 +281,9 @@ def run_maintenance(
 
     ``tables`` defaults to every table in every catalog namespace.
     ``cold_where`` maps table name -> cold predicate (the reference
-    compacts only data older than 1 h so the streaming writer never
-    races the compactor); absent entries compact the whole table.
+    compacts only data older than 1 h); absent entries compact the
+    whole table.  Like :func:`compact`, a run is not safe beside a
+    writer on the same table.
     ``ttl`` maps table name -> (ts_col, cutoff) for retention deletes
     (reference: 7-day gold TTL, DataModel_SchemaDesign.md:136).
     ``zorder`` maps table name -> column list; those tables rewrite
@@ -281,8 +291,7 @@ def run_maintenance(
     instead of plain bin-packing.  Every versioned table is treated
     alike: the rewrite commits a full snapshot, which also folds a
     live merge-on-read chain to depth 0 so expiry can retire its delta
-    versions (writers keep the chain under ``tablefmt.MOR_MAX_CHAIN``
-    between runs).
+    versions.  Nothing else bounds a chain between runs.
 
     Returns ``{table: {compact, expired, orphans, ttl}}``
     — each step's own report, so a scheduler can alert on any
@@ -344,7 +353,14 @@ def maintenance_loop(
     without wall-clock waits; ``max_runs`` bounds the loop for tests
     and one-shot invocations (``None`` = run forever, the deployment
     form).  Returns the list of per-run reports, newest last, each
-    ``{"run": i, "scheduled_at_s": offset, "report": ...}``."""
+    ``{"run": i, "scheduled_at_s": offset, "report": ...}``.
+
+    Unlike the reference's DAG, this loop must not run beside the
+    streaming writers: each run compacts every table, and
+    :func:`compact` loses rows appended to a plain-dir table while it
+    runs (and commits landing on a versioned table).  Stop the writers
+    for a run until the streaming sinks commit through ``tablefmt``
+    with conflict checks."""
     import time as _time
 
     if interval_s <= 0:

@@ -4,10 +4,10 @@ with decode / feature-extract as Arrow-batched ``mapInPandas`` stages.
 
 The container has no image/audio codecs, so the *decode kernels* are
 stubbed: ``deterministic_fake_features`` derives a stable feature
-vector from the bytes' md5 (clearly marked FAKE), and real decoders
-raise ``NotImplementedError``.  Everything Spark-side is real and
-tested: schema, partitioning, UDF signature, Arrow batch shape —
-swapping in a real codec changes one function body, not the plan.
+vector from the bytes' md5 (clearly marked FAKE); there is no real
+decoder.  Everything Spark-side is real and tested: schema,
+partitioning, UDF signature, Arrow batch shape — swapping in a real
+codec changes one function body, not the plan.
 
 Scale: mapInPandas streams Arrow record batches; memory per task is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` — binary
@@ -69,67 +69,6 @@ def deterministic_fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[
             out.append((v % 2_000_001) / 1_000_000.0 - 1.0)
         i += 1
     return out
-
-
-def decode_image(payload: bytes):
-    """Real image decode (r4 VERDICT ask #8, closed for PNG in r6).
-    Prefers PIL when installed (returns a ``PIL.Image.Image``); in
-    codec-less environments PNG payloads decode through the vendored
-    pure-Python subset decoder (:mod:`._png` — stdlib zlib, real
-    pixels, same ``.size``/``.format``/``.mode`` surface), and other
-    formats raise ``NotImplementedError`` (not ImportError — callers
-    gate on one exception type).  The deterministic fake remains the
-    oracle/bench path either way — real decodes are content-dependent
-    and cannot hash-match a SQL twin."""
-    try:
-        from PIL import Image
-    except ImportError:
-        from . import _png
-
-        if payload[:8] == _png._MAGIC:
-            return _png.decode_png(payload)
-        raise NotImplementedError(
-            "image codecs not installed and payload is not a PNG; "
-            "use deterministic_fake_features"
-        ) from None
-    import io
-
-    return Image.open(io.BytesIO(payload))
-
-
-def real_image_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Deployment-path stage: rewrite ``meta.width/height`` from the
-    ACTUAL decoded image dimensions via the same Arrow ``mapInPandas``
-    plumbing the fake kernels use — per-task memory bounded by the
-    Arrow batch size, payloads never at the driver.  Non-image rows
-    (audio/video) pass through UNCHANGED — the stage rewrites image
-    meta, it never filters the table.  Requires a real codec
-    (:func:`decode_image`); in codec-less environments the image
-    tasks raise ``NotImplementedError`` at execution time."""
-    out_schema = df.schema
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-
-            def remeta(row):
-                payload, meta = row
-                if payload is None:
-                    return meta
-                img = decode_image(bytes(payload))
-                w, h = img.size
-                base = dict(meta) if meta is not None else {
-                    "width": None, "height": None,
-                    "duration_ms": None, "codec": None,
-                }
-                return {**base, "width": w, "height": h,
-                        "codec": (img.format or "").lower() or base.get("codec")}
-
-            pdf["meta"] = pdf[[payload_col, "meta"]].apply(remeta, axis=1)
-            yield pdf
-
-    images = df.filter(F.col("kind") == "image").mapInPandas(kernel, out_schema)
-    return images.unionByName(df.filter(F.col("kind") != "image"))
 
 
 def fake_features_expr(payload_col: str = "payload", dim: int = FEATURE_DIM) -> F.Column:

@@ -1067,69 +1067,3 @@ def grouped_percentiles_exact(
     out = _attach_layout(out, [cnt])
 
     return _attach_cached(out, [cnt])
-
-
-def grouped_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    probs: dict[str, float],
-    exact: bool = False,
-    accuracy: int = 10_000,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Grouped percentiles with the AT-SCALE default (VERDICT r8 #4):
-    ``exact=False`` computes every quantile in ONE hash-aggregate pass
-    with ``percentile_approx`` — Spark's Greenwald-Khanna sketch
-    aggregate, whose partials are mergeable, so the plan is a plain
-    partial/final agg (map-side sketch per partition, one narrow
-    shuffle of O(accuracy)-sized sketches per group, no sort, no
-    window, no driver-side offsets).  This is the form SURVEY names
-    as the 100-TB swap for the robust-scale family: exact grouped
-    percentiles are intrinsically sort-heavy (the 50x replica rows
-    sat at 2.9-4.7x the oracle), while the sketch scans once and
-    shuffles kilobytes.
-
-    ERROR BOUND (documented contract, pinned by
-    ``test_grouped_percentiles_approx_rank_bound``): percentile_approx
-    returns an ACTUAL element of the group whose rank differs from
-    ``floor(p * n)`` by at most ``n / accuracy`` — a rank guarantee,
-    not a value guarantee (value error follows the local density; no
-    interpolation between elements, so results are NOT bit-comparable
-    to the exact form's interpolated statistic).  ``accuracy=10000``
-    (Spark's default) bounds rank error to 0.01% of the group.
-
-    ONE SKETCH, ALL QUANTILES (measured, 50x replica / 30M rows):
-    the quantile list rides as percentile_approx's ARRAY argument so
-    every requested quantile reads the same per-group sketch —
-    inserts dominate GK cost and reads are free, so two separate
-    sketches at accuracy=10000 cost 5.58 s where the shared sketch
-    costs 1.80 s (vs 0.95 s for DuckDB's exact quantile_cont = 1.9x,
-    and vs 4.10 s for this repo's exact form — the sketch wins
-    exactly where SURVEY said it must).  Accuracy is a linear
-    insert-cost knob if a caller wants more margin (4000 measured
-    1.23 s at the same replica).
-
-    ``exact=True`` dispatches to :func:`grouped_percentiles_exact` —
-    the interpolated, oracle-certified, bit-identical-to-DuckDB form
-    (``q_agg_percentile``); keep it for certification and for
-    dashboard-sized group sets where exactness is the point."""
-    if exact:
-        return grouped_percentiles_exact(
-            df, group_col, value_col, probs, partitions=partitions
-        )
-    items = list(probs.items())
-    sk = df.groupBy(group_col).agg(
-        F.percentile_approx(
-            F.col(value_col),
-            F.array(*[F.lit(float(p)) for _, p in items]),
-            F.lit(int(accuracy)),
-        ).alias("__q")
-    )
-    return sk.select(
-        group_col,
-        *[
-            F.col("__q")[i].cast("double").alias(name)
-            for i, (name, _) in enumerate(items)
-        ],
-    )

@@ -458,44 +458,6 @@ def bloom_contamination_report(
     Output: ``(id_col, n_screened, n_confirmed)``, one row per
     screened document.
     """
-    screened, b = _bloom_screen(
-        corpus, benchmark, text_col, id_col, n, m_bits, k, hash_fn,
-        repartition,
-    )
-    # ONE pass over the screened stream (r12 review fix: separate
-    # n_screened / n_confirmed aggregations re-ran the whole corpus
-    # gram build + probe pipeline twice per action): the benchmark's
-    # distinct hashes join in as a flag — unique per __h1, so no row
-    # multiplication — and both counts fold in a single aggregation,
-    # the same shape the DuckDB oracle uses.
-    in_bench = b.select("__h1").distinct().withColumn("__inb", F.lit(True))
-    return (
-        screened.join(in_bench, "__h1", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_screened"),
-            F.sum(F.when(F.col("__inb"), 1).otherwise(0))
-            .cast("long").alias("n_confirmed"),
-        )
-    )
-
-
-def _bloom_screen(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    m_bits: int,
-    k: int,
-    hash_fn: str,
-    repartition: bool | int,
-):
-    """Build the bitmap from the benchmark gram stream and return
-    ``(screened corpus grams, benchmark gram pairs)`` — the shared
-    front half of :func:`bloom_contamination_report` and
-    :func:`bloom_decontaminate` (so the screen-only act path never
-    constructs the confirm-join subtree it documents as skipped)."""
     if m_bits < 64 or m_bits % 64 or k < 1 or k > 32:
         raise ValueError(
             "m_bits must be a positive multiple of 64 and k in [1, 32]")
@@ -547,46 +509,22 @@ def _bloom_screen(
         word = F.element_at(bits_arr, F.floor(pos / 64).cast("int") + 1)
         c = F.bit_get(word, F.pmod(pos, F.lit(64)).cast("int")) == 1
         screen_pred = c if screen_pred is None else (screen_pred & c)
-    return cg.filter(screen_pred).drop("__bloom_bits"), b
-
-
-def bloom_decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    m_bits: int = 1 << 20,
-    k: int = 4,
-    confirm: bool = True,
-    hash_fn: str = "xxhash64",
-    repartition: bool | int = True,
-) -> DataFrame:
-    """ACT side of :func:`bloom_contamination_report`: drop corpus
-    documents sharing an ``n``-gram with the benchmark, using the
-    Bloom screen to keep the corpus map-only.  ``confirm=True``
-    (default) drops on CONFIRMED overlap — the output equals
-    :func:`decontaminate_ngram` exactly (false positives are screened
-    back in by the confirm join; pytest pins the equality), which is
-    the certified semantics.  ``confirm=False`` drops on the screen
-    alone: the over-dropping variant for pipelines that accept the
-    ~(set_bits/m)^k false-positive rate to skip the confirm join
-    entirely (a fraction-of-a-percent corpus loss at the documented
-    sizing — acceptable for pretraining corpora, never for eval
-    sets).  confirm=False genuinely skips the confirm subtree (r12
-    review fix: the first draft routed through the report, whose plan
-    still built the benchmark distinct-hash join it documented as
-    skipped)."""
-    screened, b = _bloom_screen(
-        corpus, benchmark, text_col, id_col, n, m_bits, k, hash_fn,
-        repartition,
-    )
-    flagged = (
-        screened.join(b.select("__h1").distinct(), "__h1", "left_semi")
-        if confirm else screened
-    )
-    return corpus.join(
-        flagged.select(id_col).distinct(), id_col, "left_anti"
+    screened = cg.filter(screen_pred).drop("__bloom_bits")
+    # ONE pass over the screened stream (r12 review fix: separate
+    # n_screened / n_confirmed aggregations re-ran the whole corpus
+    # gram build + probe pipeline twice per action): the benchmark's
+    # distinct hashes join in as a flag — unique per __h1, so no row
+    # multiplication — and both counts fold in a single aggregation,
+    # the same shape the DuckDB oracle uses.
+    in_bench = b.select("__h1").distinct().withColumn("__inb", F.lit(True))
+    return (
+        screened.join(in_bench, "__h1", "left")
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_screened"),
+            F.sum(F.when(F.col("__inb"), 1).otherwise(0))
+            .cast("long").alias("n_confirmed"),
+        )
     )
 
 

@@ -36,11 +36,6 @@ def tokens(text: Column | str, sep: str = " ") -> Column:
     return F.split(c, sep)
 
 
-def tokenize(df: DataFrame, text_col: str = "text", out: str = "token") -> DataFrame:
-    """Explode to one row per token (X4 tokenize)."""
-    return df.select("*", F.explode(tokens(text_col)).alias(out))
-
-
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus term frequencies: explode -> groupBy(token).count().
     Shuffle carries per-partition partial counts only."""
@@ -768,76 +763,6 @@ def search_ranked(
     return _attach_cached(out, getattr(base, "_cached_deps", []))
 
 
-def bm25_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Okapi BM25 weights per (document, term) — the ranked-retrieval
-    standard (Robertson & Sparck Jones; the published k1/b defaults):
-
-        idf  = ln(1 + (N - df + 0.5) / (df + 0.5))
-        w    = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
-
-    Plan (r6, one keyed agg fewer than the tfidf shape): doc length is
-    computed MAP-SIDE as ``size(tokens(text))`` before the explode and
-    rides the (doc, term) grouping key, so the postings never reshuffle
-    on doc_id — the previous ``doclen`` aggregate and its join back
-    onto the full postings (a second shuffle of every posting row) are
-    gone.  Document frequency derives from the pair table; corpus
-    stats (N, avgdl) are one broadcast row aggregated from the same
-    persisted postings.  Shuffles carry (doc, dl, term, count) rows
-    only — raw text crosses the wire zero times, and every arithmetic
-    step is a fixed per-row expression tree (deterministic,
-    engine-portable).
-    """
-    toks = tokens(text_col)
-    pairs = (
-        df.select(F.col(id_col), toks.alias("__t"))
-        .select(
-            id_col, F.size("__t").alias("dl"), F.explode("__t").alias("term")
-        )
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    # N / avgdl from the postings: exact integers, one broadcast row
-    # (same doubles as the old per-doc dl aggregate: sum(tf) == total
-    # tokens, countDistinct(id) == docs with at least one term)
-    corpus = F.broadcast(
-        pairs.agg(
-            F.countDistinct(F.col(id_col)).cast("double").alias("__n"),
-            (
-                F.sum("tf").cast("double")
-                / F.countDistinct(F.col(id_col)).cast("double")
-            ).alias("__avgdl"),
-        )
-    )
-    docfreq = pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        1.0 + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf = F.col("tf").cast("double")
-    norm = tf + k1 * (1.0 - b + b * F.col("dl").cast("double") / F.col("__avgdl"))
-    # explicit broadcast for the same cold-cache-race reason as
-    # tfidf_scores (the (term, df, idf) table is the tiny side)
-    out = (
-        pairs.join(
-            F.broadcast(docfreq.crossJoin(corpus).withColumn("idf", idf)),
-            "term",
-        )
-        .select(
-            id_col, "term", "tf", "df", "dl",
-            (F.col("idf") * (tf * (k1 + 1.0)) / norm).alias("bm25"),
-        )
-    )
-    from .dedup import _attach_cached
-
-    return _attach_cached(out, [pairs])
-
-
 def search_bm25(
     df: DataFrame,
     terms: list[str],
@@ -863,9 +788,7 @@ def search_bm25(
     containing the term; the postings are at most a few rows per
     matching doc, so the window's term-keyed exchange is trivial, the
     corpus scans exactly twice — once for stats, once for postings —
-    and there is no self-join and nothing persisted).  Persist
-    :func:`bm25_scores` output as the materialized index for repeated
-    serving queries instead."""
+    and there is no self-join and nothing persisted)."""
     toks = tokens(text_col)
     # r13 notes (both measured, left alone): a guarded core-count fan
     # of this scan REGRESSED 1.5x paired at bench SF — the explode+isin

@@ -233,45 +233,27 @@ def dims_scd1_stream(
     allowed_ops: tuple[str, ...] = ("c", "u"),
     update_cols: list[str] | None = None,
     available_now: bool = True,
-    write_mode: str = "cow",
 ):
     """Dims: SCD Type-1 upsert from a CDC envelope stream — the
     reference's stream_dims.py:59-98 foreachBatch MERGE, with the
     op-filter (B5), batch-scoped keep-latest dedup (T7/W1) and
     idempotent merge (exactly-once under replay).
 
-    The target is a ``tablefmt`` versioned table; two write paths:
+    The target is a ``tablefmt`` versioned table.  Each batch
+    materializes a FULL new snapshot from merge(current, updates) and
+    flips the pointer (copy-on-write, rewrite cost O(|table|) per
+    batch).  The merge-on-read primitives (``tablefmt.write_mor_upsert``)
+    are not used here: on the benchmark's CDC feed a MoR commit took
+    1.5-2x the time of this path.
 
-    - ``write_mode="cow"`` (default): each batch materializes a FULL
-      new snapshot from merge(current, updates) and flips the pointer
-      — simplest, rewrite cost O(|table|) per batch.
-    - ``write_mode="mor"``: the reference's actual table layout
-      (Iceberg v2 ``write.merge.mode = merge-on-read``,
-      ``streaming_job.py:55-60``): the batch reads the current table
-      to compute merged rows FOR THE TOUCHED KEYS ONLY, then commits
-      just that delta + equality-delete keys via
-      ``tablefmt.write_mor_upsert`` — write cost O(|batch|) per
-      commit at any table size, which is the whole point at CDC
-      upsert frequency.  SCD1 semantics (keep-latest dedup,
-      ``update_cols`` protection, null-coalesce to target values) are
-      IDENTICAL: the delta rows are merge_upsert's output restricted
-      to touched keys, not raw updates.  After each commit
-      ``tablefmt.fold_mor`` folds the chain back to a full snapshot
-      once it reaches ``tablefmt.MOR_MAX_CHAIN`` commits — the one
-      rule that bounds read-side merge joins, as the reference's
-      hourly maintenance bounds Iceberg delete files.
-
-    Either way readers never see a partial table and a crash
-    mid-write leaves the previous snapshot current; old snapshots
-    stay readable until ``tablefmt.expire_snapshots`` — the M2 job
-    (which pins live MoR base chains).
+    Readers never see a partial table and a crash mid-write leaves
+    the previous snapshot current; old snapshots stay readable until
+    ``tablefmt.expire_snapshots`` — the M2 job.
 
     T8: the micro-batch DataFrame feeds two actions (the emptiness
     probe and the merge write), so it is persisted for the batch's
     lifetime (reference caches the batch df, streaming_job.py:75).
     """
-    if write_mode not in ("cow", "mor"):
-        raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
     spark = stream_df.sparkSession
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -287,24 +269,13 @@ def dims_scd1_stream(
                     dedup_latest(updates, key_cols, order_col), target_path
                 )
                 return
-            target = tablefmt.read_table(spark, target_path)
-            if write_mode == "cow":
-                tablefmt.write_version(
-                    merge_upsert(
-                        target, updates, key_cols, order_col=order_col,
-                        update_cols=update_cols,
-                    ),
-                    target_path,
-                )
-                return
-            deduped = dedup_latest(updates, key_cols, order_col)
-            touched = F.broadcast(deduped.select(*key_cols).distinct())
-            delta = merge_upsert(
-                target.join(touched, key_cols, "left_semi"),
-                deduped, key_cols, update_cols=update_cols,
+            tablefmt.write_version(
+                merge_upsert(
+                    tablefmt.read_table(spark, target_path), updates,
+                    key_cols, order_col=order_col, update_cols=update_cols,
+                ),
+                target_path,
             )
-            tablefmt.write_mor_upsert(delta, target_path, key_cols)
-            tablefmt.fold_mor(spark, target_path)
         finally:
             updates.unpersist()
 

@@ -160,8 +160,8 @@ def _read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
     versions recursively resolve their base, apply the equality-delete
     keys, and union the delta rows.  Chain depth = MoR commits since
     the last full rewrite, each costing one anti join on the key
-    columns — Iceberg v2's read-side trade, bounded by the one fold
-    rule (:func:`fold_mor` at ``MOR_MAX_CHAIN``) as the reference's
+    columns — Iceberg v2's read-side trade, bounded by maintenance's
+    rewrite (which leaves a full snapshot) as the reference's
     maintenance job bounds delete-file counts."""
     vp = version_path(path, version)
     meta = mor_meta(path, version)
@@ -330,9 +330,8 @@ def write_mor_upsert(
     high-frequency upsert cadence this is the write-amplification
     answer: commit cost is O(|delta|) regardless of table size, and
     readers pay one broadcast anti-join per un-flattened MoR commit.
-    This primitive never folds the chain; :func:`fold_mor` is the one
-    rule that does (at ``MOR_MAX_CHAIN``), and any maintenance rewrite
-    also leaves a full snapshot.
+    This primitive never folds the chain; a maintenance rewrite
+    (``maintenance.compact``) leaves a full snapshot.
 
     Semantics: ``MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT
     MATCHED THEN INSERT *`` — matched keys take the update row
@@ -366,14 +365,6 @@ def write_mor_delete(keys: DataFrame, path: str, key_cols: list[str]) -> int:
     return _commit_mor(path, key_cols, None, keys)
 
 
-def flatten_mor(spark: SparkSession, path: str) -> int:
-    """Compaction for a MoR chain: materialize the current resolved
-    rows as a FULL snapshot (one new version, ``_CURRENT`` flipped),
-    after which reads pay zero merge joins and ``expire_snapshots``
-    can reclaim the chain."""
-    return write_version(read_table(spark, path), path)
-
-
 def mor_chain_depth(path: str, version: int | None = None) -> int:
     """Number of un-flattened MoR commits the given (default: current)
     version resolves through — 0 for a full snapshot.  Every level
@@ -382,33 +373,11 @@ def mor_chain_depth(path: str, version: int | None = None) -> int:
     OPTIMIZED plan holds depth*(depth+1)/2 join nodes — execution
     stays ~linear in data (each union branch streams through tiny
     broadcast filters) but plan build/codegen cost is QUADRATIC in
-    depth.  :func:`fold_mor` keeps it below ``MOR_MAX_CHAIN``
+    depth, so a long chain wants a maintenance rewrite
     (tests/test_tablefmt.py::test_mor_read_plan_depth_contract pins
-    the unbounded shape at depth 20)."""
+    the shape at depth 20)."""
     v = current_version(path) if version is None else version
     return 0 if v is None else len(_mor_base_closure(path, {v})) - 1
-
-
-# The one MoR fold rule: a chain that reaches this depth is flattened
-# by fold_mor right after the commit that reached it.  The optimized
-# read plan holds depth*(depth+1)/2 broadcast anti-join nodes (Catalyst
-# pushes each level's anti-join through the accumulated union), so
-# 8 -> at most 36 join nodes keeps plan build trivial while amortizing
-# the full-rewrite amplification over 8 O(|delta|) commits (SCALING.md
-# r8 MoR table).  Maintenance needs no rule of its own: its rewrite of
-# any versioned table leaves a full snapshot.
-MOR_MAX_CHAIN = 8
-
-
-def fold_mor(spark: SparkSession, path: str) -> int | None:
-    """Apply the fold rule after a MoR commit: flatten the chain once
-    it reaches ``MOR_MAX_CHAIN`` commits (returns the new full
-    version), else leave it alone (returns None) — the bound the
-    reference's hourly maintenance puts on Iceberg delete files,
-    enforced at commit time so readers never see a deeper chain."""
-    if mor_chain_depth(path) >= MOR_MAX_CHAIN:
-        return flatten_mor(spark, path)
-    return None
 
 
 def snapshot_dirs(path: str) -> list[str]:

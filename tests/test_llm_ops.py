@@ -178,11 +178,6 @@ def test_multimodal_expr_plan_has_no_python(spark, sf_small):
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
 
 
-def test_decode_image_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        MM.decode_image(b"\x00")
-
-
 def test_embed_neardup_lsh_recall(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     sub = emb.filter(F.col("vec_id") < 80)
@@ -927,14 +922,14 @@ def test_new_operators_handle_empty_inputs(spark):
         embedding_centroids, quantize_embeddings,
     )
     from real_timetransactionaldatalakehouse_spark.operators.text import (
-        bm25_scores, bpe_pair_counts, gopher_rules,
+        bpe_pair_counts, gopher_rules, search_bm25,
     )
 
     docs = spark.createDataFrame([], "doc_id int, text string")
     ev = spark.createDataFrame([], "user_id int, ts timestamp, event_type string, v double")
     emb = spark.createDataFrame([], "vec_id int, embedding array<float>, label int")
 
-    assert bm25_scores(docs).count() == 0
+    assert search_bm25(docs, ["a"]).count() == 0
     assert bpe_pair_counts(docs).count() == 0
     assert gopher_rules(docs).count() == 0
     assert contamination_report(docs, docs).count() == 0
@@ -976,112 +971,6 @@ def test_agg_skew_close_to_python(spark, sf_small):
         m2 = sum((x - mu) ** 2 for x in xs) / n
         m3 = sum((x - mu) ** 3 for x in xs) / n
         assert got[f] == _pytest.approx(m3 / (m2 * math.sqrt(m2)), rel=1e-9)
-
-
-def test_multimodal_real_decode_png(spark, sf_small):
-    """r4 VERDICT ask #8 (closed r6 via the vendored PNG subset
-    decoder): decode_image must decode an actual PNG — through PIL
-    when installed, through operators/_png otherwise — and
-    real_image_meta must rewrite meta dimensions from the decoded
-    pixels through the same Arrow plumbing the fake kernels use.  Runs
-    everywhere; no skip."""
-    import base64
-
-    # a literal 1x1 PNG (no codec needed to HAVE bytes, only to decode)
-    png = base64.b64decode(
-        "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJ"
-        "AAAADUlEQVR42mP8z8BQDwAEhQGAhKmMIQAAAABJRU5ErkJggg=="
-    )
-    img = MM.decode_image(png)
-    assert img.size == (1, 1)
-
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(png), {"width": 999, "height": 999,
-                                       "duration_ms": None, "codec": None})],
-        MM.MEDIA_SCHEMA,
-    )
-    row = MM.real_image_meta(df).collect()[0]
-    assert row.meta.width == 1 and row.meta.height == 1
-    assert row.meta.codec == "png"
-
-
-def test_multimodal_decode_raises_not_implemented_without_codec(spark):
-    """The codec-less path for NON-PNG formats must surface as
-    NotImplementedError (the documented deployment hook), never
-    ImportError."""
-    import importlib.util
-
-    import pytest as _pytest
-
-    if importlib.util.find_spec("PIL") is not None:
-        _pytest.skip("codec present; covered by the decode test above")
-    with _pytest.raises(NotImplementedError):
-        MM.decode_image(b"\xff\xd8\xff\xe0\x00\x10JFIF")  # JPEG magic
-
-
-def test_vendored_png_decoder_filters_and_roundtrip():
-    """operators/_png: encode->decode roundtrip recovers exact pixels,
-    and each PNG filter type (Sub/Up/Average/Paeth, spec section 6)
-    reconstructs correctly against a reference image built by hand."""
-    import struct
-    import zlib
-
-    from real_timetransactionaldatalakehouse_spark.operators import _png
-
-    # roundtrip: 3x2 RGB gradient through the filter-0 encoder
-    pixels = bytes(range(3 * 2 * 3))
-    img = _png.decode_png(_png.encode_png(3, 2, "RGB", pixels))
-    assert img.size == (3, 2) and img.mode == "RGB" and img.pixels == pixels
-
-    # hand-build a 4-row grayscale image using filters 1..4 so every
-    # reconstruction branch runs; expected output computed per spec
-    rows = [bytes([10, 20, 30, 40])] * 4
-    filtered = bytearray()
-    prev = bytes(4)
-    for f, row in zip([1, 2, 3, 4], rows):
-        line = bytearray(row)
-        if f == 1:
-            for i in range(3, 0, -1):
-                line[i] = (line[i] - line[i - 1]) & 0xFF
-        elif f == 2:
-            for i in range(4):
-                line[i] = (line[i] - prev[i]) & 0xFF
-        elif f == 3:
-            for i in range(4):
-                a = row[i - 1] if i else 0
-                line[i] = (line[i] - (a + prev[i]) // 2) & 0xFF
-        elif f == 4:
-            for i in range(4):
-                a = row[i - 1] if i else 0
-                b, c = prev[i], (prev[i - 1] if i else 0)
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] - pr) & 0xFF
-        filtered += bytes([f]) + line
-        prev = row
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
-    raw = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-           + chunk(b"IDAT", zlib.compress(bytes(filtered)))
-           + chunk(b"IEND", b""))
-    out = _png.decode_png(raw)
-    assert out.size == (4, 4) and out.pixels == b"".join(rows)
-
-    # unsupported subsets raise NotImplementedError, garbage ValueError
-    import pytest as _pytest
-
-    pal_ihdr = struct.pack(">IIBBBBB", 1, 1, 8, 3, 0, 0, 0)  # palette
-    pal = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", pal_ihdr)
-           + chunk(b"IDAT", zlib.compress(b"\x00\x00")) + chunk(b"IEND", b""))
-    with _pytest.raises(NotImplementedError):
-        _png.decode_png(pal)
-    with _pytest.raises(ValueError):
-        _png.decode_png(b"not a png at all")
 
 
 def test_embeddings_are_dyadic_43(spark, sf_medium):
@@ -1304,55 +1193,6 @@ def test_grouped_percentiles_exact_equals_plain_aggregate(spark, sf_medium):
                {"med_price": 0.5, "p90_price": 0.9}, partitions=5,
            ).collect()}
     assert plain == new
-
-
-def test_grouped_percentiles_approx_rank_bound(spark, sf_medium):
-    """The at-scale form (grouped_percentiles, exact=False — VERDICT
-    r8 #4): percentile_approx's documented Greenwald-Khanna contract
-    is a RANK bound, so pin exactly that — for every group and every
-    quantile p, the returned value must be an actual group element
-    whose rank is within n/accuracy (+1 for rank-vs-index off-by-one)
-    of floor(p * n).  Also pins the dispatch: exact=True must be the
-    certified order-statistics plan, row-identical to
-    grouped_percentiles_exact."""
-    from real_timetransactionaldatalakehouse_spark.operators.relational import (
-        grouped_percentiles,
-        grouped_percentiles_exact,
-    )
-
-    li = load_table(spark, sf_medium, "lineitem")
-    probs = {"p50": 0.5, "p95": 0.95}
-    accuracy = 1000
-    approx = {r["l_returnflag"]: r for r in grouped_percentiles(
-        li, "l_returnflag", "l_extendedprice", probs, accuracy=accuracy,
-    ).collect()}
-    vals: dict = {}
-    for r in li.select("l_returnflag", "l_extendedprice").collect():
-        vals.setdefault(r[0], []).append(float(r[1]))
-    assert set(approx) == set(vals)
-    for g, xs in vals.items():
-        xs.sort()
-        n = len(xs)
-        for name, p in probs.items():
-            v = float(approx[g][name])
-            assert v in xs, f"approx returned a non-element for {g}/{name}"
-            # rank window of the returned element (duplicates span)
-            import bisect
-
-            lo = bisect.bisect_left(xs, v)
-            hi = bisect.bisect_right(xs, v) - 1
-            target = int(p * n)
-            slack = n / accuracy + 1
-            assert lo - slack <= target <= hi + slack, (
-                g, name, v, lo, hi, target, slack,
-            )
-    exact_a = sorted(map(tuple, grouped_percentiles(
-        li, "l_returnflag", "l_extendedprice", probs, exact=True,
-    ).collect()))
-    exact_b = sorted(map(tuple, grouped_percentiles_exact(
-        li, "l_returnflag", "l_extendedprice", probs,
-    ).collect()))
-    assert exact_a == exact_b
 
 
 def test_prefix_sum_family_stable_under_cache_drop(spark, sf_small):
@@ -1862,247 +1702,6 @@ def test_validate_gate_on_semantic_dedup(spark):
     assert no_gate == got
 
 
-def test_quality_classifier_separates_and_is_deterministic(spark):
-    """r10 EXT: classifier-based quality filtering (the learned tier
-    above the heuristic gates).  A seed of fluent sentences vs token
-    spam must train a model that (a) ranks every held-out fluent doc
-    above every held-out spam doc, (b) drops NULL text from scoring,
-    and (c) scores identically across two transforms."""
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-
-    good = [
-        "the quick brown fox jumps over the lazy dog near the river bank",
-        "she walked to the market in the morning and bought fresh bread",
-        "a long journey begins with a single step taken in the right spirit",
-        "the committee agreed that the proposal would be reviewed next week",
-        "he read the letter twice before answering with a careful reply",
-        "many travelers have described the valley as quiet and beautiful",
-    ]
-    bad = [
-        "zzz zzz zzz zzz zzz zzz zzz zzz",
-        "4543 9921 3321 0983 1123 5567 8893",
-        "BUY BUY BUY CLICK CLICK CLICK WIN WIN",
-        "asdf asdf asdf asdf asdf asdf asdf asdf",
-        "%%% ### @@@ &&& *** !!! ??? $$$",
-        "11111 22222 33333 44444 55555 66666",
-    ]
-    rows = (
-        [(i, t, 1) for i, t in enumerate(good[:4])]
-        + [(100 + i, t, 0) for i, t in enumerate(bad[:4])]
-    )
-    labeled = spark.createDataFrame(rows, "doc_id long, text string, label int")
-    model = C.train_quality_classifier(labeled)
-
-    held = spark.createDataFrame(
-        [(200, good[4]), (201, good[5]), (300, bad[4]), (301, bad[5]),
-         (400, None)],
-        "doc_id long, text string",
-    )
-    scored = {r.id: r.prob_keep for r in C.score_quality(held, model).collect()}
-    assert 400 not in scored  # NULL text: emit-nothing rule
-    assert set(scored) == {200, 201, 300, 301}
-    assert min(scored[200], scored[201]) > max(scored[300], scored[301]), scored
-    assert all(0.0 <= p <= 1.0 for p in scored.values())
-    again = {r.id: r.prob_keep for r in C.score_quality(held, model).collect()}
-    assert scored == again
-    # featurize is the shared projection: width must match the declared names
-    feat = C.featurize(held).first()["features"]
-    assert len(feat) == len(C.FEATURE_NAMES)
-
-
-def test_curation_pipeline_with_learned_gate(spark, docs):
-    """r10 composition: the full curation stack with the NEW learned
-    tier in the middle — exact+near dedup -> classifier gate ->
-    PPS subsample weighted by the classifier's own probability.
-    Exercises that the stages compose on one frame without schema or
-    cache-contract friction, and that the gate actually removes the
-    injected spam the dedup tiers cannot."""
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    spam = spark.createDataFrame(
-        [(500_000 + i, ("spamtok%d " % (i % 3)) * 25) for i in range(30)],
-        "doc_id long, text string",
-    )
-    corpus = docs.unionByName(spam)
-
-    # tier 1: dedup (keep-one; the 3 distinct spam texts survive here)
-    deduped = D.drop_near_duplicates(corpus, jaccard_threshold=0.5)
-    n_dedup = deduped.count()
-    assert deduped.filter(F.col("doc_id") >= 500_000).count() == 3
-
-    # tier 2: learned gate (seed: real docs vs spam)
-    labeled = (
-        docs.limit(60).withColumn("label", F.lit(1))
-        .unionByName(spam.limit(15).withColumn("label", F.lit(0)))
-    )
-    model = C.train_quality_classifier(labeled)
-    scored = C.score_quality(deduped, model)
-    gated = deduped.join(
-        scored.filter(F.col("prob_keep") > 0.5)
-        .select(F.col("id").alias("doc_id")),
-        "doc_id", "left_semi",
-    )
-    assert gated.filter(F.col("doc_id") >= 500_000).count() == 0
-    n_gated = gated.count()
-    assert 0 < n_gated <= n_dedup
-
-    # tier 3: PPS subsample sized by the classifier probability
-    weighted = gated.join(
-        scored.select(
-            F.col("id").alias("doc_id"),
-            (F.col("prob_keep") * 1000).cast("long").alias("w"),
-        ),
-        "doc_id",
-    )
-    sampled = Smp.sample_systematic(weighted, k=25, weight_col="w")
-    n_sampled = sampled.count()
-    assert n_sampled == 25 or n_sampled == sampled.select("doc_id").distinct().count()
-    D.release_cached(deduped)
-
-
-def _toy_quality_model(spark):
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-
-    good = [
-        "the quick brown fox jumps over the lazy dog near the river bank",
-        "she walked to the market in the morning and bought fresh bread",
-        "a long journey begins with a single step taken in the right spirit",
-        "the committee agreed that the proposal would be reviewed next week",
-    ]
-    bad = [
-        "zzz zzz zzz zzz zzz zzz zzz zzz",
-        "4543 9921 3321 0983 1123 5567 8893",
-        "BUY BUY BUY CLICK CLICK CLICK WIN WIN",
-        "asdf asdf asdf asdf asdf asdf asdf asdf",
-    ]
-    labeled = spark.createDataFrame(
-        [(i, t, 1) for i, t in enumerate(good)]
-        + [(100 + i, t, 0) for i, t in enumerate(bad)],
-        "doc_id long, text string, label int",
-    )
-    return C.train_quality_classifier(labeled)
-
-
-def test_select_threshold_keep_rate_mode(spark, docs):
-    """r11 (VERDICT r10 #5): tau from a target keep-rate must actually
-    keep ~that fraction of the scored corpus, and be monotone (a
-    larger target keep-rate never yields a larger tau)."""
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-
-    model = _toy_quality_model(spark)
-    scored = C.score_quality(docs, model)
-    n = scored.count()
-    tau30 = C.select_threshold(scored, target_keep_rate=0.3)
-    kept = scored.filter(F.col("prob_keep") >= tau30).count()
-    assert abs(kept / n - 0.3) < 0.05, (kept, n, tau30)
-    tau80 = C.select_threshold(scored, target_keep_rate=0.8)
-    assert tau80 <= tau30
-    kept80 = scored.filter(F.col("prob_keep") >= tau80).count()
-    assert abs(kept80 / n - 0.8) < 0.05, (kept80, n, tau80)
-
-
-def test_select_threshold_precision_mode(spark):
-    """r11 (VERDICT r10 #5): precision-target tau on a labeled holdout
-    — (a) the keep-set at tau meets the target precision, (b) tau is
-    minimal on the bin grid (max recall: one grid step lower breaks
-    the target), (c) an unattainable target raises instead of
-    silently keeping everything."""
-    import pytest as _pytest
-
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-
-    model = _toy_quality_model(spark)
-    held = spark.createDataFrame(
-        [(200, "he read the letter twice before answering with a careful reply"),
-         (201, "many travelers have described the valley as quiet and beautiful"),
-         (202, "the harvest was gathered before the first frost settled in"),
-         (300, "%%% ### @@@ &&& *** !!! ??? $$$"),
-         (301, "11111 22222 33333 44444 55555 66666"),
-         (302, "qwer qwer qwer qwer qwer qwer qwer")],
-        "doc_id long, text string",
-    )
-    labels = spark.createDataFrame(
-        [(200, 1), (201, 1), (202, 1), (300, 0), (301, 0), (302, 0)],
-        "doc_id long, label int",
-    )
-    scored = C.score_quality(held, model)
-    bins = 1000
-    tau = C.select_threshold(
-        scored, target_precision=1.0, labeled_holdout=labels, bins=bins)
-    got = {r.id: r.prob_keep for r in scored.collect()}
-    y = {200: 1, 201: 1, 202: 1, 300: 0, 301: 0, 302: 0}
-
-    def precision(at):
-        keep = [i for i, p in got.items() if p >= at]
-        return sum(y[i] for i in keep) / len(keep) if keep else None
-
-    assert precision(tau) == 1.0
-    # minimal on the grid: one step lower must break the target (or
-    # tau is already the grid floor)
-    assert tau == 0.0 or precision(tau - 1.0 / bins) is None \
-        or precision(tau - 1.0 / bins) < 1.0
-    # unattainable: every holdout label is 0 -> no tau can reach p=0.9
-    all_bad = labels.withColumn("label", F.lit(0))
-    with _pytest.raises(ValueError):
-        C.select_threshold(
-            scored, target_precision=0.9, labeled_holdout=all_bad)
-    # argument discipline: exactly one target
-    with _pytest.raises(ValueError):
-        C.select_threshold(scored)
-    with _pytest.raises(ValueError):
-        C.select_threshold(
-            scored, target_keep_rate=0.5, target_precision=0.9,
-            labeled_holdout=labels)
-    # degenerate inputs fail loudly, not with an opaque TypeError
-    # (review finding): empty scored frame in keep-rate mode, and a
-    # holdout sharing no ids with the scored frame in precision mode
-    empty = scored.filter(F.lit(False))
-    with _pytest.raises(ValueError, match="no non-NULL scores"):
-        C.select_threshold(empty, target_keep_rate=0.5)
-    disjoint = labels.withColumn(
-        "doc_id", F.col("doc_id") + F.lit(10_000))
-    with _pytest.raises(ValueError, match="shares no ids"):
-        C.select_threshold(
-            scored, target_precision=0.9, labeled_holdout=disjoint)
-    # holdout rows absent from scored (e.g. NULL text) are excluded
-    # from calibration, per the documented column contract: adding
-    # unscorable rows must not move tau
-    padded = labels.unionByName(spark.createDataFrame(
-        [(900, 1), (901, 0)], "doc_id long, label int"))
-    assert C.select_threshold(
-        scored, target_precision=1.0, labeled_holdout=padded) == tau
-
-
-def test_calibrated_gate_feeds_pps_sampling(spark, docs):
-    """r11 (VERDICT r10 #5): the docstring's own recommended downstream
-    — calibrate tau, gate, then PPS-subsample with prob_keep as the
-    weight (sample_systematic needs positive integer weights, so the
-    probability is fixed-point scaled).  Deterministic end-to-end."""
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    model = _toy_quality_model(spark)
-    scored = C.score_quality(docs, model)
-    tau = C.select_threshold(scored, target_keep_rate=0.5)
-    gated = scored.filter(F.col("prob_keep") >= tau)
-    weighted = gated.select(
-        F.col("id").alias("doc_id"),
-        (F.col("prob_keep") * 10_000).cast("long").alias("w"),
-    ).filter(F.col("w") > 0)
-    k = 20
-    sampled = Smp.sample_systematic(weighted, k=k, weight_col="w")
-    rows = sampled.collect()
-    assert sum(r.n_tickets for r in rows) == k
-    ids = {r.doc_id for r in rows}
-    assert len(ids) == len(rows)  # unique docs
-    gate_ids = {r.id for r in gated.collect()}
-    assert ids <= gate_ids  # sampler only sees gated docs
-    again = {r.doc_id for r in
-             Smp.sample_systematic(weighted, k=k, weight_col="w").collect()}
-    assert ids == again
-
-
 def test_leakage_safe_split_is_leakage_free_by_construction(spark, docs):
     """r10: cluster-atomic split assignment — the constructive
     counterpart of the split_leakage audit.  With injected near-dup
@@ -2246,38 +1845,15 @@ def test_removable_spans_keep_first_determinism(spark):
     assert {t[0] for t in a} == set(range(1, 6))  # doc 0 survives
 
 
-def test_select_threshold_clamps_at_lowest_populated_bucket(spark):
-    """r12 (ADVICE r11): when the ENTIRE holdout meets the precision
-    target the sweep used to keep lowering tau through empty bins all
-    the way to 0.0 — a disabled gate calibrated from zero evidence
-    about the low-score region.  tau must now clamp at the lowest
-    score bucket the holdout actually witnessed."""
-    from real_timetransactionaldatalakehouse_spark.operators import classify as C
-
-    bins = 1000
-    scored = spark.createDataFrame(
-        [(1, 0.91), (2, 0.74), (3, 0.655)], "id long, prob_keep double")
-    labels = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1)], "doc_id long, label int")
-    tau = C.select_threshold(
-        scored, target_precision=1.0, labeled_holdout=labels, bins=bins)
-    assert tau == 655 / bins  # lowest populated bucket, NOT 0.0
-    # corpus rows below every holdout score are no longer blanket-kept
-    corpus = spark.createDataFrame(
-        [(10, 0.05), (11, 0.64), (12, 0.66)], "id long, prob_keep double")
-    kept = {r.id for r in corpus.filter(F.col("prob_keep") >= tau).collect()}
-    assert kept == {12}
-
-
 def test_bloom_decontaminate_matches_exact_and_bounds_fps(spark, docs):
-    """r12 EXT: Bloom-screened decontamination.  (a) confirm=True
-    equals decontaminate_ngram exactly — false positives cost confirm
-    work, never correctness; (b) the report's n_confirmed <=
-    n_screened with every benchmark carrier confirmed; (c)
-    confirm=False (screen-only) drops a superset of the exact drop
-    set; (d) the production xxhash64 mode and the SQL-twin md5_60
-    mode agree on CONFIRMED contamination (screen FPs may differ —
-    different hash families); (e) sizing discipline raises."""
+    """r12 EXT: Bloom-screened decontamination report.  (a) the
+    confirmed documents are exactly the ones decontaminate_ngram
+    drops — false positives cost confirm work, never correctness;
+    (b) n_confirmed <= n_screened with every benchmark carrier
+    confirmed; (c) the production xxhash64 mode and the SQL-twin
+    md5_60 mode agree on CONFIRMED contamination (screen FPs may
+    differ — different hash families); (d) sizing discipline
+    raises."""
     from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
 
     corpus = docs.filter(F.col("text").isNotNull())
@@ -2289,20 +1865,14 @@ def test_bloom_decontaminate_matches_exact_and_bounds_fps(spark, docs):
         ).alias("text"),
     )
     kw = dict(n=8, m_bits=16384, k=4, hash_fn="md5_60")
+    all_ids = {r.doc_id for r in corpus.select("doc_id").collect()}
     exact = {r.doc_id for r in
              Smp.decontaminate_ngram(corpus, bench).select("doc_id").collect()}
-    bloom = {r.doc_id for r in
-             Smp.bloom_decontaminate(corpus, bench, **kw)
-             .select("doc_id").collect()}
-    assert bloom == exact
     rep = Smp.bloom_contamination_report(corpus, bench, **kw).collect()
     assert rep and all(0 <= r.n_confirmed <= r.n_screened for r in rep)
     confirmed = {r.doc_id for r in rep if r.n_confirmed > 0}
+    assert all_ids - confirmed == exact
     assert set(range(20)) <= confirmed  # every planted carrier confirmed
-    screen_only = {r.doc_id for r in
-                   Smp.bloom_decontaminate(corpus, bench, confirm=False, **kw)
-                   .select("doc_id").collect()}
-    assert screen_only <= bloom  # over-dropping, never under-dropping
     fast = {r.doc_id
             for r in Smp.bloom_contamination_report(
                 corpus, bench, n=8, m_bits=1 << 20, k=4).collect()

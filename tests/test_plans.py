@@ -613,34 +613,6 @@ def test_semdedup_is_cell_local_and_udf_free(spark, sf_medium):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_grouped_percentiles_approx_plan_is_one_sketch_agg(spark, sf_medium):
-    """The at-scale percentile form (VERDICT r8 #4): ONE
-    partial/final ObjectHashAggregate pair over mergeable
-    Greenwald-Khanna sketches — no sort, no window, no join, no
-    second exchange, and the scan pruned to (group, value).  This is
-    the plan that replaces the exact form's order-statistics
-    machinery at 100 TB."""
-    from real_timetransactionaldatalakehouse_spark.operators.relational import (
-        grouped_percentiles,
-    )
-    from real_timetransactionaldatalakehouse_spark.sources import load_table
-
-    li = load_table(spark, sf_medium, "lineitem")
-    df = grouped_percentiles(
-        li, "l_returnflag", "l_extendedprice", {"p50": 0.5, "p95": 0.95}
-    )
-    plan = P.formatted_plan(df)
-    assert "percentile_approx" in plan, plan
-    assert "Sort" not in plan, plan
-    assert "Window" not in plan, plan
-    assert "Join" not in plan, plan
-    # tree lines render as "Exchange (N)"; the detail header "(N) Exchange"
-    # does not match, so this counts exchange NODES once each
-    assert plan.count("Exchange (") == 1, plan
-    cols = P.read_schema_columns(df)
-    assert set(cols) == {"l_returnflag", "l_extendedprice"}, cols
-
-
 def test_semantic_contamination_broadcasts_eval_side(spark, sf_medium):
     """The eval side is metadata-sized and must ride a broadcast
     nested-loop join (the corpus never shuffles before the partial

@@ -845,11 +845,14 @@ def test_zscore_normalize_matches_python_reference(spark, data):
 
 
 def test_bm25_matches_python_reference(spark):
-    """bm25_scores on a fixed mini-corpus vs the published Okapi
-    formula computed in plain Python (identical k1/b defaults)."""
+    """search_bm25 on a fixed mini-corpus vs the published Okapi
+    formula computed in plain Python (identical k1/b defaults): each
+    document's score is the summed weight of the query terms it has."""
     import math
 
-    from real_timetransactionaldatalakehouse_spark.operators.text import bm25_scores
+    import pytest as _pytest
+
+    from real_timetransactionaldatalakehouse_spark.operators.text import search_bm25
 
     corpus = {
         1: "a b a c",
@@ -858,7 +861,6 @@ def test_bm25_matches_python_reference(spark):
         4: "c",
     }
     df = spark.createDataFrame(list(corpus.items()), "doc_id int, text string")
-    got = {(r.doc_id, r.term): r.bm25 for r in bm25_scores(df).collect()}
     toks = {d: t.split() for d, t in corpus.items()}
     n_docs = float(len(corpus))
     avgdl = sum(len(t) for t in toks.values()) / len(corpus)
@@ -867,16 +869,21 @@ def test_bm25_matches_python_reference(spark):
         for term in set(t):
             df_t[term] = df_t.get(term, 0) + 1
     k1, b = 1.2, 0.75
-    for d, t in toks.items():
-        dl = len(t)
-        for term in set(t):
-            tf = t.count(term)
-            idf = math.log(1.0 + (n_docs - df_t[term] + 0.5) / (df_t[term] + 0.5))
-            w = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            import pytest as _pytest
 
-            assert got[(d, term)] == _pytest.approx(w, rel=1e-12), (d, term)
-    assert len(got) == sum(len(set(t)) for t in toks.values())
+    def weight(d, term):
+        t = toks[d]
+        tf, dl = t.count(term), len(t)
+        idf = math.log(1.0 + (n_docs - df_t[term] + 0.5) / (df_t[term] + 0.5))
+        return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+    for terms in (["a"], ["d"], ["a", "d"], ["a", "b", "c", "d", "e"]):
+        got = {r.doc_id: r.score for r in
+               search_bm25(df, terms, k=10, require_all=False).collect()}
+        want = {d: sum(weight(d, term) for term in set(terms) if term in t)
+                for d, t in toks.items() if set(terms) & set(t)}
+        assert got.keys() == want.keys(), terms
+        for d, w in want.items():
+            assert got[d] == _pytest.approx(w, rel=1e-12), (terms, d)
 
 
 @SETTINGS

@@ -354,7 +354,7 @@ def test_mor_upsert_read_merge_equivalence(spark, tmp_path):
     with pytest.raises(Exception):
         spark.read.parquet(TF.version_path(tbl, 2)).count()
     # flatten: one full snapshot, same rows, reads need no merge
-    v5 = TF.flatten_mor(spark, tbl)
+    v5 = TF.write_version(TF.read_table(spark, tbl), tbl)
     assert TF.mor_meta(tbl, v5) is None
     assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want4
 
@@ -436,7 +436,7 @@ def test_mor_expiry_pins_base_chain(spark, tmp_path):
     res = TF.expire_snapshots(tbl, keep_last=1)
     assert res["removed"] == []
     assert TF.read_table(spark, tbl).count() == 5
-    v5 = TF.flatten_mor(spark, tbl)
+    v5 = TF.write_version(TF.read_table(spark, tbl), tbl)
     res = TF.expire_snapshots(tbl, keep_last=1)
     assert set(res["removed"]) == {1, 2, 3, 4}
     assert TF.current_version(tbl) == v5
@@ -508,7 +508,7 @@ def test_mor_combined_batch_delete_wins(spark, tmp_path):
     got = {(r.id, r.v) for r in TF.read_table(spark, tbl).collect()}
     assert got == {(3, 30)}, got
     # and the CoW equivalent (apply updates, then deletes) agrees
-    v = TF.flatten_mor(spark, tbl)
+    v = TF.write_version(TF.read_table(spark, tbl), tbl)
     assert TF.mor_meta(tbl, v) is None
     assert {(r.id, r.v) for r in TF.read_table(spark, tbl).collect()} == {(3, 30)}
 
@@ -526,9 +526,9 @@ def test_mor_chain_depth_and_flatten_trigger(spark, tmp_path):
     """mor_chain_depth counts un-flattened commits; run_maintenance
     treats a versioned table with a live MoR chain like any other:
     its compaction commits a full snapshot (depth 0, rows preserved)
-    and expiry then retires the delta versions.  fold_mor is the one
-    fold rule: it leaves a chain below MOR_MAX_CHAIN alone and
-    flattens it at MOR_MAX_CHAIN."""
+    and expiry then retires the delta versions.  Commits after the
+    rewrite chain from the new full snapshot, and a plain compact
+    folds them again."""
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path / "wh"))
@@ -541,24 +541,19 @@ def test_mor_chain_depth_and_flatten_trigger(spark, tmp_path):
             spark.createDataFrame([(k, k)], "id long, v long"), path, ["id"]
         )
     assert TF.mor_chain_depth(path) == 3
-    assert TF.fold_mor(spark, path) is None
-    assert TF.mor_chain_depth(path) == 3
     rep = MT.run_maintenance(spark, cat, tables=["gold.t"], keep_last=1)
     assert rep["gold.t"]["compact"]["rows_after"] == 4
     assert TF.mor_chain_depth(path) == 0
     assert TF.read_table(spark, path).count() == 4
     assert TF.list_versions(path) == [TF.current_version(path)]
-    # the fold rule: depth MOR_MAX_CHAIN - 1 stays, MOR_MAX_CHAIN folds
-    for k in range(10, 10 + TF.MOR_MAX_CHAIN):
+    for k in range(10, 13):
         TF.write_mor_upsert(
             spark.createDataFrame([(k, k)], "id long, v long"), path, ["id"]
         )
-        if TF.mor_chain_depth(path) < TF.MOR_MAX_CHAIN:
-            assert TF.fold_mor(spark, path) is None
-    assert TF.mor_chain_depth(path) == TF.MOR_MAX_CHAIN
-    v = TF.fold_mor(spark, path)
-    assert v == TF.current_version(path) and TF.mor_meta(path, v) is None
-    assert TF.read_table(spark, path).count() == 4 + TF.MOR_MAX_CHAIN
+    assert TF.mor_chain_depth(path) == 3
+    assert MT.compact(spark, path)["rows_after"] == 7
+    v = TF.current_version(path)
+    assert TF.mor_chain_depth(path) == 0 and TF.mor_meta(path, v) is None
 
 
 def test_maintenance_loop_drives_mor_flatten_trigger(spark, tmp_path):
@@ -634,10 +629,10 @@ def test_mor_read_plan_depth_contract(spark, tmp_path):
     DATA — base rows stream through d tiny broadcast filters, delta_k
     rows through d-k — but plan build/codegen cost is QUADRATIC in
     depth).  That quadratic plan growth is the measured 'or else' for
-    the flatten cadence: MOR_MAX_CHAIN (8 -> 36 join nodes) keeps it
-    trivial, depth 20 -> 210 nodes is still seconds, depth 100 ->
-    5050 would dominate the read.  Every join must stay broadcast —
-    never a shuffle join."""
+    the maintenance cadence: depth 8 -> 36 join nodes is trivial,
+    depth 20 -> 210 nodes is still seconds, depth 100 -> 5050 would
+    dominate the read.  Every join must stay broadcast — never a
+    shuffle join."""
     from real_timetransactionaldatalakehouse_spark import plans as P
 
     tbl = str(tmp_path / "tbl")
@@ -666,7 +661,6 @@ def test_mor_read_plan_depth_contract(spark, tmp_path):
     # well under a minute (measured ~2-8 s; the assert is a regression
     # tripwire for accidental quadratic recursion, not a benchmark)
     assert wall < 60, wall
-    assert TF.MOR_MAX_CHAIN <= depth // 2
 
 
 def test_reader_snapshot_isolation_across_maintenance(spark, tmp_path):
