@@ -17,7 +17,10 @@ Determinism rules (SURVEY.md section 7.3) applied throughout:
 
 from __future__ import annotations
 
+import atexit
 import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -33,6 +36,24 @@ SF0001 = "/root/testdata/sf0.001"
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
+_SCRATCH_DIRS: list[str] = []
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp dir for a query that builds a table.  The returned
+    DataFrame reads it lazily, so it lives until the next declared
+    query starts (or the process exits)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_DIRS.append(path)
+    return path
+
+
+def _drop_scratch_dirs() -> None:
+    while _SCRATCH_DIRS:
+        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
+
+
+atexit.register(_drop_scratch_dirs)
 
 
 def _q(name: str, oracle: str | None = None):
@@ -45,8 +66,10 @@ def _q(name: str, oracle: str | None = None):
             # queries are self-contained (each reads its tables from
             # parquet): drop any intermediate a previous query left
             # cached so a long driver session never accumulates
-            # executor memory across the declared surface
+            # executor memory across the declared surface; the tables
+            # earlier queries built go the same way
             spark.catalog.clearCache()
+            _drop_scratch_dirs()
             return fn(spark, sf_dir)
 
         _QUERIES[name] = wrapped
@@ -1285,10 +1308,8 @@ def q_sorted_write(spark, sf_dir):
     spark_rows (planted-violation pytest in
     tests/test_oracle_parity.py drives _sorted_write_summary on a
     descending-sorted write)."""
-    import tempfile
-
     ev = _t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sorted_write_")
+    out = _scratch_dir("sorted_write_")
     ev.repartition(4, "user_id").sortWithinPartitions("ts").write.mode(
         "overwrite"
     ).parquet(out)
@@ -1333,12 +1354,11 @@ def q_snapshot_lifecycle(spark, sf_dir):
     before expiry (time travel), expired after, row counts preserved
     across rewrites."""
     import os as _os
-    import tempfile
 
     from real_timetransactionaldatalakehouse_spark import tablefmt as TF
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    tbl = tempfile.mkdtemp(prefix="versioned_tbl_")
+    tbl = _scratch_dir("versioned_tbl_")
     n_all = ev.count()
     TF.write_version(ev, tbl, expect_rows=n_all)
     cut = ev.agg(F.expr("percentile(unix_seconds(ts), 0.5)")).first()[0]
@@ -1398,12 +1418,10 @@ def q_schema_evolution(spark, sf_dir):
     k_val) and the backfilled current read.  The metadata-only-ALTER
     and declared-schema assertions stay in pytest
     (tests/test_tablefmt.py)."""
-    import tempfile
-
     from real_timetransactionaldatalakehouse_spark import tablefmt as TF
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "props")
-    tbl = tempfile.mkdtemp(prefix="schema_evo_")
+    tbl = _scratch_dir("schema_evo_")
     n = ev.count()
     TF.write_version(ev, tbl, expect_rows=n)
     TF.add_column(tbl, "k_val", "bigint")
@@ -1425,12 +1443,11 @@ def q_bucket_pruned_lookup(spark, sf_dir):
     one key up through the constant-folded bucket predicate, prove the
     scan pruned (numFiles below total) and returned the right rows."""
     import os as _os
-    import tempfile
 
     from real_timetransactionaldatalakehouse_spark.serving import bucket_pruned_lookup
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
-    out = tempfile.mkdtemp(prefix="bucketed_")
+    out = _scratch_dir("bucketed_")
     n_buckets = 16
     (
         ev.withColumn(
@@ -1603,12 +1620,10 @@ def q_snapshot_diff(spark, sf_dir):
     deletes classified by a keyed full-outer join; one key shuffle.
     Both snapshots are deterministic SELECTs over events so the diff
     itself (not just its counts) is oracle-checked."""
-    import tempfile
-
     from real_timetransactionaldatalakehouse_spark import tablefmt as TF
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    tbl = tempfile.mkdtemp(prefix="snapdiff_")
+    tbl = _scratch_dir("snapdiff_")
     TF.write_version(ev, tbl)
     changed = (
         ev.filter(F.col("event_id") % 10 != 0)  # delete 10%
@@ -1661,12 +1676,10 @@ def q_mor_upsert(spark, sf_dir):
     builds base -> MoR upsert -> MoR delete from deterministic event
     slices and returns the resolved table; the oracle is the
     whole-row MERGE the chain must equal."""
-    import tempfile
-
     from real_timetransactionaldatalakehouse_spark import tablefmt as TF
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    tbl = tempfile.mkdtemp(prefix="mor_tbl_")
+    tbl = _scratch_dir("mor_tbl_")
     TF.write_version(ev.filter(F.col("event_id") % 3 != 0), tbl)
     TF.write_mor_upsert(
         ev.filter(F.col("event_id") % 5 == 0).withColumn(
@@ -2688,11 +2701,11 @@ SELECT md5(text) AS fp, CAST(MIN(doc_id) AS BIGINT) AS keeper_id,
 FROM all_docs GROUP BY text
 """)
 def q_dedup_exact(spark, sf_dir):
-    """X1: exact dedup via hash-groupBy on the map-side md5 fingerprint
-    (the shuffle carries (fp, id), never the text — plan-locked by
-    test_exact_dedup_shuffle_carries_no_text); duplicate docs injected
-    deterministically (corpus texts are unique) so the keeper/count
-    semantics are actually exercised."""
+    """X1: exact dedup via hash-groupBy on the map-side md5 fingerprint,
+    exact_dedup's only key (the shuffle carries (fp, id), never the
+    text — plan-locked by test_exact_dedup_shuffle_carries_no_text);
+    duplicate docs injected deterministically (corpus texts are
+    unique) so the keeper/count semantics are actually exercised."""
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3826,10 +3839,9 @@ def q_multimodal_features(spark, sf_dir):
     """X5: multimodal binary-column pipeline — synthetic media table ->
     feature extraction over the opaque payload bytes.  The FAKE md5
     decode kernel is byte-pure, so it runs as a whole-stage-codegen
-    expression by default (no Python worker; the Arrow mapInPandas
-    path stays equivalence-tested as the real-codec deployment hook),
-    and feature 0 has an exact SQL twin (first 4 digest bytes
-    little-endian, scaled to [-1, 1], FLOAT32)."""
+    expression (no Python worker; tested row by row against its
+    Python reference), and feature 0 has an exact SQL twin (first 4
+    digest bytes little-endian, scaled to [-1, 1], FLOAT32)."""
     from real_timetransactionaldatalakehouse_spark.operators import multimodal as MM
 
     docs = _t(spark, sf_dir, "documents")
@@ -4482,16 +4494,14 @@ FROM s
 """)
 def q_trend_slope(spark, sf_dir):
     """Per-user OLS trend of event value over time (operators/fitting.
-    grouped_ols).  The certified path is ``impl="exact"`` (changed in
-    r6 from rows-only pandas — VERDICT r5 ask #4): inputs quantize to
+    grouped_ols, the exact moment-sum fit): inputs quantize to
     integers (epoch seconds from a fixed 2024-01-01 origin; value in
     cents — exact for this corpus, pinned by pytest), the five moment
     sums accumulate exactly (lsum/xlsum, exact to 2^39 rows/group),
     and the closed form combines them once in doubles with the same
     expression tree as the oracle — bit-portable, hence hashable, the
     corr/covar discipline applied to fitting.  Slope units: cents per
-    second.  The grouped-map pandas kernel (the flexible path for fits
-    that are NOT five aggregates) stays pytest-pinned equivalent.
+    second.
 
     One partial+final shuffle of six longs per (user, partition) —
     events never shuffle whole.  The origin shift keeps x to ~2^25 for
@@ -4505,7 +4515,7 @@ def q_trend_slope(spark, sf_dir):
         (F.col("ts").cast("long") - F.lit(1704067200)).alias("x"),
         F.round(F.col("value") * 100).cast("long").alias("y"),
     )
-    return grouped_ols(ev, ["user_id"], "x", "y", impl="exact")
+    return grouped_ols(ev, ["user_id"], "x", "y")
 
 
 _NEARDUP_FREE_ORACLE = """
@@ -4986,8 +4996,9 @@ def q_embed_centroids(spark, sf_dir):
     and accumulate via the split-long partial+final sum — bit-equal
     across engines and partitionings with NO ordered fold (the r4
     collect_list formulation went superlinear at the 50x replica);
-    the oracle's 8796093022208 literal is 2^43.  The ``exact=True``
-    ordered-fold mode remains for non-dyadic inputs."""
+    the oracle's 8796093022208 literal is 2^43.  Without
+    ``dyadic_bits`` the operator folds in id order, for non-dyadic
+    inputs."""
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     return S.embedding_centroids(

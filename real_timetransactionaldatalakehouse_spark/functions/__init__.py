@@ -57,7 +57,7 @@ def msum(col: Column | str, scale: int = 2) -> Column:
     return F.sum(F.round(c * m).cast("long")) / F.lit(float(m))
 
 
-def lsum(term: Column, cast_double: bool = True) -> Column:
+def lsum(term: Column) -> Column:
     """Exact order-independent sum of an INTEGRAL expression via
     primitive-long accumulation (whole-stage codegen), bit-identical to
     the decimal-sum-then-cast path while ~4x cheaper (Decimal's agg
@@ -67,8 +67,7 @@ def lsum(term: Column, cast_double: bool = True) -> Column:
     (Spark 4 ANSI mode turns a misjudged bound into an explicit
     overflow error, never a silent wrap).  For per-row magnitudes above
     ~2^24 where the bound gets tight, use :func:`xlsum`."""
-    s = F.sum(term.cast("long"))
-    return s.cast("double") if cast_double else s
+    return F.sum(term.cast("long")).cast("double")
 
 
 def xlsum(term: Column, shift: int = 24) -> Column:

@@ -1,20 +1,11 @@
-"""Per-entity model fitting (grouped-map kernels).
+"""Per-entity model fitting from exact moment sums.
 
-The one batch API family the rest of the engine deliberately avoids —
-``applyInPandas`` grouped-map — used where it is genuinely the right
-tool: fitting a small model per entity (trend slopes, seasonality,
-per-user rates).  Each group's rows land complete in one Arrow batch,
-the kernel runs vectorized numpy, and the output is one row per group
-— the shuffle moves each group once, exactly like a wide aggregation.
-
-Scale shape: work is ``O(rows)`` with per-group numpy constant
-factors; a group must fit in one task's memory (per-entity history —
-thousands of rows — always does; for pathological groups pre-aggregate
-to fixed-width time buckets first).  The JVM ``impl="expr"`` twin
-computes the same closed form from moment sums without Python — use it
-when the fit is simple enough to be five aggregates (it is, for OLS);
-the pandas path is the template for fits that are NOT expressible as
-aggregates (robust regression, seasonal decomposition, changepoints).
+A per-group OLS fit is five aggregates: the closed form needs only
+``n``, ``Σx``, ``Σy``, ``Σx²``, ``Σy²`` and ``Σxy``.  So the fit is one
+partial+final aggregation — the shuffle moves six longs per (group,
+partition), never the rows — and no Python runs on the executors.  The
+sums accumulate exactly on integral inputs, so the result is
+bit-portable across engines (the corr/covar discipline).
 """
 
 from __future__ import annotations
@@ -22,118 +13,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import lsum, xlsum
+
 
 def grouped_ols(
     df: DataFrame,
     group_cols: list[str],
     x_col: str,
     y_col: str,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Per-group ordinary-least-squares fit of ``y ~ a + b*x``:
     returns one row per group with ``slope``, ``intercept``, ``r2``
     and ``n``.  Groups with fewer than 2 points or zero x-variance
     yield NULL fit columns (never a divide-by-zero).
 
-    ``impl="pandas"``: grouped-map Arrow kernel; rows are sorted by
-    (x, y) inside the kernel, so the float summation order — and hence
-    the result — is bit-deterministic regardless of upstream
-    partitioning.  ``impl="expr"``: the same closed form from five JVM
-    moment sums (one partial+final shuffle, no Python); float partial
-    merge order makes it deterministic-in-practice within a session
-    but not bit-portable — equivalence to the pandas path is pinned to
-    1e-9 relative by ``tests/test_llm_ops.py``.  ``impl="exact"``:
-    requires INTEGRAL ``x_col``/``y_col`` (the caller quantizes —
+    Requires INTEGRAL ``x_col``/``y_col`` (the caller quantizes —
     epoch seconds from a fixed origin, fixed-point cents, ...); the
     five moment sums accumulate exactly (primitive-long for the linear
     terms, hi/lo split-long for the products — exact to 2^39
     rows/group at per-row magnitudes up to ~2^53), and the closed form
     combines them once in doubles with a fixed expression tree, so the
-    result is BIT-PORTABLE across engines — the same discipline as the
-    corr/covar family.
+    result is BIT-PORTABLE across engines.
     """
-    out_fields = ", ".join(
-        f"{c} {t}" for c, t in df.select(*group_cols).dtypes
+    x = F.col(x_col).cast("long")
+    y = F.col(y_col).cast("long")
+    s = df.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        lsum(x).alias("sx"), lsum(y).alias("sy"),
+        xlsum(x * x).alias("sxx"), xlsum(y * y).alias("syy"),
+        xlsum(x * y).alias("sxy"),
     )
-    out_schema = (
-        f"{out_fields}, slope double, intercept double, r2 double, n bigint"
-    )
-
-    if impl in ("expr", "exact"):
-        if impl == "exact":
-            from ..functions import lsum, xlsum
-
-            x = F.col(x_col).cast("long")
-            y = F.col(y_col).cast("long")
-            s = df.groupBy(*group_cols).agg(
-                F.count(F.lit(1)).cast("double").alias("n"),
-                lsum(x).alias("sx"), lsum(y).alias("sy"),
-                xlsum(x * x).alias("sxx"), xlsum(y * y).alias("syy"),
-                xlsum(x * y).alias("sxy"),
-            )
-        else:
-            x = F.col(x_col).cast("double")
-            y = F.col(y_col).cast("double")
-            s = df.groupBy(*group_cols).agg(
-                F.count(F.lit(1)).cast("double").alias("n"),
-                F.sum(x).alias("sx"), F.sum(y).alias("sy"),
-                F.sum(x * x).alias("sxx"), F.sum(y * y).alias("syy"),
-                F.sum(x * y).alias("sxy"),
-            )
-        n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-        sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
-        dx = n * sxx - sx * sx
-        dy = n * syy - sy * sy
-        cov = n * sxy - sx * sy
-        slope = F.when((n > 1) & (dx > 0), cov / dx)
-        intercept = F.when(
-            (n > 1) & (dx > 0), (sy - (cov / dx) * sx) / n
-        )
-        r2 = F.when((n > 1) & (dx > 0) & (dy > 0), (cov * cov) / (dx * dy))
-        return s.select(
-            *group_cols,
-            slope.alias("slope"), intercept.alias("intercept"),
-            r2.alias("r2"), n.cast("long").alias("n"),
-        )
-
-    if impl != "pandas":
-        raise ValueError(f"unknown impl: {impl!r}")
-
-    import numpy as np
-    import pandas as pd
-
-    gcols = list(group_cols)
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([x_col, y_col], kind="mergesort")
-        x = pdf[x_col].to_numpy(dtype="float64")
-        y = pdf[y_col].to_numpy(dtype="float64")
-        n = len(x)
-        head = {c: [pdf[c].iloc[0]] for c in gcols}
-        if n < 2:
-            return pd.DataFrame(
-                {**head, "slope": [None], "intercept": [None],
-                 "r2": [None], "n": [n]}
-            )
-        sx, sy = float(x.sum()), float(y.sum())
-        sxx, syy = float((x * x).sum()), float((y * y).sum())
-        sxy = float((x * y).sum())
-        dx = n * sxx - sx * sx
-        dy = n * syy - sy * sy
-        cov = n * sxy - sx * sy
-        if dx <= 0:
-            slope = intercept = r2 = None
-        else:
-            slope = cov / dx
-            intercept = (sy - slope * sx) / n
-            r2 = (cov * cov) / (dx * dy) if dy > 0 else None
-        return pd.DataFrame(
-            {**head, "slope": [slope], "intercept": [intercept],
-             "r2": [r2], "n": [n]}
-        )
-
-    return (
-        df.select(*gcols, x_col, y_col)
-        .groupBy(*gcols)
-        .applyInPandas(fit, out_schema)
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
+    dx = n * sxx - sx * sx
+    dy = n * syy - sy * sy
+    cov = n * sxy - sx * sy
+    fit = (n > 1) & (dx > 0)
+    return s.select(
+        *group_cols,
+        F.when(fit, cov / dx).alias("slope"),
+        F.when(fit, (sy - (cov / dx) * sx) / n).alias("intercept"),
+        F.when(fit & (dy > 0), (cov * cov) / (dx * dy)).alias("r2"),
+        n.cast("long").alias("n"),
     )

@@ -31,12 +31,10 @@ def _gen(name: str):
     return F.col("`" + name + "`")
 
 
-def enrich_left(fact: DataFrame, dim: DataFrame, on: list[str] | str,
-                broadcast_dim: bool = True) -> DataFrame:
+def enrich_left(fact: DataFrame, dim: DataFrame, on: list[str] | str) -> DataFrame:
     """J3/J4: read-time LEFT JOIN enrichment (reference Dashboard.md:48)
     with the dim side broadcast (Dashboard.md:57)."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how="left")
+    return fact.join(F.broadcast(dim), on=on, how="left")
 
 
 def join_semi(

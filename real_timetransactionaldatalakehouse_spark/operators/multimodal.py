@@ -1,25 +1,19 @@
 """Multimodal columns (SURVEY.md section 2 X5, north-star EXT):
 image/audio/video as opaque BINARY columns + typed metadata structs,
-with decode / feature-extract as Arrow-batched ``mapInPandas`` stages.
+with feature extraction as a whole-stage-codegen projection.
 
-The container has no image/audio codecs, so the *decode kernels* are
-stubbed: ``deterministic_fake_features`` derives a stable feature
-vector from the bytes' md5 (clearly marked FAKE); there is no real
-decoder.  Everything Spark-side is real and tested: schema,
-partitioning, UDF signature, Arrow batch shape — swapping in a real
-codec changes one function body, not the plan.
-
-Scale: mapInPandas streams Arrow record batches; memory per task is
-bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` — binary
-payloads never pass through the driver.
+The container has no image/audio codecs, so the *decode kernel* is
+stubbed: the features are a stable vector derived from the bytes' md5
+(clearly marked FAKE); there is no real decoder.  Because the stub is
+byte-pure it runs in the JVM (:func:`fake_features_expr`), and
+``deterministic_fake_features`` is its Python reference, which the
+tests compare it with row by row.  A real codec would be a
+``mapInPandas`` stage over the same schema.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -72,8 +66,8 @@ def deterministic_fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[
 
 
 def fake_features_expr(payload_col: str = "payload", dim: int = FEATURE_DIM) -> F.Column:
-    """:func:`deterministic_fake_features` as a pure codegen expression —
-    the whole-stage-JVM twin of the Arrow kernel (equivalence-tested).
+    """:func:`deterministic_fake_features` as a pure codegen expression
+    (equivalence-tested against it).
 
     The FAKE extractor is a pure function of the payload bytes built
     from md5, so it belongs in the JVM: per md5 block ``i``,
@@ -81,8 +75,7 @@ def fake_features_expr(payload_col: str = "payload", dim: int = FEATURE_DIM) -> 
     bytes = 4 little-endian uint32 features.  Each feature reverses
     its 4 byte-pairs in the hex string, ``conv``s to a long, and
     rescales to [-1, 1] — no Python worker, no Arrow round trip
-    (~0.2 s/query fixed cost at bench scale).  Real codecs can't do
-    this; they use :func:`extract_features` with ``impl='arrow'``."""
+    (~0.2 s/query fixed cost at bench scale)."""
     feats = []
     for t in range(dim):
         block, off = t // 4, (t % 4) * 4  # byte offset within the digest
@@ -99,30 +92,11 @@ def fake_features_expr(payload_col: str = "payload", dim: int = FEATURE_DIM) -> 
 
 
 def extract_features(df: DataFrame, payload_col: str = "payload",
-                     dim: int = FEATURE_DIM, impl: str = "expr") -> DataFrame:
-    """Feature extraction over binary payloads.
-
-    ``impl='expr'`` (default): the FAKE md5 extractor evaluated as a
-    whole-stage-codegen projection (:func:`fake_features_expr`) — the
-    right path while the decode kernel is byte-pure.  ``impl='arrow'``:
-    mapInPandas Arrow streaming — the deployment hook shape for real
-    codecs (PIL/librosa/ffmpeg), kept equivalence-tested so swapping
-    the kernel body changes no plumbing."""
-    if impl == "expr":
-        return df.withColumn("features", fake_features_expr(payload_col, dim))
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("features", T.ArrayType(T.FloatType()), True)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["features"] = pdf[payload_col].map(
-                lambda b: deterministic_fake_features(bytes(b) if b is not None else None, dim)
-            )
-            yield pdf
-
-    return df.mapInPandas(kernel, out_schema)
+                     dim: int = FEATURE_DIM) -> DataFrame:
+    """Feature extraction over binary payloads: the FAKE md5 extractor
+    evaluated as a whole-stage-codegen projection
+    (:func:`fake_features_expr`)."""
+    return df.withColumn("features", fake_features_expr(payload_col, dim))
 
 
 def synthetic_media(spark, documents: DataFrame, n: int = 64) -> DataFrame:

@@ -239,7 +239,6 @@ def _gram_hashes(
     text_col: str,
     id_col: str,
     n: int,
-    repartition: bool | int,
     h1_of=None,
 ) -> DataFrame:
     """Distinct token n-gram hashes per document, ``(out_id, __h)``
@@ -261,24 +260,17 @@ def _gram_hashes(
     defect class).  Documents shorter than ``n`` tokens keep
     word_shingles' whole-document gram via the whole-array hash.
 
-    The default spread goes through the split-count guard
+    The input spreads through the split-count guard
     (``sources.fan_out``: no-op unless the exchange at least doubles
-    the gram-build parallelism); an EXPLICIT integer count is a
-    caller override and repartitions unconditionally."""
+    the gram-build parallelism)."""
     from ..sources import fan_out
     from .text import tokens
 
-    if repartition is True:
-        # r13: input-sized spread (the fan_out default), not core
-        # count — in-session width A/B on the 13-gram decontaminate at
-        # bench SF: 4/8-way ~0.63-0.64 s vs 32-way >= 0.75 s; the
-        # session layout grows with input, well-split tables skip at
-        # the guard
-        src = fan_out(df, guard=True)
-    elif repartition is False:
-        src = df
-    else:
-        src = df.repartition(int(repartition))
+    # r13: input-sized spread (the fan_out default), not core count —
+    # in-session width A/B on the 13-gram decontaminate at bench SF:
+    # 4/8-way ~0.63-0.64 s vs 32-way >= 0.75 s; the session layout
+    # grows with input, well-split tables skip at the guard
+    src = fan_out(df, guard=True)
     if h1_of is None:
         h1_of = F.xxhash64
     toks = tokens(text_col)
@@ -302,7 +294,6 @@ def decontaminate_ngram(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    repartition: bool | int = True,
 ) -> DataFrame:
     """Token n-gram overlap decontamination — the GPT-3/Pile-style
     variant of :func:`decontaminate`: drop any corpus document sharing
@@ -322,17 +313,16 @@ def decontaminate_ngram(
     when small and shuffles instead of OOMing when not.  N-gram
     hashes shuffle; documents never shuffle for the semi side.
 
-    ``repartition``: the gram build is per-row CPU-heavy (n token
-    concats per position), so an under-split corpus is fanned out to
-    core count first (measured 4x at bench scale, where one parquet
-    file arrives as ONE split).  Pass ``False`` on a well-split
-    100 TB table, or an int to size it explicitly.
+    The gram build is per-row CPU-heavy (n token concats per
+    position), so an under-split corpus is fanned out first (measured
+    4x at bench scale, where one parquet file arrives as ONE split);
+    a well-split table skips the exchange.
     """
     b = _gram_hashes(
-        benchmark, "__bid", text_col, id_col, n, repartition
+        benchmark, "__bid", text_col, id_col, n
     ).select("__h").distinct()
     contaminated = (
-        _gram_hashes(corpus, id_col, text_col, id_col, n, repartition)
+        _gram_hashes(corpus, id_col, text_col, id_col, n)
         .join(F.broadcast(b), "__h", "left_semi")
         .select(id_col)
         .distinct()
@@ -347,7 +337,6 @@ def _gram_pairs(
     id_col: str,
     n: int,
     hash_fn: str,
-    repartition: bool | int,
 ) -> DataFrame:
     """Distinct token n-grams per document as DOUBLE-hash pairs
     ``(out_id, __h1, __h2)`` — the Kirsch-Mitzenmacher base for the
@@ -381,8 +370,7 @@ def _gram_pairs(
             return hasher(h1.cast("string"))
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    base = _gram_hashes(df, out_id, text_col, id_col, n, repartition,
-                        h1_of=h1_of)
+    base = _gram_hashes(df, out_id, text_col, id_col, n, h1_of=h1_of)
     return base.select(
         out_id,
         F.col("__h").alias("__h1"),
@@ -418,7 +406,6 @@ def bloom_contamination_report(
     m_bits: int = 1 << 20,
     k: int = 4,
     hash_fn: str = "xxhash64",
-    repartition: bool | int = True,
 ) -> DataFrame:
     """Bloom-SCREENED benchmark decontamination report (r12): per
     corpus document, how many of its distinct ``n``-grams pass an
@@ -461,8 +448,7 @@ def bloom_contamination_report(
     if m_bits < 64 or m_bits % 64 or k < 1 or k > 32:
         raise ValueError(
             "m_bits must be a positive multiple of 64 and k in [1, 32]")
-    b = _gram_pairs(benchmark, "__bid", text_col, id_col, n, hash_fn,
-                    repartition)
+    b = _gram_pairs(benchmark, "__bid", text_col, id_col, n, hash_fn)
     # bitmap build: positions fold into 64-bit WORDS distributively —
     # one bit_or aggregate (map-side combine, skew-free) down to
     # <= m_bits/64 rows, so the driver collects word rows, not one row
@@ -501,8 +487,8 @@ def bloom_contamination_report(
     )
     bits_arr = F.col("__bloom_bits")
 
-    cg = _gram_pairs(corpus, id_col, text_col, id_col, n, hash_fn,
-                     repartition).crossJoin(F.broadcast(bitmap_df))
+    cg = _gram_pairs(corpus, id_col, text_col, id_col, n,
+                     hash_fn).crossJoin(F.broadcast(bitmap_df))
     screen_pred = None
     for j in range(k):  # k is small and static: unrolled AND, codegen
         pos = _bloom_pos(j, m_bits)
@@ -622,7 +608,6 @@ def contamination_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    repartition: bool | int = True,
 ) -> DataFrame:
     """The AUDIT side of :func:`decontaminate_ngram` — the per-eval-doc
     leakage report decontamination pipelines publish next to the drop:
@@ -637,9 +622,9 @@ def contamination_report(
     (bench_id, corpus_id, gram) partial aggregation.  Corpus text
     never shuffles.
     """
-    b = _gram_hashes(benchmark, "__bid", text_col, id_col, n, repartition)
+    b = _gram_hashes(benchmark, "__bid", text_col, id_col, n)
     hits = (
-        _gram_hashes(corpus, "__cid", text_col, id_col, n, repartition)
+        _gram_hashes(corpus, "__cid", text_col, id_col, n)
         .join(F.broadcast(b), "__h")
         .groupBy("__bid")
         .agg(

@@ -1170,9 +1170,7 @@ def embedding_centroids(
     vec_col: str = "embedding",
     label_col: str = "label",
     id_col: str = "vec_id",
-    exact: bool = True,
     dyadic_bits: int | None = None,
-    repartition: bool = True,
 ) -> DataFrame:
     """Per-label mean embedding (centroid) — the mean-pooling step of
     cluster summarization, IVF coarse-quantizer refresh, and
@@ -1181,20 +1179,17 @@ def embedding_centroids(
     format; pivot back to an array with ``collect_list`` over sorted
     dims when a vector shape is needed).
 
-    ``exact=True`` folds each (label, dim) cell's values in ``id``
-    order inside an aggregated array — a FIXED summation order, so
-    the result is bit-identical across partitionings and engines
-    (float addition does not reassociate here).  The array holds the
-    label's member count of scalars: fine up to ~1e6 members per
-    label.  ``exact=False`` is a 100 TB path — a plain double sum
-    (partial+final, arbitrary merge order, last-ulp tolerance) with
-    identical asymptotics to any other aggregation.
+    By default each (label, dim) cell's values fold in ``id`` order
+    inside an aggregated array — a FIXED summation order, so the
+    result is bit-identical across partitionings and engines (float
+    addition does not reassociate here).  The array holds the label's
+    member count of scalars: fine up to ~1e6 members per label.
 
-    ``dyadic_bits=k`` is the BEST of both — bit-exact AND
-    partial-aggregable — when the caller proves every component is an
-    exact multiple of 2^-k (any float32 input whose exponents stay
-    >= 24-k; k=43 covers magnitudes down to ~1e-6, and the property is
-    checkable once per corpus): components scale to exact longs
+    ``dyadic_bits=k`` is bit-exact AND partial-aggregable when the
+    caller proves every component is an exact multiple of 2^-k (any
+    float32 input whose exponents stay >= 24-k; k=43 covers
+    magnitudes down to ~1e-6, and the property is checkable once per
+    corpus): components scale to exact longs
     (* 2^k, a power-of-two multiply, lossless), accumulate via the
     hi/lo split-long sum (functions.xlsum — exact to 2^39 members per
     label, codegen primitives, arbitrary merge order), and the single
@@ -1202,15 +1197,13 @@ def embedding_centroids(
     member arrays, no ordered fold — the 50x-replica superlinear wall
     (10.7x for 5x data) becomes a plain partial+final agg.
 
-    ``repartition=True`` fans an under-split source to session
-    parallelism before the explode (split-count guarded no-op on
+    An under-split source fans out to session parallelism before the
+    explode (``sources.fan_out``, a split-count guarded no-op on
     well-split tables) so the posexplode stage uses the cluster.
     """
-    if repartition:
-        from ..sources import fan_out
+    from ..sources import fan_out
 
-        df = fan_out(df)
-    e = df.select(
+    e = fan_out(df).select(
         F.col(label_col).alias("label"),
         F.col(id_col).alias("__i"),
         F.posexplode(F.col(vec_col)).alias("dim", "__v"),
@@ -1229,21 +1222,13 @@ def embedding_centroids(
             .alias("centroid"),
             "n_members",
         )
-    if exact:
-        agg = e.groupBy("label", "dim").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("__i").alias("i"), F.col("__v").alias("v")))
-            ).alias("__vs"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        total = F.aggregate(
-            F.col("__vs"), F.lit(0.0), lambda acc, x: acc + x["v"]
-        )
-    else:
-        agg = e.groupBy("label", "dim").agg(
-            F.sum("__v").alias("__total"), F.count(F.lit(1)).alias("n_members")
-        )
-        total = F.col("__total")
+    agg = e.groupBy("label", "dim").agg(
+        F.array_sort(
+            F.collect_list(F.struct(F.col("__i").alias("i"), F.col("__v").alias("v")))
+        ).alias("__vs"),
+        F.count(F.lit(1)).alias("n_members"),
+    )
+    total = F.aggregate(F.col("__vs"), F.lit(0.0), lambda acc, x: acc + x["v"])
     return agg.select(
         "label", "dim",
         (total / F.col("n_members").cast("double")).alias("centroid"),

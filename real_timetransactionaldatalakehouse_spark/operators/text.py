@@ -219,7 +219,6 @@ def repetition_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 2,
-    repartition: bool = True,
 ) -> DataFrame:
     """X4: repetition quality signals — the duplicate-n-gram fraction
     and top-n-gram fraction used by corpus-quality filters (a document
@@ -238,8 +237,7 @@ def repetition_stats(
     ``(id)`` are supersets of the partitioning key), so the n-gram
     explode, per-gram counting, and per-document ratios all run in the
     same stage with no further shuffle.  Only the source rows cross
-    the wire; a well-split 100 TB table can pass ``repartition=False``
-    and run map-side from the scan.
+    the wire.
 
     Gram keys are HASHED (r6, VERDICT r5 ask #6): the per-gram count
     groups on ``xxhash64`` of the token slice, never materializing the
@@ -252,13 +250,11 @@ def repetition_stats(
     max-run scan) measured 13-25 s — Spark evaluates higher-order
     lambdas interpreted, outside codegen — and was rejected; the A/B
     is recorded in SCALING.md."""
-    if repartition:
-        spark = df.sparkSession
-        # r13: input-sized width (was core count) — interleaved width
-        # A/B at bench SF read 4-way 0.44 s vs 32-way 0.57 s; the
-        # session layout grows with input so big corpora still fan wide
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(p, id_col)
+    # r13: input-sized width (was core count) — interleaved width A/B
+    # at bench SF read 4-way 0.44 s vs 32-way 0.57 s; the session
+    # layout grows with input so big corpora still fan wide
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    df = df.repartition(p, id_col)
     # Materialize the token array as its own projection BEFORE the
     # gram transform references it (same defect class as the r6
     # winnowing fix): the lambda body runs interpreted, outside
@@ -595,7 +591,6 @@ def perplexity_buckets(
     lang_col: str = "lang",
     n_buckets: int = 3,
     labels: tuple = ("head", "middle", "tail"),
-    method: str = "ntile",
     scores: DataFrame | None = None,
     **lm_kwargs,
 ) -> DataFrame:
@@ -607,23 +602,12 @@ def perplexity_buckets(
     come from :func:`ngram_lm_score` (higher ``avg_logprob`` =
     better); pass ``scores`` to reuse an existing score table.
 
-    ``method`` picks the 100-TB trade explicitly rather than hiding
-    it:
-
-    - ``"ntile"`` (default, certified): exact equal-count buckets via
-      ``NTILE(n) OVER (PARTITION BY lang ORDER BY avg_logprob DESC,
-      id)`` — deterministic total order, bit-equal in ANSI SQL.  The
-      honest caveat: a window partition is ONE task, and on a real
-      web corpus the largest language is over half the rows — this
-      mode's per-lang sort does not scale past what one executor
-      sorts comfortably.  Certification/small-corpus mode.
-    - ``"cutoffs"``: per-language quantile cutoffs from ONE
-      ``percentile_approx`` sketch aggregate (no sort, no corpus
-      shuffle beyond the score table's own agg), broadcast back, and
-      bucket assignment becomes a MAP-SIDE comparison fold — the
-      scale path, with sketch-error-sized deviation from exact
-      thirds at the boundaries (the same sketch-vs-exact trade as
-      ``select_threshold``'s keep-rate mode).
+    Buckets are exact and equal-count: ``NTILE(n) OVER (PARTITION BY
+    lang ORDER BY avg_logprob DESC, id)`` — deterministic total order,
+    bit-equal in ANSI SQL.  The caveat: a window partition is ONE
+    task, and on a real web corpus the largest language is over half
+    the rows, so the per-lang sort does not scale past what one
+    executor sorts comfortably.
 
     Output: ``(id_col, lang, avg_logprob, bucket)``, one row per
     scored document (documents with no bigram never score — the
@@ -637,36 +621,12 @@ def perplexity_buckets(
         )
     langs = df.select(F.col(id_col), F.col(lang_col).alias("lang"))
     j = scores.join(langs, id_col)
-    label_arr = F.array(*[F.lit(x) for x in labels])
-    if method == "ntile":
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("lang").orderBy(
-            F.desc("avg_logprob"), F.col(id_col)
-        )
-        bucket = F.element_at(label_arr, F.ntile(n_buckets).over(w))
-        out = j.select(id_col, "lang", "avg_logprob", bucket.alias("bucket"))
-    elif method == "cutoffs":
-        qs = [1.0 - i / n_buckets for i in range(1, n_buckets)]
-        cuts = j.groupBy("lang").agg(
-            F.percentile_approx("avg_logprob", qs, 10_000).alias("__cuts")
-        )
-        idx = F.lit(1) + F.aggregate(
-            "__cuts",
-            F.lit(0),
-            lambda acc, c: acc
-            + F.when(F.col("avg_logprob") < c, 1).otherwise(0),
-        )
-        out = (
-            j.join(F.broadcast(cuts), "lang")
-            .select(
-                id_col, "lang", "avg_logprob",
-                F.element_at(label_arr, idx).alias("bucket"),
-            )
-        )
-    else:
-        raise ValueError(f"method must be 'ntile' or 'cutoffs', got {method!r}")
-    return out
+    label_arr = F.array(*[F.lit(x) for x in labels])
+    w = Window.partitionBy("lang").orderBy(F.desc("avg_logprob"), F.col(id_col))
+    bucket = F.element_at(label_arr, F.ntile(n_buckets).over(w))
+    return j.select(id_col, "lang", "avg_logprob", bucket.alias("bucket"))
 
 
 def token_count_bpe(text: Column | str) -> Column:
@@ -915,7 +875,6 @@ def bpe_pair_counts(
     df: DataFrame,
     text_col: str = "text",
     top_n: int = 50,
-    repartition: bool = True,
 ) -> DataFrame:
     """The first merge-selection step of BPE tokenizer training: count
     adjacent SYMBOL pairs across the corpus, weighted by word
@@ -931,17 +890,16 @@ def bpe_pair_counts(
     first re-runs only the pair stage over the updated symbol
     sequences.
 
-    ``repartition=True`` fans an under-split source out to session
-    parallelism before the explode (``sources.fan_out``, split-count
+    An under-split source fans out to session parallelism before the
+    explode (``sources.fan_out``, split-count
     guarded — a no-op on a well-split table): a single-row-group file
     otherwise runs the whole tokenize+explode+partial-count in ONE
     task (measured 3.2 s single-threaded vs 0.3 s fanned at the 50x
     replica).
     """
-    if repartition:
-        from ..sources import fan_out
+    from ..sources import fan_out
 
-        df = fan_out(df)
+    df = fan_out(df)
     words = (
         df.select(F.explode(F.filter(tokens(text_col), lambda t: t != "")).alias("w"))
         .groupBy("w")

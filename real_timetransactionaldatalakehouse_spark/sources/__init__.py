@@ -1,16 +1,17 @@
-"""Sources: batch parquet scans and a deterministic file-stream source.
+"""Sources: batch parquet scans and the streaming readers.
 
 The reference reads Kafka (``streaming_job.py:190-196``) and Iceberg
 (``verify_medallion.py:13,40``).  This engine's equivalents:
 
 - batch: ``spark.read.parquet`` (vectorized reader, predicate pushdown,
   column pruning — free via Catalyst, SURVEY.md section 4 O2/O3);
-- streaming: ``spark.readStream`` over kafka when available, or a
-  file/parquet stream for deterministic replay tests (SURVEY.md
-  section 5.2).
+- streaming: ``kafka_stream`` when the Kafka package is on the
+  classpath, or a file/parquet stream for deterministic replay tests
+  (SURVEY.md section 5.2);
+- CDC: ``parse_cdc_envelope`` unwraps the Debezium-style envelope.
 """
 
-from .tables import fan_out, load_table, load_tables, register_views
+from .tables import fan_out, load_table, register_views
 from .filestream import (
     file_stream,
     kafka_reader_options,
@@ -18,19 +19,14 @@ from .filestream import (
     parse_kafka_json,
 )
 from .cdc import parse_cdc_envelope
-from .files import corrupt_split, read_csv, read_jsonl
 
 __all__ = [
     "fan_out",
     "load_table",
-    "load_tables",
     "register_views",
     "file_stream",
     "kafka_reader_options",
     "kafka_stream",
     "parse_kafka_json",
     "parse_cdc_envelope",
-    "read_csv",
-    "read_jsonl",
-    "corrupt_split",
 ]

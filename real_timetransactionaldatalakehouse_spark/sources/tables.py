@@ -91,10 +91,6 @@ def fan_out(
     return df.repartition(n)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> None:
     """Register each table as a temp view for the SQL entry point."""
     for n in names:

@@ -8,7 +8,6 @@ from .jobs import (
     await_all,
     bronze_append_stream,
     dims_scd1_stream,
-    gold_session_stream,
     gold_window_agg_stream,
     neardup_ingest_stream,
     time_partition_cols,
@@ -18,7 +17,6 @@ __all__ = [
     "await_all",
     "bronze_append_stream",
     "gold_window_agg_stream",
-    "gold_session_stream",
     "dims_scd1_stream",
     "neardup_ingest_stream",
     "time_partition_cols",

@@ -172,57 +172,6 @@ def gold_window_agg_stream(
     )
 
 
-def gold_session_stream(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    ts_col: str,
-    key_col: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 seconds",
-    available_now: bool = True,
-):
-    """Streaming sessionization via the built-in ``session_window``
-    state operator — the Structured-Streaming-native counterpart of the
-    reference's deliberately-batch T+1 sessionization (T10,
-    PipelineArchitecture.md:217-222; the reference moved sessions to
-    batch to save state-store RAM — Spark's session_window makes the
-    streaming variant a one-liner when freshness is worth the state).
-
-    Watermark bounds session state; append mode emits a session only
-    once its window can no longer grow (event time past end + gap).
-    State per key is one open session row — merged, not per-event.
-    """
-    agg = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), F.session_window(F.col(ts_col), gap))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.withColumn(
-                "p_date", F.date_format(F.col("session_start"), "yyyy-MM-dd")
-            )
-            .sortWithinPartitions(key_col, "session_start")
-            .write.mode("append")
-            .partitionBy("p_date")
-            .parquet(out_path)
-        )
-
-    return _run_stream(
-        agg.writeStream.foreachBatch(write_batch).outputMode("append"),
-        checkpoint,
-        available_now,
-    )
-
-
 def dims_scd1_stream(
     stream_df: DataFrame,
     target_path: str,

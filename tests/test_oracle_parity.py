@@ -231,13 +231,12 @@ def test_rows_only_queries_emit_live_multirow_summaries(spark, sf_small):
 
 
 def test_rows_only_summaries_drop_rows_on_planted_violations(spark,
-                                                             sf_small):
+                                                             sf_small,
+                                                             tmp_path):
     """r12 (VERDICT r11 #6): the three boolean no-oracle summaries are
     now row-DROPPING — a planted invariant violation must change the
     emitted ROW COUNT (what the driver's rows-only check sees), not
     just flip a value."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from real_timetransactionaldatalakehouse_spark.sources import load_table
@@ -255,7 +254,7 @@ def test_rows_only_summaries_drop_rows_on_planted_violations(spark,
     ev = load_table(spark, sf_small, "events")
 
     def back_of(writer_sorted):
-        out = tempfile.mkdtemp(prefix="sorted_write_viol_")
+        out = str(tmp_path / ("asc" if writer_sorted else "desc"))
         part = ev.repartition(4, "user_id")
         part = (part.sortWithinPartitions("ts") if writer_sorted
                 else part.sortWithinPartitions(F.desc("ts")))
@@ -277,3 +276,23 @@ def test_rows_only_summaries_drop_rows_on_planted_violations(spark,
     ]
     kept = entrymod._bucket_probe_passing(spark, probes).collect()
     assert [r.key_ord for r in kept] == [0]
+
+
+def test_table_building_queries_remove_their_temp_dirs(spark, sf_small):
+    """A query that builds a table in a temp dir keeps it only until
+    the next declared query starts: repeated calls do not pile table
+    dirs up in the temp dir."""
+    import glob
+    import tempfile
+
+    def mor_dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "mor_tbl_*")))
+
+    made = set()
+    for _ in range(2):
+        before = mor_dirs()
+        assert _QUERIES["q_mor_upsert"](spark, sf_small).count() > 0
+        made |= mor_dirs() - before
+    assert made
+    _QUERIES["q_agg_global"](spark, sf_small).collect()
+    assert not made & mor_dirs()

@@ -166,9 +166,7 @@ def test_minhash_skips_spread_for_well_split_input(spark, sf_medium):
     """r3 VERDICT "What's wrong" #2: the batch-sizing spread must NOT
     shuffle the raw text when the input is already well split (the
     100 TB case).  A pre-repartitioned input contributes exactly ONE
-    round-robin exchange (our own), the operator adds none; and the
-    explicit ``repartition=False`` opt-out produces a plan with no
-    round-robin exchange at all."""
+    round-robin exchange (our own), the operator adds none."""
     from real_timetransactionaldatalakehouse_spark.operators.dedup import (
         minhash_neardup_pairs,
     )
@@ -182,8 +180,6 @@ def test_minhash_skips_spread_for_well_split_input(spark, sf_medium):
     pre_split = docs.repartition(target)
     plan = P.formatted_plan(minhash_neardup_pairs(pre_split))
     assert plan.count("RoundRobinPartitioning") == 1, plan
-    plan_noopt = P.formatted_plan(minhash_neardup_pairs(docs, repartition=False))
-    assert "RoundRobinPartitioning" not in plan_noopt, plan_noopt
 
 
 def test_fan_out_skips_exchange_for_well_split_input(spark, sf_medium):
@@ -258,11 +254,6 @@ def test_decontaminate_ngram_broadcasts_never_cartesian(spark, sf_medium):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
-    # the well-split opt-out adds no round-robin exchange
-    plan_noopt = P.formatted_plan(
-        decontaminate_ngram(corpus, bench, n=13, repartition=False)
-    )
-    assert "RoundRobinPartitioning" not in plan_noopt
 
 
 def test_partitioned_bronze_scan_prunes_in_plan(spark, tmp_path):
@@ -720,30 +711,6 @@ def test_repetition_gram_transform_binds_token_array(spark, sf_medium):
     # i.e. the Generate's input carries __toks, and the lambda body
     # (xxhash64(slice(...))) references the lambda variable, not split
     assert "__toks" in plan, plan
-
-
-def test_perplexity_cutoffs_mode_has_no_window_sort(spark, sf_small):
-    """r12 contract: perplexity_buckets' scale mode must earn its
-    docstring — method='cutoffs' replaces the per-language NTILE
-    (one window partition = one task = the largest-language
-    straggler) with a percentile_approx sketch agg + broadcast +
-    map-side fold, so its plan carries NO Window node and NO
-    sort-merge join; the certified ntile mode keeps exactly one
-    Window."""
-    from real_timetransactionaldatalakehouse_spark.operators import text as TX
-    from real_timetransactionaldatalakehouse_spark.sources import load_table
-
-    corpus = (
-        load_table(spark, sf_small, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text", "lang")
-    )
-    cut = P.formatted_plan(TX.perplexity_buckets(corpus, method="cutoffs"))
-    assert "Window" not in cut, cut
-    assert "SortMergeJoin" not in cut, cut
-    assert "BroadcastHashJoin" in cut or "BroadcastNestedLoopJoin" in cut, cut
-    nt = P.formatted_plan(TX.perplexity_buckets(corpus))
-    assert nt.count("Window") >= 1
 
 
 def test_embed_lsh_verify_width_tracks_candidate_volume(spark, sf_medium):

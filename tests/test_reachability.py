@@ -1,15 +1,20 @@
 """Every top-level package def is reached from a declared entry point.
 
 A pure-Python AST pass (no Spark).  Roots are ``__spark_entry__.py``,
-``bench.py``, ``perfbench/*.py`` and the package's module-level
-statements other than ``__all__``.  A top-level def is reached when its
-name appears as an identifier (a name, an attribute or an imported name)
+``bench.py``, ``perfbench/*.py``, the package's module-level statements
+other than ``__all__``, and the bodies of the defs in ``KEEP``.  A
+top-level def is reached when its name is used (a name or an attribute)
 in a root or in a reached def; the pass iterates to a fixed point.
 Identifier-like words inside string literals count as well: the serving
-views are looked up by name (``getattr(S, "velocity_view")``).  Comments
-and docstrings (of modules, classes and defs) do not count: prose that
-names a def does not run it.  The unreached set must equal ``KEEP``
-exactly, so new dead code fails this test and so does a stale entry.
+views are looked up by name (``getattr(S, "velocity_view")``).  Imports
+do not count: an ``__init__`` re-export or an import nothing uses does
+not run the def.  Comments and docstrings (of modules, classes and
+defs) do not count either: prose that names a def does not run it.
+
+A kept def seeds the walk, so its callees need no entries of their own.
+The unreached set must equal ``KEEP`` exactly: new dead code fails this
+test, and so does a stale entry (a kept def the walk reaches anyway, or
+one that is gone).
 """
 
 from __future__ import annotations
@@ -35,6 +40,9 @@ KEEP = {
     "operators.similarity.knn_bruteforce": "the exact kNN the LSH and IVF kNN tests compare against",
     "streaming.stateful.ewma_by_key": "SURVEY X7: streaming twin of the declared q_ewma_state",
     "streaming.stateful.ewma_anomaly_by_key": "SURVEY X8: streaming twin of the declared q_ewma_anomaly",
+    "sources.filestream.kafka_stream": "SURVEY A1: the reference's Kafka source",
+    "streaming.jobs.neardup_ingest_stream": "SURVEY X6v: streaming near-dup ingest against a band index",
+    "operators.multimodal.deterministic_fake_features": "the Python reference fake_features_expr is tested against",
     "plans.*": "plan-shape helpers for the plan assertions in tests",
 }
 
@@ -59,8 +67,6 @@ def _identifiers(node: ast.AST) -> set[str]:
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.add(n.name.rsplit(".", 1)[-1])
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
             out.update(re.findall(r"[A-Za-z_]\w*", n.value))
     return out
@@ -80,10 +86,16 @@ def _module_name(path: str) -> str:
     return ".".join(parts)
 
 
-def _unreached_in(modules: dict[str, ast.Module], roots: list[ast.Module]) -> set[str]:
+def _matches(key: str, qual: str) -> bool:
+    return qual == key or (key.endswith(".*") and qual.startswith(key[:-1]))
+
+
+def _unreached_in(
+    modules: dict[str, ast.Module], roots: list[ast.Module], keep=()
+) -> set[str]:
     """Qualified names of the top-level defs in ``modules`` (module name
-    -> tree) that neither ``roots`` nor the modules' own top-level
-    statements reach."""
+    -> tree) that neither ``roots``, the modules' own top-level
+    statements nor the bodies of the ``keep`` defs reach."""
     defs: dict[str, ast.AST] = {}  # qualified name -> def node
     seen: set[str] = set()
     for mod, tree in modules.items():
@@ -94,6 +106,9 @@ def _unreached_in(modules: dict[str, ast.Module], roots: list[ast.Module]) -> se
                 seen |= _identifiers(stmt)
     for tree in roots:
         seen |= _identifiers(tree)
+    for qual, node in defs.items():
+        if any(_matches(k, qual) for k in keep):
+            seen |= _identifiers(node)
 
     reached: set[str] = set()
     grew = True
@@ -118,11 +133,7 @@ def _unreached() -> set[str]:
         for path in glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)
     }
     roots = ["__spark_entry__.py", "bench.py", *sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))]
-    return _unreached_in(modules, [_read(os.path.join(ROOT, path)) for path in roots])
-
-
-def _matches(key: str, qual: str) -> bool:
-    return qual == key or (key.endswith(".*") and qual.startswith(key[:-1]))
+    return _unreached_in(modules, [_read(os.path.join(ROOT, path)) for path in roots], KEEP)
 
 
 def test_every_package_def_is_reached_or_kept():
@@ -155,4 +166,38 @@ class Entry:
 ''')
     assert _unreached_in({"m": mod}, [_parse("Entry().run()")]) == {
         "m.by_module_doc", "m.by_class_doc", "m.by_def_doc",
+    }
+
+
+_SYNTHETIC_PKG = {
+    "pkg": """
+from .m import only_imported, reexported
+
+__all__ = ["reexported"]
+""",
+    "m": """
+def only_imported(): pass
+def reexported(): pass
+def kept(): return helper()
+def helper(): pass
+def called(): pass
+""",
+}
+_SYNTHETIC_ROOT = "from pkg.m import only_imported, called\ncalled()"
+
+
+def _synthetic():
+    modules = {name: _parse(src) for name, src in _SYNTHETIC_PKG.items()}
+    return modules, [_parse(_SYNTHETIC_ROOT)]
+
+
+def test_imports_and_reexports_do_not_reach():
+    assert _unreached_in(*_synthetic()) == {
+        "m.only_imported", "m.reexported", "m.kept", "m.helper",
+    }
+
+
+def test_kept_defs_seed_the_walk():
+    assert _unreached_in(*_synthetic(), {"m.kept"}) == {
+        "m.only_imported", "m.reexported", "m.kept",
     }

@@ -229,53 +229,6 @@ def test_dims_scd1_stream_and_idempotence(spark, tmp_path):
     assert TF.current_version(target) == 2
 
 
-def test_session_stream_equals_batch_after_flush(spark, events_small, tmp_path):
-    from real_timetransactionaldatalakehouse_spark.streaming import gold_session_stream
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    _write_chunks(events_small, src, 3, "ts")
-    # sentinel chunk with a far-future timestamp: advances the global
-    # watermark past every real session so availableNow flushes all of
-    # them (without it the trailing sessions stay in state forever)
-    import datetime
-
-    max_ts = events_small.agg(F.max("ts")).first()[0]
-    sentinel = spark.createDataFrame(
-        [(int(-1), max_ts + datetime.timedelta(days=2), int(-1), "view", 0.0, "{}")],
-        events_small.schema,
-    )
-    _write_single_file(sentinel, os.path.join(src, "zz-sentinel.parquet"), time.time() + 60)
-
-    stream = file_stream(spark, src, events_small.schema)
-    gold_session_stream(stream, out, ckpt, ts_col="ts", key_col="user_id", gap="5 minutes")
-
-    streamed = {
-        (r.user_id, r.session_start, r.session_end): r.n_events
-        for r in spark.read.parquet(out).collect()
-        if r.user_id != -1
-    }
-    batch = {
-        (r.user_id, r.session_start, r.session_end): r.n_events
-        for r in (
-            events_small.groupBy("user_id", F.session_window(F.col("ts"), "5 minutes"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-            )
-        ).collect()
-    }
-    assert streamed, "stream emitted nothing"
-    assert streamed == batch, (
-        f"stream/batch session divergence: "
-        f"only-stream={set(streamed) - set(batch)} only-batch={set(batch) - set(streamed)}"
-    )
-
-
 def test_concurrent_streams_one_session_await_all(spark, events_small, tmp_path):
     """T6: bronze append and gold window agg run CONCURRENTLY off one
     SparkSession (the reference runs them as separate Spark apps);

@@ -92,3 +92,13 @@ def test_r12_window_matches_freshness_ledger():
     assert len(entry._CHECK_FIRST) == 50
     # and the registry order the driver sees leads with exactly them
     assert list(entry.queries())[:50] == expected
+
+
+def test_operators_md_matches_generator():
+    """OPERATORS.md is generated from the declared queries' docstrings;
+    a docstring edit without a regeneration fails here
+    (``python tools/gen_operators_md.py`` rewrites it)."""
+    from tools.gen_operators_md import render
+
+    with open(os.path.join(REPO, "OPERATORS.md")) as fh:
+        assert fh.read() == render()

@@ -29,13 +29,13 @@ layout are engine-specific by construction).
 """
 
 
-def main() -> None:
+def render() -> str:
+    """OPERATORS.md's content for the current declared queries."""
     import __spark_entry__ as entry
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     rows = []
-    for name, fn in qs.items():
+    for name, fn in entry.queries().items():
         doc = (fn.__doc__ or "").strip()
         # first docstring chunk, whitespace-collapsed, truncated
         text = re.sub(r"\s+", " ", doc)
@@ -43,9 +43,14 @@ def main() -> None:
             text = text[:152].rstrip() + "..."
         check = "oracle" if name in oracles else "rows-only"
         rows.append(f"| `{name}` | {check} | {text} |")
-    with open(os.path.join(REPO, "OPERATORS.md"), "w") as fh:
-        fh.write(HEADER + "\n".join(rows) + "\n")
-    print(f"wrote {len(rows)} rows")
+    return HEADER + "\n".join(rows) + "\n"
+
+
+def main() -> None:
+    path = os.path.join(REPO, "OPERATORS.md")
+    with open(path, "w") as fh:
+        fh.write(render())
+    print(f"wrote {path}")
 
 
 if __name__ == "__main__":
