@@ -1164,9 +1164,7 @@ def q_json_parse_struct(spark, sf_dir):
         spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    ev = fan_out(
-        _t(spark, sf_dir, "events").select("event_id", "props"), p, guard=True
-    )
+    ev = fan_out(_t(spark, sf_dir, "events").select("event_id", "props"), p)
     return ev.select(
         "event_id", LF.json_parse("props", "k INT").getField("k").alias("k")
     )
@@ -2177,12 +2175,12 @@ def q_agg_harmonic(spark, sf_dir):
     # sf0.1); fanning the two projected columns to core count halves it
     # (width A/B: base 1.11 s, 4: 0.82, 16: 0.59, 32: 0.58).  Guarded:
     # the fan only pays its exchange when it would at least DOUBLE
-    # parallelism (existing splits <= cores/2 — fan_out's guard), so a
+    # parallelism (existing splits <= cores/2 — fan_out's skip), so a
     # reasonably-split production table skips it, and only
     # (flag, price) rows ever move.
     li = fan_out(
         li.select("l_returnflag", "l_extendedprice"),
-        spark.sparkContext.defaultParallelism, guard=True,
+        spark.sparkContext.defaultParallelism,
     )
     return li.groupBy("l_returnflag").agg(
         (
@@ -2577,7 +2575,6 @@ def q_text_redact(spark, sf_dir):
     docs = fan_out(
         _t(spark, sf_dir, "documents"),
         spark.sparkContext.defaultParallelism,
-        guard=True,
     ).select(
         "doc_id",
         F.concat(
@@ -3333,7 +3330,7 @@ def q_embed_neardup_lsh(spark, sf_dir):
     # duplicate-clique straggler on re-crawl-heavy corpora (SCALING r8)
     emb = _t(spark, sf_dir, "embeddings")
     return S.embedding_neardup_pairs_lsh(
-        emb, threshold=0.35, planes=4, tables=16, collapse_exact=True
+        emb, threshold=0.35, planes=4, tables=16
     )
 
 
@@ -5124,8 +5121,8 @@ def q_semdedup(spark, sf_dir):
     same operator unbounded with k sized to the corpus.
 
     Certified on the PRODUCTION combo (r8, VERDICT r7 #5):
-    ``collapse_exact=True, max_cell=256`` — the 23x configuration the
-    50x replica measured.  At certification scale no cell exceeds the
+    the exact-vector collapse with ``max_cell=256`` — the 23x
+    configuration the 50x replica measured.  At certification scale no cell exceeds the
     cap and the exact-vector collapse is output-equivalent by
     construction, so the oracle is unchanged and the hash compare
     pins BOTH facts (equivalence is also pytested directly).
@@ -5144,7 +5141,7 @@ def q_semdedup(spark, sf_dir):
 
     return S.semantic_dedup(
         _t(spark, sf_dir, "embeddings"), k=8, threshold=0.32, max_id=500,
-        collapse_exact=True, max_cell=256,
+        max_cell=256,
     )
 
 

@@ -1,25 +1,21 @@
 """Catalog façade (SURVEY.md section 2 A8): ``schema.table`` names
 over the path-addressed storage layer — the engine analogue of the
-reference's ``catalog.schema.table`` namespace management
-(``streaming_job.py:18-61`` CREATE NAMESPACE / CREATE TABLE).
+reference's ``CREATE NAMESPACE IF NOT EXISTS`` / ``CREATE TABLE IF NOT
+EXISTS`` DDL (``streaming_job.py:18-61``).
 
 State is one JSON file under the warehouse root — metadata is O(name
 count), never data-sized, and a catalog lookup costs one dict probe.
 Tables are either plain parquet dirs (append logs) or
 ``tablefmt``-versioned (merged state), so ``read`` resolves snapshot
-pointers transparently; a real deployment swaps this file for a
-metastore/REST catalog without touching callers.
-
-``register_views`` exposes catalog tables as Spark temp views so the
-serving layer's SQL (``serving/__init__.py``) resolves names through
-the catalog instead of raw paths.
+pointers transparently.  Writers write to ``table_path`` themselves
+and choose their own partition columns; a real deployment swaps this
+file for a metastore/REST catalog without touching callers.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,7 +34,6 @@ class Catalog:
         self._state_path = os.path.join(warehouse, CATALOG_FILE)
         self._state = self._load()
 
-    # -- state ---------------------------------------------------------
     def _load(self) -> dict:
         if os.path.isfile(self._state_path):
             with open(self._state_path) as fh:
@@ -58,103 +53,24 @@ class Catalog:
             raise ValueError(f"table name must be schema.table, got {name!r}")
         return schema, table
 
-    # -- namespaces ----------------------------------------------------
-    def create_namespace(self, schema: str) -> None:
-        self._state["schemas"].setdefault(schema, {"tables": {}})
-        self._save()
-
-    def drop_namespace(self, schema: str) -> None:
-        tables = self._state["schemas"].get(schema, {}).get("tables", {})
-        if tables:
-            raise ValueError(f"namespace {schema} is not empty: {sorted(tables)}")
-        self._state["schemas"].pop(schema, None)
-        self._save()
+    def create_table(self, name: str, versioned: bool = False) -> str:
+        """``CREATE TABLE IF NOT EXISTS`` (creating the namespace if
+        needed): register the table at ``warehouse/schema/table`` and
+        return that path.  A name already registered keeps its entry
+        and returns its path, so re-running a job's DDL never flips a
+        versioned table to a plain dir."""
+        schema, table = self._split(name)
+        tables = self._state["schemas"].setdefault(schema, {"tables": {}})["tables"]
+        if table not in tables:
+            tables[table] = {
+                "path": os.path.join(self.warehouse, schema, table),
+                "versioned": versioned,
+            }
+            self._save()
+        return tables[table]["path"]
 
     def namespaces(self) -> list[str]:
         return sorted(self._state["schemas"])
-
-    # -- tables --------------------------------------------------------
-    def create_table(
-        self,
-        name: str,
-        path: str | None = None,
-        versioned: bool = False,
-        partition_by: list[str] | None = None,
-        properties: dict[str, str] | None = None,
-    ) -> str:
-        """Register a table (creating its namespace if needed) and
-        return its storage path (default ``warehouse/schema/table``).
-        ``properties`` carries TBLPROPERTIES-style key/values (the
-        reference sets format-version, compression, commit-retention
-        there — ``streaming_job.py:18-61``)."""
-        schema, table = self._split(name)
-        self.create_namespace(schema)
-        p = path or os.path.join(self.warehouse, schema, table)
-        self._state["schemas"][schema]["tables"][table] = {
-            "path": p,
-            "versioned": versioned,
-            "partition_by": partition_by or [],
-            "properties": dict(properties or {}),
-        }
-        self._save()
-        return p
-
-    def set_properties(self, name: str, props: dict[str, str]) -> dict[str, str]:
-        """ALTER TABLE SET TBLPROPERTIES: merge key/values into the
-        table's property map (metadata-only)."""
-        m = self.meta(name)
-        merged = {**m.get("properties", {}), **props}
-        m["properties"] = merged
-        self._save()
-        return merged
-
-    def properties(self, name: str) -> dict[str, str]:
-        return dict(self.meta(name).get("properties", {}))
-
-    def rename_table(self, old: str, new: str) -> None:
-        """ALTER TABLE RENAME: re-point the registry entry (storage
-        path unchanged — a catalog rename, like Iceberg's)."""
-        schema_o, table_o = self._split(old)
-        schema_n, table_n = self._split(new)
-        meta = self._state["schemas"].get(schema_o, {}).get("tables", {}).pop(
-            table_o, None
-        )
-        if meta is None:
-            raise KeyError(f"unknown table {old}")
-        self.create_namespace(schema_n)
-        tables_n = self._state["schemas"][schema_n]["tables"]
-        if table_n in tables_n:
-            # restore before failing: a rejected rename must not drop the source
-            self._state["schemas"][schema_o]["tables"][table_o] = meta
-            raise ValueError(f"table {new} already exists")
-        tables_n[table_n] = meta
-        self._save()
-
-    def alter_table(self, name: str, add_columns: dict[str, str]) -> list[dict]:
-        """ALTER TABLE ADD COLUMN(S) — metadata-only schema evolution
-        for versioned tables (the reference's JSON-field promotion path,
-        ``DataModel_SchemaDesign.md:127-129``): no snapshot is
-        rewritten; all snapshots, historical included, read the new
-        columns as typed nulls until a write supplies values."""
-        m = self.meta(name)
-        if not m["versioned"]:
-            raise ValueError(
-                f"{name} is not a versioned table; schema evolution "
-                "needs snapshot metadata (create_table(versioned=True))"
-            )
-        # seed with the current declared schema so a no-op call (empty
-        # add_columns) reports the real schema, not []
-        fields: list[dict] = tablefmt.declared_schema(m["path"]) or []
-        for col, dtype in add_columns.items():
-            fields = tablefmt.add_column(m["path"], col, dtype)
-        return fields
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        schema, table = self._split(name)
-        meta = self._state["schemas"].get(schema, {}).get("tables", {}).pop(table, None)
-        self._save()
-        if purge and meta and os.path.isdir(meta["path"]):
-            shutil.rmtree(meta["path"])
 
     def tables(self, schema: str) -> list[str]:
         return sorted(self._state["schemas"].get(schema, {}).get("tables", {}))
@@ -169,29 +85,8 @@ class Catalog:
     def table_path(self, name: str) -> str:
         return self.meta(name)["path"]
 
-    # -- IO ------------------------------------------------------------
     def read(self, name: str) -> DataFrame:
         m = self.meta(name)
         if m["versioned"]:
             return tablefmt.read_table(self.spark, m["path"])
         return self.spark.read.parquet(m["path"])
-
-    def write(self, name: str, df: DataFrame, mode: str = "append") -> None:
-        """Append/overwrite through the table's declared layout:
-        versioned tables commit a snapshot (mode ignored — each commit
-        is a full new version); plain tables write parquet with the
-        registered partition columns."""
-        m = self.meta(name)
-        if m["versioned"]:
-            tablefmt.write_version(df, m["path"], partition_by=m["partition_by"] or None)
-            return
-        writer = df.write.mode(mode)
-        if m["partition_by"]:
-            writer = writer.partitionBy(*m["partition_by"])
-        writer.parquet(m["path"])
-
-    def register_views(self, schema: str) -> None:
-        """Expose every table of a namespace as ``schema_table`` temp
-        views for SQL serving."""
-        for table in self.tables(schema):
-            self.read(f"{schema}.{table}").createOrReplaceTempView(f"{schema}_{table}")

@@ -1,13 +1,15 @@
-"""Maintenance jobs (SURVEY.md section 2 M1-M4): compaction, TTL
-delete, table stats — the engine re-platforming of the reference's
-Iceberg procedures (``compact_cold_data.py``).
+"""Maintenance jobs (SURVEY.md section 2 M1-M3, M5, A10): compaction,
+snapshot expiry, orphan removal and table stats — the engine
+re-platforming of the reference's Iceberg procedures
+(``compact_cold_data.py``).
 
 Format-free design: compaction is a predicate-scoped read ->
 repartition-to-target-file-size -> swap rewrite, preserving row counts
 (the reference's invariant) and the partition layout of the table's
 live files.  On a ``tablefmt`` versioned table the swap is a snapshot
 commit, so a rewrite also folds any merge-on-read chain back to a full
-snapshot.
+snapshot.  Retention (M4) is a filtered read (``q_retention_filter``),
+not a rewrite.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _safe_swap_rewrite(spark: SparkSession, path: str, out: DataFrame,
-                       expect_rows: int, suffix: str, partition_by: list[str]) -> None:
+                       expect_rows: int, partition_by: list[str]) -> None:
     """Replace ``path``'s data with ``out``, never destroying the old
     data before the new data is validated.
 
@@ -45,7 +47,7 @@ def _safe_swap_rewrite(spark: SparkSession, path: str, out: DataFrame,
     if tablefmt.is_versioned(path):
         tablefmt.write_version(out, path, partition_by=partition_by, expect_rows=expect_rows)
         return
-    tmp = path.rstrip("/") + suffix
+    tmp = path.rstrip("/") + ".compact-tmp"
     out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
     got = spark.read.parquet(tmp).count()
     if got != expect_rows:
@@ -189,7 +191,7 @@ def compact(
     # task, so it is rewritten as one file instead of one per task
     packed = cold.repartition(n_files, *parts)
     out = packed.unionByName(hot) if hot is not None else packed
-    _safe_swap_rewrite(spark, path, out, n_before, ".compact-tmp", parts)
+    _safe_swap_rewrite(spark, path, out, n_before, parts)
     n_after = _read_target(spark, path).count()
     return {"rows_before": n_before, "rows_after": n_after,
             "cold_rows": n_cold, "files_target": n_files}
@@ -211,20 +213,6 @@ def remove_orphans(path: str) -> dict:
     """M3: delete in-flight tmp dirs left by crashed writers —
     reference ``compact_cold_data.py:74-92`` remove_orphan_files."""
     return tablefmt.remove_orphans(path)
-
-
-def ttl_delete(spark: SparkSession, path: str, ts_col: str, cutoff) -> dict:
-    """M4: retention delete — rewrite keeping rows newer than the
-    cutoff (reference DataModel_SchemaDesign.md:136, 7-day gold TTL).
-    The rewrite validates the kept-row count before the swap, so a
-    failed write can never destroy the retained data."""
-    df = _read_target(spark, path)
-    n_before = df.count()
-    kept = df.filter(F.col(ts_col) >= F.lit(cutoff))
-    n_kept = kept.count()
-    _safe_swap_rewrite(spark, path, kept, n_kept, ".ttl-tmp", _partition_cols(spark, path))
-    n_after = _read_target(spark, path).count()
-    return {"rows_before": n_before, "rows_after": n_after}
 
 
 def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -263,8 +251,6 @@ def run_maintenance(
     cold_where: dict[str, Column] | None = None,
     keep_last: int = 5,
     expire_older_than_s: float | None = None,
-    ttl: dict[str, tuple[str, object]] | None = None,
-    zorder: dict[str, list[str]] | None = None,
 ) -> dict:
     """M5 analogue: the reference's hourly maintenance run
     (``dags/maintenance_dag.py:13-31`` scheduling
@@ -283,17 +269,12 @@ def run_maintenance(
     ``cold_where`` maps table name -> cold predicate (the reference
     compacts only data older than 1 h); absent entries compact the
     whole table.  Like :func:`compact`, a run is not safe beside a
-    writer on the same table.
-    ``ttl`` maps table name -> (ts_col, cutoff) for retention deletes
-    (reference: 7-day gold TTL, DataModel_SchemaDesign.md:136).
-    ``zorder`` maps table name -> column list; those tables rewrite
-    through :func:`zorder_compact` (multi-column data-skipping layout)
-    instead of plain bin-packing.  Every versioned table is treated
+    writer on the same table.  Every versioned table is treated
     alike: the rewrite commits a full snapshot, which also folds a
     live merge-on-read chain to depth 0 so expiry can retire its delta
     versions.  Nothing else bounds a chain between runs.
 
-    Returns ``{table: {compact, expired, orphans, ttl}}``
+    Returns ``{table: {compact, expired, orphans}}``
     — each step's own report, so a scheduler can alert on any
     sub-step."""
     if tables is None:
@@ -304,21 +285,12 @@ def run_maintenance(
     for name in tables:
         meta = catalog.meta(name)
         path = meta["path"]
-        r: dict = {}
-        if zorder and name in zorder:
-            r["compact"] = zorder_compact(spark, path, zorder[name])
-        else:
-            r["compact"] = compact(
-                spark, path, where=(cold_where or {}).get(name)
-            )
-        if meta.get("versioned"):
+        r: dict = {"compact": compact(spark, path, where=(cold_where or {}).get(name))}
+        if meta["versioned"]:
             r["expired"] = expire_snapshots(
                 path, keep_last=keep_last, older_than_s=expire_older_than_s
             )
             r["orphans"] = remove_orphans(path)
-        if ttl and name in ttl:
-            ts_col, cutoff = ttl[name]
-            r["ttl"] = ttl_delete(spark, path, ts_col, cutoff)
         report[name] = r
     return report
 
@@ -392,88 +364,3 @@ def maintenance_loop(
         elapsed = clock() - t0
         next_tick = (int(elapsed / interval_s) + 1) * interval_s
     return reports
-
-
-def zorder_key(
-    quantized: list[Column],
-    bits: int = 16,
-) -> Column:
-    """Morton (Z-order) code: interleave the bits of ``len(quantized)``
-    already-quantized non-negative integer columns, LSB-first — rows
-    close in the key are close in EVERY dimension, so sorting by it
-    clusters multi-column locality into files and row groups.  Pure
-    shift/mask expression tree (``bits x k`` terms), whole-stage
-    codegen."""
-    k = len(quantized)
-    terms = []
-    for b in range(bits):
-        for i, q in enumerate(quantized):
-            terms.append(
-                F.shiftleft(
-                    F.shiftrightunsigned(q.cast("long"), b).bitwiseAND(F.lit(1)),
-                    b * k + i,
-                )
-            )
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def zorder_compact(
-    spark: SparkSession,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    target_file_bytes: int = TARGET_FILE_BYTES,
-) -> dict:
-    """OPTIMIZE ... ZORDER BY analogue: rewrite the table sorted by the
-    Morton interleave of ``cols`` so parquet min/max stats prune scans
-    filtered on ANY of the columns — the multi-column data-skipping
-    layout a time-partitioned table can't give its secondary keys.
-
-    Each column is equi-width quantized to ``bits`` bits over its
-    [min, max] range (ONE metadata-sized agg; heavily skewed columns
-    should be pre-transformed, e.g. log), the interleaved key range-
-    partitions the rewrite (repartitionByRange + sortWithinPartitions
-    — no global sort), and the swap validates row counts like every
-    maintenance rewrite.  At 100 TB this runs per partition/predicate
-    scope exactly like :func:`compact`'s ``where``.
-    """
-    df = _read_target(spark, path)
-    n_before = df.count()
-    parts = _partition_cols(spark, path)
-    # per-column min/max in one pass -> scalar quantization constants
-    aggs = []
-    for c in cols:
-        aggs += [F.min(F.col(c).cast("double")).alias(f"__mn_{c}"),
-                 F.max(F.col(c).cast("double")).alias(f"__mx_{c}")]
-    row = df.agg(*aggs).first()
-    scale = (1 << bits) - 1
-    quantized = []
-    for c in cols:
-        mn, mx = row[f"__mn_{c}"], row[f"__mx_{c}"]
-        span = (mx - mn) or 1.0
-        quantized.append(
-            F.least(
-                F.lit(scale),
-                F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * scale),
-            )
-        )
-    total_bytes = sum(b for _f, b in _live_files(spark, path))
-    n_files = max(1, round(total_bytes / target_file_bytes))
-    keyed = df.withColumn("__z", zorder_key(quantized, bits))
-    # partition columns lead the sort: the partitioned writer needs
-    # that order, and finding it keeps the z-order inside each dir
-    out = (
-        keyed.repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions(*parts, "__z")
-        .drop("__z")
-    )
-    _safe_swap_rewrite(spark, path, out, n_before, ".zorder-tmp", parts)
-    return {
-        "rows_before": n_before,
-        "rows_after": _read_target(spark, path).count(),
-        "files_target": n_files,
-        "zorder_by": list(cols),
-    }

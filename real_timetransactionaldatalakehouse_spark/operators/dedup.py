@@ -860,7 +860,7 @@ def minhash_verified_neardup_pairs(
     # signature kernel; no-op on a well-split input.
     from ..sources import fan_out
 
-    toks = fan_out(df, guard=True).select(
+    toks = fan_out(df).select(
         F.col(id_col).alias("id"),
         F.coalesce(
             F.array_distinct(word_shingles(text_col, shingle_n)),
@@ -1355,7 +1355,7 @@ def passage_repetition(
     # build is the CPU stage; guarded, so a well-split input skips it
     from ..sources import fan_out
 
-    df = fan_out(df, guard=True)
+    df = fan_out(df)
     t = tokens(text_col)
     base = (
         df.select(F.col(id_col), t.alias("__t"))
@@ -1464,7 +1464,7 @@ def _sliding_grams(
     # the exchange entirely — sources.fan_out rule).
     from ..sources import fan_out
 
-    df = fan_out(df, guard=True)
+    df = fan_out(df)
     t = tokens(text_col)
     base = df.select(F.col(id_col).alias("id"), t.alias("__t")).filter(
         F.size("__t") >= L

@@ -270,7 +270,7 @@ def _gram_hashes(
     # in-session width A/B on the 13-gram decontaminate at bench SF:
     # 4/8-way ~0.63-0.64 s vs 32-way >= 0.75 s; the session layout
     # grows with input, well-split tables skip at the guard
-    src = fan_out(df, guard=True)
+    src = fan_out(df)
     if h1_of is None:
         h1_of = F.xxhash64
     toks = tokens(text_col)
@@ -1008,7 +1008,7 @@ def _dsir_bucket_stream(
     from .text import tokens
 
     spark = df.sparkSession
-    src = fan_out(df, spark.sparkContext.defaultParallelism, guard=True)
+    src = fan_out(df, spark.sparkContext.defaultParallelism)
     tk = F.col("__t")
     if hash_fn == "md5_60":
         def uh(i):

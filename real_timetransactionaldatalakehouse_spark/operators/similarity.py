@@ -796,8 +796,8 @@ def embedding_neardup_pairs(
 
 
 def _exact_dup_probe(df: DataFrame, vec_col: str) -> bool:
-    """Build-time duplicate-ratio probe gating the ``collapse_exact``
-    passes (VERDICT r8 #2 — make the collapse WORK-PROPORTIONAL): ONE
+    """Build-time duplicate-ratio probe gating the exact-duplicate
+    collapse (VERDICT r8 #2 — make the collapse WORK-PROPORTIONAL): ONE
     agg job compares the row count against the distinct-fingerprint
     count (the same seeded 128-bit xxhash64 pair the collapse itself
     keys on) and returns whether ANY byte-identical vector group
@@ -831,7 +831,6 @@ def embedding_neardup_pairs_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_count: int | None = None,
-    collapse_exact: bool = False,
     max_bucket: int | None = None,
     target_recall: float = 0.9,
     validate: bool = False,
@@ -866,7 +865,7 @@ def embedding_neardup_pairs_lsh(
     threshold) — without it, auto-planes held bucket work flat by
     silently giving up recall as the corpus grew.
 
-    ``collapse_exact=True`` (r8) pre-collapses BYTE-IDENTICAL vectors
+    The exact-duplicate collapse (r8) maps BYTE-IDENTICAL vectors
     to their min-id representative before banding — the embedding
     twin of :func:`semantic_dedup`'s collapse and
     ``dedup.verified_neardup_clusters``' clique collapse.  On a
@@ -893,8 +892,9 @@ def embedding_neardup_pairs_lsh(
     r9: the collapse is GATED on a build-time duplicate-ratio probe
     (:func:`_exact_dup_probe`, one narrow agg job): a dup-free corpus
     skips the fingerprint groupBy and expansion joins entirely and
-    runs the plain plan, which is bit-equal when no duplicate group
-    exists.  Work done now tracks duplicates present.
+    runs the plain banding (:func:`_lsh_pairs`), which is bit-equal
+    when no duplicate group exists.  Work done now tracks duplicates
+    present.
 
     ``max_bucket`` (r8) is the HOT-BUCKET backstop for densely
     clustered embedding spaces, where near-identical (but not
@@ -930,8 +930,8 @@ def embedding_neardup_pairs_lsh(
     up to THREE driver-side Spark jobs before any caller action, the
     same accepted plan-build pattern as q_knn_ivf's centroids and
     semantic_dedup's seeds: (1) the ``planes="auto"`` corpus count
-    (skipped when ``corpus_count`` is passed), (2) the
-    ``collapse_exact`` duplicate-ratio probe, and (3) the r13
+    (skipped when ``corpus_count`` is passed), (2) the exact-duplicate
+    probe, and (3) the r13
     verify-width sizing agg — one single-row aggregation over the
     persisted band table (sum c*(c-1)/2 over bucket sizes) that prices
     the candidate-pair volume so the pair-dedup/verify exchange width
@@ -953,14 +953,12 @@ def embedding_neardup_pairs_lsh(
         df = valid_embeddings(df, vec_col)
     planes = _resolve_planes(planes, df, corpus_count)
     tables = _resolve_tables(tables, threshold, planes, target_recall)
-    if collapse_exact:
-        # work-proportional gate (VERDICT r8 #2): on a dup-free corpus
-        # the collapse is the identity, so skip its groupBy + expansion
-        # joins entirely — the plain banding below is bit-equal to the
-        # collapsed form when no duplicate group exists (regardless of
-        # max_bucket: identity collapse means reps == members)
-        collapse_exact = _exact_dup_probe(df, vec_col)
-    if collapse_exact:
+    # work-proportional gate (VERDICT r8 #2): on a dup-free corpus the
+    # collapse is the identity, so skip its groupBy + expansion joins
+    # entirely — the plain banding below is bit-equal to the collapsed
+    # form when no duplicate group exists (regardless of max_bucket:
+    # identity collapse means reps == members)
+    if _exact_dup_probe(df, vec_col):
         # r14 (guide §2.3/§2.4, same cut as dedup._collapsed_graph):
         # (rep, group size) per member via ONE window over the vector
         # fingerprint — one scan + one keyed exchange where the old
@@ -987,11 +985,10 @@ def embedding_neardup_pairs_lsh(
         reps = df.join(
             groups.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
         )
-        rep_pairs = embedding_neardup_pairs_lsh(
-            reps, threshold=threshold, planes=planes, tables=tables,
-            dim=dim, id_col=id_col, vec_col=vec_col,
-            max_bucket=max_bucket,
-        )
+        # representatives hold no duplicates by construction: plain
+        # banding, no second probe
+        rep_pairs = _lsh_pairs(reps, threshold, planes, tables, dim, id_col,
+                               vec_col, max_bucket)
         ma, mb = member.alias("ma"), member.alias("mb")
         cross = (
             rep_pairs
@@ -1033,6 +1030,25 @@ def embedding_neardup_pairs_lsh(
         return _attach_cached(
             out, [member] + getattr(rep_pairs, "_cached_deps", [])
         )
+    return _lsh_pairs(df, threshold, planes, tables, dim, id_col,
+                      vec_col, max_bucket)
+
+
+def _lsh_pairs(
+    df: DataFrame,
+    threshold: float,
+    planes: int,
+    tables: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    max_bucket: int | None,
+) -> DataFrame:
+    """The plain banding of :func:`embedding_neardup_pairs_lsh` over
+    resolved ``planes``/``tables``, without the exact-duplicate
+    collapse: band, pair within buckets, verify the exact cosine."""
+    from .dedup import _attach_cached
+
     cached = []
     # r13 (optimization, guide §2.2): guarded input-sized fan before
     # the Arrow bucket kernel — a single-row-group embeddings file
@@ -1043,7 +1059,7 @@ def embedding_neardup_pairs_lsh(
     from ..sources import fan_out
 
     banded = _lsh_banded_narrow(
-        fan_out(df, guard=True), "id", id_col, vec_col, planes, dim, tables
+        fan_out(df), "id", id_col, vec_col, planes, dim, tables
     ).persist()
     cached.append(banded)
     cond = (
@@ -1278,7 +1294,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     max_id: int | None = None,
     max_cell: int | None = None,
-    collapse_exact: bool = False,
     validate: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1321,7 +1336,7 @@ def semantic_dedup(
     the paper-faithful exact form.  ``max_id`` bounds the certifiable
     query exactly as in :func:`embedding_neardup_pairs`.
 
-    ``collapse_exact=True`` pre-collapses BYTE-IDENTICAL vectors (128
+    The exact-duplicate collapse maps BYTE-IDENTICAL vectors (128
     bits of seeded xxhash64 over the array) to one representative
     before assignment — the embedding twin of
     ``dedup.verified_neardup_clusters``'s clique collapse: m exact
@@ -1391,14 +1406,13 @@ def semantic_dedup(
         base.orderBy(id_hash.asc(), F.col("id").asc()).limit(k).collect()
     )
     groups = member = None
-    if collapse_exact:
-        # work-proportional gate (VERDICT r8 #2): zero duplicate groups
-        # -> the collapse is the identity map -> the plain path below
-        # produces the identical output without the fingerprint groupBy
-        # or the expansion joins.  The probe is one narrow agg job at
-        # plan-build time (see _exact_dup_probe).
-        collapse_exact = _exact_dup_probe(base, "v")
-    if collapse_exact:
+    # work-proportional gate (VERDICT r8 #2): zero duplicate groups ->
+    # the collapse is the identity map -> the plain path below produces
+    # the identical output without the fingerprint groupBy or the
+    # expansion joins.  The probe is one narrow agg job at plan-build
+    # time (see _exact_dup_probe).
+    collapse = _exact_dup_probe(base, "v")
+    if collapse:
         # 128-bit seeded hash of the raw vector: copies collapse to the
         # min-id representative; the (fp, id) exchange never carries
         # vectors (exact_dedup discipline).  r14 (guide §2.3/§2.4):
@@ -1502,7 +1516,7 @@ def semantic_dedup(
         .filter(F.col("score") >= threshold)
     )
     comp = neardup_clusters(pairs.select("id_a", "id_b"))
-    if collapse_exact:
+    if collapse:
         # expand representative components back to every copy: copies
         # share cell, cent_cos and all pair scores, so cluster_id (min
         # member id: each rep is its group's min) and the keep ranking
@@ -1554,7 +1568,7 @@ def semantic_dedup(
         "n_members",
         (F.row_number().over(wk) == 1).alias("keep"),
     )
-    return _attach_cached(out, [member]) if collapse_exact else out
+    return _attach_cached(out, [member]) if collapse else out
 
 
 def semantic_contamination(

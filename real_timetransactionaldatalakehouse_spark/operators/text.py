@@ -179,7 +179,7 @@ def winnow_fingerprints(
     well-split table (sources.fan_out guard)."""
     from ..sources import fan_out
 
-    df = fan_out(df, guard=True)
+    df = fan_out(df)
     t = F.col(text_col)
     # NULL text must emit NO fingerprint rows: F.greatest SKIPS null
     # arguments (greatest(NULL, 1) = 1), so without the guard a NULL
@@ -468,14 +468,13 @@ def ngram_lm_score(
     t = tokens(text_col)
     from ..sources import fan_out
 
-    # guard=True: the fan is an opportunistic spread before the
-    # tokenize+explode map — on an already-well-split corpus the
-    # exchange would shuffle the full text for nothing (r5 ADVICE:
-    # explicit targets now bypass the guard by default, so say so).
+    # the fan is an opportunistic spread before the tokenize+explode
+    # map — on an already-well-split corpus fan_out skips the exchange
+    # that would shuffle the full text for nothing.
     # r13: input-sized target (the fan_out default), not core count —
     # width A/B at bench SF: 4-way 0.88 s / 8-way 0.73 s vs 32-way
     # 1.17 s on the whole scorer
-    toked = fan_out(df, guard=True).select(
+    toked = fan_out(df).select(
         F.col(id_col), t.alias("__t"), F.size(t).alias("__n")
     )
     # one explode over ALL n positions: w1 everywhere, bg null at the

@@ -21,21 +21,6 @@ def register_gold_views(spark: SparkSession, gold_stats: DataFrame,
         dim.createOrReplaceTempView("dim_entity")
 
 
-def register_gold_views_from_catalog(spark: SparkSession, cat,
-                                     gold_table: str = "gold.stats_1min",
-                                     dim_table: str | None = "gold.dim_entity") -> None:
-    """A8: resolve the serving views through the catalog façade
-    (schema.table names) instead of raw paths — versioned dims resolve
-    their snapshot pointer transparently."""
-    dim = None
-    if dim_table is not None:
-        try:
-            dim = cat.read(dim_table)
-        except KeyError:
-            dim = None
-    register_gold_views(spark, cat.read(gold_table), dim)
-
-
 def velocity_view(spark: SparkSession, as_of: str, lookback_minutes: int = 30) -> DataFrame:
     """Read-side sliding rollup over 1-min buckets (reference
     Dashboard.md:45): weighted engagement per impression."""

@@ -48,9 +48,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(
-    df: DataFrame, partitions: int | None = None, guard: bool | None = None
-) -> DataFrame:
+def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition an under-split source before expensive
     per-row map work (JSON parse, regex, kernel stages).
 
@@ -61,22 +59,13 @@ def fan_out(
     narrow exchange and unlocks the cluster for the expensive stage —
     the standard move whenever upstream produced fewer splits than
     cores.  On a well-split table the exchange would re-shuffle the
-    full payload for nothing, so when the target is DEFAULTED it is
-    skipped unless it would at least DOUBLE the parallelism:
-    re-shuffling the payload for a fractional speedup loses (measured:
-    25 -> 37 partitions on a 50x replica cost 1.5x total wall; 1 -> 32
-    on the single-row-group bench file wins 10x).
-
-    ``guard`` controls the skip explicitly; it defaults to
-    ``partitions is None``: an EXPLICIT ``partitions`` is a caller
-    override and repartitions unconditionally (the pre-r5 contract —
-    callers like ``ngram_lm_score`` size the fan to their own stage),
-    while a defaulted call is an opportunistic spread and only pays
-    the exchange when it at least doubles parallelism.  Callers that
-    pass a target but still want the skip (the gram-spread sites,
-    the entry's PII fan) say ``guard=True``."""
-    if guard is None:
-        guard = partitions is None
+    full payload for nothing, so it is skipped unless it would at
+    least DOUBLE the parallelism: re-shuffling the payload for a
+    fractional speedup loses (measured: 25 -> 37 partitions on a 50x
+    replica cost 1.5x total wall; 1 -> 32 on the single-row-group
+    bench file wins 10x).  ``partitions`` (default: the session's
+    shuffle partitions) sizes the target for callers whose per-row
+    work is heavy enough to want every core."""
     # r13 note (measured, left alone): widening the DEFAULTED target to
     # core count was tried and REGRESSED the light defaulted sites
     # (q_bpe_pairs 1.28x, q_semdedup 1.37x paired) — 32-task scheduling
@@ -86,7 +75,7 @@ def fan_out(
     n = partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    if guard and df.rdd.getNumPartitions() * 2 > n:  # gains < 2x: skip
+    if df.rdd.getNumPartitions() * 2 > n:  # gains < 2x: skip
         return df
     return df.repartition(n)
 

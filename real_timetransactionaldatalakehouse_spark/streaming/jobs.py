@@ -81,8 +81,6 @@ def bronze_append_stream(
     ts_col: str = "ts",
     available_now: bool = True,
     blocking: bool = True,
-    dedup_keys: list[str] | None = None,
-    dedup_within: str = "10 minutes",
 ):
     """Bronze: immutable append log (reference streaming_job.py:81-84,
     A4/A5/A7/T5).  Each micro-batch is sorted within partitions by the
@@ -93,18 +91,9 @@ def bronze_append_stream(
     The write is partitioned by derived ``p_date``/``p_hour`` columns
     (O1 — reference hidden partitioning ``hours(event_timestamp)``,
     streaming_job.py:37), so time-range serving queries prune files
-    instead of scanning the full log at 100x.
-
-    ``dedup_keys`` turns on CROSS-micro-batch at-source dedup via
-    ``dropDuplicatesWithinWatermark`` (T7+): duplicate deliveries
-    within ``dedup_within`` of event time are dropped exactly once
-    regardless of batch boundaries, with state bounded by the
-    watermark — the streaming-native upgrade of the reference's
-    batch-scoped dedup."""
-    if dedup_keys:
-        stream_df = stream_df.withWatermark(
-            ts_col, dedup_within
-        ).dropDuplicatesWithinWatermark(dedup_keys)
+    instead of scanning the full log at 100x.  Bronze keeps every
+    delivery; duplicates are dropped batch-scoped in the dims merge
+    (T7), as in the reference."""
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         (

@@ -36,7 +36,6 @@ pruning inside a version works as for any parquet dir.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
@@ -270,9 +269,9 @@ def _commit_mor(
     delta: DataFrame | None,
     deletes: DataFrame | None,
 ) -> int:
-    """Commit a merge-on-read version over the current snapshot: the
-    ``delta`` rows (if any) plus an equality-delete key file holding
-    the delta's keys and the ``deletes`` keys."""
+    """Commit a merge-on-read version over the current snapshot: either
+    the ``delta`` rows plus an equality-delete file of their keys (an
+    upsert), or the ``deletes`` keys alone (a delete)."""
     base_v = current_version(path)
     if base_v is None:
         raise FileNotFoundError(
@@ -280,30 +279,18 @@ def _commit_mor(
             "write_version (MoR deltas need a base snapshot)"
         )
     spark = (delta if delta is not None else deletes).sparkSession
-    if delta is not None and deletes is not None:
-        # delete wins over a same-key update in the combined batch:
-        # without this anti-join the delta would be unioned back in
-        # AFTER the base anti-join and resurrect the deleted row
-        delta = delta.join(
-            F.broadcast(deletes.select(*key_cols).distinct()),
-            key_cols,
-            "left_anti",
-        )
 
     def write(tmp: str) -> None:
-        keys = []
+        keys = deletes
         if delta is not None:
             delta_p = os.path.join(tmp, MOR_DELTA)
             delta.write.mode("overwrite").parquet(delta_p)
             # delete keys come from the MATERIALIZED delta, not the
             # delta plan: re-executing it would resolve the whole MoR
             # chain a second time per commit (the plan reads the table)
-            keys.append(spark.read.parquet(delta_p).select(*key_cols))
-        if deletes is not None:
-            keys.append(deletes.select(*key_cols))
+            keys = spark.read.parquet(delta_p)
         del_p = os.path.join(tmp, MOR_DELETES)
-        del_keys = functools.reduce(DataFrame.unionByName, keys).distinct()
-        del_keys.write.mode("overwrite").parquet(del_p)
+        keys.select(*key_cols).distinct().write.mode("overwrite").parquet(del_p)
         meta = {
             "base": base_v,
             "key_cols": list(key_cols),
@@ -315,12 +302,7 @@ def _commit_mor(
     return _commit(path, write, _fields_of(delta) if delta is not None else None)
 
 
-def write_mor_upsert(
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    deletes: DataFrame | None = None,
-) -> int:
+def write_mor_upsert(updates: DataFrame, path: str, key_cols: list[str]) -> int:
     """Merge-on-read UPSERT commit: materialize only the DELTA — the
     upserted rows plus an equality-delete key file — instead of
     rewriting the table (reference ``streaming_job.py:55-60``
@@ -339,13 +321,8 @@ def write_mor_upsert(
     column-wise null-coalescing variant run
     :func:`operators.merge.merge_upsert` and commit its output),
     unmatched keys insert — pinned by the read-merge equivalence
-    test.  ``deletes`` optionally removes additional keys in the same
-    commit (a combined CDC batch); a key present in BOTH ``updates``
-    and ``deletes`` is DELETED — the delete wins, matching the CDC
-    convention that a batch's tombstone is the key's final state (the
-    update row is anti-joined out of the delta before the commit, so
-    a delete-after-upsert batch can never resurrect the row).  Layout
-    inside the version dir::
+    test.  Deletes commit separately (:func:`write_mor_delete`).
+    Layout inside the version dir::
 
         v0000000N/_MOR.json   {"base": M, "key_cols": [...], ...}
         v0000000N/_delta/     parquet, the upserted rows
@@ -355,7 +332,7 @@ def write_mor_upsert(
     failing fast (no visible data files) — MoR versions are only
     readable through :func:`read_table`'s resolution, like Iceberg
     data files are only readable through a manifest."""
-    return _commit_mor(path, key_cols, updates, deletes)
+    return _commit_mor(path, key_cols, updates, None)
 
 
 def write_mor_delete(keys: DataFrame, path: str, key_cols: list[str]) -> int:
@@ -462,17 +439,17 @@ def snapshot_diff(
     path: str,
     from_version: int,
     to_version: int | None = None,
-    key_cols: list[str] | None = None,
+    *,
+    key_cols: list[str],
 ) -> DataFrame:
     """Row-level changes between two snapshots — the engine analogue of
     Iceberg's incremental read (changelog scan), which the reference's
     downstream consumers use to avoid full-table re-reads.
 
-    With ``key_cols``: a full-outer join on the keys classifies each
-    row as ``insert`` (key only in ``to``), ``delete`` (only in
-    ``from``) or ``update`` (both sides present, any non-key column
-    changed); unchanged rows are dropped.  Without keys, set semantics:
-    rows added/removed by whole-row comparison.
+    A full-outer join on ``key_cols`` classifies each row as
+    ``insert`` (key only in ``to``), ``delete`` (only in ``from``) or
+    ``update`` (both sides present, any non-key column changed);
+    unchanged rows are dropped.
 
     One key shuffle of the two snapshots; the output carries the TO
     side's columns (FROM side's for deletes).  At scale this is the
@@ -482,10 +459,6 @@ def snapshot_diff(
     to_v = current_version(path) if to_version is None else to_version
     a = read_table(spark, path, version=from_version)
     b = read_table(spark, path, version=to_v)
-    if not key_cols:
-        ins = b.exceptAll(a).withColumn("_change", F.lit("insert"))
-        dele = a.exceptAll(b).withColumn("_change", F.lit("delete"))
-        return ins.unionByName(dele)
     val_cols = [c for c in b.columns if c not in key_cols]
     af = a.select(*key_cols, F.struct(*val_cols).alias("_from"))
     bf = b.select(*key_cols, F.struct(*val_cols).alias("_to"))

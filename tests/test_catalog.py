@@ -1,6 +1,7 @@
 """Catalog façade (A8): schema.table round trips, versioned tables
-resolved through the registry, serving views resolving via catalog
-names instead of raw paths."""
+resolved through the registry, ``CREATE TABLE IF NOT EXISTS``
+semantics, serving views resolving via catalog names instead of raw
+paths."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from real_timetransactionaldatalakehouse_spark.catalog import Catalog  # noqa: E
 from real_timetransactionaldatalakehouse_spark import tablefmt as TF  # noqa: E402
 from real_timetransactionaldatalakehouse_spark.medallion import build_gold_window_stats  # noqa: E402
 from real_timetransactionaldatalakehouse_spark.serving import (  # noqa: E402
-    register_gold_views_from_catalog,
+    register_gold_views,
     velocity_view,
 )
 from real_timetransactionaldatalakehouse_spark.sources import load_table  # noqa: E402
@@ -25,105 +26,62 @@ from real_timetransactionaldatalakehouse_spark.sources import load_table  # noqa
 def test_catalog_round_trip(spark, sf_small, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     ev = load_table(spark, sf_small, "events").select("event_id", "user_id")
-    cat.create_table("bronze.events")
-    cat.write("bronze.events", ev)
+    path = cat.create_table("bronze.events")
+    assert path == cat.table_path("bronze.events") == os.path.join(cat.warehouse, "bronze", "events")
+    ev.write.parquet(path)
     assert cat.read("bronze.events").count() == ev.count()
     assert cat.tables("bronze") == ["events"]
     assert cat.namespaces() == ["bronze"]
     # registry survives a new Catalog instance (state file)
     cat2 = Catalog(spark, str(tmp_path / "wh"))
     assert cat2.read("bronze.events").count() == ev.count()
-    cat2.drop_table("bronze.events", purge=True)
-    assert cat2.tables("bronze") == []
-    assert not os.path.isdir(cat2.warehouse + "/bronze/events")
     with pytest.raises(KeyError):
-        cat2.read("bronze.events")
+        cat2.read("bronze.other")
+    with pytest.raises(ValueError):
+        cat2.create_table("no_schema_part")
 
 
 def test_catalog_versioned_and_partitioned_tables(spark, sf_small, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     ev = load_table(spark, sf_small, "events").select("event_id", "ts", "user_id")
-    # versioned: each write commits a snapshot
-    cat.create_table("dims.users", versioned=True)
-    cat.write("dims.users", ev.limit(100))
-    cat.write("dims.users", ev.limit(10))
+    # versioned: read resolves the current snapshot
+    users = cat.create_table("dims.users", versioned=True)
+    TF.write_version(ev.limit(100), users)
+    TF.write_version(ev.limit(10), users)
     assert cat.read("dims.users").count() == 10
-    assert TF.current_version(cat.table_path("dims.users")) == 2
-    # partitioned plain table: layout column reaches the directory level
-    cat.create_table("bronze.ev", partition_by=["p_date"])
-    cat.write("bronze.ev", ev.withColumn("p_date", F.to_date("ts").cast("string")))
-    sub = os.listdir(cat.table_path("bronze.ev"))
-    assert any(d.startswith("p_date=") for d in sub)
+    assert TF.current_version(users) == 2
+    # partitioned plain table: read discovers the writer's partition dirs
+    ev_path = cat.create_table("bronze.ev")
+    ev.withColumn("p_date", F.to_date("ts").cast("string")).write.partitionBy(
+        "p_date").parquet(ev_path)
+    assert any(d.startswith("p_date=") for d in os.listdir(ev_path))
+    assert "p_date" in cat.read("bronze.ev").columns
 
 
-def test_namespace_guard(spark, tmp_path):
+def test_create_table_if_not_exists_keeps_the_entry(spark, tmp_path):
+    """Re-creating a registered name is ``CREATE TABLE IF NOT EXISTS``:
+    the entry (path, versioned flag) is kept, so a versioned table
+    with commits still reads through its snapshot pointer instead of
+    being listed as a plain parquet dir."""
     cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.create_table("gold.t1")
-    with pytest.raises(ValueError):
-        cat.drop_namespace("gold")
-    cat.drop_table("gold.t1")
-    cat.drop_namespace("gold")
-    assert cat.namespaces() == []
-    with pytest.raises(ValueError):
-        cat.create_table("no_schema_part")
+    path = cat.create_table("dims.users", versioned=True)
+    TF.write_version(spark.createDataFrame([(1, "a")], "id long, s string"), path)
+    assert cat.create_table("dims.users") == path
+    assert cat.meta("dims.users")["versioned"]
+    assert Catalog(spark, str(tmp_path / "wh")).meta("dims.users")["versioned"]
+    assert [tuple(r) for r in cat.read("dims.users").collect()] == [(1, "a")]
 
 
 def test_serving_views_resolve_via_catalog(spark, sf_small, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     events = load_table(spark, sf_small, "events")
     gold = build_gold_window_stats(events)
-    cat.create_table("gold.stats_1min")
-    cat.write("gold.stats_1min", gold)
-    register_gold_views_from_catalog(spark, cat, dim_table=None)
+    gold.write.parquet(cat.create_table("gold.stats_1min"))
+    register_gold_views(spark, cat.read("gold.stats_1min"))
     as_of = str(events.agg(F.max("ts")).first()[0])
     v = velocity_view(spark, as_of, lookback_minutes=10**6)
     assert v.count() > 0
     assert {"user_id", "velocity"} <= set(v.columns)
-
-
-def test_catalog_alter_table_add_columns(spark, sf_small, tmp_path):
-    """A8 + schema evolution: ALTER through the catalog on a versioned
-    table; non-versioned tables are rejected (no snapshot metadata to
-    evolve)."""
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    ev = load_table(spark, sf_small, "events").select("event_id", "props")
-    cat.create_table("silver.events", versioned=True)
-    cat.write("silver.events", ev)
-    fields = cat.alter_table("silver.events", {"k_val": "bigint", "tag": "string"})
-    assert [f["name"] for f in fields] == ["event_id", "props", "k_val", "tag"]
-    got = cat.read("silver.events")
-    assert dict(got.dtypes)["k_val"] == "bigint"
-    assert got.filter(F.col("k_val").isNotNull() | F.col("tag").isNotNull()).count() == 0
-
-    cat.create_table("bronze.plain")
-    cat.write("bronze.plain", ev)
-    with pytest.raises(ValueError, match="versioned"):
-        cat.alter_table("bronze.plain", {"x": "int"})
-
-
-def test_catalog_properties_and_rename(spark, sf_small, tmp_path):
-    """TBLPROPERTIES round trip + catalog rename (storage untouched)."""
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    ev = load_table(spark, sf_small, "events").select("event_id")
-    cat.create_table("bronze.ev", properties={"format-version": "2"})
-    cat.write("bronze.ev", ev)
-    assert cat.properties("bronze.ev") == {"format-version": "2"}
-    merged = cat.set_properties("bronze.ev", {"write.parquet.compression-codec": "zstd"})
-    assert merged["format-version"] == "2" and len(merged) == 2
-    # persisted across instances
-    assert Catalog(spark, str(tmp_path / "wh")).properties("bronze.ev") == merged
-
-    path_before = cat.table_path("bronze.ev")
-    cat.rename_table("bronze.ev", "bronze.events_raw")
-    assert cat.table_path("bronze.events_raw") == path_before
-    assert cat.read("bronze.events_raw").count() == ev.count()
-    with pytest.raises(KeyError):
-        cat.meta("bronze.ev")
-    cat.create_table("bronze.other")
-    with pytest.raises(ValueError, match="already exists"):
-        cat.rename_table("bronze.events_raw", "bronze.other")
-    # failed rename leaves the source intact
-    assert cat.read("bronze.events_raw").count() == ev.count()
 
 
 def test_expire_snapshots_older_than_retains_recent(spark, sf_small, tmp_path):
@@ -154,9 +112,9 @@ def test_maintenance_loop_cadence_and_catchup_false(spark, sf_small, tmp_path):
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     ev = load_table(spark, sf_small, "events").select("event_id", "ts")
-    cat.create_table("bronze.events", versioned=True)
-    cat.write("bronze.events", ev.limit(50))
-    cat.write("bronze.events", ev.limit(50))
+    path = cat.create_table("bronze.events", versioned=True)
+    TF.write_version(ev.limit(50), path)
+    TF.write_version(ev.limit(50), path)
 
     # fake time: each run_maintenance call costs 90 "minutes" on run 1
     # (overrun) and 5 minutes otherwise
@@ -205,48 +163,33 @@ def test_maintenance_loop_cadence_and_catchup_false(spark, sf_small, tmp_path):
 
 def test_run_maintenance_composed(spark, sf_small, tmp_path):
     """M5 analogue: one entry point composes compact -> expire ->
-    orphans -> ttl over catalog tables (reference maintenance_dag.py:
-    13-31 scheduling compact_cold_data.py), preserving rows, retiring
-    old snapshots, and sweeping crashed-write tmp dirs."""
-    import datetime
-
+    orphans over catalog tables (reference maintenance_dag.py:13-31
+    scheduling compact_cold_data.py), preserving rows, retiring old
+    snapshots, and sweeping crashed-write tmp dirs."""
     from real_timetransactionaldatalakehouse_spark import maintenance as MT
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     ev = load_table(spark, sf_small, "events").select("event_id", "ts", "user_id")
-    cat.create_table("bronze.events", versioned=True)
+    path = cat.create_table("bronze.events", versioned=True)
     # three snapshots so keep_last=2 has something to expire post-compact
-    cat.write("bronze.events", ev)
-    cat.write("bronze.events", ev)
-    cat.write("bronze.events", ev)
+    for _ in range(3):
+        TF.write_version(ev, path)
     n = ev.count()
-    path = cat.table_path("bronze.events")
     # simulated crashed write
     os.makedirs(os.path.join(path, "_versions", ".tmp-v00000042"), exist_ok=True)
     # plain (non-versioned) table rides the same run
-    cat.create_table("gold.flat")
-    cat.write("gold.flat", ev)
+    ev.repartition(4).write.parquet(cat.create_table("gold.flat"))
 
-    cutoff = datetime.datetime(2024, 1, 1)
-    report = MT.run_maintenance(
-        spark,
-        cat,
-        keep_last=2,
-        ttl={"bronze.events": ("ts", cutoff)},
-        zorder={"gold.flat": ["user_id", "event_id"]},
-    )
+    report = MT.run_maintenance(spark, cat, keep_last=2)
     assert set(report) == {"bronze.events", "gold.flat"}
     r = report["bronze.events"]
-    # compaction preserved rows, then TTL kept only post-cutoff rows
     assert r["compact"]["rows_before"] == r["compact"]["rows_after"] == n
-    kept = ev.filter(F.col("ts") >= F.lit(cutoff)).count()
-    assert r["ttl"]["rows_after"] == kept
-    assert cat.read("bronze.events").count() == kept
+    assert cat.read("bronze.events").count() == n
     # snapshots beyond keep_last expired, orphan tmp dir swept
     assert r["expired"]["removed"], r
     assert ".tmp-v00000042" in r["orphans"]["removed"]
     assert not os.path.isdir(os.path.join(path, "_versions", ".tmp-v00000042"))
-    # plain table: zorder-compacted only (no snapshot metadata steps)
-    assert "expired" not in report["gold.flat"]
+    # plain table: compacted only (no snapshot metadata steps)
+    assert set(report["gold.flat"]) == {"compact"}
     assert report["gold.flat"]["compact"]["rows_after"] == n
-    assert report["gold.flat"]["compact"]["zorder_by"] == ["user_id", "event_id"]
+    assert cat.read("gold.flat").count() == n

@@ -1282,12 +1282,12 @@ def test_derive_tables_recall_model(spark, sf_small):
     assert auto == explicit
 
 
-def test_embed_neardup_lsh_collapse_exact_equivalence(spark, sf_small):
-    """collapse_exact=True must be bit-equal to the plain banding on a
-    duplicate-heavy corpus (every vector given one exact copy with a
-    shifted id): same pairs, same fold scores - copies share every
-    band bucket and every expanded pair's score is the same arithmetic
-    over the same vector bytes."""
+def test_embed_neardup_lsh_exact_collapse_equivalence(spark, sf_small):
+    """The exact-duplicate collapse must be bit-equal to the plain
+    banding on a duplicate-heavy corpus (every vector given one exact
+    copy with a shifted id): same pairs, same fold scores - copies
+    share every band bucket and every expanded pair's score is the
+    same arithmetic over the same vector bytes."""
     from real_timetransactionaldatalakehouse_spark.operators import (
         similarity as S,
     )
@@ -1300,12 +1300,11 @@ def test_embed_neardup_lsh_collapse_exact_equivalence(spark, sf_small):
                    "embedding")
     )
     plain = {(r.id_a, r.id_b): r.score for r in
-             S.embedding_neardup_pairs_lsh(
-                 dup, threshold=0.35, planes=4, tables=8).collect()}
+             S._lsh_pairs(dup, 0.35, 4, 8, 64, "vec_id", "embedding",
+                          None).collect()}
     fast = {(r.id_a, r.id_b): r.score for r in
             S.embedding_neardup_pairs_lsh(
-                dup, threshold=0.35, planes=4, tables=8,
-                collapse_exact=True).collect()}
+                dup, threshold=0.35, planes=4, tables=8).collect()}
     assert plain and fast
     assert plain == fast  # keys AND bit-identical scores
     # every duplicate pair must be present with its self-cosine
@@ -1506,7 +1505,7 @@ def test_semantic_dedup_collapse_persists_member_table(spark):
             (3, [0.9, 0.1, 0.0]), (4, [0.0, 1.0, 0.0]),
             (5, [0.0, 0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = S.semantic_dedup(df, k=2, threshold=0.9, collapse_exact=True)
+    out = S.semantic_dedup(df, k=2, threshold=0.9)
     deps = getattr(out, "_cached_deps", [])
     member = [d for d in deps if {"__rep", "__n", "__gn"} <= set(d.columns)]
     assert len(member) == 1 and member[0].is_cached

@@ -101,18 +101,6 @@ def test_compact_preserves_rows(spark, sf_small, tmp_path):
     assert after_files < before_files
 
 
-def test_ttl_delete(spark, sf_small, tmp_path):
-    ev = load_table(spark, sf_small, "events")
-    path = str(tmp_path / "ev")
-    ev.write.parquet(path)
-    cutoff = "2024-01-15 00:00:00"
-    res = MT.ttl_delete(spark, path, "ts", cutoff)
-    kept = spark.read.parquet(path)
-    assert res["rows_after"] == kept.count()
-    assert kept.filter(F.col("ts") < cutoff).count() == 0
-    assert res["rows_after"] == ev.filter(F.col("ts") >= cutoff).count()
-
-
 def test_table_stats(spark, sf_small):
     stats = MT.table_stats(spark, f"{sf_small}/lineitem.parquet").collect()[0]
     assert stats.n_files >= 1
@@ -148,47 +136,6 @@ def test_column_profile_counts(spark):
     assert set(got) == {"k", "s"}
     assert (got["k"].n_rows, got["k"].n_nonnull, got["k"].n_distinct) == (4, 4, 3)
     assert (got["s"].n_rows, got["s"].n_nonnull, got["s"].n_distinct) == (4, 3, 2)
-
-
-def test_zorder_compact_clusters_both_columns(spark, sf_small, tmp_path):
-    """OPTIMIZE ZORDER analogue: after the rewrite, per-file min/max
-    spans shrink on BOTH zorder columns simultaneously (that is the
-    property parquet stats pruning needs); a hash layout leaves every
-    file spanning ~the full range of each."""
-    ev = load_table(spark, sf_small, "events").select("event_id", "user_id", "value")
-    path = str(tmp_path / "z")
-    ev.repartition(8).write.parquet(path)
-
-    def span_ratio(col):
-        # mean over files of (file max-min) / (global max-min)
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg((F.max(col) - F.min(col)).alias("span"))
-        )
-        g = ev.agg((F.max(col) - F.min(col)).alias("g")).first()["g"]
-        rows = per_file.collect()
-        return sum(r.span for r in rows) / (len(rows) * g)
-
-    before_user, before_value = span_ratio("user_id"), span_ratio("value")
-    import os as _os
-
-    total = sum(
-        _os.path.getsize(_os.path.join(r, f))
-        for r, _d, fs in _os.walk(path) for f in fs if f.endswith(".parquet")
-    )
-    res = MT.zorder_compact(
-        spark, path, ["user_id", "value"], bits=12,
-        target_file_bytes=max(total // 8, 1),
-    )
-    assert res["rows_before"] == res["rows_after"] == ev.count()
-    assert res["files_target"] >= 6
-    after_user, after_value = span_ratio("user_id"), span_ratio("value")
-    # hash layout: every file spans ~the full range of each column;
-    # zorder must cut the mean span materially on BOTH at once
-    assert before_user > 0.7 and before_value > 0.7
-    assert after_user < 0.6 * before_user, (before_user, after_user)
-    assert after_value < 0.6 * before_value, (before_value, after_value)
 
 
 def test_doomscroll_and_cold_start_views(spark, sf_small):

@@ -199,12 +199,8 @@ def test_fan_out_skips_exchange_for_well_split_input(spark, sf_medium):
     # under-split input still fans out (the single-row-group case)
     plan_narrow = P.formatted_plan(fan_out(docs))
     assert "RoundRobinPartitioning" in plan_narrow, plan_narrow
-    # r5 ADVICE: an EXPLICIT partitions target is a caller override and
-    # repartitions unconditionally (pre-r5 contract) ...
-    plan_explicit = P.formatted_plan(fan_out(pre_split, target))
-    assert "RoundRobinPartitioning" in plan_explicit, plan_explicit
-    # ... unless the caller opts back into the guard (gram-spread sites)
-    assert fan_out(pre_split, target, guard=True) is pre_split
+    # an explicit target skips the exchange the same way
+    assert fan_out(pre_split, target) is pre_split
 
 
 def test_exact_dedup_shuffle_carries_no_text(spark, sf_medium):
@@ -744,12 +740,12 @@ def test_embed_lsh_verify_width_tracks_candidate_volume(spark, sf_medium):
     layout = int(spark.conf.get("spark.sql.shuffle.partitions"))
     small = P.formatted_plan(
         S.embedding_neardup_pairs_lsh(
-            emb, threshold=0.35, planes=4, tables=16, collapse_exact=False
+            emb, threshold=0.35, planes=4, tables=16
         )
     )
     big = P.formatted_plan(
         S.embedding_neardup_pairs_lsh(
-            rep, threshold=0.35, planes=4, tables=16, collapse_exact=False
+            rep, threshold=0.35, planes=4, tables=16
         )
     )
     pat = r"hashpartitioning\(id_a#\d+L?, id_b#\d+L?, (\d+)\)"

@@ -1299,12 +1299,12 @@ def test_semdedup_cell_cap_exactness_and_refinement(spark, sf_small):
         assert all(n == len(members) for _, n, _ in members), cid
 
 
-def test_semdedup_exact_collapse_equivalence(spark, sf_small):
-    """collapse_exact contract: on an input with byte-identical vector
+def test_semdedup_exact_collapse_equivalence(spark, sf_small, monkeypatch):
+    """Exact-collapse contract: on an input with byte-identical vector
     copies (including copies that only connect to a fuzzy component
     through their representative, and a zero-vector pair that must NOT
-    merge), the collapsed run is row-identical to the uncollapsed
-    one."""
+    merge), the collapsed run is row-identical to the uncollapsed one
+    (the duplicate probe forced off)."""
     from real_timetransactionaldatalakehouse_spark.operators import (
         similarity as S,
     )
@@ -1326,19 +1326,19 @@ def test_semdedup_exact_collapse_equivalence(spark, sf_small):
     ).select("vec_id", F.col("embedding").cast(base.schema["embedding"].dataType))
     corpus = base.unionByName(copies).unionByName(copies2).unionByName(zeros)
     kw = dict(k=8, threshold=0.32)
-    plain = sorted(map(tuple, S.semantic_dedup(corpus, **kw).collect()))
-    collapsed = sorted(
-        map(tuple, S.semantic_dedup(corpus, **kw, collapse_exact=True).collect())
-    )
+    collapsed = sorted(map(tuple, S.semantic_dedup(corpus, **kw).collect()))
+    with monkeypatch.context() as m:
+        m.setattr(S, "_exact_dup_probe", lambda df, vec_col: False)
+        plain = sorted(map(tuple, S.semantic_dedup(corpus, **kw).collect()))
     assert plain == collapsed
     ids = {t[0] for t in collapsed}
     assert 900000 not in ids and 900001 not in ids, "zero vectors must not merge"
     assert 700000 in ids, "exact copy of vec 0 must be clustered"
 
 
-def test_collapse_exact_gate_is_work_proportional(spark, sf_small):
-    """VERDICT r8 #2: the collapse_exact pass must cost nothing on a
-    dup-free corpus.  The build-time duplicate-ratio probe gates it:
+def test_exact_collapse_gate_is_work_proportional(spark, sf_small, monkeypatch):
+    """VERDICT r8 #2: the exact-duplicate collapse must cost nothing on
+    a dup-free corpus.  The build-time duplicate-ratio probe gates it:
     with zero byte-identical vectors the built plan is the PLAIN plan
     (no fingerprint columns, no expansion joins — asserted on the
     physical plan via the collapse's __f1 fingerprint alias; xxhash64
@@ -1346,8 +1346,9 @@ def test_collapse_exact_gate_is_work_proportional(spark, sf_small):
     not a usable needle), and with duplicates present the collapse
     engages (fingerprint columns appear; output equivalence is pinned by
     test_semdedup_exact_collapse_equivalence and the LSH sibling).
-    Output equality between gated-off and plain is also asserted
-    directly — the gate's correctness argument in one check."""
+    Output equality between the gated-off plan and the collapse forced
+    on over the same dup-free input is also asserted directly — the
+    gate's correctness argument in one check."""
     from real_timetransactionaldatalakehouse_spark import plans as P
     from real_timetransactionaldatalakehouse_spark.operators import (
         similarity as S,
@@ -1359,12 +1360,15 @@ def test_collapse_exact_gate_is_work_proportional(spark, sf_small):
         F.col("vec_id") < 300
     ).select("vec_id", "embedding")
     kw = dict(k=8, threshold=0.32, max_cell=256)
-    gated = S.semantic_dedup(emb, **kw, collapse_exact=True)
-    plain = S.semantic_dedup(emb, **kw)
+    gated = S.semantic_dedup(emb, **kw)
+    with monkeypatch.context() as m:
+        m.setattr(S, "_exact_dup_probe", lambda df, vec_col: True)
+        forced = S.semantic_dedup(emb, **kw)
+    assert "__f1" in P.formatted_plan(forced)
     # dup-free: the gate disengages -> no fingerprint column in the plan
     assert "__f1" not in P.formatted_plan(gated)
     assert sorted(map(tuple, gated.collect())) == sorted(
-        map(tuple, plain.collect())
+        map(tuple, forced.collect())
     )
     # duplicate-bearing: the gate engages -> the collapse plan ships
     dup = emb.unionByName(
@@ -1372,15 +1376,15 @@ def test_collapse_exact_gate_is_work_proportional(spark, sf_small):
             (F.col("vec_id") + 700000).alias("vec_id"), "embedding"
         )
     )
-    engaged = S.semantic_dedup(dup, **kw, collapse_exact=True)
+    engaged = S.semantic_dedup(dup, **kw)
     assert "__f1" in P.formatted_plan(engaged)
     # same gate on the LSH operator
     lsh_gated = S.embedding_neardup_pairs_lsh(
-        emb, threshold=0.35, planes=4, tables=8, collapse_exact=True
+        emb, threshold=0.35, planes=4, tables=8
     )
     assert "__f1" not in P.formatted_plan(lsh_gated)
     lsh_engaged = S.embedding_neardup_pairs_lsh(
-        dup, threshold=0.35, planes=4, tables=8, collapse_exact=True
+        dup, threshold=0.35, planes=4, tables=8
     )
     assert "__f1" in P.formatted_plan(lsh_engaged)
 

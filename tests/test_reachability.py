@@ -1,15 +1,23 @@
-"""Every top-level package def is reached from a declared entry point.
+"""Every package def is reached from a declared entry point.
 
 A pure-Python AST pass (no Spark).  Roots are ``__spark_entry__.py``,
 ``bench.py``, ``perfbench/*.py``, the package's module-level statements
-other than ``__all__``, and the bodies of the defs in ``KEEP``.  A
-top-level def is reached when its name is used (a name or an attribute)
-in a root or in a reached def; the pass iterates to a fixed point.
+other than ``__all__``, and the bodies of the defs in ``KEEP``.  The
+defs are the top-level functions and classes and each non-dunder
+method of a top-level class (``catalog.Catalog.read``); a class's own
+statements and dunder methods go with the class.  A def is reached
+when its name is used (a name or an attribute) in a root or in a
+reached def; the pass iterates to a fixed point.
 Identifier-like words inside string literals count as well: the serving
 views are looked up by name (``getattr(S, "velocity_view")``).  Imports
 do not count: an ``__init__`` re-export or an import nothing uses does
 not run the def.  Comments and docstrings (of modules, classes and
 defs) do not count either: prose that names a def does not run it.
+
+Matching is by bare name, so a method named like anything used
+elsewhere is invisible to the pass: a ``write``, ``properties`` or
+``register_views`` method counts as reached by Spark's ``df.write``,
+any ``.properties`` attribute or ``sources.register_views``.
 
 A kept def seeds the walk, so its callees need no entries of their own.
 The unreached set must equal ``KEEP`` exactly: new dead code fails this
@@ -34,7 +42,6 @@ KEEP = {
     "streaming.jobs.scd2_dim_view": "SURVEY X6n: the as-of view over the SCD2 history",
     "streaming.jobs.stream_stream_time_join": "SURVEY X6g: stream-stream event-time join",
     "tablefmt.snapshots_table": "SURVEY X6i: the snapshots metadata table",
-    "serving.register_gold_views_from_catalog": "SURVEY A8: gold views registered from the catalog",
     "functions.epoch_seconds_to_ts": "the reference's epoch-seconds event-time cast",
     "operators.dedup._simhash_sig_udf": "the kernel the SWAR simhash is tested against",
     "operators.similarity.knn_bruteforce": "the exact kNN the LSH and IVF kNN tests compare against",
@@ -48,6 +55,7 @@ KEEP = {
 
 
 _DOC_OWNERS = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _parse(source: str, filename: str = "<src>") -> ast.Module:
@@ -86,6 +94,13 @@ def _module_name(path: str) -> str:
     return ".".join(parts)
 
 
+def _is_method(stmt: ast.stmt) -> bool:
+    """A class-body def counted on its own (not a dunder)."""
+    return isinstance(stmt, _FUNCS) and not (
+        stmt.name.startswith("__") and stmt.name.endswith("__")
+    )
+
+
 def _matches(key: str, qual: str) -> bool:
     return qual == key or (key.endswith(".*") and qual.startswith(key[:-1]))
 
@@ -100,8 +115,17 @@ def _unreached_in(
     seen: set[str] = set()
     for mod, tree in modules.items():
         for stmt in tree.body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(stmt, _FUNCS):
                 defs[f"{mod}.{stmt.name}"] = stmt
+            elif isinstance(stmt, ast.ClassDef):
+                # the class node keeps only what runs with the class
+                cls = ast.ClassDef(**{**vars(stmt), "body": []})
+                for m in stmt.body:
+                    if _is_method(m):
+                        defs[f"{mod}.{stmt.name}.{m.name}"] = m
+                    else:
+                        cls.body.append(m)
+                defs[f"{mod}.{stmt.name}"] = cls
             elif not _is_all(stmt):
                 seen |= _identifiers(stmt)
     for tree in roots:
@@ -194,6 +218,22 @@ def _synthetic():
 def test_imports_and_reexports_do_not_reach():
     assert _unreached_in(*_synthetic()) == {
         "m.only_imported", "m.reexported", "m.kept", "m.helper",
+    }
+
+
+def test_methods_count_as_defs():
+    mod = _parse('''
+class Table:
+    def __init__(self):
+        self.from_init()
+
+    def from_init(self): pass
+    def called(self): pass
+    def uncalled(self): return self.only_from_uncalled()
+    def only_from_uncalled(self): pass
+''')
+    assert _unreached_in({"m": mod}, [_parse("Table().called()")]) == {
+        "m.Table.uncalled", "m.Table.only_from_uncalled",
     }
 
 

@@ -141,36 +141,6 @@ def test_gold_partitioned_by_window_date(spark, sf_small, tmp_path):
     assert "window_start" in back.columns
 
 
-def test_bronze_stream_dedup_across_batches(spark, tmp_path):
-    """T7+: dropDuplicatesWithinWatermark drops a duplicate delivery
-    arriving in a LATER micro-batch (batch-scoped dedup cannot)."""
-    import datetime
-
-    from tests.test_streaming import _write_single_file
-
-    schema = "event_id long, ts timestamp, user_id long"
-    t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
-    chunk1 = [(i, t0 + datetime.timedelta(seconds=i), 1) for i in range(5)]
-    chunk2 = [(3, t0 + datetime.timedelta(seconds=3), 1),  # dup of chunk1
-              (10, t0 + datetime.timedelta(seconds=60), 1)]
-    src, out, ckpt = (str(tmp_path / d) for d in ("in", "bronze", "ckpt"))
-    os.makedirs(src)
-    now = time.time()
-    for i, rows in enumerate((chunk1, chunk2)):
-        _write_single_file(
-            spark.createDataFrame(rows, schema),
-            os.path.join(src, f"c{i}.parquet"), now + i,
-        )
-    df = spark.createDataFrame(chunk1, schema)
-    bronze_append_stream(
-        file_stream(spark, src, df.schema), out, ckpt,
-        ts_col="ts", dedup_keys=["event_id"],
-    )
-    got = spark.read.parquet(out)
-    assert got.count() == 6  # 5 + 1 new; the cross-batch dup dropped
-    assert got.filter(F.col("event_id") == 3).count() == 1
-
-
 def test_two_streams_one_session_await_all(spark, sf_small, tmp_path):
     """T6: bronze + gold run concurrently off one SparkSession and are
     driven to completion with awaitAnyTermination."""
@@ -337,26 +307,26 @@ def test_mor_upsert_read_merge_equivalence(spark, tmp_path):
     assert v2 == 2 and TF.current_version(tbl) == 2
     want2 = {(1, "a", 10), (2, "B", 200), (3, "c", 30), (4, "d", 40)}
     assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want2
-    # chained MoR commit with a combined delete
+    # chained MoR commits: an upsert, then a delete
     up2 = spark.createDataFrame([(4, "D", 400)], "id long, s string, v long")
-    dele = spark.createDataFrame([(1,)], "id long")
-    TF.write_mor_upsert(up2, tbl, ["id"], deletes=dele)
-    want3 = {(2, "B", 200), (3, "c", 30), (4, "D", 400)}
-    assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want3
+    TF.write_mor_upsert(up2, tbl, ["id"])
+    TF.write_mor_delete(spark.createDataFrame([(1,)], "id long"), tbl, ["id"])
+    want4 = {(2, "B", 200), (3, "c", 30), (4, "D", 400)}
+    assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want4
     # time travel through the chain
     assert {tuple(r) for r in TF.read_table(spark, tbl, version=2).collect()} == want2
     assert TF.read_table(spark, tbl, version=1).count() == 3
-    # delete-only commit
+    # a later delete of another key
     TF.write_mor_delete(spark.createDataFrame([(3,)], "id long"), tbl, ["id"])
-    want4 = {(2, "B", 200), (4, "D", 400)}
-    assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want4
+    want5 = {(2, "B", 200), (4, "D", 400)}
+    assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want5
     # a MoR version dir holds no visible data files — naive reads fail
     with pytest.raises(Exception):
         spark.read.parquet(TF.version_path(tbl, 2)).count()
     # flatten: one full snapshot, same rows, reads need no merge
-    v5 = TF.write_version(TF.read_table(spark, tbl), tbl)
-    assert TF.mor_meta(tbl, v5) is None
-    assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want4
+    v6 = TF.write_version(TF.read_table(spark, tbl), tbl)
+    assert TF.mor_meta(tbl, v6) is None
+    assert {tuple(r) for r in TF.read_table(spark, tbl).collect()} == want5
 
 
 def test_mor_read_plans_broadcast_anti_join(spark, tmp_path):
@@ -407,8 +377,7 @@ def test_maintenance_loop_on_error_raise(spark, tmp_path):
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.create_table("gold.t")
-    cat.write("gold.t", spark.range(3))
+    spark.range(3).write.parquet(cat.create_table("gold.t"))
     import shutil
 
     shutil.rmtree(cat.table_path("gold.t"))
@@ -444,8 +413,8 @@ def test_mor_expiry_pins_base_chain(spark, tmp_path):
 
 
 def test_snapshot_diff_keyed_and_setwise(spark, tmp_path):
-    """Incremental read between snapshots: keyed diff classifies
-    insert/update/delete; set diff catches whole-row adds/removes."""
+    """Incremental read between snapshots: the keyed diff classifies
+    insert/update/delete, and an update carries the TO side's row."""
     tbl = str(tmp_path / "tbl")
     v1 = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "id long, s string, v long"
@@ -468,11 +437,6 @@ def test_snapshot_diff_keyed_and_setwise(spark, tmp_path):
     ][0]
     assert (row2.s, row2.v) == ("B", 20)
 
-    setwise = sorted(
-        (r.id, r._change) for r in TF.snapshot_diff(spark, tbl, 1, 2).collect()
-    )
-    assert setwise == [(2, "delete"), (2, "insert"), (3, "delete"), (4, "insert")]
-
 
 def test_snapshots_table_metadata(spark, sf_small, tmp_path):
     """tbl$snapshots analogue: one row per live version, current
@@ -494,25 +458,6 @@ def test_snapshots_table_metadata(spark, sf_small, tmp_path):
     assert {r.version for r in TF.snapshots_table(spark, t).collect()} == {3}
 
 
-def test_mor_combined_batch_delete_wins(spark, tmp_path):
-    """A key present in BOTH updates and deletes of one MoR commit is
-    DELETED (the CDC tombstone is the key's final state) — the update
-    row must not resurrect it through the delta union."""
-    tbl = str(tmp_path / "tbl")
-    TF.write_version(
-        spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), tbl
-    )
-    ups = spark.createDataFrame([(1, 100), (3, 30)], "id long, v long")
-    dele = spark.createDataFrame([(1,), (2,)], "id long")
-    TF.write_mor_upsert(ups, tbl, ["id"], deletes=dele)
-    got = {(r.id, r.v) for r in TF.read_table(spark, tbl).collect()}
-    assert got == {(3, 30)}, got
-    # and the CoW equivalent (apply updates, then deletes) agrees
-    v = TF.write_version(TF.read_table(spark, tbl), tbl)
-    assert TF.mor_meta(tbl, v) is None
-    assert {(r.id, r.v) for r in TF.read_table(spark, tbl).collect()} == {(3, 30)}
-
-
 def test_maintenance_loop_rejects_nonpositive_interval(spark, tmp_path):
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
@@ -532,9 +477,8 @@ def test_mor_chain_depth_and_flatten_trigger(spark, tmp_path):
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.create_table("gold.t", versioned=True)
-    cat.write("gold.t", spark.createDataFrame([(1, 10)], "id long, v long"))
-    path = cat.table_path("gold.t")
+    path = cat.create_table("gold.t", versioned=True)
+    TF.write_version(spark.createDataFrame([(1, 10)], "id long, v long"), path)
     assert TF.mor_chain_depth(path) == 0
     for k in range(2, 5):  # 3 MoR commits -> depth 3
         TF.write_mor_upsert(
@@ -568,12 +512,11 @@ def test_maintenance_loop_drives_mor_flatten_trigger(spark, tmp_path):
     from real_timetransactionaldatalakehouse_spark.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.create_table("gold.t", versioned=True)
-    cat.write(
-        "gold.t",
+    path = cat.create_table("gold.t", versioned=True)
+    TF.write_version(
         spark.createDataFrame([(i, i * 10) for i in range(8)], "id long, v long"),
+        path,
     )
-    path = cat.table_path("gold.t")
     for k in (100, 101):
         TF.write_mor_upsert(
             spark.createDataFrame([(k, k)], "id long, v long"), path, ["id"]
@@ -740,8 +683,8 @@ def _parquet_files(d):
 
 
 def test_rewrite_sizing_and_stats_follow_the_live_snapshot(spark, tmp_path):
-    """compact / zorder_compact size their output, and table_stats
-    counts files, from the dirs the CURRENT snapshot resolves through:
+    """compact sizes its output, and table_stats counts files, from
+    the dirs the CURRENT snapshot resolves through:
     retained older versions and orphan .tmp dirs must not inflate
     files_target, and a MoR snapshot's stats include its base, not
     only the newest delta dir."""
@@ -757,8 +700,7 @@ def test_rewrite_sizing_and_stats_follow_the_live_snapshot(spark, tmp_path):
     shutil.copytree(TF.version_path(path, 1),
                     os.path.join(path, "_versions", ".tmp-v00000099"))
     # five copies of the table on disk, one of them live
-    assert MT.compact(spark, path, target_file_bytes=live)["files_target"] == 1
-    res = MT.zorder_compact(spark, path, ["id"], target_file_bytes=live)
+    res = MT.compact(spark, path, target_file_bytes=live)
     assert res["files_target"] == 1
     assert res["rows_after"] == 20000
 
@@ -775,13 +717,12 @@ def test_rewrite_sizing_and_stats_follow_the_live_snapshot(spark, tmp_path):
 
 
 def test_rewrites_keep_the_partition_layout(spark, tmp_path):
-    """compact, ttl_delete and zorder_compact rewrite a partitioned
-    table into the layout read off its own live files: the rewritten
-    table keeps its p_date/p_bucket dirs (no root data file), a bucket
-    lookup still plans a p_bucket partition filter, a later
-    partitioned append reads beside the rewritten rows, and a
-    versioned table (full or merge-on-read snapshot) keeps its
-    partition dirs."""
+    """compact rewrites a partitioned table into the layout read off
+    its own live files: the rewritten table keeps its p_date/p_bucket
+    dirs (no root data file), a bucket lookup still plans a p_bucket
+    partition filter, a later partitioned append reads beside the
+    rewritten rows and compacts with them, and a versioned table (full
+    or merge-on-read snapshot) keeps its partition dirs."""
     import re
 
     from real_timetransactionaldatalakehouse_spark.serving import bucket_pruned_lookup
@@ -814,13 +755,8 @@ def test_rewrites_keep_the_partition_layout(spark, tmp_path):
     assert prunes_bucket(bucket_pruned_lookup(spark.read.parquet(path), "user_id", 7, n_buckets=4))
     gold(1000).write.mode("append").partitionBy("p_date", "p_bucket").parquet(path)
     assert spark.read.parquet(path).count() == 2000
-
-    kept = sum(1 for i in range(2000) if i % 97 >= 10)
-    assert MT.ttl_delete(spark, path, "v", 10)["rows_after"] == kept
+    assert MT.compact(spark, path)["rows_after"] == 2000
     assert layout(path) == want
-    MT.zorder_compact(spark, path, ["user_id", "v"], bits=8)
-    assert layout(path) == want
-    assert spark.read.parquet(path).count() == kept
 
     tbl = str(tmp_path / "vt")
     TF.write_version(gold(0), tbl, partition_by=["p_date"])
