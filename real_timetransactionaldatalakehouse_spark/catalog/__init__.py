@@ -6,10 +6,12 @@ EXISTS`` DDL (``streaming_job.py:18-61``).
 State is one JSON file under the warehouse root — metadata is O(name
 count), never data-sized, and a catalog lookup costs one dict probe.
 Tables are either plain parquet dirs (append logs) or
-``tablefmt``-versioned (merged state), so ``read`` resolves snapshot
-pointers transparently.  Writers write to ``table_path`` themselves
-and choose their own partition columns; a real deployment swaps this
-file for a metastore/REST catalog without touching callers.
+``tablefmt``-versioned (merged state); the table's own ``_CURRENT``
+pointer tells them apart, so ``read`` is one ``tablefmt.read_table``.
+``create_table(versioned=)`` is recorded in the entry but nothing
+branches on it.  Writers write to ``table_path`` themselves and
+choose their own partition columns; a real deployment swaps this file
+for a metastore/REST catalog without touching callers.
 """
 
 from __future__ import annotations
@@ -57,8 +59,8 @@ class Catalog:
         """``CREATE TABLE IF NOT EXISTS`` (creating the namespace if
         needed): register the table at ``warehouse/schema/table`` and
         return that path.  A name already registered keeps its entry
-        and returns its path, so re-running a job's DDL never flips a
-        versioned table to a plain dir."""
+        and returns its path.  ``versioned`` is only recorded: the
+        table's kind is its ``_CURRENT`` pointer, read by ``tablefmt``."""
         schema, table = self._split(name)
         tables = self._state["schemas"].setdefault(schema, {"tables": {}})["tables"]
         if table not in tables:
@@ -86,7 +88,4 @@ class Catalog:
         return self.meta(name)["path"]
 
     def read(self, name: str) -> DataFrame:
-        m = self.meta(name)
-        if m["versioned"]:
-            return tablefmt.read_table(self.spark, m["path"])
-        return self.spark.read.parquet(m["path"])
+        return tablefmt.read_table(self.spark, self.table_path(name))

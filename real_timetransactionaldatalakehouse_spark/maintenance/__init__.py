@@ -3,20 +3,19 @@ snapshot expiry, orphan removal and table stats — the engine
 re-platforming of the reference's Iceberg procedures
 (``compact_cold_data.py``).
 
-Format-free design: compaction is a predicate-scoped read ->
-repartition-to-target-file-size -> swap rewrite, preserving row counts
-(the reference's invariant) and the partition layout of the table's
-live files.  On a ``tablefmt`` versioned table the swap is a snapshot
-commit, so a rewrite also folds any merge-on-read chain back to a full
-snapshot.  Retention (M4) is a filtered read (``q_retention_filter``),
-not a rewrite.
+Like the reference, these jobs call the table format's procedures and
+never list storage or branch on the table kind themselves: ``tablefmt``
+reads, lists and rewrites plain dirs and versioned tables alike, and
+its snapshot expiry and orphan removal are no-ops on a plain dir.
+Compaction is a predicate-scoped read -> repartition-to-target-file-size
+-> validated rewrite, preserving row counts (the reference's invariant)
+and the partition layout of the table's live files.  On a versioned
+table the rewrite is a snapshot commit, so it also folds any
+merge-on-read chain back to a full snapshot.  Retention (M4) is a
+filtered read (``q_retention_filter``), not a rewrite.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,103 +23,6 @@ from pyspark.sql import functions as F
 from .. import tablefmt
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # reference compact_cold_data.py:28
-
-
-def _read_target(spark: SparkSession, path: str) -> DataFrame:
-    if tablefmt.is_versioned(path):
-        return tablefmt.read_table(spark, path)
-    return spark.read.parquet(path)
-
-
-def _safe_swap_rewrite(spark: SparkSession, path: str, out: DataFrame,
-                       expect_rows: int, partition_by: list[str]) -> None:
-    """Replace ``path``'s data with ``out``, never destroying the old
-    data before the new data is validated.
-
-    Versioned tables commit a new snapshot (pointer flip, old versions
-    retained).  Plain dirs write to tmp, verify the row count, then
-    swap via a ``.bak`` rename — a crash at any step leaves either the
-    old or the new data intact and recoverable, and a count mismatch
-    aborts BEFORE anything is deleted (the old rmtree-then-rename did
-    the destructive step first and could only report the loss).  Both
-    write ``partition_by`` (:func:`_partition_cols`) directory levels."""
-    if tablefmt.is_versioned(path):
-        tablefmt.write_version(out, path, partition_by=partition_by, expect_rows=expect_rows)
-        return
-    tmp = path.rstrip("/") + ".compact-tmp"
-    out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-    got = spark.read.parquet(tmp).count()
-    if got != expect_rows:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"rewrite aborted: tmp has {got} rows, expected {expect_rows}; "
-            f"{path} untouched"
-        )
-    bak = path.rstrip("/") + ".bak"
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    """``path``'s Hadoop FileSystem and fully-qualified Path."""
-    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, fs.makeQualified(p)
-
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """Recursive parquet file listing through the Hadoop FileSystem
-    API — resolves whatever scheme the path carries (``file://``,
-    ``hdfs://``, ``s3a://``), so the maintenance jobs run unchanged
-    against an object store.  Driver-side by design: one table's
-    current snapshot has a compactor-bounded file count; a
-    metastore-scale deployment reads the table format's metadata
-    tables instead of listing storage."""
-    fs, p = _hadoop_path(spark, path)
-    out: list[tuple[str, int]] = []
-    if not fs.exists(p):
-        return out
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        # toString() keeps the fully-qualified URI (scheme + authority):
-        # on an object store the bucket (s3a://bucket/...) must stay in
-        # the file column or paths are ambiguous across buckets
-        name = st.getPath().toString()
-        if name.endswith(".parquet"):
-            out.append((name, st.getLen()))
-    return out
-
-
-def _live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """The table's live parquet files: on a versioned table only the
-    dirs its current snapshot resolves through
-    (``tablefmt.snapshot_dirs`` — the MoR deltas and their bases, not
-    every retained version or orphan ``.tmp`` dir)."""
-    if not tablefmt.is_versioned(path):
-        return _list_parquet_files(spark, path)
-    return [
-        f for d in tablefmt.snapshot_dirs(path) for f in _list_parquet_files(spark, d)
-    ]
-
-
-def _partition_cols(spark: SparkSession, path: str) -> list[str]:
-    """The table's Hive-style partition columns: the ``name=value``
-    dir levels between a live data root (table dir or snapshot dir)
-    and its parquet files, skipping ``_``/``.`` dirs (MoR deltas) as
-    Spark's file index does.  A rewrite without them loses partition
-    pruning, and a later partitioned append hides the rewritten rows."""
-    roots = tablefmt.snapshot_dirs(path) if tablefmt.is_versioned(path) else [path]
-    for root in roots:
-        prefix = _hadoop_path(spark, root)[1].toString().rstrip("/") + "/"
-        for f, _b in _list_parquet_files(spark, root):
-            dirs = f[len(prefix):].split("/")[:-1]
-            if not any(d.startswith(("_", ".")) for d in dirs):
-                return [unquote(d.split("=", 1)[0]) for d in dirs if "=" in d]
-    return []
 
 
 def table_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -131,7 +33,7 @@ def table_stats(spark: SparkSession, path: str) -> DataFrame:
     Versioned tables report the CURRENT snapshot only (matching
     ``tbl$files``, which lists the live snapshot's data and delete
     files)."""
-    files = _live_files(spark, path)
+    files = tablefmt.live_files(path)
     df = spark.createDataFrame(files or [("", 0)], "file string, bytes long")
     if not files:
         df = df.filter(F.col("file") != "")
@@ -153,28 +55,27 @@ def compact(
     hot rows are carried into the rewrite as they are, not repacked.
     Returns before/after stats; row count is preserved by construction:
     the cold/hot split is null-safe (a row whose predicate evaluates
-    NULL counts as hot), and the swap validates the rewritten row count
-    before anything is replaced.
+    NULL counts as hot), and ``tablefmt.rewrite`` validates the
+    rewritten row count before anything is replaced.
 
     Not safe beside a writer on the same table: the rewrite replaces
     the whole table with the rows read at the start.  On a plain-dir
-    table ``_safe_swap_rewrite`` renames the whole dir, so rows
-    appended while compaction runs are deleted with the ``.bak`` dir,
-    and no error is raised.  On a versioned table a commit that lands
-    while compaction runs is superseded by the compaction's snapshot
+    table ``tablefmt.rewrite`` renames the whole dir, so rows appended
+    while compaction runs are deleted with the ``.bak`` dir, and no
+    error is raised.  On a versioned table a commit that lands while
+    compaction runs is superseded by the compaction's snapshot
     (``tablefmt`` assumes one writer per table).  Run it with the
     table's writer stopped until the streaming sinks commit through
     ``tablefmt`` with conflict checks."""
-    df = _read_target(spark, path)
-    n_before = df.count()
-    parts = _partition_cols(spark, path)
+    df = tablefmt.read_table(spark, path)
     # null-safe split: where=NULL rows are NOT cold — they stay in the
     # hot (untouched) half instead of silently dropping out of both
-    cold_pred = F.coalesce(where, F.lit(False)) if where is not None else None
-    cold = df.filter(cold_pred) if cold_pred is not None else df
-    hot = df.filter(~cold_pred) if cold_pred is not None else None
+    cold_pred = F.lit(True) if where is None else F.coalesce(where, F.lit(False))
+    n_before, n_cold = df.agg(
+        F.count(F.lit(1)), F.count(F.when(cold_pred, 1))
+    ).first()
 
-    total_bytes = sum(b for _f, b in _live_files(spark, path))
+    total_bytes = sum(b for _f, b in tablefmt.live_files(path))
     # Size the rewrite off the COLD subset's bytes, not the whole
     # table's: only the cold rows land in these files, so sizing off
     # total_bytes made a half-cold table's rewritten files ~half the
@@ -183,17 +84,20 @@ def compact(
     # (uniform-row-size assumption — fine for a cold/hot split of one
     # schema; a table whose old rows are systematically wider still
     # lands within ~2x of target).
-    n_cold = cold.count() if cold_pred is not None else n_before
     cold_bytes = total_bytes * (n_cold / n_before) if n_before else 0
     n_files = max(1, round(cold_bytes / target_file_bytes))
 
     # hashing on the partition columns sends each partition dir to one
     # task, so it is rewritten as one file instead of one per task
-    packed = cold.repartition(n_files, *parts)
-    out = packed.unionByName(hot) if hot is not None else packed
-    _safe_swap_rewrite(spark, path, out, n_before, parts)
-    n_after = _read_target(spark, path).count()
-    return {"rows_before": n_before, "rows_after": n_after,
+    parts = tablefmt.partition_cols(path)
+    if where is None:
+        out = df.repartition(n_files, *parts)
+    else:
+        out = df.filter(cold_pred).repartition(n_files, *parts).unionByName(
+            df.filter(~cold_pred))
+    tablefmt.rewrite(out, path, n_before, parts)
+    # the rewrite counted n_before rows before it replaced anything
+    return {"rows_before": n_before, "rows_after": n_before,
             "cold_rows": n_cold, "files_target": n_files}
 
 
@@ -207,12 +111,6 @@ def expire_snapshots(
     return tablefmt.expire_snapshots(
         path, keep_last=keep_last, older_than_s=older_than_s
     )
-
-
-def remove_orphans(path: str) -> dict:
-    """M3: delete in-flight tmp dirs left by crashed writers —
-    reference ``compact_cold_data.py:74-92`` remove_orphan_files."""
-    return tablefmt.remove_orphans(path)
 
 
 def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -269,10 +167,12 @@ def run_maintenance(
     ``cold_where`` maps table name -> cold predicate (the reference
     compacts only data older than 1 h); absent entries compact the
     whole table.  Like :func:`compact`, a run is not safe beside a
-    writer on the same table.  Every versioned table is treated
-    alike: the rewrite commits a full snapshot, which also folds a
-    live merge-on-read chain to depth 0 so expiry can retire its delta
-    versions.  Nothing else bounds a chain between runs.
+    writer on the same table.  Every table runs all three steps; on a
+    plain dir expiry and orphan removal find nothing and report empty
+    lists.  On a versioned table the rewrite commits a full snapshot,
+    which also folds a live merge-on-read chain to depth 0 so expiry
+    can retire its delta versions.  Nothing else bounds a chain
+    between runs.
 
     Returns ``{table: {compact, expired, orphans}}``
     — each step's own report, so a scheduler can alert on any
@@ -283,15 +183,14 @@ def run_maintenance(
         ]
     report: dict[str, dict] = {}
     for name in tables:
-        meta = catalog.meta(name)
-        path = meta["path"]
-        r: dict = {"compact": compact(spark, path, where=(cold_where or {}).get(name))}
-        if meta["versioned"]:
-            r["expired"] = expire_snapshots(
+        path = catalog.table_path(name)
+        report[name] = {
+            "compact": compact(spark, path, where=(cold_where or {}).get(name)),
+            "expired": expire_snapshots(
                 path, keep_last=keep_last, older_than_s=expire_older_than_s
-            )
-            r["orphans"] = remove_orphans(path)
-        report[name] = r
+            ),
+            "orphans": tablefmt.remove_orphans(path),
+        }
     return report
 
 

@@ -60,9 +60,8 @@ def test_catalog_versioned_and_partitioned_tables(spark, sf_small, tmp_path):
 
 def test_create_table_if_not_exists_keeps_the_entry(spark, tmp_path):
     """Re-creating a registered name is ``CREATE TABLE IF NOT EXISTS``:
-    the entry (path, versioned flag) is kept, so a versioned table
-    with commits still reads through its snapshot pointer instead of
-    being listed as a plain parquet dir."""
+    the entry (path, versioned flag) is kept and the table still reads
+    its current snapshot."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     path = cat.create_table("dims.users", versioned=True)
     TF.write_version(spark.createDataFrame([(1, "a")], "id long, s string"), path)
@@ -70,6 +69,18 @@ def test_create_table_if_not_exists_keeps_the_entry(spark, tmp_path):
     assert cat.meta("dims.users")["versioned"]
     assert Catalog(spark, str(tmp_path / "wh")).meta("dims.users")["versioned"]
     assert [tuple(r) for r in cat.read("dims.users").collect()] == [(1, "a")]
+
+
+def test_read_follows_the_snapshot_pointer_not_the_flag(spark, tmp_path):
+    """A table registered without ``versioned=True`` and then committed
+    through ``tablefmt`` reads its current snapshot: the table's
+    ``_CURRENT`` pointer decides its kind, not the catalog entry."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    path = cat.create_table("dims.users")
+    TF.write_version(spark.createDataFrame([(1, "a")], "id long, s string"), path)
+    TF.write_version(spark.createDataFrame([(2, "b")], "id long, s string"), path)
+    assert not cat.meta("dims.users")["versioned"]
+    assert [tuple(r) for r in cat.read("dims.users").collect()] == [(2, "b")]
 
 
 def test_serving_views_resolve_via_catalog(spark, sf_small, tmp_path):
@@ -189,7 +200,8 @@ def test_run_maintenance_composed(spark, sf_small, tmp_path):
     assert r["expired"]["removed"], r
     assert ".tmp-v00000042" in r["orphans"]["removed"]
     assert not os.path.isdir(os.path.join(path, "_versions", ".tmp-v00000042"))
-    # plain table: compacted only (no snapshot metadata steps)
-    assert set(report["gold.flat"]) == {"compact"}
+    # plain table: the snapshot steps run and find nothing
+    assert report["gold.flat"]["expired"] == {"removed": [], "kept": []}
+    assert report["gold.flat"]["orphans"] == {"removed": []}
     assert report["gold.flat"]["compact"]["rows_after"] == n
     assert cat.read("gold.flat").count() == n

@@ -119,8 +119,6 @@ def test_observed_gate_streaming_progress_metrics(spark, tmp_path):
     """The SAME observe() call must surface per-batch violation
     counters in the streaming progress events — quality monitoring
     with zero extra passes in both execution modes."""
-    import time as _time
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         DoubleType, LongType, StructField, StructType,

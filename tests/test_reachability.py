@@ -241,3 +241,33 @@ def test_kept_defs_seed_the_walk():
     assert _unreached_in(*_synthetic(), {"m.kept"}) == {
         "m.only_imported", "m.reexported", "m.kept",
     }
+
+
+def _unused_imports(tree: ast.Module) -> list[str]:
+    """The names ``tree``'s imports bind (``__future__`` aside) that no
+    name in ``tree`` uses and its ``__all__`` does not re-export, with
+    the line of their import."""
+    bound: dict[str, int] = {}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                bound[a.asname or a.name.split(".")[0]] = n.lineno
+        elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+            for a in n.names:
+                bound[a.asname or a.name] = n.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for stmt in tree.body:
+        if _is_all(stmt):
+            used |= {e.value for e in stmt.value.elts}
+    return [f"{name}:{line}" for name, line in sorted(bound.items()) if name not in used]
+
+
+def test_package_modules_use_their_imports():
+    """Each package module uses every name it imports; an ``__init__``
+    may instead re-export it through ``__all__``."""
+    unused = {}
+    for path in sorted(glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)):
+        names = _unused_imports(_read(path))
+        if names:
+            unused[os.path.relpath(path, ROOT)] = names
+    assert not unused, f"unused imports: {unused}"

@@ -51,13 +51,52 @@ def test_versioned_write_validates_before_commit(spark, sf_small, tmp_path):
     assert TF.read_table(spark, tbl).count() == ev.count()
 
 
+def test_crash_before_the_pointer_flip_keeps_the_previous_snapshot(spark, tmp_path, monkeypatch):
+    """A crash after the new version dir is in place but before
+    ``_CURRENT`` flips (``os.replace`` of the pointer raising) leaves
+    the previous snapshot current and readable, and the next commit
+    lands cleanly past the abandoned version."""
+    tbl = str(tmp_path / "tbl")
+    TF.write_version(spark.range(3), tbl)
+    real_replace = os.replace
+
+    def crash_on_pointer(src, dst):
+        if os.path.basename(dst) == TF.CURRENT_FILE:
+            raise OSError("crash before the pointer flip")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_pointer)
+        with pytest.raises(OSError, match="pointer flip"):
+            TF.write_version(spark.range(5), tbl)
+    assert TF.current_version(tbl) == 1
+    assert sorted(r.id for r in TF.read_table(spark, tbl).collect()) == [0, 1, 2]
+    assert TF.write_version(spark.range(7), tbl) == 3
+    assert TF.current_version(tbl) == 3
+    assert TF.read_table(spark, tbl).count() == 7
+
+
+def test_plain_rewrite_count_mismatch_leaves_the_dir_untouched(spark, tmp_path):
+    """A plain-dir rewrite whose output count is not ``expect_rows``
+    raises before the swap: the dir keeps its files and rows, and no
+    ``.compact-tmp`` or ``.bak`` sibling is left behind."""
+    path = str(tmp_path / "t")
+    spark.range(10).repartition(2).write.parquet(path)
+    files = sorted(TF.live_files(path))
+    with pytest.raises(RuntimeError, match="aborted"):
+        TF.rewrite(spark.range(4), path, 10, [])
+    assert sorted(TF.live_files(path)) == files
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(10))
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
 def test_expire_snapshots_and_orphans(spark, sf_small, tmp_path):
     tbl = str(tmp_path / "tbl")
     ev = load_table(spark, sf_small, "events").select("event_id")
     for n in (100, 50, 25):
         TF.write_version(ev.limit(n), tbl)
     os.makedirs(os.path.join(tbl, "_versions", ".tmp-v00000042"))
-    res = MT.remove_orphans(tbl)
+    res = TF.remove_orphans(tbl)
     assert res["removed"] == [".tmp-v00000042"]
     res = MT.expire_snapshots(tbl, keep_last=2)
     assert res["removed"] == [1]

@@ -314,8 +314,6 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     ent = _load_entry(repo_root)
     session_mod = importlib.import_module(PKG + ".session")
     spark = session_mod.batch_session("bench-ab")
