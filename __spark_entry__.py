@@ -2742,20 +2742,15 @@ def _mutated_corpus(docs: DataFrame) -> DataFrame:
     head slot; the remaining literal sites are byte-identical to this
     body and rotate in as their heads come up (r13+).
     """
-    return docs.unionByName(_mutant_docs(docs))
-
-
-def _mutant_docs(docs: DataFrame) -> DataFrame:
-    """Just the injected near-copies: docs 0-19 with the last 2 words
-    dropped, re-keyed to doc_id+200000 (the benchmark/incoming side
-    of the cross-corpus and decontamination queries)."""
     toks = F.split(F.col("text"), " ")
-    return docs.filter(F.col("doc_id") < 20).select(
+    mutants = docs.filter(F.col("doc_id") < 20).select(
         (F.col("doc_id") + 200000).alias("doc_id"),
         F.concat_ws(
             " ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))
         ).alias("text"),
     )
+    return docs.unionByName(mutants)
+
 
 # distinct word-3-gram shingle sets per doc (twin of dedup.word_shingles)
 _SHINGLES_CTE = """
@@ -3637,10 +3632,8 @@ def q_decontaminate_ngram(spark, sf_dir):
     return S.decontaminate_ngram(corpus, benchmark, n=13).select("doc_id", "lang")
 
 
-#: shared CTE chain of the bigram LM (q_lm_score + the staged CCNet
-#: bucket query build on the same model; extracted r12 so the two
-#: oracles cannot silently diverge — the mutant-corpus lesson).
-_LM_SCORE_CTES = """toked AS (
+@_q("q_lm_score", """
+WITH toked AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), uni AS (
   SELECT w1, COUNT(*) AS c1
@@ -3655,11 +3648,7 @@ _LM_SCORE_CTES = """toked AS (
 ), scored AS (
   SELECT d.doc_id, ln((b.cb + 0.5) / (u.c1 + 0.5 * v.v)) AS logp
   FROM doc_bi d JOIN bi b USING (bg) JOIN uni u USING (w1), v
-)"""
-
-
-@_q("q_lm_score", f"""
-WITH {_LM_SCORE_CTES}
+)
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
        CAST(SUM(CAST(logp AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*)
          AS avg_logprob
@@ -5599,585 +5588,6 @@ def q_dedup_substring(spark, sf_dir):
 
 
 # =====================================================================
-# STAGED FOR r13 — q_dedup_substring_keepfirst
-# =====================================================================
-# Written in r12 alongside the keep-one election it certifies
-# (operators/dedup.removable_spans_keep_first, VERDICT r11 #4); NOT
-# yet in _QUERIES/_ORACLES because the r12 window's 50 slots are
-# fully owed (2 new heads + 5 r8 at the bound + 43 r9).  r13
-# registration is mechanical: decorate with
-# @_q("q_dedup_substring_keepfirst", _DEDUP_SUBSTRING_KEEPFIRST_ORACLE)
-# and place the name in the reserved r13 head block.  Until then
-# tests/test_oracle_parity.py drives the pair through the same
-# three-way compare as registered queries at sf0.001 and sf0.01.
-
-_DEDUP_SUBSTRING_KEEPFIRST_ORACLE = f"""
-WITH {_MUTATED_CORPUS_CTE},
-tk AS (
-  SELECT doc_id AS id, string_split(text, ' ') AS t
-  FROM all_docs WHERE text IS NOT NULL
-),
-g AS (
-  SELECT id, i AS start,
-         ('0x' || substr(md5(array_to_string(list_slice(t, i, i + 7), ' ')),
-          1, 15))::BIGINT AS fp
-  FROM tk, UNNEST(generate_series(1, len(t) - 7)) AS u(i)
-  WHERE len(t) >= 8
-),
-dup AS (
-  SELECT fp, MIN(id * 100000 + start) AS keep_key
-  FROM g GROUP BY fp HAVING COUNT(*) > 1
-),
-hits AS (
-  SELECT g.id, g.start, g.start + 7 AS e
-  FROM g JOIN dup USING (fp)
-  WHERE g.id * 100000 + g.start <> dup.keep_key
-),
-m AS (
-  SELECT id, start, e,
-         MAX(e) OVER (PARTITION BY id ORDER BY start
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-  FROM hits
-),
-isl AS (
-  SELECT id, start, e,
-         SUM(CASE WHEN pmax IS NULL OR start > pmax + 1 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY id ORDER BY start) AS island
-  FROM m
-)
-SELECT id, MIN(start) AS span_start, MAX(e) AS span_end,
-       CAST(COUNT(*) AS BIGINT) AS n_grams
-FROM isl GROUP BY id, island
-"""
-
-
-def _staged_q_dedup_substring_keepfirst(spark, sf_dir):
-    """X6ak keep-one promotion (staged for r13): the spans a
-    keep-ONE-copy ExactSubstr pass removes — Lee et al. ACL'22's
-    published semantics, vs q_dedup_substring's all-occurrences
-    report.  The survivor of every duplicated 8-gram is its global
-    first occurrence; the SQL twin orders by the composite key
-    id*100000+start, equivalent to the engine's min(struct(id,
-    start)) because every document here is under 100k tokens (max
-    100 measured across all SFs; the engine itself uses the true
-    lexicographic struct ordering with no such bound).  The mutants
-    make the survivor side interesting: every mutant (doc_id+200000)
-    shares its prefix grams with its original, so originals survive
-    and mutants carry the removable spans — plus the corpus's
-    organic cross-document repeats elect survivors by id order."""
-    from real_timetransactionaldatalakehouse_spark.operators import dedup as D
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return D.removable_spans_keep_first(
-        _mutated_corpus(docs), min_gram=8, hash_fn="md5_60"
-    )
-
-
-# Bloom-screened decontamination (r12 EXT addition): the oracle
-# replicates the APPROXIMATE screen exactly — same md5-prefix double
-# hashes, same (h1 + j*h2) mod m positions, same all-k-bits
-# membership — plus the exact confirm join, so the check holds
-# regardless of the false-positive draw (the LSH/ANN oracle
-# convention).  m_bits is deliberately SMALL (16384) so the screen's
-# false positives are visible in the certified output (n_confirmed <
-# n_screened rows) instead of a formula claim.
-_DECONTAMINATE_BLOOM_ORACLE = """
-WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-),
-bench AS (
-  SELECT string_split(array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 2, 1)), ' '), ' ') AS t
-  FROM documents WHERE doc_id < 20 AND text IS NOT NULL
-),
-bg AS (
-  -- h2 derives from h1's decimal string (the engine's one-hash gram
-  -- stream + post-explode derivation)
-  SELECT g, h1,
-         ('0x' || substr(md5(CAST(h1 AS VARCHAR)), 1, 15))::BIGINT AS h2
-  FROM (
-    SELECT DISTINCT g, ('0x' || substr(md5(g), 1, 15))::BIGINT AS h1
-    FROM bench, UNNEST(CASE WHEN len(t) >= 8
-      THEN list_transform(generate_series(1, len(t) - 7),
-                          i -> array_to_string(list_slice(t, i, i + 7), ' '))
-      ELSE [array_to_string(t, ' ')] END) AS u(g)
-  )
-),
-js AS (SELECT unnest(generate_series(0, 3)) AS j),
--- both hashes project to 57 bits before mixing (the engine's ANSI
--- no-overflow rule; 144115188075855872 = 2^57)
-bpos AS (
-  SELECT DISTINCT (h1 % 144115188075855872
-                   + j * (h2 % 144115188075855872)) % 16384 AS p
-  FROM bg, js
-),
-cg AS (
-  SELECT doc_id, g, h1,
-         ('0x' || substr(md5(CAST(h1 AS VARCHAR)), 1, 15))::BIGINT AS h2
-  FROM (
-    SELECT DISTINCT doc_id, g,
-           ('0x' || substr(md5(g), 1, 15))::BIGINT AS h1
-    FROM corpus, UNNEST(CASE WHEN len(t) >= 8
-      THEN list_transform(generate_series(1, len(t) - 7),
-                          i -> array_to_string(list_slice(t, i, i + 7), ' '))
-      ELSE [array_to_string(t, ' ')] END) AS u(g)
-  )
-),
-scr AS (
-  SELECT doc_id, g
-  FROM (SELECT doc_id, g, j,
-               (h1 % 144115188075855872
-                + j * (h2 % 144115188075855872)) % 16384 AS p
-        FROM cg, js) c
-  JOIN bpos USING (p)
-  GROUP BY doc_id, g
-  HAVING COUNT(DISTINCT j) = 4
-)
-SELECT s.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_screened,
-       CAST(SUM(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_confirmed
-FROM scr s LEFT JOIN (SELECT DISTINCT g FROM bg) b ON s.g = b.g
-GROUP BY s.doc_id
-"""
-
-
-def _staged_q_decontaminate_bloom(spark, sf_dir):
-    """X6s Bloom tier (staged for r13): benchmark decontamination
-    through a Bloom membership screen
-    (operators/sampling.bloom_contamination_report) — the shape for
-    benchmark-UNION eval sets whose distinct-gram table outgrows a
-    broadcast join while a fixed bitmap does not.  Per corpus doc:
-    distinct 8-grams passing the m=16384/k=4 screen (n_screened) and
-    surviving the exact confirm join (n_confirmed).  The benchmark is
-    the 20 drop-last-2-words mutants, so docs 0-19 confirm by
-    construction; the small bitmap makes screen false positives part
-    of the certified output (n_confirmed=0 rows), and the oracle
-    replays the identical double-hash positions, so parity certifies
-    the SCREEN, not just the exact join."""
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("text").isNotNull())
-    )
-    return Smp.bloom_contamination_report(
-        docs, _mutant_docs(docs), n=8, m_bits=16384, k=4,
-        hash_fn="md5_60"
-    )
-
-
-_PERPLEXITY_BUCKETS_ORACLE = f"""
-WITH {_LM_SCORE_CTES},
-lm AS (
-  SELECT doc_id,
-         CAST(SUM(CAST(logp AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*)
-           AS avg_logprob
-  FROM scored GROUP BY doc_id
-)
-SELECT l.doc_id, d.lang, l.avg_logprob,
-       (['head', 'middle', 'tail'])[
-         NTILE(3) OVER (PARTITION BY d.lang
-                        ORDER BY l.avg_logprob DESC, l.doc_id)
-       ] AS bucket
-FROM lm l JOIN documents d USING (doc_id)
-"""
-
-
-def _staged_q_perplexity_buckets(spark, sf_dir):
-    """X6am (staged for r13): CCNet head/middle/tail perplexity
-    bucketing (operators/text.perplexity_buckets) — equal per-language
-    thirds by mean bigram log-likelihood under the corpus LM, the
-    partition CCNet publishes and pretraining mixtures sample from.
-    Certified in the NTILE mode (deterministic total order on
-    (avg_logprob DESC, doc_id), bit-equal across engines because the
-    LM's per-doc mean is the q_lm_score DECIMAL-sum value); the
-    sketch-cutoff mode is the documented 100-TB path (one
-    percentile_approx agg + map-side fold — no per-language sort) and
-    is pytest-compared against NTILE away from bucket boundaries."""
-    from real_timetransactionaldatalakehouse_spark.operators import text as TX
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    return TX.perplexity_buckets(docs)
-
-
-# DSIR importance weights (r12 EXT addition, staged for r13): the
-# oracle replays the full hashed-ngram model — same md5_60 gram hash,
-# same bucket modulus, same smoothed single-ln log-ratio, DECIMAL-sum
-# fold — so parity certifies the model's counts AND the float
-# discipline, not just row shapes.  The target corpus is source
-# 'src1' (stands in for "quality domain"); raw is the whole corpus,
-# so src1's own documents must surface with high logw — an oracle
-# property, not a test assertion.
-#
-# The CTE chain is shared with q_dsir_resample's oracle (the
-# _LM_SCORE_CTES / _mutated_corpus discipline: one source of truth,
-# two oracles that cannot silently diverge).
-_DSIR_CTES = """toked AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-),
-cg AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(g), 1, 15))::BIGINT % 4096 AS b
-  FROM toked, UNNEST(list_concat(
-      t,
-      CASE WHEN len(t) >= 2
-        THEN list_transform(generate_series(1, len(t) - 1),
-                            i -> t[i] || ' ' || t[i + 1])
-        ELSE []::VARCHAR[] END
-  )) AS u(g)
-),
-tg AS (
-  SELECT ('0x' || substr(md5(g), 1, 15))::BIGINT % 4096 AS b
-  FROM (SELECT t FROM toked WHERE source = 'src1') s, UNNEST(list_concat(
-      t,
-      CASE WHEN len(t) >= 2
-        THEN list_transform(generate_series(1, len(t) - 1),
-                            i -> t[i] || ' ' || t[i + 1])
-        ELSE []::VARCHAR[] END
-  )) AS u(g)
-),
-raw AS (SELECT b, COUNT(*) AS cr FROM cg GROUP BY b),
-tgt AS (SELECT b, COUNT(*) AS ct FROM tg GROUP BY b),
-tot AS (SELECT (SELECT SUM(cr) FROM raw) AS tr,
-               (SELECT COALESCE(SUM(ct), 0) FROM tgt) AS tt),
-model AS (
-  SELECT r.b,
-         ln(((COALESCE(g.ct, 0)::DOUBLE + 0.5::DOUBLE)
-             * (tot.tr::DOUBLE + 2048.0::DOUBLE))
-            / ((r.cr::DOUBLE + 0.5::DOUBLE)
-               * (tot.tt::DOUBLE + 2048.0::DOUBLE))) AS lam
-  FROM raw r LEFT JOIN tgt g USING (b), tot
-),
-db AS (
-  SELECT doc_id, b, COUNT(*) AS cnt FROM cg GROUP BY doc_id, b
-),
-lw AS (
-  SELECT d.doc_id, CAST(SUM(d.cnt) AS BIGINT) AS n_grams,
-         CAST(SUM(CAST(m.lam AS DECIMAL(28,6)) * d.cnt) AS DOUBLE) AS logw
-  FROM db d JOIN model m USING (b)
-  GROUP BY d.doc_id
-)"""
-
-_DSIR_WEIGHTS_ORACLE = f"""
-WITH {_DSIR_CTES}
-SELECT doc_id, n_grams, logw FROM lw
-"""
-
-
-def _staged_q_dsir_weights(spark, sf_dir):
-    """X6an (staged for r13): DSIR hashed-ngram importance log-weights
-    (operators/sampling.dsir_logweights, Xie et al. NeurIPS'23) —
-    the published "select raw data that looks like the target domain"
-    primitive of pretraining pipelines.  Target = source 'src1', raw
-    = the full corpus; 4096 feature buckets, alpha=0.5, md5_60 gram
-    hashing for the exact DuckDB twin (the xxhash64 default is the
-    scale path).  Certified output is the raw (doc_id, n_grams,
-    logw) triple — ranking/resampling composes downstream."""
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "source", "text")
-        .filter(F.col("text").isNotNull())
-    )
-    target = docs.filter(F.col("source") == "src1")
-    return Smp.dsir_logweights(
-        docs.select("doc_id", "text"),
-        target.select("doc_id", "text"),
-        n_buckets=4096,
-        alpha=0.5,
-        hash_fn="md5_60",
-    )
-
-
-# Gumbel resampling over the DSIR weights (the "R" in DSIR): the
-# oracle extends the SHARED _DSIR_CTES chain, so the weight model
-# cannot diverge between the two certified queries; the Gumbel key
-# replays the engine exactly — same md5_60-derived uniform, same
-# -ln(-ln(u)) perturbation, same DECIMAL(28,6) rounding before the
-# (key DESC, doc_id) total order — so parity certifies the SAMPLE
-# MEMBERSHIP itself, not a distributional claim.
-_DSIR_RESAMPLE_ORACLE = f"""
-WITH {_DSIR_CTES},
-keyed AS (
-  SELECT doc_id, n_grams, logw,
-         CAST(CAST(logw / 1.0
-                   + (-ln(-ln(((('0x' || substr(md5(doc_id || ':gumbel-v1'), 1, 15))::BIGINT
-                                % 1000000)::DOUBLE + 0.5::DOUBLE) / 1000000.0::DOUBLE)))
-              AS DECIMAL(28,6)) AS DOUBLE) AS sample_key
-  FROM lw
-)
-SELECT doc_id, n_grams, logw, sample_key
-FROM keyed ORDER BY sample_key DESC, doc_id LIMIT 100
-"""
-
-
-def _staged_q_dsir_resample(spark, sf_dir):
-    """X6an resampling half (staged for r13): Gumbel top-k over the
-    DSIR log-weights (operators/sampling.gumbel_topk + dsir_logweights
-    — Xie et al. NeurIPS'23's actual selection step).  k=100 documents
-    sampled without replacement proportionally-ish to exp(logw), via
-    the deterministic hash-derived Gumbel race (never rand(): the
-    retry-stability rule).  Plan: the DSIR pipeline + one map-only key
-    projection + TakeOrderedAndProject — per-partition k-heaps, k-row
-    driver merge, no global sort.  The oracle extends _DSIR_CTES with
-    the identical key arithmetic, so the certified rows are the exact
-    sample membership at both SFs."""
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "source", "text")
-        .filter(F.col("text").isNotNull())
-    )
-    lw = Smp.dsir_logweights(
-        docs.select("doc_id", "text"),
-        docs.filter(F.col("source") == "src1").select("doc_id", "text"),
-        n_buckets=4096,
-        alpha=0.5,
-        hash_fn="md5_60",
-    )
-    return Smp.gumbel_topk(lw, "logw", 100, seed="gumbel-v1")
-
-
-# C4 line-level cleaning (r12 EXT addition, staged for r13): the
-# synthetic corpus has no newlines or punctuation, so the query
-# wrapper deterministically LINES the corpus first (6-token chunks;
-# a chunk ends in '.' iff md5_60(doc_id:i:line) % 3 > 0 — so ~1/3 of
-# lines fail the terminal-punctuation rule), plants 'lorem ipsum'
-# pages at doc_id % 37 = 0 and curly-bracket code pages at
-# doc_id % 41 = 0, and the oracle replays the identical lining +
-# the filter — certifying BOTH tiers of the C4 rules row-for-row.
-#
-# The lining CTEs are SHARED with q_dedup_lines' oracle (plain-string
-# concatenation, not f-strings — the planted code page contains
-# braces); the Spark-side twin is _lined_corpus() below.  One source
-# of truth per corpus transform — the _mutated_corpus lesson.
-_LINED_CORPUS_CTES = """toked AS (
-  SELECT doc_id, string_split(text, ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-),
-lined AS (
-  SELECT doc_id,
-     array_to_string(list_transform(generate_series(1, (len(t) + 5) // 6),
-        i -> array_to_string(list_slice(t, (i - 1) * 6 + 1, (i - 1) * 6 + 6), ' ')
-             || CASE WHEN ('0x' || substr(md5(doc_id || ':' || i || ':line'), 1, 15))::BIGINT % 3 > 0
-                THEN '.' ELSE '' END
-     ), chr(10))
-     || CASE WHEN doc_id % 37 = 0
-        THEN chr(10) || 'this page has lorem ipsum inside it okay.' ELSE '' END
-     || CASE WHEN doc_id % 41 = 0
-        THEN chr(10) || 'var f = function() { return 1; }' ELSE '' END AS text
-  FROM toked
-)"""
-
-
-def _lined_corpus(docs):
-    """Spark twin of _LINED_CORPUS_CTES: deterministically line a
-    (doc_id, text) corpus — 6-token chunks, md5-chosen terminal
-    punctuation, planted lorem (doc_id%37=0) and code (doc_id%41=0)
-    pages.  Shared by q_c4_line_filter and q_dedup_lines."""
-    from real_timetransactionaldatalakehouse_spark.operators.dedup import _md5_60
-
-    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("__t"))
-    n_lines = F.floor((F.size("__t") + F.lit(5)) / F.lit(6)).cast("int")
-
-    def mk_line(i):
-        start = (i - F.lit(1)) * F.lit(6) + F.lit(1)
-        base = F.array_join(F.slice(F.col("__t"), start, F.lit(6)), " ")
-        key = F.concat(
-            F.col("doc_id").cast("string"),
-            F.lit(":"),
-            i.cast("string"),
-            F.lit(":line"),
-        )
-        punct = F.when(
-            F.pmod(_md5_60(key), F.lit(3)) > 0, F.lit(".")
-        ).otherwise(F.lit(""))
-        return F.concat(base, punct)
-
-    lined = F.array_join(
-        F.transform(F.sequence(F.lit(1), n_lines), mk_line), "\n"
-    )
-    text2 = F.concat(
-        lined,
-        F.when(
-            F.col("doc_id") % 37 == 0,
-            F.lit("\nthis page has lorem ipsum inside it okay."),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 41 == 0,
-            F.lit("\nvar f = function() { return 1; }"),
-        ).otherwise(F.lit("")),
-    )
-    return toked.select("doc_id", text2.alias("text"))
-
-
-_C4_LINE_FILTER_ORACLE = "WITH " + _LINED_CORPUS_CTES + """,
-ls0 AS (
-  SELECT doc_id, text, string_split(text, chr(10)) AS ls FROM lined
-),
-flt AS (
-  SELECT doc_id,
-         len(ls) AS n_in,
-         list_filter(ls, l ->
-            substr(l, -1) IN ('.', '!', '?', '"')
-            AND len(list_filter(string_split(l, ' '), w -> w != '')) >= 5
-            AND NOT contains(lower(l), 'javascript')) AS kl
-  FROM ls0
-  WHERE NOT contains(lower(text), 'lorem ipsum')
-    AND NOT contains(text, '{')
-)
-SELECT doc_id, array_to_string(kl, chr(10)) AS clean_text,
-       CAST(n_in AS BIGINT) AS n_lines_in,
-       CAST(len(kl) AS BIGINT) AS n_lines_kept
-FROM flt WHERE len(kl) >= 3
-"""
-
-
-def _staged_q_c4_line_filter(spark, sf_dir):
-    """X6ao (staged for r13): C4 line-level cleaning
-    (operators/text.c4_line_filter, Raffel et al. JMLR'20 section
-    2.2) — terminal-punctuation + min-words + javascript line rules,
-    lorem-ipsum / curly-bracket / min-surviving-lines page rules,
-    row-dropping output.  The corpus is deterministically lined
-    (6-token chunks, hash-chosen punctuation) and salted with planted
-    lorem/code pages so every rule fires at sf0.01; the oracle
-    replays the lining and the filter exactly."""
-    from real_timetransactionaldatalakehouse_spark.operators import text as TX
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    return TX.c4_line_filter(_lined_corpus(docs)).select(
-        "doc_id", "clean_text", "n_lines_in", "n_lines_kept"
-    )
-
-
-# Cross-document line dedup (r12 EXT addition, staged for r13): runs
-# on the SAME deterministically-lined corpus as q_c4_line_filter
-# (shared _LINED_CORPUS_CTES / _lined_corpus) — the planted lorem and
-# code pages are exact cross-document repeated lines, and the short
-# unpunctuated tail chunks repeat organically, so both the survivor
-# election and the multi-document drop fire at sf0.01.  The oracle's
-# first-occurrence key is doc_id * 100000 + pos — equivalent to the
-# engine's min(struct(id, pos)) because every page here has far fewer
-# than 100000 lines (<= ~20 measured; the engine itself uses the true
-# lexicographic struct ordering with no such bound — the
-# q_dedup_substring_keepfirst convention).
-_DEDUP_LINES_ORACLE = "WITH " + _LINED_CORPUS_CTES + """,
-ls AS (
-  SELECT doc_id, string_split(text, chr(10)) AS ls FROM lined
-),
-st AS (
-  SELECT doc_id, i - 1 AS pos,
-         ('0x' || substr(md5(ls[i]), 1, 15))::BIGINT AS h
-  FROM ls, UNNEST(generate_series(1, len(ls))) AS u(i)
-),
-occ AS (
-  SELECT h, COUNT(*) AS n, MIN(doc_id * 100000 + pos) AS first_k
-  FROM st GROUP BY h
-),
-dp AS (
-  SELECT s.doc_id, list(s.pos) AS dp
-  FROM st s JOIN occ o USING (h)
-  WHERE o.n > 1 AND s.doc_id * 100000 + s.pos != o.first_k
-  GROUP BY s.doc_id
-)
-SELECT l.doc_id,
-       array_to_string(list_transform(
-          list_filter(generate_series(1, len(l.ls)),
-                      i -> d.dp IS NULL OR NOT list_contains(d.dp, i - 1)),
-          i -> l.ls[i]), chr(10)) AS clean_text,
-       CAST(len(l.ls) AS BIGINT) AS n_lines_in,
-       CAST(len(list_filter(generate_series(1, len(l.ls)),
-                      i -> d.dp IS NULL OR NOT list_contains(d.dp, i - 1)))
-            AS BIGINT) AS n_lines_kept
-FROM ls l LEFT JOIN dp d USING (doc_id)
-"""
-
-
-def _staged_q_dedup_lines(spark, sf_dir):
-    """X6aq (staged for r13): cross-document LINE dedup — the CCNet
-    paragraph-hash dedup step (operators/dedup.drop_repeated_lines,
-    Wenzek et al. LREC'20 section 4.1; keep="first" spares the global
-    minimum (id, pos) occurrence).  Text never shuffles: one keyed
-    line-hash count agg with map-side partials (no COUNT window —
-    boilerplate hashes are the heavy keys), the survivor election in
-    the SAME aggregation, dropped POSITIONS joined back narrow,
-    map-side position-filter reconstruction.  The oracle replays the
-    hash, the count, the composite-key election, and the rebuild."""
-    from real_timetransactionaldatalakehouse_spark.operators import dedup as D
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    return D.drop_repeated_lines(
-        _lined_corpus(docs), max_occ=1, keep="first", hash_fn="md5_60"
-    ).select("doc_id", "clean_text", "n_lines_in", "n_lines_kept")
-
-
-#: r13 registration queue: name -> (query fn, oracle SQL)
-_STAGED_R13 = {
-    "q_dedup_substring_keepfirst": (
-        _staged_q_dedup_substring_keepfirst,
-        _DEDUP_SUBSTRING_KEEPFIRST_ORACLE,
-    ),
-    "q_decontaminate_bloom": (
-        _staged_q_decontaminate_bloom,
-        _DECONTAMINATE_BLOOM_ORACLE,
-    ),
-    "q_perplexity_buckets": (
-        _staged_q_perplexity_buckets,
-        _PERPLEXITY_BUCKETS_ORACLE,
-    ),
-    "q_dsir_weights": (
-        _staged_q_dsir_weights,
-        _DSIR_WEIGHTS_ORACLE,
-    ),
-    "q_dsir_resample": (
-        _staged_q_dsir_resample,
-        _DSIR_RESAMPLE_ORACLE,
-    ),
-    "q_c4_line_filter": (
-        _staged_q_c4_line_filter,
-        _C4_LINE_FILTER_ORACLE,
-    ),
-    "q_dedup_lines": (
-        _staged_q_dedup_lines,
-        _DEDUP_LINES_ORACLE,
-    ),
-}
-
-
-# (r12: the _STAGED_R12 queue emptied — both staged queries are now
-# registered above and hold the reserved window head slots.  The r13
-# queue is _STAGED_R13, defined next to q_dedup_substring.)
-
-
-# =====================================================================
 # Driver contract surface
 # =====================================================================
 
@@ -6213,9 +5623,9 @@ _STAGED_R13 = {
 #     (rows-only summaries, r10 cohort) convert from boolean-column
 #     to row-dropping form per VERDICT r11 #6; they take the r13
 #     head slots reserved below.
-#   - Everything else is net-new surface (max_occ cap, keep="first"
-#     trim, semantic_dedup validate=) that is opt-in / default-off,
-#     with certified defaults pytest-pinned unchanged.
+#   - Everything else was net-new surface (semantic_dedup
+#     validate=) that is opt-in / default-off, with certified
+#     defaults pytest-pinned unchanged.
 #
 # SLOT BUDGET after r12: freshness ledger reads 2 r9 (q_window_rank_stats
 # q_zscore_norm — displaced here, bound r13, MUST head r13), 47 r10
@@ -6223,18 +5633,15 @@ _STAGED_R13 = {
 # head r13 per the rotation rule), 50 r11 (bound r15), 50 r12 + the 3
 # changed r10 summaries certified rows-only this round = 152 total.
 # r13 window therefore = 2 displaced r9 + the 3 changed r10 summaries
-# + the 7 staged new queries (_STAGED_R13 — new names enter at the
-# head per the rotation rule) + the 38 oldest unchanged r10 greens;
-# 9 youngest r10 slide to r14 (legal: r10's bound is r14).  The
-# cascade stays within bounds
+# + 7 slots reserved for new queries that were never registered (the
+# rotation ended with r14; they were deleted) + the 38 oldest
+# unchanged r10 greens; 9 youngest r10 slide to r14 (legal: r10's
+# bound is r14).  The cascade stays within bounds
 # through r15: r14 = remaining r10 + oldest r11, r15 = remaining r11
 # + oldest r12.
-# The per-round sf0.001+sf0.01 pytest parity sweep remains the
-# documented backstop for everything outside the window, and
-# tools/parity_sweep.py commits a FULL-registry driver-style artifact
-# before each round closes (PARITY_r12.json — generated on the final
-# r12 tree, not at mid-round edit time), so every query carries a
-# current-round reproducible record regardless of the 50-slot budget.
+# The sf0.001+sf0.01 pytest parity sweep (tests/test_oracle_parity.py)
+# remains the backstop for everything outside the window; the
+# PARITY_r*.json files are the full-registry artifacts of past rounds.
 _CHECK_FIRST: list[str] = [
     # -- the 2 newly registered queries (rotation-rule head slots)
     "q_split_assign_safe",
@@ -6298,11 +5705,7 @@ _CHECK_FIRST: list[str] = [
 #   3 r12-changed rows-only summaries (row-dropping conversion,
 #   VERDICT r11 #6):
 #     q_table_stats q_sorted_write q_bucket_pruned_lookup
-#   7 staged new queries (_STAGED_R13, both-SF parity-certified
-#   throughout r12):
-#     q_dedup_substring_keepfirst q_decontaminate_bloom
-#     q_perplexity_buckets q_dsir_weights q_dsir_resample
-#     q_c4_line_filter q_dedup_lines
+#   7 slots for new queries (never registered; deleted)
 # then the 38 oldest r10 greens (alphabetical within the cohort):
 #     q_agg_binned_heatmap q_agg_conditional_counts q_agg_count_by_key
 #     q_agg_global q_agg_max_ts q_agg_percentile q_agg_sketches

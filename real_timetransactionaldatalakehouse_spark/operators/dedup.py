@@ -362,8 +362,8 @@ def minhash_neardup_pairs(
 
 def _sig_agreement_est(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
     """MinHash Jaccard estimate: fraction of agreeing signature rows —
-    the ONE definition both the single-corpus and cross-corpus pair
-    paths share."""
+    the ONE definition the single-corpus and cross-corpus pair paths
+    and the streaming ingest's index probe share."""
     return (
         F.size(
             F.filter(
@@ -1233,77 +1233,21 @@ def drop_near_duplicates(
     )
 
 
-def _mark_duplicated(grams: DataFrame, max_occ: int | None) -> DataFrame:
+def _mark_duplicated(grams: DataFrame) -> DataFrame:
     """Mark each gram/passage row with ``__dup`` = "its fingerprint
     occurs more than once anywhere in the corpus".
 
-    ``max_occ=None`` (default): one ``COUNT() OVER (PARTITION BY
-    __fp)`` window — the single-consumer shape
-    :func:`passage_repetition` measured fastest (0.63 s -> 0.32 s at
-    sf0.1 vs agg+join), but a corpus-universal boilerplate gram (a
-    license header in 10% of all documents) makes one window
-    partition straggler-sized, and AQE cannot split a window
-    partition the way it splits a skewed join.
-
-    ``max_occ=N`` (the 100-TB skew guard, r12 — VERDICT r11 #3 made
-    the prose mitigation a parameter): an exact per-fingerprint count
-    (partial agg, map-side combine — skew-FREE by construction)
-    finds fingerprints with count > N; those are duplicated BY
-    CONSTRUCTION (N >= 1 implies count >= 2), so their dup bit needs
-    no window at all — a broadcast left join flags them, and inside
-    the window they are SALTED across ceil(count/N) sub-partitions,
-    bounding EVERY window partition to ~N rows (the salted rows'
-    window count is garbage, but the heavy flag ORs over it).  The
-    heavy list is tiny (boilerplate is few distinct grams repeated
-    massively: <= total_grams / N entries), hence the broadcast.
-    Output is IDENTICAL to the default for ANY max_occ >= 1
-    (pytest-pinned) — the knob trades the single-consumer stream
-    (the gram stream is re-read once for the count) for a bounded
-    window partition.  Measured on a boilerplate-choked 400k-doc
-    corpus (16 unique + 16 universal license tokens per doc: 9 hot
-    fps x 400k occurrences over ~6.8M unique grams, local[32]):
-    uncapped 6.4 s, capped 21->14 s — locally the extra consumer
-    COSTS more than the skew, because 32 in-memory threads do not
-    straggle on a 400k-row partition.  Flip it when one fingerprint's
-    occurrence count approaches executor-partition scale (a license
-    header in 10% of a 10^9-doc corpus = a 10^8-row window partition
-    that cannot fit, let alone sort, on one core), not by default.
+    One ``COUNT() OVER (PARTITION BY __fp)`` window — the
+    single-consumer shape :func:`passage_repetition` measured fastest
+    (0.63 s -> 0.32 s at sf0.1 vs agg+join).  Known limit: a
+    corpus-universal boilerplate gram (a license header in 10% of all
+    documents) makes one window partition straggler-sized, and AQE
+    cannot split a window partition the way it splits a skewed join.
     """
     from pyspark.sql import Window
 
-    occ_dup = F.count(F.lit(1)).over(Window.partitionBy("__fp")) > 1
-    if max_occ is None:
-        return grams.withColumn("__dup", occ_dup)
-    if max_occ < 1:
-        raise ValueError("max_occ must be >= 1 (or None to disable)")
-    heavies = (
-        grams.groupBy("__fp")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > max_occ)
-        .select(
-            "__fp",
-            F.ceil(F.col("__c") / max_occ).cast("int").alias("__nsalt"),
-        )
-    )
-    cols = grams.columns
-    salted = (
-        grams.join(F.broadcast(heavies), "__fp", "left")
-        .withColumn(
-            "__salt",
-            F.when(
-                F.col("__nsalt").isNotNull(),
-                F.pmod(F.xxhash64(*cols), F.col("__nsalt").cast("long")),
-            ).otherwise(F.lit(0)),
-        )
-    )
-    salted_dup = (
-        F.count(F.lit(1)).over(Window.partitionBy("__fp", "__salt")) > 1
-    )
-    return (
-        salted.withColumn(
-            "__dup", F.col("__nsalt").isNotNull() | salted_dup
-        )
-        .drop("__nsalt", "__salt")
+    return grams.withColumn(
+        "__dup", F.count(F.lit(1)).over(Window.partitionBy("__fp")) > 1
     )
 
 
@@ -1313,7 +1257,6 @@ def passage_repetition(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "md5_60",
-    max_occ: int | None = None,
 ) -> DataFrame:
     """Inter-document PASSAGE-level duplication profile — the
     boilerplate/near-template signal MassiveText- and
@@ -1342,10 +1285,8 @@ def passage_repetition(
     output); the final per-document rollup is one more narrow shuffle
     on the id.  A pathologically hot fingerprint (one passage shared
     by a large fraction of all documents) skews the window partition
-    where the old agg's map-side combine would not — ``max_occ=N``
-    (r12) is the guard: see :func:`_mark_duplicated` (exact
-    heavy-hitter pre-pass, heavies marked dup by construction and
-    kept out of the window, output identical for any N >= 1).
+    where the old agg's map-side combine would not (see
+    :func:`_mark_duplicated`).
     ``hash_fn='md5_60'`` keeps the exact DuckDB twin; production runs
     use ``'xxhash64'`` (~10x cheaper, same collision argument as
     every gram pipeline here).
@@ -1374,7 +1315,7 @@ def passage_repetition(
         ).alias("__fp"),
     )
     return (
-        _mark_duplicated(fps, max_occ)
+        _mark_duplicated(fps)
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),
@@ -1390,7 +1331,6 @@ def substring_dup_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "md5_60",
-    max_occ: int | None = None,
 ) -> DataFrame:
     """Exact duplicated-SUBSTRING spans — the ExactSubstr dedup class
     (Lee et al., "Deduplicating Training Data Makes Language Models
@@ -1422,11 +1362,8 @@ def substring_dup_spans(
     never re-tokenizes per position), so the one data-sized shuffle
     carries ``(fp, id, start)`` rows — never text.  Occurrence
     marking is the same single-consumer COUNT window as
-    :func:`passage_repetition`, with the same ``max_occ`` skew guard
-    (r12): see :func:`_mark_duplicated` — heavies are duplicated by
-    construction, so capping bounds the window partition without
-    changing one output row;
-    the span merge is a per-document prefix window (partition by id,
+    :func:`passage_repetition` (same skew limit, see
+    :func:`_mark_duplicated`); the span merge is a per-document prefix window (partition by id,
     order by start — classic gaps-and-islands), linear and
     skew-bounded by document length.  ``hash_fn="md5_60"`` keeps the
     exact DuckDB twin; production runs use ``"xxhash64"`` (~10x
@@ -1435,7 +1372,7 @@ def substring_dup_spans(
     grams = _sliding_grams(df, int(min_gram), text_col, id_col, hash_fn)
     L = int(min_gram)
     hits = (
-        _mark_duplicated(grams, max_occ)
+        _mark_duplicated(grams)
         .filter(F.col("__dup"))
         .select("id", "start", (F.col("start") + L - 1).alias("end"))
     )
@@ -1507,150 +1444,3 @@ def _merge_islands(hits: DataFrame) -> DataFrame:
         .select("id", "span_start", "span_end", "n_grams")
     )
 
-
-def removable_spans_keep_first(
-    df: DataFrame,
-    min_gram: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
-) -> DataFrame:
-    """Spans to REMOVE under keep-ONE-copy ExactSubstr — Lee et al.
-    ACL'22's published semantics (their suffix-array pass keeps one
-    occurrence of each duplicated substring; r12, VERDICT r11 #4):
-    for every duplicated gram fingerprint the GLOBAL FIRST occurrence
-    (min ``(id, start)`` — deterministic, total order) survives;
-    every other occurrence is marked removable, and marked ranges
-    merge per document into maximal spans (same output schema as
-    :func:`substring_dup_spans`).
-
-    A region duplicated across documents therefore keeps exactly the
-    copy in the lowest-id document (all its grams' first occurrences
-    sit in that copy); an intra-document repeat keeps its earliest
-    offset.  Boundary honesty: election is per GRAM, so two documents
-    that each share a different half of a third document's span keep
-    nothing of their own halves — span-level survivor election would
-    need occurrence-set equality, which exact substring semantics
-    doesn't promise.
-
-    Scale shape: the election replaces the COUNT window with ONE
-    partial aggregation per fingerprint (``count`` + ``min(struct(id,
-    start))`` — map-side combine, skew-free) joined back to the gram
-    stream on the fingerprint; AQE's skew-join split applies to that
-    join where it never could to a window partition, so this path
-    needs no ``max_occ`` guard.
-    """
-    L = int(min_gram)
-    grams = _sliding_grams(df, L, text_col, id_col, hash_fn)
-    dup_first = (
-        grams.groupBy("__fp")
-        .agg(
-            F.count(F.lit(1)).alias("__c"),
-            F.min(F.struct(F.col("id"), F.col("start"))).alias("__keep"),
-        )
-        .filter(F.col("__c") > 1)
-        .select("__fp", "__keep")
-    )
-    hits = (
-        grams.join(dup_first, "__fp")
-        .filter(
-            ~(
-                (F.col("id") == F.col("__keep.id"))
-                & (F.col("start") == F.col("__keep.start"))
-            )
-        )
-        .select("id", "start", (F.col("start") + L - 1).alias("end"))
-    )
-    return _merge_islands(hits)
-
-
-def drop_repeated_lines(
-    df: DataFrame,
-    max_occ: int = 1,
-    keep: str = "first",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "clean_text",
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Cross-document LINE (paragraph) deduplication — the CCNet
-    paragraph-hash dedup step (Wenzek et al. LREC'20 section 4.1;
-    RefinedWeb applies the same rule to boilerplate lines): a line
-    whose corpus-wide occurrence count exceeds ``max_occ`` is removed
-    from every document — except, under ``keep="first"``, its global
-    first occurrence (minimum ``(id, position)``, the Lee-et-al
-    survivor election :func:`removable_spans_keep_first` uses);
-    ``keep="none"`` drops every occurrence (the boilerplate posture —
-    a line repeated across the corpus is navigation/license chrome by
-    definition).
-
-    Complements the existing dedup tiers: X6ab profiles chunk-aligned
-    passages, X6ak marks ANY-offset duplicated token spans — this
-    operator acts on the natural LINE structure real corpora carry
-    (and CCNet's pipeline actually shipped).
-
-    100-TB shape: text never shuffles.  The line stream carries
-    ``(id, pos, hash)`` (the hash via ``hash_fn`` — "md5_60" for the
-    SQL twin); occurrence counting is ONE keyed count agg with
-    map-side partials (no COUNT window — boilerplate hashes are
-    exactly the heavy keys, and a partial-agg count collapses them
-    map-side where a window would straggle); the survivor election is
-    a ``min(struct(id, pos))`` in the SAME aggregation; only the
-    DROPPED positions travel back — a per-doc int array bounded by
-    the doc's line count, attached with one narrow join — and the
-    text is reconstructed map-side by position filter.  Documents
-    with no dropped line pass through the left join untouched.
-
-    Output: every input row, with ``out_col``, ``n_lines_in``,
-    ``n_lines_kept`` added.
-    """
-    if keep not in ("first", "none"):
-        raise ValueError(f'keep must be "first" or "none", got {keep!r}')
-    if max_occ < 1:
-        raise ValueError(f"max_occ must be >= 1, got {max_occ}")
-    # split-count-guarded spread (sources.fan_out): a single-row-group
-    # file otherwise runs the whole line-hash stream in ONE task (the
-    # decontaminate_ngram precedent)
-    from ..sources import fan_out
-
-    df = fan_out(df)
-    hasher = TOKEN_HASHES[hash_fn]
-    lines = F.split(F.col(text_col), "\r?\n")
-    base = df.withColumn("__lines", lines)
-    stream = base.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode("__lines").alias("__pos", "__line"),
-    ).select("__id", "__pos", hasher(F.col("__line")).alias("__h"))
-    occ = stream.groupBy("__h").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.min(F.struct("__id", "__pos")).alias("__first"),
-    )
-    hot = occ.filter(F.col("__n") > max_occ)
-    drops = stream.join(hot, "__h")
-    if keep == "first":
-        drops = drops.filter(
-            ~(
-                (F.col("__id") == F.col("__first.__id"))
-                & (F.col("__pos") == F.col("__first.__pos"))
-            )
-        )
-    drop_pos = drops.groupBy("__id").agg(
-        F.collect_list("__pos").alias("__drop")
-    )
-    joined = base.join(
-        drop_pos, base[id_col] == drop_pos["__id"], "left"
-    ).drop("__id")
-    keep_idx = F.filter(
-        F.sequence(F.lit(0), F.size("__lines") - 1),
-        lambda i: F.col("__drop").isNull()
-        | ~F.array_contains(F.col("__drop"), i),
-    )
-    kept = F.transform(
-        keep_idx, lambda i: F.element_at(F.col("__lines"), i + F.lit(1))
-    )
-    return (
-        joined.withColumn(out_col, F.array_join(kept, "\n"))
-        .withColumn("n_lines_in", F.size("__lines").cast("long"))
-        .withColumn("n_lines_kept", F.size(kept).cast("long"))
-        .drop("__lines", "__drop")
-    )

@@ -239,22 +239,17 @@ def _gram_hashes(
     text_col: str,
     id_col: str,
     n: int,
-    h1_of=None,
 ) -> DataFrame:
     """Distinct token n-gram hashes per document, ``(out_id, __h)``
-    rows — the shared reduction of :func:`decontaminate_ngram`,
-    :func:`contamination_report` and the Bloom screen's
-    :func:`_gram_pairs` (r12: the Bloom path reuses THIS body rather
-    than copying it — the mutant-corpus divergence lesson).
+    rows — the shared reduction of :func:`decontaminate_ngram` and
+    :func:`contamination_report`.
 
     Hashes the token SLICES directly (r6): building the n-word concat
     string per position only to hash it paid the string churn for
     nothing — ``xxhash64`` over the array slice has the same equality
     classes (elementwise), and only hash equality matters for these
     engine-internal joins (measured 0.83 s -> 0.63 s at sf0.1 on the
-    decontaminate pass, identical output).  ``h1_of`` overrides the
-    per-slice hash for callers that need an ANSI-SQL-reproducible
-    gram hash (the md5_60 string mode).  The token array is
+    decontaminate pass, identical output).  The token array is
     materialized as its own projection so the interpreted transform
     lambda does not re-split the text per position (the winnowing-fix
     defect class).  Documents shorter than ``n`` tokens keep
@@ -271,8 +266,6 @@ def _gram_hashes(
     # 4/8-way ~0.63-0.64 s vs 32-way >= 0.75 s; the session layout
     # grows with input, well-split tables skip at the guard
     src = fan_out(df)
-    if h1_of is None:
-        h1_of = F.xxhash64
     toks = tokens(text_col)
     tdf = src.select(F.col(id_col).alias(out_id), toks.alias("__toks"))
     tk = F.col("__toks")
@@ -281,10 +274,10 @@ def _gram_hashes(
         F.array_distinct(
             F.transform(
                 F.sequence(F.lit(1), F.size(tk) - (n - 1)),
-                lambda i: h1_of(F.slice(tk, i, n)),
+                lambda i: F.xxhash64(F.slice(tk, i, n)),
             )
         ),
-    ).otherwise(F.array(h1_of(tk)))
+    ).otherwise(F.array(F.xxhash64(tk)))
     return tdf.select(out_id, F.explode(grams).alias("__h"))
 
 
@@ -328,190 +321,6 @@ def decontaminate_ngram(
         .distinct()
     )
     return corpus.join(contaminated, id_col, "left_anti")
-
-
-def _gram_pairs(
-    df: DataFrame,
-    out_id: str,
-    text_col: str,
-    id_col: str,
-    n: int,
-    hash_fn: str,
-) -> DataFrame:
-    """Distinct token n-grams per document as DOUBLE-hash pairs
-    ``(out_id, __h1, __h2)`` — the Kirsch-Mitzenmacher base for the
-    Bloom screen (k derived positions from two hashes behave like k
-    independent hashes; Kirsch & Mitzenmacher, ESA'06).
-
-    The gram stream is :func:`_gram_hashes` itself — one hash per
-    gram, ``array_distinct`` over longs (the struct-pair first draft
-    measured 3x slower on the distinct alone; a copied body would
-    re-create the mutant-corpus divergence hazard) — plus one narrow
-    post-explode projection deriving the second hash from the first
-    (h2 = hash(h1), the standard double-hashing construction when
-    re-reading the key is the expensive part).
-    ``hash_fn="xxhash64"`` hashes token slices; ``"md5_60"`` hashes
-    the joined gram string and derives h2 as md5_60 of h1's DECIMAL
-    STRING, so the whole screen has an exact ANSI-SQL twin."""
-    if hash_fn == "xxhash64":
-        h1_of = None  # _gram_hashes' native slice hash
-
-        def h2_of(h1):
-            return F.xxhash64(h1)
-    elif hash_fn == "md5_60":
-        from .dedup import TOKEN_HASHES
-
-        hasher = TOKEN_HASHES["md5_60"]
-
-        def h1_of(sl):
-            return hasher(F.concat_ws(" ", sl))
-
-        def h2_of(h1):
-            return hasher(h1.cast("string"))
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    base = _gram_hashes(df, out_id, text_col, id_col, n, h1_of=h1_of)
-    return base.select(
-        out_id,
-        F.col("__h").alias("__h1"),
-        h2_of(F.col("__h")).alias("__h2"),
-    )
-
-
-#: both hashes project to their low 57 bits before mixing so
-#: h1' + j*h2' <= 2^57 + 31*2^57 = 2^62 never overflows a signed long
-#: under ANSI mode (k is capped at 32 accordingly); 57 bits is far
-#: beyond any practical m_bits, so the projection costs no position
-#: entropy.
-_BLOOM_HASH_MOD = 1 << 57
-
-
-def _bloom_pos(j: int, m_bits: int):
-    """Position j of the double-hash scheme:
-    (h1' + j*h2') mod m over the 57-bit hash projections."""
-    mod = F.lit(_BLOOM_HASH_MOD).cast("long")
-    return F.pmod(
-        F.pmod(F.col("__h1"), mod)
-        + F.lit(j).cast("long") * F.pmod(F.col("__h2"), mod),
-        F.lit(m_bits).cast("long"),
-    )
-
-
-def bloom_contamination_report(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    m_bits: int = 1 << 20,
-    k: int = 4,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Bloom-SCREENED benchmark decontamination report (r12): per
-    corpus document, how many of its distinct ``n``-grams pass an
-    ``m_bits``/``k`` Bloom membership test against the benchmark's
-    gram set (``n_screened``) and how many are TRUE matches confirmed
-    by the exact join (``n_confirmed``).  Only documents with
-    ``n_screened > 0`` appear; ``n_confirmed <= n_screened`` always,
-    and the gap is the screen's false-positive cost, visible in the
-    output instead of argued from the formula.
-
-    Why this exists next to :func:`decontaminate_ngram`: the exact
-    operator broadcasts the benchmark's DISTINCT GRAM HASHES as a
-    join hash table — perfect while eval sets are thousands of
-    documents, but decontaminating against a UNION of benchmarks or
-    a sibling corpus (10^8+ distinct grams ~ multiple GB of hash
-    table) outgrows a broadcast join long before it outgrows a Bloom
-    bitmap (10^9 bits = 128 MB at ~1% fp with k=4 and one bit per
-    3.4 grams).  The screen is MAP-ONLY over the corpus (k O(1)
-    element_at + bit_get probes of an array<long> literal,
-    whole-stage codegen, zero shuffle); only screen SURVIVORS —
-    benchmark-overlap-sized, not corpus-sized — reach the exact
-    confirm join, whose broadcast-or-shuffle choice is left to AQE.
-    False positives therefore cost extra CONFIRM work, never
-    correctness.
-
-    Engineering bounds, stated honestly: the bitmap is folded into
-    64-bit words by one bit_or aggregate (map-side combine) and
-    collected as <= m_bits/64 rows, then shipped as ONE array<long>
-    literal — metadata-sized up to m_bits ~ 2^27 (16 MB plan
-    payload); past that, move the bitmap into an EXT-tier Arrow
-    kernel over a SparkContext broadcast (the repo's pandas_udf
-    discipline) rather than growing the literal.
-    ``hash_fn="md5_60"`` makes screen AND confirm exactly
-    reproducible in ANSI SQL (the certified-query mode);
-    ``"xxhash64"`` is the production default.
-
-    Output: ``(id_col, n_screened, n_confirmed)``, one row per
-    screened document.
-    """
-    if m_bits < 64 or m_bits % 64 or k < 1 or k > 32:
-        raise ValueError(
-            "m_bits must be a positive multiple of 64 and k in [1, 32]")
-    b = _gram_pairs(benchmark, "__bid", text_col, id_col, n, hash_fn)
-    # bitmap build: positions fold into 64-bit WORDS distributively —
-    # one bit_or aggregate (map-side combine, skew-free) down to
-    # <= m_bits/64 rows, so the driver collects word rows, not one row
-    # per distinct position; the collected VOLUME is the bitmap's
-    # information content and the irreducible driver cost of this
-    # operator.
-    word_rows = (
-        b.select(
-            F.explode(
-                F.array(*[_bloom_pos(j, m_bits) for j in range(k)])
-            ).alias("p")
-        )
-        .select(
-            F.floor(F.col("p") / 64).cast("long").alias("w"),
-            F.pmod(F.col("p"), F.lit(64)).cast("int").alias("o"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or(F.expr(
-            "shiftleft(CAST(1 AS BIGINT), o)")).alias("bits"))
-        .collect()
-    )
-    words = [0] * (m_bits // 64)
-    for r in word_rows:
-        words[int(r["w"])] = int(r["bits"])
-    # ship the bitmap as a ONE-ROW broadcast (the spike-fold pattern):
-    # each executor receives the array<long> once and every gram probes
-    # it with O(1) element_at + bit_get.  The two rejected encodings,
-    # from measurement (r12): a string literal probed by substr is
-    # O(position) per probe (UTF8String resolves codepoint offsets by
-    # scanning — quadratic screen, hung at m=2^22), and F.lit(list)
-    # builds a CreateArray of m/64 child literals (a 131k-expression
-    # plan at m=2^23 — minutes of analysis/codegen before the first
-    # task).
-    bitmap_df = corpus.sparkSession.createDataFrame(
-        [(words,)], "__bloom_bits array<bigint>"
-    )
-    bits_arr = F.col("__bloom_bits")
-
-    cg = _gram_pairs(corpus, id_col, text_col, id_col, n,
-                     hash_fn).crossJoin(F.broadcast(bitmap_df))
-    screen_pred = None
-    for j in range(k):  # k is small and static: unrolled AND, codegen
-        pos = _bloom_pos(j, m_bits)
-        word = F.element_at(bits_arr, F.floor(pos / 64).cast("int") + 1)
-        c = F.bit_get(word, F.pmod(pos, F.lit(64)).cast("int")) == 1
-        screen_pred = c if screen_pred is None else (screen_pred & c)
-    screened = cg.filter(screen_pred).drop("__bloom_bits")
-    # ONE pass over the screened stream (r12 review fix: separate
-    # n_screened / n_confirmed aggregations re-ran the whole corpus
-    # gram build + probe pipeline twice per action): the benchmark's
-    # distinct hashes join in as a flag — unique per __h1, so no row
-    # multiplication — and both counts fold in a single aggregation,
-    # the same shape the DuckDB oracle uses.
-    in_bench = b.select("__h1").distinct().withColumn("__inb", F.lit(True))
-    return (
-        screened.join(in_bench, "__h1", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_screened"),
-            F.sum(F.when(F.col("__inb"), 1).otherwise(0))
-            .cast("long").alias("n_confirmed"),
-        )
-    )
 
 
 def pack_sequences(
@@ -982,211 +791,3 @@ def training_shard_layout(
         .select(id_col, "shard", "pos")
     )
 
-
-def _dsir_bucket_stream(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_buckets: int,
-    hash_fn: str,
-) -> DataFrame:
-    """Hashed bag-of-ngram feature stream for :func:`dsir_logweights`:
-    one ``(id, __b)`` row per unigram AND bigram OCCURRENCE (a bag,
-    not a set — DSIR's feature vector counts repeats), ``__b`` in
-    ``[0, n_buckets)``.
-
-    One tokenize, one explode: the unigram and bigram hash arrays are
-    built per row with higher-order transforms over the SAME token
-    array projection and concatenated before the single explode
-    (the ``ngram_lm_score`` lesson — never re-split text per
-    position).  ``hash_fn="md5_60"`` hashes the gram STRING (bigram =
-    ``w1 || ' ' || w2``) for the exact DuckDB twin; the default
-    ``xxhash64`` hashes token slices variadically — no concat churn —
-    and is the scale path."""
-    from ..sources import fan_out
-    from .dedup import _md5_60
-    from .text import tokens
-
-    spark = df.sparkSession
-    src = fan_out(df, spark.sparkContext.defaultParallelism)
-    tk = F.col("__t")
-    if hash_fn == "md5_60":
-        def uh(i):
-            return _md5_60(F.element_at(tk, i))
-
-        def bh(i):
-            return _md5_60(
-                F.concat(
-                    F.element_at(tk, i),
-                    F.lit(" "),
-                    F.element_at(tk, i + F.lit(1)),
-                )
-            )
-    elif hash_fn == "xxhash64":
-        def uh(i):
-            return F.xxhash64(F.element_at(tk, i))
-
-        def bh(i):
-            return F.xxhash64(
-                F.element_at(tk, i), F.element_at(tk, i + F.lit(1))
-            )
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
-    unis = F.transform(F.sequence(F.lit(1), F.size(tk)), uh)
-    bis = F.when(
-        F.size(tk) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(tk) - 1), bh),
-    ).otherwise(F.array().cast("array<bigint>"))
-    toked = src.select(
-        F.col(id_col), tokens(text_col).alias("__t")
-    ).filter(F.size("__t") >= 1)
-    return toked.select(
-        F.col(id_col), F.explode(F.concat(unis, bis)).alias("__g")
-    ).select(id_col, F.pmod(F.col("__g"), F.lit(n_buckets)).alias("__b"))
-
-
-def dsir_logweights(
-    corpus: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 4096,
-    alpha: float = 0.5,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """DSIR — Data Selection via Importance Resampling (Xie et al.,
-    NeurIPS 2023): score every raw-corpus document by its hashed
-    bag-of-ngrams log importance weight under target vs raw unigram+
-    bigram bucket distributions.  The published recipe for "select
-    pretraining data that looks like the target domain" (the
-    reference lakehouse has no selection tier at all; EXT surface,
-    SURVEY section 2 X).
-
-    Model: grams (unigrams + bigrams) hash into ``n_buckets`` feature
-    buckets; with add-``alpha`` smoothing over the raw-bucket support,
-
-        lam_b = ln( ((ct_b + a) * (Tr + a*m)) /
-                    ((cr_b + a) * (Tt + a*m)) )
-
-    where ``cr_b``/``ct_b`` are raw/target bucket counts and
-    ``Tr``/``Tt`` the gram totals; a document's log weight is the sum
-    of ``lam_b`` over its gram OCCURRENCES (bag semantics).  The
-    single-``ln``-of-one-ratio form keeps every intermediate an IEEE
-    double both engines compute identically; the per-gram sum goes
-    through the ``functions.dsum`` DECIMAL discipline so float logs
-    stay engine-portable.
-
-    100-TB shape: the corpus tokenizes ONCE — the gram stream
-    pre-aggregates to ``(id, bucket, cnt)`` rows and that ONE keyed
-    exchange feeds the raw model, the total, AND the scoring join
-    (AQE ReusedExchange, verified in the executed plan).  The
-    pre-agg also caps per-document shuffle rows at ``n_buckets``
-    regardless of document length (a 100k-token document shuffles at
-    most m narrow rows, not 200k gram rows), and the per-gram DECIMAL
-    fold becomes an exact ``cnt * decimal(lam)`` — identical value,
-    decimal multiplication by an integer is exact.  The model is at
-    most ``n_buckets`` rows (broadcast); the totals are one-row
-    broadcasts; text never shuffles.
-
-    Buckets the target never hits score
-    ``ln((a * (Tr + a*m)) / ((cr + a) * (Tt + a*m)))`` — whose SIGN
-    depends on the corpus-size ratio: with a raw corpus much larger
-    than the target (the usual DSIR regime) even target-unseen buckets
-    can score positive, because the smoothed target prior 1/m exceeds
-    a rare bucket's raw relative frequency.  Only the RANKING between
-    buckets is meaningful, not the sign; unseen-in-raw buckets cannot
-    appear in the scoring stream by construction, so smoothing is
-    required for the target side only.
-
-    Output: ``(id, n_grams, logw)`` — rank descending and keep top-k
-    (or Gumbel-resample with a deterministic hash race) downstream.
-    """
-    cg = _dsir_bucket_stream(corpus, text_col, id_col, n_buckets, hash_fn)
-    tg = _dsir_bucket_stream(target, text_col, id_col, n_buckets, hash_fn)
-    doc_b = cg.groupBy(id_col, "__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    raw = doc_b.groupBy("__b").agg(F.sum("__cnt").alias("__cr"))
-    tgt = tg.groupBy("__b").agg(F.count(F.lit(1)).alias("__ct"))
-    tot_r = raw.agg(F.sum("__cr").alias("__tr"))
-    tot_t = tgt.agg(F.coalesce(F.sum("__ct"), F.lit(0)).alias("__tt"))
-    am = float(alpha) * n_buckets
-    lam = F.log(
-        (
-            (F.coalesce(F.col("__ct"), F.lit(0)).cast("double") + F.lit(float(alpha)))
-            * (F.col("__tr").cast("double") + F.lit(am))
-        )
-        / (
-            (F.col("__cr").cast("double") + F.lit(float(alpha)))
-            * (F.col("__tt").cast("double") + F.lit(am))
-        )
-    )
-    model = (
-        raw.join(tgt, "__b", "left")
-        .crossJoin(F.broadcast(tot_r))
-        .crossJoin(F.broadcast(tot_t))
-        .select("__b", lam.alias("__lam"))
-    )
-    return (
-        doc_b.join(F.broadcast(model), "__b")
-        .groupBy(id_col)
-        .agg(
-            F.sum("__cnt").alias("n_grams"),
-            F.sum(F.col("__lam").cast("decimal(28,6)") * F.col("__cnt"))
-            .cast("double")
-            .alias("logw"),
-        )
-    )
-
-
-def gumbel_topk(
-    df: DataFrame,
-    weight_col: str,
-    k: int,
-    id_col: str = "doc_id",
-    seed: str = "gumbel-v1",
-    temperature: float = 1.0,
-    out_key: str = "sample_key",
-) -> DataFrame:
-    """Deterministic Gumbel top-k — weighted sampling WITHOUT
-    replacement from log-weights (the resampling half of DSIR, Xie et
-    al. NeurIPS'23; equivalently the Gumbel-max trick over a softmax):
-    each row's sampling key is
-
-        key = logw / temperature + G,   G = -ln(-ln(u))
-
-    and the k largest keys are the sample.  ``u`` is a deterministic
-    hash-derived uniform — ``(md5_60(id:seed) % 1e6 + 0.5) / 1e6``,
-    the :func:`split_bucket` discipline — never ``rand()``: re-running
-    a partition, adding a source, or retrying a failed task cannot
-    change the sample (the contamination-by-retry rule), and changing
-    ``seed`` draws an independent sample.  ``temperature`` sharpens
-    (<1) or flattens (>1) the weight distribution; ``temperature ->
-    inf`` degenerates to uniform sampling.
-
-    The key is rounded through DECIMAL(28,6) before ranking so the
-    float ``ln`` calls stay engine-portable (the ``dsum`` discipline
-    applied to an ORDER BY), with ``id`` as the total-order tiebreak.
-
-    100-TB shape: one map-only projection + a global top-k, which
-    Spark compiles to TakeOrderedAndProject — per-partition heaps of
-    size k, then a k-row driver merge; no sort, no shuffle of the
-    corpus.  Output: the k sampled rows with ``out_key`` attached.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    if not temperature > 0:
-        raise ValueError(
-            f"temperature must be positive, got {temperature} "
-            "(0 divides the weights by zero; negative inverts them)"
-        )
-    u = (
-        split_bucket(id_col, seed, 1_000_000).cast("double") + F.lit(0.5)
-    ) / F.lit(1_000_000.0)
-    g = -F.log(-F.log(u))
-    key = (
-        F.col(weight_col).cast("double") / F.lit(float(temperature)) + g
-    ).cast("decimal(28,6)")
-    return (
-        df.withColumn(out_key, key.cast("double"))
-        .orderBy(F.col(out_key).desc(), F.col(id_col).asc())
-        .limit(k)
-    )

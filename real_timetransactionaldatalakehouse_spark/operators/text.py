@@ -583,51 +583,6 @@ def ngram_lm_score(
     return out
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    n_buckets: int = 3,
-    labels: tuple = ("head", "middle", "tail"),
-    scores: DataFrame | None = None,
-    **lm_kwargs,
-) -> DataFrame:
-    """CCNet perplexity bucketing (Wenzek et al., LREC'20 §4.3): split
-    each language's documents into equal thirds by LM score —
-    ``head`` (most fluent), ``middle``, ``tail`` — the partition CCNet
-    publishes per language and downstream pipelines sample from
-    (GPT-3/LLaMA-style corpora train mostly on head+middle).  Scores
-    come from :func:`ngram_lm_score` (higher ``avg_logprob`` =
-    better); pass ``scores`` to reuse an existing score table.
-
-    Buckets are exact and equal-count: ``NTILE(n) OVER (PARTITION BY
-    lang ORDER BY avg_logprob DESC, id)`` — deterministic total order,
-    bit-equal in ANSI SQL.  The caveat: a window partition is ONE
-    task, and on a real web corpus the largest language is over half
-    the rows, so the per-lang sort does not scale past what one
-    executor sorts comfortably.
-
-    Output: ``(id_col, lang, avg_logprob, bucket)``, one row per
-    scored document (documents with no bigram never score — the
-    emit-nothing rule).
-    """
-    if len(labels) != n_buckets or n_buckets < 2:
-        raise ValueError("labels must have exactly n_buckets (>= 2) entries")
-    if scores is None:
-        scores = ngram_lm_score(
-            df.select(id_col, text_col), text_col, id_col, **lm_kwargs
-        )
-    langs = df.select(F.col(id_col), F.col(lang_col).alias("lang"))
-    j = scores.join(langs, id_col)
-    from pyspark.sql import Window
-
-    label_arr = F.array(*[F.lit(x) for x in labels])
-    w = Window.partitionBy("lang").orderBy(F.desc("avg_logprob"), F.col(id_col))
-    bucket = F.element_at(label_arr, F.ntile(n_buckets).over(w))
-    return j.select(id_col, "lang", "avg_logprob", bucket.alias("bucket"))
-
-
 def token_count_bpe(text: Column | str) -> Column:
     """Pre-tokenizer token count — the budget unit LLM pipelines cost
     documents in (whitespace counts under-estimate code/punctuation-
@@ -1024,74 +979,3 @@ def vocab_coverage(
         getattr(ranked, "_layout_frames", []),
     )
 
-
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words_per_line: int = 5,
-    min_lines: int = 3,
-    out_col: str = "clean_text",
-) -> DataFrame:
-    """C4-style line-level cleaning (Raffel et al., JMLR 2020 section
-    2.2 — the published Common-Crawl-to-C4 filter; the reference
-    lakehouse has no text-cleaning tier; EXT surface, SURVEY section
-    2 X).  Two tiers, exactly the paper's rules:
-
-    line-level (a line survives iff ALL hold):
-      - ends in a terminal punctuation mark (``.`` ``!`` ``?`` ``"``);
-      - has at least ``min_words_per_line`` non-empty words;
-      - does not mention "javascript" (case-insensitive).
-
-    document-level (the row is DROPPED iff ANY holds):
-      - the phrase "lorem ipsum" appears (case-insensitive);
-      - a curly bracket ``{`` appears (code page);
-      - fewer than ``min_lines`` lines survive the line tier (the
-        paper's 3-sentence floor, counted on retained lines).
-
-    Adds ``out_col`` (surviving lines re-joined with newlines),
-    ``n_lines_in`` and ``n_lines_kept``; every input column passes
-    through, and the output is ROW-DROPPING (a regression in any rule
-    changes the row count, never just a flag).
-
-    100-TB shape: entirely higher-order array expressions over one
-    ``split`` — map-only, ZERO shuffles, no Python.  The filter costs
-    one scan at any corpus size and composes ahead of any keyed stage
-    (dedup, selection) so downstream shuffles carry already-cleaned
-    text.  Known CPU constant: Catalyst pushes the row filter beneath
-    the kept-lines projection (deterministic predicates always sink),
-    so the line lambda evaluates in BOTH the filter and the output
-    projection — a bounded ~2x of one map pass, not a scale cliff;
-    the pass stays scan-bound and shuffle-free.
-    """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    # \r?\n: CRLF corpora would otherwise leave a trailing \r on every
-    # line, fail the terminal-punctuation rule, and silently drop the
-    # whole document (r12 review finding)
-    lines = F.split(c, "\r?\n")
-    kept = F.filter(
-        lines,
-        lambda l: F.substring(l, -1, 1).isin(".", "!", "?", '"')
-        & (
-            F.size(F.filter(F.split(l, " "), lambda w: w != ""))
-            >= min_words_per_line
-        )
-        & ~F.contains(F.lower(l), F.lit("javascript")),
-    )
-    out = df.withColumns(
-        {
-            "__lines": lines,
-            "__kept": kept,
-        }
-    )
-    out = out.filter(
-        ~F.contains(F.lower(c), F.lit("lorem ipsum"))
-        & ~F.contains(c, F.lit("{"))
-        & (F.size("__kept") >= min_lines)
-    )
-    return out.withColumns(
-        {
-            out_col: F.array_join("__kept", "\n"),
-            "n_lines_in": F.size("__lines").cast("long"),
-            "n_lines_kept": F.size("__kept").cast("long"),
-        }
-    ).drop("__lines", "__kept")

@@ -29,13 +29,14 @@ from ..operators.relational import tumbling_window_counts
 from .. import tablefmt
 
 
-def _run_stream(writer, checkpoint: str, available_now: bool = True,
-                blocking: bool = True):
-    q = writer.option("checkpointLocation", checkpoint)
-    query = q.trigger(availableNow=True).start() if available_now else q.trigger(
-        processingTime="10 seconds"
+def _run_stream(writer, checkpoint: str, blocking: bool = True):
+    """Start ``writer`` on an availableNow trigger (drain what is there,
+    then stop); ``blocking`` waits for it, otherwise the caller does
+    (``await_all``)."""
+    query = writer.option("checkpointLocation", checkpoint).trigger(
+        availableNow=True
     ).start()
-    if available_now and blocking:
+    if blocking:
         query.awaitTermination()
     return query
 
@@ -77,7 +78,6 @@ def bronze_append_stream(
     out_path: str,
     checkpoint: str,
     ts_col: str = "ts",
-    available_now: bool = True,
     blocking: bool = True,
 ):
     """Bronze: immutable append log (reference streaming_job.py:81-84,
@@ -106,7 +106,6 @@ def bronze_append_stream(
     return _run_stream(
         stream_df.writeStream.foreachBatch(write_batch).outputMode("append"),
         checkpoint,
-        available_now,
         blocking,
     )
 
@@ -120,7 +119,6 @@ def gold_window_agg_stream(
     cases: dict[str, object],
     window: str = "1 minute",
     watermark: str = "10 seconds",
-    available_now: bool = True,
     blocking: bool = True,
     n_buckets: int = 0,
 ):
@@ -154,7 +152,6 @@ def gold_window_agg_stream(
     return _run_stream(
         agg.writeStream.foreachBatch(write_batch).outputMode("append"),
         checkpoint,
-        available_now,
         blocking,
     )
 
@@ -168,7 +165,6 @@ def dims_scd1_stream(
     op_col: str = "op",
     allowed_ops: tuple[str, ...] = ("c", "u"),
     update_cols: list[str] | None = None,
-    available_now: bool = True,
 ):
     """Dims: SCD Type-1 upsert from a CDC envelope stream — the
     reference's stream_dims.py:59-98 foreachBatch MERGE, with the
@@ -218,7 +214,6 @@ def dims_scd1_stream(
     return _run_stream(
         stream_df.writeStream.foreachBatch(write_batch).outputMode("append"),
         checkpoint,
-        available_now,
     )
 
 
@@ -286,7 +281,6 @@ def dims_scd2_stream(
     checkpoint: str,
     op_col: str = "op",
     allowed_ops: tuple[str, ...] = ("c", "u"),
-    available_now: bool = True,
     blocking: bool = True,
 ):
     """Dims, SCD Type-2 architecture: the CDC stream appends to an
@@ -298,7 +292,7 @@ def dims_scd2_stream(
     """
     filtered = stream_df.filter(F.col(op_col).isin(list(allowed_ops)))
     writer = filtered.writeStream.format("parquet").option("path", log_path)
-    return _run_stream(writer, checkpoint, available_now, blocking)
+    return _run_stream(writer, checkpoint, blocking)
 
 
 def scd2_dim_view(
@@ -335,7 +329,6 @@ def neardup_ingest_stream(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    available_now: bool = True,
     blocking: bool = True,
 ):
     """Streaming near-dup-free corpus ingestion — the Kappa shape of
@@ -405,17 +398,8 @@ def neardup_ingest_stream(
         except Exception:
             idx = None
         if idx is not None:
-            est = (
-                F.size(
-                    F.filter(
-                        F.zip_with(
-                            F.col("sig"), F.col("__hist_sig"),
-                            lambda a, b: (a == b).cast("int"),
-                        ),
-                        lambda x: x == 1,
-                    )
-                ).cast("double")
-                / F.lit(float(num_hashes))
+            est = D._sig_agreement_est(
+                F.col("sig"), F.col("__hist_sig"), num_hashes
             )
             dup_ids = (
                 banded.join(
@@ -443,6 +427,5 @@ def neardup_ingest_stream(
     return _run_stream(
         stream_df.writeStream.foreachBatch(write_batch).outputMode("append"),
         checkpoint,
-        available_now,
         blocking,
     )

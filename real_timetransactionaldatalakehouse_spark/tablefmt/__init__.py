@@ -19,7 +19,10 @@ gets from Iceberg:
   an orphan ``.tmp`` dir, never a half table);
 - old versions stay readable (time travel / rollback) until
   ``expire_snapshots`` removes them;
-- ``remove_orphans`` deletes crashed ``.tmp`` dirs.
+- ``remove_orphans`` deletes crashed ``.tmp`` dirs and version dirs
+  the pointer never named (a crash between a version's rename and the
+  flip); only versions ``_CURRENT`` has named are listed, expired or
+  shown as snapshots.
 
 Names starting with ``_`` are ignored by Spark's file index, so a
 naive ``spark.read.parquet(table)`` fails fast instead of silently
@@ -67,15 +70,30 @@ def version_path(path: str, version: int) -> str:
     return os.path.join(_versions_root(path), f"v{version:08d}")
 
 
-def list_versions(path: str) -> list[int]:
+def _version_dirs(path: str) -> list[int]:
+    """Every ``vN`` dir under ``_versions``, committed or abandoned."""
     root = _versions_root(path)
     if not os.path.isdir(root):
         return []
-    out = []
-    for name in os.listdir(root):
-        if name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
+    return sorted(
+        int(name[1:]) for name in os.listdir(root)
+        if name.startswith("v") and name[1:].isdigit()
+    )
+
+
+def list_versions(path: str) -> list[int]:
+    """The committed versions: those ``_CURRENT`` has named.  Versions
+    are numbered upward and a commit sweeps the dirs past the pointer
+    before it flips, so these are the dirs up to the current one."""
+    cur = current_version(path)
+    return [v for v in _version_dirs(path) if cur is not None and v <= cur]
+
+
+def _abandoned(path: str) -> list[int]:
+    """Version dirs ``_CURRENT`` never named: a commit that crashed
+    between renaming its dir into place and flipping the pointer."""
+    cur = current_version(path)
+    return [v for v in _version_dirs(path) if cur is None or v > cur]
 
 
 def current_version(path: str) -> int | None:
@@ -212,15 +230,19 @@ def _commit(
     path: str, write: Callable[[str], None], fields: list[dict] | None
 ) -> int:
     """The one commit step every writer goes through: allocate version
-    N, let ``write`` materialize ``.tmp-vN`` (raising aborts: tmp
-    removed, pointer untouched), rename it to ``vN``, widen the
+    N past every version dir, sweep the dirs an earlier crashed commit
+    abandoned, let ``write`` materialize ``.tmp-vN`` (raising aborts:
+    tmp removed, pointer untouched), rename it to ``vN``, widen the
     declared schema with ``fields``, then flip ``_CURRENT`` with an
     atomic ``os.replace`` — a crash at any step leaves the previous
-    snapshot current.  The schema is initialized on the first commit;
-    later commits APPEND new columns (mergeSchema-style: old snapshots
-    read them as typed nulls, so widening before the flip is never a
-    half-visible state)."""
-    n = max(list_versions(path), default=0) + 1
+    snapshot current, and its ``vN`` dir is never listed as committed.
+    The schema is initialized on the first commit; later commits
+    APPEND new columns (mergeSchema-style: old snapshots read them as
+    typed nulls, so widening before the flip is never a half-visible
+    state)."""
+    n = max(_version_dirs(path), default=0) + 1
+    for v in _abandoned(path):
+        shutil.rmtree(version_path(path, v), ignore_errors=True)
     root = _versions_root(path)
     os.makedirs(root, exist_ok=True)
     tmp = os.path.join(root, f".tmp-v{n:08d}")
@@ -497,16 +519,16 @@ def expire_snapshots(
 
 
 def remove_orphans(path: str) -> dict:
-    """M3: delete in-flight ``.tmp`` dirs left by crashed writes.
-    Reference ``compact_cold_data.py:74-92``.  Never touches committed
-    version dirs or the pointer."""
+    """M3: delete what crashed writes left: in-flight ``.tmp`` dirs and
+    version dirs ``_CURRENT`` never named.  Reference
+    ``compact_cold_data.py:74-92``.  Never touches committed version
+    dirs or the pointer."""
     root = _versions_root(path)
-    removed = []
+    removed = [os.path.basename(version_path(path, v)) for v in _abandoned(path)]
     if os.path.isdir(root):
-        for name in os.listdir(root):
-            if name.startswith(".tmp-"):
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-                removed.append(name)
+        removed += [name for name in os.listdir(root) if name.startswith(".tmp-")]
+    for name in removed:
+        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
     return {"removed": removed}
 
 

@@ -1739,361 +1739,3 @@ def test_substring_dup_spans_exactsubstr_semantics(spark):
     again = {r.id: (r.span_start, r.span_end, r.n_grams)
              for r in D.substring_dup_spans(df, min_gram=8).collect()}
     assert rows == again
-
-
-def test_max_occ_cap_is_output_preserving(spark):
-    """r12 (VERDICT r11 #3): the hot-fingerprint skew guard.  A
-    corpus-universal boilerplate gram (planted in 30% of docs) makes
-    one COUNT-window partition straggler-sized at scale; max_occ=N
-    routes fingerprints with count > N around the window via a
-    broadcast heavy-list — and because any fingerprint over the cap
-    is duplicated BY CONSTRUCTION, the output must be bit-identical
-    to the uncapped run for every N >= 1."""
-    boiler = " ".join(f"lic{i}" for i in range(8))  # one full chunk/gram
-    rows = [
-        (i, (boiler + " " if i % 10 < 3 else "")
-            + " ".join(f"w{i}_{j}" for j in range(16)))
-        for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn, kw in (
-        (D.passage_repetition, dict(chunk=8)),
-        (D.substring_dup_spans, dict(min_gram=8)),
-    ):
-        base = sorted(map(tuple, fn(df, **kw).collect()))
-        assert base  # the planted boilerplate must actually mark rows
-        for cap in (1, 2, 29, 1000):
-            capped = sorted(map(tuple, fn(df, max_occ=cap, **kw).collect()))
-            assert capped == base, (fn.__name__, cap)
-    with pytest.raises(ValueError, match="max_occ"):
-        D.passage_repetition(df, chunk=8, max_occ=0).collect()
-
-
-def test_removable_spans_keep_first_determinism(spark):
-    """The survivor election is min (id, start) — a total order — so
-    the removable-span table is identical across recomputation and
-    row-order permutation."""
-    shared = " ".join(f"dup{i}" for i in range(12))
-    rows = [(i, f"p{i} " + shared + f" q{i}") for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple,
-                   D.removable_spans_keep_first(df, min_gram=8).collect()))
-    b = sorted(map(tuple, D.removable_spans_keep_first(
-        df.orderBy(F.rand(7)), min_gram=8).collect()))
-    assert a == b
-    assert {t[0] for t in a} == set(range(1, 6))  # doc 0 survives
-
-
-def test_bloom_decontaminate_matches_exact_and_bounds_fps(spark, docs):
-    """r12 EXT: Bloom-screened decontamination report.  (a) the
-    confirmed documents are exactly the ones decontaminate_ngram
-    drops — false positives cost confirm work, never correctness;
-    (b) n_confirmed <= n_screened with every benchmark carrier
-    confirmed; (c) the production xxhash64 mode and the SQL-twin
-    md5_60 mode agree on CONFIRMED contamination (screen FPs may
-    differ — different hash families); (d) sizing discipline
-    raises."""
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    corpus = docs.filter(F.col("text").isNotNull())
-    toks = F.split(F.col("text"), " ")
-    bench = corpus.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(
-            " ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))
-        ).alias("text"),
-    )
-    kw = dict(n=8, m_bits=16384, k=4, hash_fn="md5_60")
-    all_ids = {r.doc_id for r in corpus.select("doc_id").collect()}
-    exact = {r.doc_id for r in
-             Smp.decontaminate_ngram(corpus, bench).select("doc_id").collect()}
-    rep = Smp.bloom_contamination_report(corpus, bench, **kw).collect()
-    assert rep and all(0 <= r.n_confirmed <= r.n_screened for r in rep)
-    confirmed = {r.doc_id for r in rep if r.n_confirmed > 0}
-    assert all_ids - confirmed == exact
-    assert set(range(20)) <= confirmed  # every planted carrier confirmed
-    fast = {r.doc_id
-            for r in Smp.bloom_contamination_report(
-                corpus, bench, n=8, m_bits=1 << 20, k=4).collect()
-            if r.n_confirmed > 0}
-    assert fast == confirmed
-    with pytest.raises(ValueError, match="m_bits"):
-        Smp.bloom_contamination_report(corpus, bench, m_bits=32)
-    with pytest.raises(ValueError, match="hash_fn"):
-        Smp.bloom_contamination_report(corpus, bench, hash_fn="sha1")
-
-
-def test_perplexity_buckets_ccnet_partition(spark, sf_small):
-    """r12 EXT: CCNet head/middle/tail bucketing.  (a) NTILE mode
-    yields equal-thirds-per-language (within 1 doc); (b) bucket order
-    respects the score: every head doc scores >= every tail doc in
-    its language; (c) a label list that does not match n_buckets
-    raises."""
-    from real_timetransactionaldatalakehouse_spark.operators import text as TX
-
-    corpus = (
-        load_table(spark, sf_small, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text", "lang")
-    )
-    nt = TX.perplexity_buckets(corpus).collect()
-    assert nt
-    by_lang = {}
-    for r in nt:
-        by_lang.setdefault(r.lang, []).append(r)
-    for lang, rows in by_lang.items():
-        counts = {}
-        for r in rows:
-            counts[r.bucket] = counts.get(r.bucket, 0) + 1
-        assert set(counts) <= {"head", "middle", "tail"}
-        assert max(counts.values()) - min(counts.values()) <= 1, (lang, counts)
-        worst_head = min(r.avg_logprob for r in rows if r.bucket == "head")
-        best_tail = max(r.avg_logprob for r in rows if r.bucket == "tail")
-        assert worst_head >= best_tail
-    with pytest.raises(ValueError, match="labels"):
-        TX.perplexity_buckets(corpus, n_buckets=4)
-
-
-def test_dsir_upweights_target_domain(spark):
-    """DSIR semantics on a planted two-domain corpus: documents built
-    from the target domain's vocabulary must out-score documents from
-    a disjoint vocabulary, target-vocab repeats add weight (bag
-    semantics), and the scorer is deterministic."""
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    tgt_words = "alpha beta gamma delta epsilon zeta".split()
-    other_words = "one two three four five six".split()
-    corpus_rows = [
-        (1, " ".join(tgt_words * 3)),          # pure target vocab
-        (2, " ".join(other_words * 3)),        # pure off-domain vocab
-        (3, " ".join(tgt_words + other_words)),  # mixed
-        (4, " ".join(tgt_words * 6)),          # target vocab, repeated
-    ]
-    corpus = spark.createDataFrame(corpus_rows, ["doc_id", "text"])
-    target = spark.createDataFrame(
-        [(100 + i, " ".join(tgt_words)) for i in range(5)],
-        ["doc_id", "text"],
-    )
-    # smoothing-light configuration: at the default (4096 buckets,
-    # alpha=0.5) a toy corpus is prior-dominated — alpha*m outweighs
-    # every real count and all log-ratios hug ln(Tr/Tt) regardless of
-    # content.  64 buckets / alpha=0.1 puts the counts in charge, the
-    # regime the ordering semantics are defined in.
-    kw = dict(n_buckets=64, alpha=0.1)
-    out = {
-        r["doc_id"]: r
-        for r in Smp.dsir_logweights(corpus, target, **kw).collect()
-    }
-    assert set(out) == {1, 2, 3, 4}
-    # per-gram normalization: docs differ in length, so rank by mean
-    mean = {k: out[k]["logw"] / out[k]["n_grams"] for k in out}
-    assert mean[1] > mean[3] > mean[2]
-    # pure-target scores positive, pure-off-domain negative in the
-    # count-dominated regime
-    assert mean[1] > 0 > mean[2]
-    # bag semantics: doc 4 is doc 1's gram stream doubled (+1 seam
-    # bigram), so its PER-GRAM mean matches doc 1 far closer than the
-    # gap to the mixed doc
-    assert abs(mean[4] - mean[1]) < abs(mean[1] - mean[3]) / 4
-    # n_grams = unigrams + bigrams = n + (n - 1)
-    assert out[1]["n_grams"] == 18 + 17
-    assert out[4]["n_grams"] == 36 + 35
-    again = {
-        r["doc_id"]: r["logw"]
-        for r in Smp.dsir_logweights(corpus, target, **kw).collect()
-    }
-    assert {k: v["logw"] for k, v in out.items()} == again
-
-
-def test_dsir_md5_mode_matches_xxhash_ordering(spark):
-    """The md5_60 oracle mode and the xxhash64 scale path bucket grams
-    differently, but on a planted corpus with disjoint domain vocab
-    both must rank pure-target above pure-off-domain."""
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma alpha beta"), (2, "seven eight nine ten seven")],
-        ["doc_id", "text"],
-    )
-    target = spark.createDataFrame(
-        [(9, "alpha beta gamma delta")], ["doc_id", "text"]
-    )
-    for mode in ("xxhash64", "md5_60"):
-        rows = {
-            r["doc_id"]: r["logw"]
-            for r in Smp.dsir_logweights(corpus, target, hash_fn=mode).collect()
-        }
-        assert rows[1] > rows[2], mode
-
-
-def test_c4_line_filter_applies_both_tiers(spark):
-    """Every C4 rule on a planted page set: line tier (terminal punct,
-    min words, javascript) and page tier (lorem ipsum, curly bracket,
-    min surviving lines), with pass-through columns intact and
-    row-dropping output."""
-    from real_timetransactionaldatalakehouse_spark.operators import text as TX
-
-    good = "\n".join(
-        [
-            "this line has enough words here.",   # kept
-            "too short.",                          # dropped: < 5 words
-            "this line has no terminal punctuation at all",  # dropped
-            "enable javascript to view this page.",  # dropped: javascript
-            'a quoted line with plenty of words ends well"',  # kept
-            "another perfectly fine sentence with many words!",  # kept
-            "is this a question with enough words?",  # kept
-        ]
-    )
-    lorem = "lorem ipsum dolor sit amet consectetur."
-    code = "this page has code with plenty of words { inside }."
-    thin = "\n".join(
-        ["only one line survives this particular page.", "nope.", "nah"]
-    )
-    df = spark.createDataFrame(
-        [(1, good, "a"), (2, lorem, "b"), (3, code, "c"), (4, thin, "d")],
-        ["doc_id", "text", "tag"],
-    )
-    out = TX.c4_line_filter(df)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert set(rows) == {1}  # row-dropping: 2 lorem, 3 brace, 4 thin
-    r = rows[1]
-    assert r["n_lines_in"] == 7 and r["n_lines_kept"] == 4
-    assert r["tag"] == "a"  # pass-through column survives
-    assert r["clean_text"].splitlines() == [
-        "this line has enough words here.",
-        'a quoted line with plenty of words ends well"',
-        "another perfectly fine sentence with many words!",
-        "is this a question with enough words?",
-    ]
-    # parameter dials: a permissive min_lines keeps the thin page
-    relaxed = TX.c4_line_filter(df, min_lines=1)
-    assert {r["doc_id"] for r in relaxed.collect()} == {1, 4}
-
-
-def test_gumbel_topk_matches_python_replica(spark):
-    """The Gumbel sample is a pure function of (id, seed, weight):
-    a Python replica of the key arithmetic must select the identical
-    k rows in the identical order, re-runs are stable, a different
-    seed draws a different sample, and the plan is TakeOrdered (no
-    global sort)."""
-    import hashlib
-    import math
-
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-    from real_timetransactionaldatalakehouse_spark.plans import uses_take_ordered
-
-    rows = [(i, float(-i) / 7.0) for i in range(200)]
-    df = spark.createDataFrame(rows, ["doc_id", "logw"])
-
-    def key_of(doc_id, logw, seed):
-        h = int(hashlib.md5(f"{doc_id}:{seed}".encode()).hexdigest()[:15], 16)
-        u = ((h % 1_000_000) + 0.5) / 1_000_000.0
-        g = -math.log(-math.log(u))
-        # DECIMAL(28,6) rounding (half-up like both engines' casts)
-        from decimal import Decimal, ROUND_HALF_UP
-
-        return float(
-            Decimal(repr(logw / 1.0 + g)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
-    expect = sorted(
-        ((key_of(i, w, "gumbel-v1"), i) for i, w in rows),
-        key=lambda t: (-t[0], t[1]),
-    )[:25]
-    got = Smp.gumbel_topk(df, "logw", 25).collect()
-    assert [(r["sample_key"], r["doc_id"]) for r in got] == expect
-    again = Smp.gumbel_topk(df, "logw", 25).collect()
-    assert [r["doc_id"] for r in again] == [r["doc_id"] for r in got]
-    other = Smp.gumbel_topk(df, "logw", 25, seed="gumbel-v2").collect()
-    assert {r["doc_id"] for r in other} != {r["doc_id"] for r in got}
-    assert uses_take_ordered(Smp.gumbel_topk(df, "logw", 25))
-    # temperature flattens: at tau -> inf the weights stop mattering,
-    # so the sample approaches the pure-Gumbel (uniform) draw
-    flat = Smp.gumbel_topk(df, "logw", 25, temperature=1e12).collect()
-    uniform = sorted(
-        ((key_of(i, 0.0, "gumbel-v1"), i) for i, w in rows),
-        key=lambda t: (-t[0], t[1]),
-    )[:25]
-    assert {r["doc_id"] for r in flat} == {i for _, i in uniform}
-
-
-def test_c4_line_filter_handles_crlf(spark):
-    """CRLF corpora must behave identically to LF corpora — a trailing
-    \r previously failed the terminal-punctuation rule on every line
-    and silently dropped whole documents (r12 review finding)."""
-    from real_timetransactionaldatalakehouse_spark.operators import text as TX
-
-    lf = "\n".join(
-        [
-            "this line has enough words here.",
-            "another perfectly fine sentence with many words!",
-            "is this a question with enough words?",
-        ]
-    )
-    crlf = lf.replace("\n", "\r\n")
-    df = spark.createDataFrame([(1, lf), (2, crlf)], ["doc_id", "text"])
-    rows = {r["doc_id"]: r for r in TX.c4_line_filter(df).collect()}
-    assert set(rows) == {1, 2}
-    assert rows[2]["n_lines_kept"] == rows[1]["n_lines_kept"] == 3
-    assert rows[2]["clean_text"] == rows[1]["clean_text"]
-
-
-def test_gumbel_topk_rejects_bad_args(spark):
-    from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
-
-    df = spark.createDataFrame([(1, 0.5)], ["doc_id", "logw"])
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="temperature"):
-        Smp.gumbel_topk(df, "logw", 5, temperature=0.0)
-    with _pytest.raises(ValueError, match="temperature"):
-        Smp.gumbel_topk(df, "logw", 5, temperature=-1.0)
-    with _pytest.raises(ValueError, match="k must"):
-        Smp.gumbel_topk(df, "logw", 0)
-
-
-def test_drop_repeated_lines_ccnet_semantics(spark):
-    """Cross-document line dedup: lines over max_occ occurrences are
-    removed everywhere except (keep='first') the global minimum
-    (id, pos) occurrence; unique lines and untouched docs pass
-    through; intra-doc repeats count toward the occurrence total."""
-    from real_timetransactionaldatalakehouse_spark.operators import dedup as D
-
-    boiler = "all rights reserved by the example corporation"
-    docs = [
-        (1, f"{boiler}\nunique first line here\n{boiler}"),   # 2 occurrences
-        (2, f"intro line for doc two\n{boiler}"),             # 1 more
-        (3, "totally unique document\nwith two lines"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in D.drop_repeated_lines(df).collect()}
-    assert set(out) == {1, 2, 3}
-    # keep="first": doc 1 pos 0 survives; doc 1 pos 2 and doc 2 pos 1 drop
-    assert out[1]["clean_text"] == f"{boiler}\nunique first line here"
-    assert out[2]["clean_text"] == "intro line for doc two"
-    assert out[3]["clean_text"] == docs[2][1]
-    assert (out[1]["n_lines_in"], out[1]["n_lines_kept"]) == (3, 2)
-    assert (out[2]["n_lines_in"], out[2]["n_lines_kept"]) == (2, 1)
-    assert (out[3]["n_lines_in"], out[3]["n_lines_kept"]) == (2, 2)
-    # keep="none": every occurrence of the boilerplate goes
-    none = {r["doc_id"]: r for r in D.drop_repeated_lines(df, keep="none").collect()}
-    assert none[1]["clean_text"] == "unique first line here"
-    assert none[2]["clean_text"] == "intro line for doc two"
-    # max_occ dial: at 3 the boilerplate (3 occurrences) stays whole
-    loose = {r["doc_id"]: r for r in D.drop_repeated_lines(df, max_occ=3).collect()}
-    assert loose[1]["clean_text"] == docs[0][1]
-    # CRLF input behaves like LF
-    crlf = spark.createDataFrame(
-        [(i, t.replace("\n", "\r\n")) for i, t in docs], ["doc_id", "text"]
-    )
-    out2 = {r["doc_id"]: r for r in D.drop_repeated_lines(crlf).collect()}
-    assert out2[1]["clean_text"] == out[1]["clean_text"]
-    # arg discipline
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="keep"):
-        D.drop_repeated_lines(df, keep="all")
-    with _pytest.raises(ValueError, match="max_occ"):
-        D.drop_repeated_lines(df, max_occ=0)

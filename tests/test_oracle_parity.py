@@ -51,20 +51,6 @@ def test_every_query_has_callable():
     assert set(_ORACLES) <= set(_QUERIES)
 
 
-@pytest.mark.parametrize("name", sorted(entrymod._STAGED_R13))
-def test_staged_r13_query_parity(name, spark, sf_swept, duck):
-    """A query written this round but registered NEXT round (the r12
-    window's 50 slots are fully owed) gets the same three-way compare
-    as registered queries at both SFs, so its r13 head slot starts
-    from a certified baseline — and it must NOT be registered yet
-    (the r12 window's ordering is frozen).  Same staging discipline
-    as r11's _STAGED_R12."""
-    fn, sql = entrymod._STAGED_R13[name]
-    assert name not in _QUERIES and name not in _ORACLES
-    res = compare_query(name, fn(spark, sf_swept), duck, sql)
-    assert res.ok, f"{name}: {res.detail}"
-
-
 def test_r12_window_heads_registered():
     """r12: the two r11-staged queries are registered and hold the
     reserved window head slots (VERDICT r11 #1) — the staged-queue
@@ -92,8 +78,7 @@ def test_oracle_outputs_are_driver_certifiable(sf_small):
       both sides instead."""
     con = duckdb_connection(sf_small)
     bad = []
-    staged = {n: sql for n, (_, sql) in entrymod._STAGED_R13.items()}
-    for name, sql in {**_ORACLES, **staged}.items():
+    for name, sql in _ORACLES.items():
         rel = con.sql(sql)
         for c, t in zip(rel.columns, rel.types):
             ts = str(t)

@@ -1666,70 +1666,3 @@ def test_asof_joins_tolerate_dotted_column_names(spark):
     assert rows["a"]["px.usd"] == 5.0   # backward gap 10 < forward 10? ties resolve backward
     assert rows["b"]["px.usd"] == 8.0   # forward gap 1 < backward 19
 
-
-# --- r12 curation additions: C4 cleaning / Gumbel sampling / DSIR ---
-
-_line_word = st.sampled_from(
-    ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
-)
-_line = st.builds(
-    lambda ws, p: " ".join(ws) + p,
-    st.lists(_line_word, min_size=1, max_size=8),
-    st.sampled_from([".", "!", "?", '"', "", ""]),
-)
-_page = st.lists(_line, min_size=1, max_size=10)
-
-
-@SETTINGS
-@given(pages=st.lists(_page, min_size=1, max_size=6))
-def test_c4_line_filter_idempotent(spark, pages):
-    """Cleaning is a projection: re-filtering the cleaned output keeps
-    every document and every line (survivors already satisfy both
-    tiers), and counts are consistent."""
-    from real_timetransactionaldatalakehouse_spark.operators.text import (
-        c4_line_filter,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "\n".join(p)) for i, p in enumerate(pages)], "doc_id long, text string"
-    )
-    once = c4_line_filter(df)
-    rows1 = {r["doc_id"]: r for r in once.collect()}
-    for r in rows1.values():
-        assert r["n_lines_kept"] <= r["n_lines_in"]
-        assert r["n_lines_kept"] >= 3
-    twice = c4_line_filter(
-        once.select("doc_id", F.col("clean_text").alias("text"))
-    )
-    rows2 = {r["doc_id"]: r for r in twice.collect()}
-    assert set(rows2) == set(rows1)
-    for i, r in rows2.items():
-        assert r["clean_text"] == rows1[i]["clean_text"]
-        assert r["n_lines_in"] == rows1[i]["n_lines_kept"]
-        assert r["n_lines_kept"] == rows1[i]["n_lines_kept"]
-
-
-@SETTINGS
-@given(
-    weights=st.lists(
-        st.floats(min_value=-20, max_value=20, allow_nan=False),
-        min_size=1,
-        max_size=30,
-    ),
-    k=st.integers(min_value=1, max_value=40),
-)
-def test_gumbel_topk_is_bounded_deterministic_subset(spark, weights, k):
-    """The sample is at most k rows, drawn from the input id set, and
-    identical across re-runs (a pure function of id, seed, weight)."""
-    from real_timetransactionaldatalakehouse_spark.operators.sampling import (
-        gumbel_topk,
-    )
-
-    df = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(weights)], "doc_id long, logw double"
-    )
-    a = gumbel_topk(df, "logw", k).collect()
-    b = gumbel_topk(df, "logw", k).collect()
-    assert len(a) == min(k, len(weights))
-    assert {r["doc_id"] for r in a} <= set(range(len(weights)))
-    assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]

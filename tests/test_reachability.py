@@ -1,13 +1,19 @@
 """Every package def is reached from a declared entry point.
 
-A pure-Python AST pass (no Spark).  Roots are ``__spark_entry__.py``,
-``bench.py``, ``perfbench/*.py``, the package's module-level statements
-other than ``__all__``, and the bodies of the defs in ``KEEP``.  The
-defs are the top-level functions and classes and each non-dunder
-method of a top-level class (``catalog.Catalog.read``); a class's own
-statements and dunder methods go with the class.  A def is reached
-when its name is used (a name or an attribute) in a root or in a
-reached def; the pass iterates to a fixed point.
+A pure-Python AST pass (no Spark).  Roots are ``bench.py``,
+``perfbench/*.py``, the package's module-level statements other than
+``__all__``, the bodies of the defs in ``KEEP``, and the declared part
+of ``__spark_entry__.py``: its ``@_q``-registered query defs, the
+driver contract (``entry``, ``queries``, ``oracle_sql``) and its
+module-level statements other than assignments.  The defs are the
+top-level functions and classes and each non-dunder method of a
+top-level class (``catalog.Catalog.read``); a class's own statements
+and dunder methods go with the class.  In ``__spark_entry__.py`` the
+other top-level functions and each module-level assignment (an oracle
+string, a CTE, a registry) are defs too, so a query def that is never
+registered reaches nothing, and neither do the oracles only it names.
+A def is reached when its name is used (a name or an attribute) in a
+root or in a reached def; the pass iterates to a fixed point.
 Identifier-like words inside string literals count as well: the serving
 views are looked up by name (``getattr(S, "velocity_view")``).  Imports
 do not count: an ``__init__`` re-export or an import nothing uses does
@@ -34,6 +40,9 @@ import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "real_timetransactionaldatalakehouse_spark"
+DRIVER = "__spark_entry__"
+# the driver contract: what the driver calls besides the registered queries
+CONTRACT = {"entry", "queries", "oracle_sql"}
 
 # Unreached on purpose: module-qualified name -> reason it stays.
 KEEP = {
@@ -105,43 +114,75 @@ def _matches(key: str, qual: str) -> bool:
     return qual == key or (key.endswith(".*") and qual.startswith(key[:-1]))
 
 
+def _is_registered(stmt: ast.stmt) -> bool:
+    """A def decorated ``@_q(...)``: a query the driver runs."""
+    return isinstance(stmt, _FUNCS) and any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "_q"
+        for d in stmt.decorator_list
+    )
+
+
+def _assigned(stmt: ast.stmt) -> list[str]:
+    """The names a module-level assignment binds (none for any other
+    statement)."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, (ast.AnnAssign, ast.AugAssign)):
+        targets = [stmt.target]
+    else:
+        return []
+    return [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    ]
+
+
 def _unreached_in(
     modules: dict[str, ast.Module], roots: list[ast.Module], keep=()
 ) -> set[str]:
     """Qualified names of the top-level defs in ``modules`` (module name
     -> tree) that neither ``roots``, the modules' own top-level
-    statements nor the bodies of the ``keep`` defs reach."""
-    defs: dict[str, ast.AST] = {}  # qualified name -> def node
+    statements nor the bodies of the ``keep`` defs reach.  A module
+    named ``DRIVER`` is read by the driver rule (module docstring)."""
+    defs: dict[str, list[ast.AST]] = {}  # qualified name -> its nodes
     seen: set[str] = set()
     for mod, tree in modules.items():
+        driver = mod == DRIVER
         for stmt in tree.body:
-            if isinstance(stmt, _FUNCS):
-                defs[f"{mod}.{stmt.name}"] = stmt
+            if driver and (_is_registered(stmt) or getattr(stmt, "name", None) in CONTRACT):
+                seen |= _identifiers(stmt)
+            elif isinstance(stmt, _FUNCS):
+                defs[f"{mod}.{stmt.name}"] = [stmt]
             elif isinstance(stmt, ast.ClassDef):
                 # the class node keeps only what runs with the class
                 cls = ast.ClassDef(**{**vars(stmt), "body": []})
                 for m in stmt.body:
                     if _is_method(m):
-                        defs[f"{mod}.{stmt.name}.{m.name}"] = m
+                        defs[f"{mod}.{stmt.name}.{m.name}"] = [m]
                     else:
                         cls.body.append(m)
-                defs[f"{mod}.{stmt.name}"] = cls
+                defs[f"{mod}.{stmt.name}"] = [cls]
+            elif driver and _assigned(stmt):
+                for name in _assigned(stmt):
+                    defs.setdefault(f"{mod}.{name}", []).append(stmt)
             elif not _is_all(stmt):
                 seen |= _identifiers(stmt)
     for tree in roots:
         seen |= _identifiers(tree)
-    for qual, node in defs.items():
+    for qual, nodes in defs.items():
         if any(_matches(k, qual) for k in keep):
-            seen |= _identifiers(node)
+            for node in nodes:
+                seen |= _identifiers(node)
 
     reached: set[str] = set()
     grew = True
     while grew:
         grew = False
-        for qual, node in defs.items():
+        for qual, nodes in defs.items():
             if qual not in reached and qual.rsplit(".", 1)[-1] in seen:
                 reached.add(qual)
-                seen |= _identifiers(node)
+                for node in nodes:
+                    seen |= _identifiers(node)
                 grew = True
     return set(defs) - reached
 
@@ -156,7 +197,8 @@ def _unreached() -> set[str]:
         _module_name(path): _read(path)
         for path in glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)
     }
-    roots = ["__spark_entry__.py", "bench.py", *sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))]
+    modules[DRIVER] = _read(os.path.join(ROOT, f"{DRIVER}.py"))
+    roots = ["bench.py", *sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))]
     return _unreached_in(modules, [_read(os.path.join(ROOT, path)) for path in roots], KEEP)
 
 
@@ -240,6 +282,59 @@ class Table:
 def test_kept_defs_seed_the_walk():
     assert _unreached_in(*_synthetic(), {"m.kept"}) == {
         "m.only_imported", "m.reexported", "m.kept",
+    }
+
+
+_SYNTHETIC_DRIVER = '''
+import atexit
+from pkg import m
+
+_QUERIES = {}
+_ORACLE = "SELECT 1"
+_STAGED_ORACLE = "SELECT 2"
+
+
+def _q(name, oracle=None):
+    def deco(fn):
+        _QUERIES[name] = fn
+        return fn
+    return deco
+
+
+def _cleanup(): pass
+
+
+@_q("q_declared", _ORACLE)
+def q_declared(spark, sf_dir):
+    return m.declared_op()
+
+
+def _staged_q(spark, sf_dir):
+    return m.staged_op()
+
+
+_STAGED = {"q_staged": (_staged_q, _STAGED_ORACLE)}
+
+
+def queries():
+    return dict(_QUERIES)
+
+
+atexit.register(_cleanup)
+'''
+
+
+def test_driver_roots_are_its_registered_queries_and_contract():
+    """An unregistered query def, its oracle and the registry that
+    holds them reach nothing; a registered query, the contract and a
+    module-level call do."""
+    modules = {
+        "m": _parse("def declared_op(): pass\ndef staged_op(): pass\n"),
+        DRIVER: _parse(_SYNTHETIC_DRIVER),
+    }
+    assert _unreached_in(modules, []) == {
+        f"{DRIVER}._staged_q", f"{DRIVER}._STAGED_ORACLE", f"{DRIVER}._STAGED",
+        "m.staged_op",
     }
 
 

@@ -51,6 +51,22 @@ def test_versioned_write_validates_before_commit(spark, sf_small, tmp_path):
     assert TF.read_table(spark, tbl).count() == ev.count()
 
 
+def _crash_on_pointer_flip(monkeypatch, commit):
+    """Run ``commit`` with ``os.replace`` raising on ``_CURRENT``: the
+    new version dir is renamed into place, the pointer never flips."""
+    real_replace = os.replace
+
+    def crash(src, dst):
+        if os.path.basename(dst) == TF.CURRENT_FILE:
+            raise OSError("crash before the pointer flip")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError, match="pointer flip"):
+            commit()
+
+
 def test_crash_before_the_pointer_flip_keeps_the_previous_snapshot(spark, tmp_path, monkeypatch):
     """A crash after the new version dir is in place but before
     ``_CURRENT`` flips (``os.replace`` of the pointer raising) leaves
@@ -58,21 +74,40 @@ def test_crash_before_the_pointer_flip_keeps_the_previous_snapshot(spark, tmp_pa
     lands cleanly past the abandoned version."""
     tbl = str(tmp_path / "tbl")
     TF.write_version(spark.range(3), tbl)
-    real_replace = os.replace
-
-    def crash_on_pointer(src, dst):
-        if os.path.basename(dst) == TF.CURRENT_FILE:
-            raise OSError("crash before the pointer flip")
-        real_replace(src, dst)
-
-    with monkeypatch.context() as m:
-        m.setattr(os, "replace", crash_on_pointer)
-        with pytest.raises(OSError, match="pointer flip"):
-            TF.write_version(spark.range(5), tbl)
+    _crash_on_pointer_flip(monkeypatch, lambda: TF.write_version(spark.range(5), tbl))
     assert TF.current_version(tbl) == 1
     assert sorted(r.id for r in TF.read_table(spark, tbl).collect()) == [0, 1, 2]
     assert TF.write_version(spark.range(7), tbl) == 3
     assert TF.current_version(tbl) == 3
+    assert TF.read_table(spark, tbl).count() == 7
+
+
+def test_a_version_the_pointer_never_named_is_not_committed(spark, tmp_path, monkeypatch):
+    """Only versions ``_CURRENT`` has named count as committed.  A
+    version dir abandoned between its rename and the pointer flip is
+    not listed, the next commit sweeps it, ``remove_orphans`` sweeps
+    one left after the last commit, and ``expire_snapshots`` never
+    counts it among the versions it keeps (so it cannot push out the
+    real previous snapshot)."""
+    tbl = str(tmp_path / "tbl")
+    TF.write_version(spark.range(3), tbl)
+    _crash_on_pointer_flip(monkeypatch, lambda: TF.write_version(spark.range(5), tbl))
+    assert os.path.isdir(TF.version_path(tbl, 2))
+    assert TF.list_versions(tbl) == [1]
+    assert [r.version for r in TF.snapshots_table(spark, tbl).collect()] == [1]
+
+    assert TF.write_version(spark.range(7), tbl) == 3
+    assert TF.list_versions(tbl) == [1, 3]
+    assert not os.path.isdir(TF.version_path(tbl, 2))
+    assert TF.remove_orphans(tbl) == {"removed": []}
+    res = TF.expire_snapshots(tbl, keep_last=2)
+    assert res == {"removed": [], "kept": [1, 3]}
+    assert TF.read_table(spark, tbl, version=1).count() == 3
+
+    _crash_on_pointer_flip(monkeypatch, lambda: TF.write_version(spark.range(9), tbl))
+    assert TF.list_versions(tbl) == [1, 3]
+    assert TF.remove_orphans(tbl) == {"removed": ["v00000004"]}
+    assert TF.list_versions(tbl) == [1, 3]
     assert TF.read_table(spark, tbl).count() == 7
 
 
