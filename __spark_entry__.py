@@ -403,7 +403,7 @@ def q_orderby(spark, sf_dir):
     Computed scale-correctly: range partition + per-partition rank +
     offset join (relational.global_rank), never a one-partition window."""
     out = R.global_rank(
-        _t(spark, sf_dir, "events"), ["ts", "event_id"], rank_col="pos"
+        _t(spark, sf_dir, "events"), ["ts", "event_id"]
     )
     return out.select("event_id", "user_id", "pos")
 
@@ -517,7 +517,7 @@ def q_join_semi(spark, sf_dir):
     size)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return J.join_semi(c, o, "c_custkey", broadcast_keys=True).select(
+    return J.join_semi(c, o, "c_custkey").select(
         "c_custkey", "c_name"
     )
 
@@ -1112,9 +1112,7 @@ def q_sessionize_lag(spark, sf_dir):
     """W4: 30-min-gap LAG sessionization — the reference's declared
     Silver session stitching (DataModel_SchemaDesign.md:47,58)."""
     out = R.sessionize(
-        _t(spark, sf_dir, "events"), "user_id", "ts",
-        gap_minutes=30, tiebreak_cols=["event_id"],
-    )
+        _t(spark, sf_dir, "events"), "user_id", "ts")
     return out.select("event_id", "user_id", "session_id")
 
 
@@ -1576,7 +1574,7 @@ def q_ewma_state(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     return ewma_batch_oracle(
-        ev, "user_id", "ts", "value", alpha=0.3, tiebreak_col="event_id"
+        ev, "user_id", "ts", "value"
     )
 
 
@@ -1633,7 +1631,7 @@ def q_snapshot_diff(spark, sf_dir):
         (F.col("event_id") + 10_000_000).alias("event_id"), "user_id", "value"
     )
     TF.write_version(changed.unionByName(appended), tbl)
-    diff = TF.snapshot_diff(spark, tbl, 1, 2, key_cols=["event_id"])
+    diff = TF.snapshot_diff(spark, tbl, 1, key_cols=["event_id"])
     return diff.withColumnRenamed("_change", "change")
 
 
@@ -1737,9 +1735,7 @@ def q_ewma_anomaly(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     return ewma_anomaly_batch_oracle(
-        ev, "user_id", "ts", "value", alpha=0.3, z=3.0, min_n=3,
-        tiebreak_col="event_id",
-    )
+        ev, "user_id", "ts", "value")
 
 
 _PROFILE_ORACLE = """
@@ -1770,7 +1766,7 @@ def q_column_profile(spark, sf_dir):
 
     cust = _t(spark, sf_dir, "customer")
     return column_profile(
-        cust, ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
+        cust.select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     ).orderBy("column")
 
 
@@ -1804,7 +1800,7 @@ def q_text_repetition(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return repetition_stats(docs, n=2)
+    return repetition_stats(docs)
 
 
 # TF-IDF ranked retrieval with EXACTLY TWO query terms: each matched
@@ -1845,7 +1841,7 @@ def q_search_ranked(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return search_ranked(docs, ["window", "sort"], k=10)
+    return search_ranked(docs, ["window", "sort"])
 
 
 _RESAMPLE_ORACLE = """
@@ -1873,7 +1869,7 @@ def q_resample_fill(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events")
-    return resample_fill(ev, "ts", "1 minute").select(
+    return resample_fill(ev, "ts").select(
         "bucket", F.col("n").cast("long").alias("n")
     )
 
@@ -2146,7 +2142,7 @@ def q_spike_detect(spark, sf_dir):
     flagged above 3x.  Raw events shuffle once as (key, bin) partial
     counts; the global MAX(bin) is a one-row broadcast."""
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    return R.spike_detect(ev, ["user_id"], "ts", bin_seconds=600, threshold=3.0)
+    return R.spike_detect(ev, ["user_id"], "ts")
 
 
 @_q("q_agg_harmonic", """
@@ -2299,8 +2295,7 @@ def q_join_asof_nearest(spark, sf_dir):
     )
     out = asof_join_nearest(
         events, timeline, key="user_id", fact_ts="ts", timeline_ts="t_ts",
-        value_cols=["status"], fact_tiebreaks=["event_id"],
-    )
+        value_cols=["status"])
     return out.select(
         "event_id", "user_id", LF.ts_second("ts").alias("ts_s"), "status"
     )
@@ -2370,7 +2365,7 @@ def q_keywords_per_doc(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     scores = tfidf_scores(docs)
     top = topk_per_group(
-        scores, ["doc_id"], "tfidf", 3, tiebreak_cols=["term"], desc=True
+        scores, ["doc_id"], "tfidf", 3, tiebreak_cols=["term"]
     )
     return top.select("doc_id", F.col("rank").cast("int").alias("rnk"), "term")
 
@@ -2582,7 +2577,7 @@ def q_text_redact(spark, sf_dir):
             F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
         ).alias("text"),
     )
-    out = redact_pii(docs, token="[{kind}]")
+    out = redact_pii(docs)
     return out.select(
         "doc_id", "n_email", "n_ipv4", "n_phone", F.md5("text").alias("fp")
     )
@@ -2642,7 +2637,7 @@ def q_join_interval(spark, sf_dir):
     )
     pts = ev.select("event_id", F.col("ts").cast("double").alias("ts_s"))
     # bucket near the window length: ~2 bucket rows per interval
-    return interval_join(pts, iv, "ts_s", "start_s", "end_s", bucket_s=600).select(
+    return interval_join(pts, iv, "ts_s", "start_s", "end_s").select(
         "event_id", "interval_id"
     )
 
@@ -2718,38 +2713,41 @@ def q_dedup_exact(spark, sf_dir):
 # sequentially (list_reduce == F.aggregate), hash inputs are md5-based
 # or pure integer arithmetic.
 
+def _mutant_sql(max_id: int, offset: int, drop: int) -> str:
+    """SQL twin of :func:`_mutants`: documents below ``max_id`` minus
+    their last ``drop`` words, at ``doc_id + offset``."""
+    return f"""SELECT doc_id + {offset} AS doc_id,
+         array_to_string(list_slice(string_split(text, ' '), 1,
+             greatest(len(string_split(text, ' ')) - {drop}, 1)), ' ') AS text
+  FROM documents WHERE doc_id < {max_id}"""
+
+
 # corpus + injected near-copies (drop last 2 words of docs 0-19) —
-# SQL twin of the mutation in the q_neardup_* queries
-_MUTATED_CORPUS_CTE = """
+# SQL twin of _mutated_corpus
+_MUTATED_CORPUS_CTE = f"""
 all_docs AS (
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 200000 AS doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 2, 1)), ' ') AS text
-  FROM documents WHERE doc_id < 20
+  {_mutant_sql(20, 200000, 2)}
 )"""
+
+
+def _mutants(docs: DataFrame, max_id: int, offset: int, drop: int) -> DataFrame:
+    """Near-copies of the documents below ``max_id``: each drops its
+    last ``drop`` words and moves to ``doc_id + offset``."""
+    toks = F.split(F.col("text"), " ")
+    return docs.filter(F.col("doc_id") < max_id).select(
+        (F.col("doc_id") + offset).alias("doc_id"),
+        F.concat_ws(
+            " ", F.slice(toks, 1, F.greatest(F.size(toks) - drop, F.lit(1)))
+        ).alias("text"),
+    )
 
 
 def _mutated_corpus(docs: DataFrame) -> DataFrame:
     """Spark twin of _MUTATED_CORPUS_CTE: the documents corpus plus
-    drop-last-2-words near-copies of docs 0-19 at doc_id+200000.
-
-    Extracted in r12 (the r11 review flagged 8 verbatim copies of this
-    block as a silent-divergence hazard — an edit to one site would
-    unsync its 7 siblings' oracles).  Per the rotation rule, call
-    sites migrate here only in the round their query holds a window
-    head slot; the remaining literal sites are byte-identical to this
-    body and rotate in as their heads come up (r13+).
-    """
-    toks = F.split(F.col("text"), " ")
-    mutants = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(
-            " ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))
-        ).alias("text"),
-    )
-    return docs.unionByName(mutants)
+    drop-last-2-words near-copies of docs 0-19 at doc_id+200000."""
+    return docs.unionByName(_mutants(docs, 20, 200000, 2))
 
 
 # distinct word-3-gram shingle sets per doc (twin of dedup.word_shingles)
@@ -2907,10 +2905,10 @@ scored AS (
 SELECT id_a, id_b, score FROM scored WHERE score >= 0.35
 """
 
-# IVF twin (iterations=0): centroids are the 16 vectors with the
-# smallest md5-prefix hash of their id; assignment and probe order are
-# cosine-ranked with ties toward the lower centroid index (the stable
-# argsort in similarity._nearest_cells_udf).
+# IVF twin: centroids are the 16 vectors with the smallest md5-prefix
+# hash of their id; assignment and probe order are cosine-ranked with
+# ties toward the lower centroid index (the stable argsort in
+# similarity.knn_ivf).
 _KNN_IVF_ORACLE = f"""
 WITH qv AS (SELECT vec_id AS id, embedding AS v FROM embeddings WHERE vec_id < 10),
 cv AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
@@ -2978,7 +2976,7 @@ def q_embed_project(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    proj = project_embeddings(emb, out_dim=8)
+    proj = project_embeddings(emb)
     return proj.select(
         "vec_id", F.posexplode("projected").alias("dim_idx", "comp")
     )
@@ -3000,22 +2998,14 @@ def q_neardup_minhash(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    mutated = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))).alias("text"),
-    )
     return D.minhash_neardup_pairs(
-        docs.unionByName(mutated), jaccard_threshold=0.5
+        _mutated_corpus(docs), jaccard_threshold=0.5
     ).select("id_a", "id_b")
 
 
 _NEARDUP_CROSS_ORACLE = f"""
 WITH incoming AS (
-  SELECT doc_id + 200000 AS doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 2, 1)), ' ') AS text
-  FROM documents WHERE doc_id < 20
+  {_mutant_sql(20, 200000, 2)}
   UNION ALL
   SELECT doc_id + 300000 AS doc_id, text
   FROM documents WHERE doc_id >= 20 AND doc_id < 30
@@ -3053,17 +3043,13 @@ def q_neardup_cross_corpus(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     corpus = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    mutated = corpus.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))).alias("text"),
-    )
+    mutated = _mutants(corpus, 20, 200000, 2)
     copies = corpus.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30)).select(
         (F.col("doc_id") + 300000).alias("doc_id"), "text"
     )
     incoming = mutated.unionByName(copies)
     return D.minhash_cross_pairs(
-        corpus, incoming, jaccard_threshold=0.5
+        corpus, incoming
     ).select("left_id", "right_id")
 
 
@@ -3077,13 +3063,8 @@ def q_neardup_verified(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    mutated = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))).alias("text"),
-    )
     return D.minhash_verified_neardup_pairs(
-        docs.unionByName(mutated), jaccard_threshold=0.5
+        _mutated_corpus(docs), jaccard_threshold=0.5
     )
 
 
@@ -3092,19 +3073,13 @@ def q_neardup_verified(spark, sf_dir):
 # cluster id, distinct reachable count is the component size.  The
 # corpus injects TWO mutants for docs 0-9 (drop last 2 and last 4
 # words) so clusters with real transitivity (size >= 3) exist.
-_NEARDUP_CLUSTERS_ORACLE = """
+_NEARDUP_CLUSTERS_ORACLE = f"""
 WITH RECURSIVE all_docs AS (
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 200000 AS doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 2, 1)), ' ') AS text
-  FROM documents WHERE doc_id < 20
+  {_mutant_sql(20, 200000, 2)}
   UNION ALL
-  SELECT doc_id + 300000 AS doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 4, 1)), ' ') AS text
-  FROM documents WHERE doc_id < 10
+  {_mutant_sql(10, 300000, 4)}
 ),
 sh AS (
   SELECT doc_id AS id,
@@ -3151,25 +3126,13 @@ def q_neardup_clusters(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-
-    def _mutant(max_id, offset, drop):
-        return docs.filter(F.col("doc_id") < max_id).select(
-            (F.col("doc_id") + offset).alias("doc_id"),
-            F.concat_ws(
-                " ", F.slice(toks, 1, F.greatest(F.size(toks) - drop, F.lit(1)))
-            ).alias("text"),
-        )
-
-    corpus = docs.unionByName(_mutant(20, 200000, 2)).unionByName(
-        _mutant(10, 300000, 4)
-    )
+    corpus = _mutated_corpus(docs).unionByName(_mutants(docs, 10, 300000, 4))
     # degenerate-graph-safe composition (r7): exact-dup cliques are
     # pre-collapsed to one node before label propagation — output-
     # equivalent on any corpus (see verified_neardup_clusters), and the
     # difference between seconds and 10-minute straggler reducers on
     # duplicate-heavy inputs (50x replica, SCALING.md)
-    return D.verified_neardup_clusters(corpus, jaccard_threshold=0.5)
+    return D.verified_neardup_clusters(corpus)
 
 
 @_q("q_simhash_neardup", _SIMHASH_ORACLE)
@@ -3181,17 +3144,10 @@ def q_simhash_neardup(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    mutated = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))).alias("text"),
-    )
     # hamming <= 4: the standard near-dup band for 64-bit SimHash —
     # <=8 admits a quadratic tail of merely-similar pairs on a
     # shared-vocabulary corpus (~250k rows at sf0.1 vs ~53k at 4)
-    return D.simhash_neardup_pairs(
-        docs.unionByName(mutated), max_hamming=4, token_hash="md5_60"
-    )
+    return D.simhash_neardup_pairs(_mutated_corpus(docs))
 
 
 @_q("q_jaccard_pairs", """
@@ -3209,7 +3165,7 @@ def q_jaccard_pairs(spark, sf_dir):
     pair space comes from MinHash LSH candidates instead)."""
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
-    return D.jaccard_pairs(_t(spark, sf_dir, "documents"), max_id=30)
+    return D.jaccard_pairs(_t(spark, sf_dir, "documents").filter(F.col("doc_id") < 30))
 
 
 _KNN_ORACLE = """
@@ -3259,16 +3215,13 @@ def q_knn_lsh(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     return S.knn_lsh(
-        emb.filter(F.col("vec_id") < 10), emb, k=5, planes=4, tables=16,
-        collect_queries=True,
-    )
+        emb.filter(F.col("vec_id") < 10), emb)
 
 
 @_q("q_knn_ivf", _KNN_IVF_ORACLE)
 def q_knn_ivf(spark, sf_dir):
     """X3 scale path B: IVF inverted-file ANN — deterministic
-    hash-sampled quantizer (iterations=0 so any engine can reconstruct
-    the centroids; Lloyd refinement stays available on the operator),
+    hash-sampled quantizer (any engine can reconstruct the centroids),
     probe the 4 nearest of 16 cells, exact re-rank.  The oracle
     replicates assignment, probe order, and re-rank."""
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
@@ -3276,8 +3229,6 @@ def q_knn_ivf(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     return S.knn_ivf(
         emb.filter(F.col("vec_id") < 10), emb,
-        k=5, n_centroids=16, n_probe=4, iterations=0,
-        collect_queries=True,
     )
 
 
@@ -3298,7 +3249,7 @@ def q_embed_neardup(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     return S.embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.25, max_id=60
+        _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
     )
 
 
@@ -3310,19 +3261,17 @@ def q_embed_neardup_lsh(spark, sf_dir):
     replicates the banding, so recall misses cancel out exactly."""
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
-    # planes/tables tuned for the corpus's moderate-similarity pairs:
+    # 4 planes x 16 tables suit the corpus's moderate-similarity pairs:
     # p(co-bucket per table) = (1 - theta/pi)^4, OR-amplified over 16
-    # tables => ~0.9 recall at cosine 0.35 (theta ~ 69 deg).  planes
-    # pinned so the static oracle's hyperplane CTE matches at every sf
-    # (production leaves planes="auto" — derive_planes tracks corpus
-    # size).  Certified WITH the r8 exact-vector collapse: it is
+    # tables => ~0.9 recall at cosine 0.35 (theta ~ 69 deg); the static
+    # oracle's hyperplane CTE replicates them.  Certified WITH the r8 exact-vector collapse: it is
     # bit-equal to plain banding (copies share every bucket and every
     # expanded score is the same fold arithmetic), so the unchanged
     # oracle pins the equivalence; the collapse is what removes the
     # duplicate-clique straggler on re-crawl-heavy corpora (SCALING r8)
     emb = _t(spark, sf_dir, "embeddings")
     return S.embedding_neardup_pairs_lsh(
-        emb, threshold=0.35, planes=4, tables=16
+        emb
     )
 
 
@@ -3558,7 +3507,7 @@ def q_balance_cap(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "lang", "n_chars")
     return S.cap_per_group(
-        docs, ["source", "lang"], "n_chars", 5, tiebreak_cols=["doc_id"]
+        docs, ["source", "lang"], "n_chars", 5
     )
 
 
@@ -3597,7 +3546,7 @@ def q_decontaminate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    return S.decontaminate(corpus, benchmark, k=24, window=8).select("doc_id", "n_chars")
+    return S.decontaminate(corpus, benchmark).select("doc_id", "n_chars")
 
 
 @_q("q_decontaminate_ngram", """
@@ -3629,7 +3578,7 @@ def q_decontaminate_ngram(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    return S.decontaminate_ngram(corpus, benchmark, n=13).select("doc_id", "lang")
+    return S.decontaminate_ngram(corpus, benchmark).select("doc_id", "lang")
 
 
 @_q("q_lm_score", """
@@ -3739,7 +3688,7 @@ def q_chunk_documents(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import text as TX
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return TX.chunk_documents(docs, budget=32, overlap=8)
+    return TX.chunk_documents(docs, budget=32)
 
 
 @_q("q_stratified_sample", """
@@ -3764,7 +3713,7 @@ def q_stratified_sample(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     kept = S.stratified_sample(
-        docs, ["lang"], {("en",): 0.25, ("zh",): 0.50}, seed="sample-v1"
+        docs, ["lang"], {("en",): 0.25, ("zh",): 0.50}
     )
     return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
 
@@ -3828,7 +3777,7 @@ def q_multimodal_features(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import multimodal as MM
 
     docs = _t(spark, sf_dir, "documents")
-    media = MM.synthetic_media(spark, docs, n=64)
+    media = MM.synthetic_media(spark, docs.filter(F.col("doc_id") < 64))
     feats = MM.extract_features(media)
     return feats.select(
         "media_id", "kind",
@@ -4015,7 +3964,7 @@ def q_zscore_norm(spark, sf_dir):
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"
     )
     # l_quantity is integral (1..50): long-sum fast path, same values
-    out = R.zscore_normalize(li, ["l_returnflag"], "l_quantity", integral=True)
+    out = R.zscore_normalize(li, ["l_returnflag"], "l_quantity")
     return out.select("l_orderkey", "l_linenumber", "l_returnflag", "z")
 
 
@@ -4048,7 +3997,7 @@ def q_session_window_agg(spark, sf_dir):
     session iff gap STRICTLY exceeded).  Same operator runs unchanged
     under Structured Streaming with a watermark."""
     ev = _t(spark, sf_dir, "events")
-    out = R.session_window_agg(ev, "ts", ["user_id"], gap="30 minutes")
+    out = R.session_window_agg(ev, "ts", ["user_id"])
     return out.select(
         "user_id",
         F.date_trunc("second", "session_start").alias("session_start"),
@@ -4101,7 +4050,7 @@ def q_bm25_search(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return search_bm25(docs, ["window", "sort"], k=10)
+    return search_bm25(docs, ["window", "sort"])
 
 
 @_q("q_running_total", """
@@ -4501,19 +4450,13 @@ def q_trend_slope(spark, sf_dir):
     return grouped_ols(ev, ["user_id"], "x", "y")
 
 
-_NEARDUP_FREE_ORACLE = """
+_NEARDUP_FREE_ORACLE = f"""
 WITH RECURSIVE all_docs AS (
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 200000 AS doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 2, 1)), ' ') AS text
-  FROM documents WHERE doc_id < 20
+  {_mutant_sql(20, 200000, 2)}
   UNION ALL
-  SELECT doc_id + 300000 AS doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-             greatest(len(string_split(text, ' ')) - 4, 1)), ' ') AS text
-  FROM documents WHERE doc_id < 10
+  {_mutant_sql(10, 300000, 4)}
 ),
 sh AS (
   SELECT doc_id AS id,
@@ -4563,19 +4506,7 @@ def q_neardup_free_corpus(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-
-    def _mutant(max_id, offset, drop):
-        return docs.filter(F.col("doc_id") < max_id).select(
-            (F.col("doc_id") + offset).alias("doc_id"),
-            F.concat_ws(
-                " ", F.slice(toks, 1, F.greatest(F.size(toks) - drop, F.lit(1)))
-            ).alias("text"),
-        )
-
-    corpus = docs.unionByName(_mutant(20, 200000, 2)).unionByName(
-        _mutant(10, 300000, 4)
-    )
+    corpus = _mutated_corpus(docs).unionByName(_mutants(docs, 10, 300000, 4))
     # r14 (guide §2.4): the keep-one terminal never reads n_members, so
     # the drop set comes from the light losers path (row-identical to
     # filtering the full cluster table; the cluster-size aggregation
@@ -4730,7 +4661,7 @@ def q_contamination_report(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    return S.contamination_report(corpus, benchmark, n=13)
+    return S.contamination_report(corpus, benchmark)
 
 
 _CORPUS_PIPELINE_ORACLE = r"""
@@ -4842,7 +4773,7 @@ def q_corpus_pipeline(spark, sf_dir):
         F.broadcast(dup_drop), corpus["doc_id"] == dup_drop["id"], "left_anti"
     )
     gated = gopher_rules(deduped).filter(F.col("gopher_keep")).select("doc_id", "text")
-    clean = SM.decontaminate_ngram(gated, benchmark, n=13)
+    clean = SM.decontaminate_ngram(gated, benchmark)
     return clean.select(
         "doc_id", F.size(tokens("text")).cast("long").alias("n_tokens")
     )
@@ -4956,7 +4887,7 @@ def q_bpe_pairs(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return bpe_pair_counts(docs, top_n=50)
+    return bpe_pair_counts(docs)
 
 
 @_q("q_embed_centroids", """
@@ -4985,7 +4916,7 @@ def q_embed_centroids(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     return S.embedding_centroids(
-        _t(spark, sf_dir, "embeddings"), dyadic_bits=43
+        _t(spark, sf_dir, "embeddings")
     )
 
 
@@ -5033,7 +4964,7 @@ def q_embed_clusters(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     pairs = S.embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.25, max_id=60
+        _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
     )
     return D.neardup_clusters(pairs.select("id_a", "id_b"))
 
@@ -5126,8 +5057,7 @@ def q_semdedup(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     return S.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), k=8, threshold=0.32, max_id=500,
-        max_cell=256,
+        _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500), max_cell=256,
     )
 
 
@@ -5172,7 +5102,6 @@ def q_semantic_decontaminate(spark, sf_dir):
     return S.semantic_contamination(
         emb.filter(F.col("vec_id") % 97 != 0),
         emb.filter(F.col("vec_id") % 97 == 0),
-        threshold=0.28,
     )
 
 
@@ -5218,7 +5147,7 @@ def q_semantic_decontaminate_lsh(spark, sf_dir):
     (corpus, eval) pairs come from multi-table sign-LSH co-bucketing
     (8 tables x 8 planes — the q_embed_neardup_lsh hash family)
     instead of the |corpus| x |eval| broadcast product.  This is the
-    form that runs at 100 TB: both sides shuffle only ``tables`` small
+    form that runs at 100 TB: both sides shuffle only 8 small
     band rows per vector, never the pair space, and the brute-force
     twin's 50 s wall at the 50x replica becomes a bucket join.  The
     oracle twins the ENTIRE algorithm — deterministic hyperplanes,
@@ -5228,17 +5157,11 @@ def q_semantic_decontaminate_lsh(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     emb = _t(spark, sf_dir, "embeddings")
-    # planes AND tables pinned (8 x 8) so the static oracle's
-    # hyperplane CTE matches at every sf; production callers leave
-    # planes="auto"/tables="auto" and the derivations track corpus
-    # size and the recall model (similarity.derive_planes /
-    # derive_tables, r9)
+    # 8 planes x 8 tables, which the static oracle's hyperplane CTE
+    # replicates
     return S.semantic_contamination_lsh(
         emb.filter(F.col("vec_id") % 97 != 0),
         emb.filter(F.col("vec_id") % 97 == 0),
-        threshold=0.28,
-        planes=8,
-        tables=8,
     )
 
 
@@ -5354,7 +5277,7 @@ def q_vocab_coverage(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import text as T
 
     return T.vocab_coverage(
-        _t(spark, sf_dir, "documents"), targets=(50, 90, 99)
+        _t(spark, sf_dir, "documents")
     )
 
 
@@ -5393,7 +5316,7 @@ def q_dedup_passage(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return D.passage_repetition(_mutated_corpus(docs), chunk=8)
+    return D.passage_repetition(_mutated_corpus(docs))
 
 
 @_q("q_shard_layout", """
@@ -5423,7 +5346,7 @@ def q_shard_layout(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
 
     return Smp.training_shard_layout(
-        _t(spark, sf_dir, "documents"), shards=8, seed="shuffle-v1"
+        _t(spark, sf_dir, "documents"), shards=8
     )
 
 
@@ -5461,19 +5384,7 @@ def q_split_leakage(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    mutated = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat_ws(
-            " ", F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(1)))
-        ).alias("text"),
-    )
-    return Smp.split_leakage(
-        docs.unionByName(mutated),
-        jaccard_threshold=0.5,
-        weights={"train": 0.90, "eval": 0.10},
-        seed="split-v1",
-    )
+    return Smp.split_leakage(_mutated_corpus(docs))
 
 
 # =====================================================================
@@ -5530,9 +5441,6 @@ def q_split_assign_safe(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return Smp.leakage_safe_split(
         _mutated_corpus(docs),
-        jaccard_threshold=0.5,
-        weights={"train": 0.90, "eval": 0.10},
-        seed="split-v1",
     ).select("doc_id", "split")
 
 
@@ -5583,7 +5491,7 @@ def q_dedup_substring(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return D.substring_dup_spans(
-        _mutated_corpus(docs), min_gram=8, hash_fn="md5_60"
+        _mutated_corpus(docs)
     )
 
 
@@ -5616,9 +5524,6 @@ def q_dedup_substring(spark, sf_dir):
 # deterministic tiebreak since the r10 window).
 #
 # r12 changes to certified queries, all rotation-legal:
-#   - q_dedup_passage (r9 cohort, IN this window) migrates its
-#     mutant-corpus block to the new _mutated_corpus() helper — a
-#     byte-identical plan (pytest parity re-certifies it here).
 #   - q_table_stats / q_sorted_write / q_bucket_pruned_lookup
 #     (rows-only summaries, r10 cohort) convert from boolean-column
 #     to row-dropping form per VERDICT r11 #6; they take the r13
@@ -5723,11 +5628,6 @@ _CHECK_FIRST: list[str] = [
 #     q_spike_detect q_split_leakage q_stratified_sample q_text_fingerprint
 #     q_text_redact q_text_repetition q_text_winnow q_trend_slope
 #     q_vocab_coverage
-# Mutant-corpus literal sites owed migration to _mutated_corpus() as
-# their queries reach a head slot (r11 review note): of the 5 owed,
-# q_neardup_minhash / q_neardup_cross_corpus / q_neardup_verified /
-# q_simhash_neardup are IN this r13 window (order them into the head
-# block when migrating), q_split_leakage slides to r14.
 
 
 def _ranked(names: dict[str, object]) -> list[str]:

@@ -35,11 +35,11 @@ def dsum(col: Column | str, scale: int = 4) -> Column:
     return F.sum(c.cast(f"decimal(28,{scale})")).cast("double")
 
 
-def msum(col: Column | str, scale: int = 2) -> Column:
+def msum(col: Column | str) -> Column:
     """Order-independent sum of a fixed-point monetary DOUBLE column.
 
-    For columns whose values carry at most ``scale`` decimal digits
-    (TPC-H money: cents), ``round(x * 10^scale)`` recovers the exact
+    For columns whose values carry at most 2 decimal digits
+    (TPC-H money: cents), ``round(x * 100)`` recovers the exact
     scaled integer (the double representation error is ~1e-9 of a unit,
     never near a .5 boundary), so a LONG sum is exact and associative.
     The final ``/ 10^scale`` yields the correctly-rounded double —
@@ -53,8 +53,7 @@ def msum(col: Column | str, scale: int = 2) -> Column:
     ~1e24).  Non-fixed-point inputs silently round — use :func:`dsum`.
     """
     c = F.col(col) if isinstance(col, str) else col
-    m = 10 ** scale
-    return F.sum(F.round(c * m).cast("long")) / F.lit(float(m))
+    return F.sum(F.round(c * 100).cast("long")) / F.lit(100.0)
 
 
 def lsum(term: Column) -> Column:
@@ -70,7 +69,7 @@ def lsum(term: Column) -> Column:
     return F.sum(term.cast("long")).cast("double")
 
 
-def xlsum(term: Column, shift: int = 24) -> Column:
+def xlsum(term: Column) -> Column:
     """Exact order-independent sum of an integral expression whose
     per-row magnitude (up to ~2^53) would push a plain long sum past
     2^63 at large row counts: each row splits into hi/lo halves at
@@ -84,19 +83,19 @@ def xlsum(term: Column, shift: int = 24) -> Column:
     sum(hi) at 2^63 * 2^24 / max|term| rows.  Above that, fall back to
     :func:`dsum`-style decimal accumulation."""
     t = term.cast("long")
-    hi = F.shiftright(t, shift)
-    lo = t - hi * F.lit(2**shift).cast("long")
+    hi = F.shiftright(t, 24)
+    lo = t - hi * F.lit(2**24).cast("long")
     return (
-        F.sum(hi).cast("decimal(38,0)") * F.lit(2**shift)
+        F.sum(hi).cast("decimal(38,0)") * F.lit(2**24)
         + F.sum(lo).cast("decimal(38,0)")
     ).cast("double")
 
 
-def davg(col: Column | str, scale: int = 4) -> Column:
+def davg(col: Column | str) -> Column:
     """Order-independent mean: exact decimal sum / count, as DOUBLE."""
     c = F.col(col) if isinstance(col, str) else col
     return (
-        F.sum(c.cast(f"decimal(28,{scale})")).cast("double")
+        F.sum(c.cast(f"decimal(28,4)")).cast("double")
         / F.count(c).cast("double")
     )
 

@@ -113,7 +113,7 @@ def expire_snapshots(
     )
 
 
-def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def column_profile(df: DataFrame) -> DataFrame:
     """Column-level table profile — the ``ANALYZE TABLE ... COMPUTE
     STATISTICS FOR COLUMNS`` analogue serving layout/optimizer
     decisions (join-side choice, dictionary-encoding candidates,
@@ -127,7 +127,7 @@ def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     only, so the profile is engine-neutral and oracle-exact (min/max
     would drag engine-specific value formatting into the contract).
     """
-    names = cols or df.columns
+    names = df.columns
     aggs: list = [F.count(F.lit(1)).alias("__n")]
     for c in names:
         aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))

@@ -35,7 +35,6 @@ def build_silver(
     dim_timeline: DataFrame | None = None,
     ts_col: str = "ts",
     user_col: str = "user_id",
-    gap_minutes: int = 30,
     expectations: dict | None = None,
 ) -> DataFrame:
     """Silver: sessionized, point-in-time-enriched wide facts
@@ -54,7 +53,7 @@ def build_silver(
         from ..quality import quality_gate
 
         events, _quarantine = quality_gate(events, expectations)
-    silver = sessionize(events, user_col, ts_col, gap_minutes, tiebreak_cols=["event_id"])
+    silver = sessionize(events, user_col, ts_col)
     silver = silver.withColumn("date", F.col(ts_col).cast("date"))
     if dim_timeline is not None:
         value_cols = [c for c in dim_timeline.columns if c not in (user_col, "t_ts")]
@@ -67,13 +66,12 @@ def build_silver(
 
 def build_gold_window_stats(
     events: DataFrame, ts_col: str = "ts", entity_col: str = "user_id",
-    window: str = "1 minute",
 ) -> DataFrame:
     """Gold metrics log: 1-minute conditional counts per entity — the
     reference's video_stats_1min (stream_content.py:31-42).  Derived
     metrics (velocity etc.) stay read-side (O18)."""
     return tumbling_window_counts(
-        events, ts_col, window, [entity_col],
+        events, ts_col, "1 minute", [entity_col],
         {
             "views": F.col("event_type") == "view",
             "clicks": F.col("event_type") == "click",
@@ -86,15 +84,12 @@ def build_gold_window_stats(
 
 def build_gold_latest_state(
     order_events: DataFrame,
-    key: str = "order_id",
-    ts_col: str = "event_timestamp",
-    fill_cols: list[str] | None = None,
 ) -> DataFrame:
     """Gold latest-state: one row per key, sparse columns filled from
     the latest non-null event (reference orders_current,
     streaming_job.py:92-155: W2 fill + W1 dedup), as the one
     ``latest_state`` aggregation."""
-    fills = fill_cols or [
-        c for c in order_events.columns if c not in (key, ts_col)
+    fills = [
+        c for c in order_events.columns if c not in ("order_id", "event_timestamp")
     ]
-    return latest_state(order_events, [key], ts_col, fills, tiebreak_cols=None)
+    return latest_state(order_events, ["order_id"], "event_timestamp", fills)

@@ -28,17 +28,9 @@ from .text import tokens
 
 def _md5_60(tok: Column) -> Column:
     """60-bit token hash from the md5 hex prefix — engine-portable
-    (DuckDB: ``('0x' || substr(md5(t),1,15))::BIGINT``), so operators
-    parameterized on it have exact cross-engine SQL twins.  xxhash64 is
-    ~10x cheaper and stays the scale-path default."""
+    (DuckDB: ``('0x' || substr(md5(t),1,15))::BIGINT``), so the
+    operators that hash with it have exact cross-engine SQL twins."""
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
-
-
-TOKEN_HASHES = {
-    # NB: wrapped — variadic F.xxhash64 can't be passed to an HOF raw
-    "xxhash64": lambda c: F.xxhash64(c),
-    "md5_60": _md5_60,
-}
 
 
 def release_cached(df: DataFrame) -> None:
@@ -82,8 +74,6 @@ def _attach_layout(df: DataFrame, frames: list[DataFrame]) -> DataFrame:
 
 def exact_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """X1: one row per distinct text; keeper = min id, n_copies kept
     for lineage.  Single hash-shuffle on the dedup key.
@@ -96,10 +86,10 @@ def exact_dedup(
     Output: (fp, keeper_id, n_copies); a caller that needs the text
     joins the fingerprints back to the corpus on ``md5(text)``."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("fp"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("fp"), F.col("doc_id"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -299,7 +289,6 @@ def minhash_neardup_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    max_bucket: int = 1024,
     with_same_fp: bool = False,
 ) -> DataFrame:
     """X2: MinHash+LSH near-duplicate pairs with estimated Jaccard.
@@ -312,7 +301,7 @@ def minhash_neardup_pairs(
     and the final distinct — this is the formulation that survives
     100 TB corpora; the quadratic pair space is never materialized.
 
-    ``max_bucket`` guards the self-join against degenerate band
+    A 1024-member cap guards the self-join against degenerate band
     buckets: a cluster of m byte-identical boilerplate docs co-buckets
     in EVERY band and contributes O(m^2) pairs x bands.  Run exact
     dedup first (the corpus-prep composition does); the cap is the
@@ -343,7 +332,7 @@ def minhash_neardup_pairs(
     # filter still runs BEFORE the pair-dedup shuffle: a pair
     # co-bucketing in several bands is scored redundantly (cheap,
     # map-side), but the distinct only shuffles surviving pairs.
-    pairs = _bucket_pairs(banded, ["band", "bhash"], max_bucket)
+    pairs = _bucket_pairs(banded, ["band", "bhash"], 1024)
     out_cols = ["id_a", "id_b", "jaccard_est"] + (
         ["same_fp"] if with_same_fp else []
     )
@@ -378,13 +367,6 @@ def _sig_agreement_est(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
 def minhash_cross_pairs(
     left: DataFrame,
     right: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
-    max_bucket: int = 1024,
 ) -> DataFrame:
     """X2 cross-corpus: MinHash+LSH near-duplicate pairs BETWEEN two
     corpora — "which incoming documents near-duplicate something the
@@ -407,8 +389,8 @@ def minhash_cross_pairs(
     incoming docs is one anti-join on ``right_id`` (the
     neardup-free composition pattern)."""
     kwargs = dict(
-        text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-        bands=bands, shingle_n=shingle_n, include_fp=True,
+        text_col="text", id_col="doc_id", num_hashes=32,
+        bands=8, shingle_n=3, include_fp=True,
     )
     both = (
         minhash_banded(left, **kwargs).withColumn("side", F.lit(0))
@@ -419,9 +401,9 @@ def minhash_cross_pairs(
     # the array comparison (the dominant case when re-crawls re-ingest
     # unchanged pages)
     est = F.when(F.col("p.a.fp") == F.col("p.b.fp"), F.lit(1.0)).otherwise(
-        _sig_agreement_est(F.col("p.a.sig"), F.col("p.b.sig"), num_hashes)
+        _sig_agreement_est(F.col("p.a.sig"), F.col("p.b.sig"), 32)
     )
-    pairs = _bucket_pairs(both, ["band", "bhash"], max_bucket)
+    pairs = _bucket_pairs(both, ["band", "bhash"], 1024)
     return (
         pairs.filter(F.col("p.a.side") != F.col("p.b.side"))
         .select(
@@ -431,7 +413,7 @@ def minhash_cross_pairs(
             .otherwise(F.col("p.a.id")).alias("right_id"),
             est.alias("jaccard_est"),
         )
-        .filter(F.col("jaccard_est") >= jaccard_threshold)
+        .filter(F.col("jaccard_est") >= 0.5)
         .dropDuplicates(["left_id", "right_id"])
         .select("left_id", "right_id", "jaccard_est")
     )
@@ -525,14 +507,11 @@ _SWAR_MASK = (1 << 0) | (1 << 21) | (1 << 42)
 _SWAR_LANE = (1 << 21) - 1
 
 
-def simhash_sigs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    token_hash: str = "xxhash64",
-) -> DataFrame:
-    """SimHash signatures ``(id, sig)`` computed entirely JVM-side in
-    whole-stage codegen — no Python worker in the plan.
+def simhash_sigs(df: DataFrame) -> DataFrame:
+    """SimHash signatures ``(id, sig)`` of ``text`` keyed by
+    ``doc_id``, over md5-prefix token hashes (:func:`_md5_60`),
+    computed entirely JVM-side in whole-stage codegen — no Python
+    worker in the plan.
 
     Formulation: explode the distinct token hashes to rows, then ONE
     hash aggregation per document computes 22 SWAR accumulators —
@@ -568,7 +547,6 @@ def simhash_sigs(
     be dropped and is what keeps the 21-bit lanes overflow-safe under
     ANSI mode (see ``_SWAR_MASK``).
     """
-    hash_fn = TOKEN_HASHES[token_hash]
     spark = df.sparkSession
     # map-stage parallelism targets cores (the md5/tokenize work is
     # CPU-bound); reduce-side stages keep the session's data-sized
@@ -578,18 +556,18 @@ def simhash_sigs(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
     if df.rdd.getNumPartitions() * 4 <= p:
-        df = df.repartition(p, id_col)
+        df = df.repartition(p, "doc_id")
     # materialized so the size cap and the explode share one
     # array_distinct(tokens()) evaluation
     arr = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(tokens(text_col)).alias("__arr"),
+            F.col("doc_id").alias("id"),
+            F.array_distinct(tokens("text")).alias("__arr"),
         )
         .filter(F.size("__arr") <= 0xFFFF)
     )
     hashed = arr.select("id", F.explode("__arr").alias("tok")).select(
-        "id", hash_fn(F.col("tok")).alias("h")
+        "id", _md5_60(F.col("tok")).alias("h")
     )
     aggs = hashed.groupBy("id").agg(
         F.count(F.lit(1)).alias("n"),
@@ -620,7 +598,7 @@ def simhash_sigs(
     return aggs.select("id", sig.alias("sig"))
 
 
-#: The ``chunks="auto"`` ladder: (chunk bit-widths over the 64-bit
+#: The simhash banding ladder: (chunk bit-widths over the 64-bit
 #: signature, combination size m).  Band keys are every m-combination
 #: of chunks, so a pair at hamming d <= len(widths) - m is GUARANTEED
 #: a shared band (pigeonhole).  Tier 0 is the classic 4x16 single-chunk
@@ -634,15 +612,12 @@ _SIMHASH_CHUNK_LADDER = (
 )
 
 
-def derive_simhash_chunks(
-    corpus_count: int, max_bucket: int = 256
-) -> tuple[tuple[int, ...], int]:
+def derive_simhash_chunks(corpus_count: int) -> tuple[tuple[int, ...], int]:
     """Derive the simhash banding scheme from corpus size (r11,
-    VERDICT r10 #3 — the ``planes="auto"`` discipline applied to
-    chunk banding).
+    VERDICT r10 #3).
 
     The fixed 4x16-bit scheme's expected bucket size is n / 2^16 —
-    ~153 at 10M unique docs, i.e. the default ``max_bucket=256`` cap
+    ~153 at 10M unique docs, i.e. the ``max_bucket=256`` cap
     starts truncating EVERY bucket just past that point and recall
     collapses (measured at the duplicate-choked 50x replica: capped
     recall 0.30, SCALING.md r10).  Rule: a tier stays selected while
@@ -653,8 +628,8 @@ def derive_simhash_chunks(
     chunks, all C(8,4) = 70 4-combinations, 32-bit keys: expected
     bucket 0.23 at 10^9 docs).  The growth tiers band m chunks per
     key, so the pigeonhole guarantee is d <= c - m = 4 — one STRONGER
-    than tier 0's d <= 3, and exactly the certified query's
-    ``max_hamming=4`` band; recall above the guarantee is
+    than tier 0's d <= 3, and exactly the operator's hamming <= 4
+    band; recall above the guarantee is
     probabilistic in every tier (documented below).  The published
     shape for this is the block-permutation scheme of Manku et al.,
     "Detecting Near-Duplicates for Web Crawling" (WWW'07);
@@ -663,62 +638,51 @@ def derive_simhash_chunks(
     Cost honesty: tiers 1/2 emit 15/70 band rows per doc vs 4 — the
     combinatorial price every simhash multi-block scheme pays, still
     linear in n, against which the 16-bit scheme is not slower but
-    DEAD at corpus scale (every bucket capped).  ``max_bucket`` still
+    DEAD at corpus scale (every bucket capped).  The 256 cap still
     applies per (combo, key) as the adversarial-skew backstop.
     """
     for widths, m in _SIMHASH_CHUNK_LADDER:
         min_key_bits = sum(sorted(widths)[:m])
-        if corpus_count <= (max_bucket // 2) << min_key_bits:
+        if corpus_count <= (256 // 2) << min_key_bits:
             return widths, m
     return _SIMHASH_CHUNK_LADDER[-1]
 
 
 def simhash_neardup_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    max_bucket: int = 256,
-    token_hash: str = "xxhash64",
-    chunks: str | tuple[tuple[int, ...], int] = "auto",
-    corpus_count: int | None = None,
 ) -> DataFrame:
-    """SimHash near-dup: chunk banding -> candidate join -> exact
-    hamming filter.  ``chunks="auto"`` (default, r11) derives the
-    banding scheme from corpus size via
-    :func:`derive_simhash_chunks`: 4x16-bit single-chunk bands below
-    ~8M docs (bit-identical to the r10 fixed scheme, including band
-    ordering), then C(6,2) / C(8,4) combination bands with >= 20 /
-    32-bit keys — the corpus size comes from ``corpus_count`` when
-    the caller knows it, else one eager ``count()`` at construction
-    (the ``planes="auto"`` precedent).  An explicit ``(widths, m)``
-    tuple pins a scheme.
+    """SimHash near-dup pairs (hamming <= 4): chunk banding ->
+    candidate join -> exact hamming filter.  The banding scheme
+    derives from corpus size via :func:`derive_simhash_chunks` (r11):
+    4x16-bit single-chunk bands below ~8M docs (bit-identical to the
+    r10 fixed scheme, including band ordering), then C(6,2) / C(8,4)
+    combination bands with >= 20 / 32-bit keys; the corpus size is
+    one eager ``count()`` at construction.
 
     Recall bound (pigeonhole): with chunk widths ``w_1..w_c`` banded
     on all m-combinations, two signatures at hamming distance
     d <= c - m ALWAYS share an untouched combination and are
     guaranteed candidates (tier 0: d <= 3; the growth tiers: d <= 4).
-    For c - m < d <= max_hamming a pair is found unless its differing
+    For c - m < d <= 4 a pair is found unless its differing
     bits spread across too many chunks — a known, documented recall
     gap of chunk banding; the standard fix when it matters is more
     chunks / larger m at higher candidate volume.
 
-    ``max_bucket`` drops chunk buckets with more members than the cap
-    before the self-join: a chunk value shared by hundreds of documents
+    Chunk buckets with more than 256 members drop before the
+    self-join: a chunk value shared by hundreds of documents
     is uninformative for near-dup detection yet contributes O(m^2)
     candidate pairs — the unbounded version is exactly the query that
     falls over at corpus scale (one hot bucket = one quadratic
     executor-killing partition; measured at the 50x replica the
-    uncapped run DIES at ~98 s where this default finishes in 2.8 s —
+    uncapped run DIES at ~98 s where the cap finishes in 2.8 s —
     SCALING.md r10).  Pairs whose every common chunk is hot are the
     accepted recall cost; the measured discipline is: exact-dedup
     FIRST (duplicate-choked buckets cost ALL the non-identical
-    recall), then window the cap up for small/homogeneous corpora
-    (cap 1024 restored recall 1.0 on the deduped replica at +0.35 s).
+    recall).
 
-    ``token_hash``: "xxhash64" (default, fastest) or "md5_60" — the
-    md5-prefix hash is reproducible in ANSI SQL, which gives the whole
-    pipeline (signature -> banding -> hamming) an exact DuckDB twin.
+    Tokens hash with the md5-prefix hash, which is reproducible in
+    ANSI SQL, so the whole pipeline (signature -> banding -> hamming)
+    has an exact DuckDB twin.
 
     Signatures come from :func:`simhash_sigs` (all-JVM SWAR
     aggregation; its one exchange carries either the text — severely
@@ -727,27 +691,11 @@ def simhash_neardup_pairs(
     generation add one exchange each, so the whole operator is three
     shuffles and zero Python stages.
     """
-    if chunks == "auto":
-        if corpus_count is not None:
-            n = corpus_count
-        else:
-            # eager plan execution at CONSTRUCTION time (ADVICE r11):
-            # the upstream plan runs here for the count and again for
-            # signatures — callers with an expensive lazy upstream
-            # should pass corpus_count (or persist df first); logged
-            # so the extra action is visible, not silent.
-            import logging
-
-            logging.getLogger(__name__).info(
-                "simhash_neardup_pairs(chunks='auto'): no corpus_count "
-                "given — running df.count() eagerly at construction; "
-                "the upstream plan will execute twice"
-            )
-            n = df.count()
-        widths, m = derive_simhash_chunks(n, max_bucket)
-    else:
-        widths, m = chunks
-    sig_df = simhash_sigs(df, text_col, id_col, token_hash)
+    # eager plan execution at CONSTRUCTION time (ADVICE r11): the
+    # upstream plan runs here for the count and again for signatures —
+    # persist an expensive lazy upstream first
+    widths, m = derive_simhash_chunks(df.count())
+    sig_df = simhash_sigs(df)
     offsets = [sum(widths[:i]) for i in range(len(widths))]
 
     def _chunk(i: int):
@@ -780,14 +728,14 @@ def simhash_neardup_pairs(
     # nothing persisted — see _bucket_pairs); the hamming filter runs
     # BEFORE the pair-dedup shuffle so the distinct only carries pairs
     # that already passed
-    pairs = _bucket_pairs(banded, ["chunk", "ck"], max_bucket)
+    pairs = _bucket_pairs(banded, ["chunk", "ck"], 256)
     return (
         pairs.select(
             F.least(F.col("p.a.id"), F.col("p.b.id")).alias("id_a"),
             F.greatest(F.col("p.a.id"), F.col("p.b.id")).alias("id_b"),
             F.bit_count(F.col("p.a.sig").bitwiseXOR(F.col("p.b.sig"))).alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 4)
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "hamming")
     )
@@ -900,22 +848,13 @@ def minhash_verified_neardup_pairs(
 
 def jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_id: int | None = None,
-    shingle_n: int = 1,
 ) -> DataFrame:
-    """N-gram Jaccard similarity over candidate pairs (``shingle_n=1``
-    is plain token sets; 3 matches the MinHash estimator's space).
-    ``max_id`` bounds the pair space for the declared oracle query; at
-    scale candidates come from MinHash LSH instead of a cross join."""
-    base = df if max_id is None else df.filter(F.col(id_col) < max_id)
-    gram = (
-        tokens(text_col) if shingle_n == 1 else word_shingles(text_col, shingle_n)
-    )
-    toks = base.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(gram).alias("tok"),
+    """Token-set Jaccard similarity over all pairs, so callers bound
+    the input (the declared query takes ids below 30); at scale
+    candidates come from MinHash LSH instead of a cross join."""
+    toks = df.select(
+        F.col("doc_id").alias("id"),
+        F.array_distinct(tokens("text")).alias("tok"),
     )
     a, b = toks.alias("a"), toks.alias("b")
     inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok")))
@@ -932,9 +871,6 @@ def jaccard_pairs(
 
 def neardup_clusters(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph — the step
     that turns pairwise detections into actionable duplicate CLUSTERS
@@ -946,8 +882,8 @@ def neardup_clusters(
     labels; at fixpoint the label is the component's min id — a
     deterministic, order-independent cluster id.  Rounds needed =
     graph diameter, and near-dup components are dense (near-cliques:
-    mutual shingle overlap), so 2-3 rounds is typical; ``max_iter``
-    is a guard, not a budget.  For adversarial long-chain graphs
+    mutual shingle overlap), so 2-3 rounds is typical; the 25-round
+    cap is a guard, not a budget.  For adversarial long-chain graphs
     switch to pointer-jumping (large-star/small-star), which is
     O(log n) rounds at higher per-round cost.
 
@@ -959,7 +895,7 @@ def neardup_clusters(
     n_members)`` for every node in the pair graph (singletons never
     enter ``pairs`` and are their own implicit cluster).
     """
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
@@ -968,7 +904,7 @@ def neardup_clusters(
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         nbr = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src").agg(F.min("label").alias("nbr_min"))
@@ -997,13 +933,7 @@ def neardup_clusters(
     )
 
 
-def verified_neardup_clusters(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    jaccard_threshold: float = 0.5,
-    **minhash_kwargs,
-) -> DataFrame:
+def verified_neardup_clusters(df: DataFrame) -> DataFrame:
     """X2 cluster terminal, degenerate-graph-safe: near-dup CLUSTERS
     over a corpus, with every EXACT-duplicate group pre-collapsed to
     one representative node before label propagation.
@@ -1041,9 +971,7 @@ def verified_neardup_clusters(
     carries (fp/id, counts) rows; the anti-join side of the expansion
     is |distinct-texts|-sized.
     """
-    memb, comp = _collapsed_graph(
-        df, text_col, id_col, jaccard_threshold, **minhash_kwargs
-    )
+    memb, comp = _collapsed_graph(df, "text", "doc_id", 0.5)
     groups = memb.filter(F.col("id") == F.col("__rep")).select("__rep", "__n")
     sizes = (
         comp.join(groups, "__rep")
@@ -1167,13 +1095,7 @@ def neardup_losers(
     return _attach_cached(losers, [memb])
 
 
-def neardup_cluster_keys(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    jaccard_threshold: float = 0.5,
-    **minhash_kwargs,
-) -> DataFrame:
+def neardup_cluster_keys(df: DataFrame) -> DataFrame:
     """Every document's effective near-dup cluster key, one row per
     input doc: ``(id_col, __cluster_key)`` where the key is the
     verified-cluster id for cluster members and the document's own id
@@ -1187,11 +1109,9 @@ def neardup_cluster_keys(
     IS the cluster id the full table would report; singletons key on
     themselves, the same value the coalesce fallback would produce).
     """
-    memb, comp = _collapsed_graph(
-        df, text_col, id_col, jaccard_threshold, **minhash_kwargs
-    )
+    memb, comp = _collapsed_graph(df, "text", "doc_id", 0.5)
     keys = memb.join(comp, "__rep", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.coalesce(F.col("cluster_id"), F.col("__rep")).alias("__cluster_key"),
     )
     return _attach_cached(keys, [memb])
@@ -1253,10 +1173,6 @@ def _mark_duplicated(grams: DataFrame) -> DataFrame:
 
 def passage_repetition(
     df: DataFrame,
-    chunk: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Inter-document PASSAGE-level duplication profile — the
     boilerplate/near-template signal MassiveText- and
@@ -1265,7 +1181,7 @@ def passage_repetition(
     whole-document dedup cannot see).
 
     Each document's token stream is cut into non-overlapping
-    ``chunk``-token passages (stride == chunk; the ragged tail is
+    8-token passages (stride == 8; the ragged tail is
     dropped so both engines see identical chunk sets), every passage
     is fingerprinted, and a global occurrence count per fingerprint
     marks which passages appear more than once ANYWHERE in the
@@ -1286,37 +1202,34 @@ def passage_repetition(
     on the id.  A pathologically hot fingerprint (one passage shared
     by a large fraction of all documents) skews the window partition
     where the old agg's map-side combine would not (see
-    :func:`_mark_duplicated`).
-    ``hash_fn='md5_60'`` keeps the exact DuckDB twin; production runs
-    use ``'xxhash64'`` (~10x cheaper, same collision argument as
-    every gram pipeline here).
+    :func:`_mark_duplicated`).  Passages hash with :func:`_md5_60`,
+    which keeps the exact DuckDB twin.
     """
-    hasher = TOKEN_HASHES[hash_fn]  # "md5_60" maps to _md5_60 already
     # r13: same under-split spread as _sliding_grams — the chunk-hash
     # build is the CPU stage; guarded, so a well-split input skips it
     from ..sources import fan_out
 
     df = fan_out(df)
-    t = tokens(text_col)
+    t = tokens("text")
     base = (
-        df.select(F.col(id_col), t.alias("__t"))
-        .withColumn("__nc", (F.size("__t") / chunk).cast("int"))
+        df.select(F.col("doc_id"), t.alias("__t"))
+        .withColumn("__nc", (F.size("__t") / 8).cast("int"))
         .filter(F.col("__nc") >= 1)
     )
     fps = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.col("__nc") - 1),
-                lambda i: hasher(
-                    F.concat_ws(" ", F.slice("__t", i * chunk + 1, chunk))
+                lambda i: _md5_60(
+                    F.concat_ws(" ", F.slice("__t", i * 8 + 1, 8))
                 ),
             )
         ).alias("__fp"),
     )
     return (
         _mark_duplicated(fps)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum(F.when(F.col("__dup"), 1).otherwise(0))
@@ -1327,15 +1240,11 @@ def passage_repetition(
 
 def substring_dup_spans(
     df: DataFrame,
-    min_gram: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Exact duplicated-SUBSTRING spans — the ExactSubstr dedup class
     (Lee et al., "Deduplicating Training Data Makes Language Models
     Better", ACL'22, which builds a corpus suffix array) re-expressed
-    Spark-first as sliding-gram banding: every ``min_gram``-token
+    Spark-first as sliding-gram banding: every 8-token
     window of every document is fingerprinted; a window whose
     fingerprint occurs more than once ANYWHERE in the corpus
     (cross-document or within one) marks its token range duplicated;
@@ -1349,11 +1258,11 @@ def substring_dup_spans(
     spans, and dropping is a threshold on
     ``sum(span lengths) / doc length``.
 
-    vs :func:`passage_repetition`: stride-``chunk`` passages only see
+    vs :func:`passage_repetition`: stride-8 passages only see
     duplication ALIGNED to chunk boundaries — a duplicated paragraph
     starting mid-chunk contributes nothing — while the sliding window
-    here detects duplicated regions of >= ``min_gram`` tokens at ANY
-    offset (the ExactSubstr property), at ~``chunk``x the gram rows.
+    here detects duplicated regions of >= 8 tokens at ANY offset (the
+    ExactSubstr property), at ~8x the gram rows.
     Both are linear in corpus tokens; this one is the thorough pass,
     the passage profile is the cheap screen.
 
@@ -1365,31 +1274,24 @@ def substring_dup_spans(
     :func:`passage_repetition` (same skew limit, see
     :func:`_mark_duplicated`); the span merge is a per-document prefix window (partition by id,
     order by start — classic gaps-and-islands), linear and
-    skew-bounded by document length.  ``hash_fn="md5_60"`` keeps the
-    exact DuckDB twin; production runs use ``"xxhash64"`` (~10x
-    cheaper, the standard collision argument at 60+ bits).
+    skew-bounded by document length.  Grams hash with
+    :func:`_md5_60`, which keeps the exact DuckDB twin.
     """
-    grams = _sliding_grams(df, int(min_gram), text_col, id_col, hash_fn)
-    L = int(min_gram)
     hits = (
-        _mark_duplicated(grams)
+        _mark_duplicated(_sliding_grams(df))
         .filter(F.col("__dup"))
-        .select("id", "start", (F.col("start") + L - 1).alias("end"))
+        .select("id", "start", (F.col("start") + 7).alias("end"))
     )
     return _merge_islands(hits)
 
 
-def _sliding_grams(
-    df: DataFrame, L: int, text_col: str, id_col: str, hash_fn: str
-) -> DataFrame:
-    """Map-side sliding ``L``-token gram fingerprints: one row per
+def _sliding_grams(df: DataFrame) -> DataFrame:
+    """Map-side sliding 8-token gram fingerprints: one row per
     (doc, window start), schema ``(id, start, __fp)``, start 1-based.
     One HOF ``transform`` + ``posexplode`` per row — the text never
     re-tokenizes per position, and the downstream shuffle carries
     fingerprints, never text (the exact_dedup discipline)."""
-    hasher = TOKEN_HASHES[hash_fn]
-    if L < 2:
-        raise ValueError("min_gram must be >= 2")
+    L = 8
     # r13 (optimization): the per-position hash build is the CPU-heavy
     # stage of the whole operator (md5 over an L-token slice at every
     # position), and an under-split source (single-row-group parquet,
@@ -1402,8 +1304,7 @@ def _sliding_grams(
     from ..sources import fan_out
 
     df = fan_out(df)
-    t = tokens(text_col)
-    base = df.select(F.col(id_col).alias("id"), t.alias("__t")).filter(
+    base = df.select(F.col("doc_id").alias("id"), tokens("text").alias("__t")).filter(
         F.size("__t") >= L
     )
     return base.select(
@@ -1411,7 +1312,7 @@ def _sliding_grams(
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(1), F.size("__t") - L + 1),
-                lambda i: hasher(F.concat_ws(" ", F.slice("__t", i, L))),
+                lambda i: _md5_60(F.concat_ws(" ", F.slice("__t", i, L))),
             )
         ).alias("__pos0", "__fp"),
     ).select("id", (F.col("__pos0") + 1).alias("start"), "__fp")

@@ -41,23 +41,18 @@ def join_semi(
     left: DataFrame,
     right: DataFrame,
     on: list[str] | str,
-    broadcast_keys: bool = False,
 ) -> DataFrame:
     """EXISTS semantics (implied by MERGE matching, SURVEY.md section 2 C).
 
-    ``broadcast_keys=True`` collapses the right side to its DISTINCT
-    join keys and broadcasts them — the plan when the key set is
-    dimension/delta-sized (a MERGE source's keys, a dedup drop list):
-    the left side never shuffles.  Measured at the 50x replica
-    (375k distinct keys vs a 3.75M-row probe side): shuffle-semi
-    2.38 s, shuffle-semi + runtime bloom 2.65 s (total key overlap —
-    the filter prunes nothing and pays its build), broadcast-keys
-    0.93 s.  Leave False when the right side's distinct keys outgrow a
-    broadcast; Spark's runtime bloom filter (on by default) then
-    prunes the probe side only when the key sets actually diverge."""
+    The right side collapses to its DISTINCT join keys, broadcast —
+    the plan when the key set is dimension/delta-sized (a MERGE
+    source's keys, a dedup drop list): the left side never shuffles.
+    Measured at the 50x replica (375k distinct keys vs a 3.75M-row
+    probe side): shuffle-semi 2.38 s, shuffle-semi + runtime bloom
+    2.65 s (total key overlap — the filter prunes nothing and pays its
+    build), broadcast-keys 0.93 s."""
     keys = [on] if isinstance(on, str) else list(on)
-    if broadcast_keys:
-        right = F.broadcast(right.select(*keys).distinct())
+    right = F.broadcast(right.select(*keys).distinct())
     return left.join(right, on=on, how="left_semi")
 
 
@@ -184,8 +179,6 @@ def interval_join(
     ts_col: str,
     start_col: str,
     end_col: str,
-    bucket_s: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
     """Range (interval) join: each point row matches every interval row
     with ``start <= ts < end`` — the shape behind event-to-session and
@@ -194,57 +187,31 @@ def interval_join(
     Spark plans a raw non-equi join as BroadcastNestedLoop (or a
     cartesian) — quadratic work the moment neither side fits in a
     broadcast.  The scale formulation BUCKETIZES time: each interval
-    explodes to one row per ``bucket_s``-second bucket it overlaps
+    explodes to one row per 600-second bucket it overlaps
     (``sequence(floor(start), floor(end))``), each point maps to its
     single bucket, and the join becomes an EQUI-join on the bucket id
     that Catalyst executes as a hash join; the exact ``start <= ts <
     end`` predicate re-filters inside matched buckets.  Work scales
     with overlap density, not |points| x |intervals|.
 
-    Choose ``bucket_s`` near the typical interval length: much smaller
-    multiplies the interval-side explode; much larger multiplies the
-    per-bucket candidate fan-in.  Degenerate long intervals (an
-    interval spanning 10^4 buckets) belong in a separate broadcast
-    pass — split by ``(end - start)`` first if the workload has them.
-    ``how="left"`` keeps unmatched points (one NULL-extended row,
-    standard left-join semantics) via an outer join on the bucketed
-    candidates followed by the range filter OR is-null.
+    The bucket width should sit near the typical interval length:
+    much smaller multiplies the interval-side explode; much larger
+    multiplies the per-bucket candidate fan-in.  Degenerate long
+    intervals (an interval spanning 10^4 buckets) belong in a separate
+    broadcast pass — split by ``(end - start)`` first if the workload
+    has them.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
-    p_bucket = F.floor(F.col(ts_col).cast("double") / bucket_s)
+    p_bucket = F.floor(F.col(ts_col).cast("double") / 600)
     i_buckets = F.sequence(
-        F.floor(F.col(start_col).cast("double") / bucket_s),
-        F.floor(F.col(end_col).cast("double") / bucket_s),
+        F.floor(F.col(start_col).cast("double") / 600),
+        F.floor(F.col(end_col).cast("double") / 600),
     )
     pts = points.withColumn("__bucket", p_bucket)
     ivs = intervals.withColumn("__bucket", F.explode(i_buckets))
     in_range = (F.col(start_col) <= F.col(ts_col)) & (
         F.col(ts_col) < F.col(end_col)
     )
-    if how == "inner":
-        return pts.join(ivs, "__bucket").filter(in_range).drop("__bucket")
-    # left: keep points with no in-range interval; candidates that
-    # matched the bucket but failed the range must not resurface as
-    # phantom NULL rows, so re-aggregate to point granularity
-    matched = pts.join(ivs, "__bucket").filter(in_range).drop("__bucket")
-    iv_cols = [c for c in intervals.columns]
-    # null-safe anti-join (r9 review fix): a matched point row carrying
-    # a NULL column compared NULL = NULL -> NULL under plain equality,
-    # so it ALSO survived the anti-join and resurfaced as a phantom
-    # NULL-extended duplicate, violating left-join cardinality.
-    # alias both sides: mkeys derives from pts, so bare df[c] refs
-    # resolve to the SAME attribute (trivially-true predicates)
-    p_a = pts.alias("__ij_p")
-    m_a = matched.select(*points.columns).distinct().alias("__ij_m")
-    anti_cond = None
-    for c in points.columns:
-        e = F.col(f"__ij_p.`{c}`").eqNullSafe(F.col(f"__ij_m.`{c}`"))
-        anti_cond = e if anti_cond is None else anti_cond & e
-    missing = p_a.join(m_a, anti_cond, "left_anti").drop("__bucket")
-    for c in iv_cols:
-        missing = missing.withColumn(c, F.lit(None).cast(intervals.schema[c].dataType))
-    return matched.unionByName(missing)
+    return pts.join(ivs, "__bucket").filter(in_range).drop("__bucket")
 
 
 def asof_join_nearest(
@@ -254,7 +221,6 @@ def asof_join_nearest(
     fact_ts: str,
     timeline_ts: str,
     value_cols: list[str],
-    fact_tiebreaks: list[str] | None = None,
 ) -> DataFrame:
     """As-of join, NEAREST direction (pandas ``merge_asof``
     direction='nearest'): each fact row takes the timeline row closest
@@ -286,7 +252,7 @@ def asof_join_nearest(
         *[_gen(c).alias(f"__f_{c}") for c in f_cols],
     )
     order = [F.col("__ts").asc(), F.col("__side").asc()] + [
-        _gen(f"__f_{c}").asc_nulls_first() for c in (fact_tiebreaks or [])
+        _gen(f"__f_{c}").asc_nulls_first() for c in ["event_id"]
     ]
     base = Window.partitionBy(key).orderBy(*order)
     wb = base.rowsBetween(Window.unboundedPreceding, 0)

@@ -38,53 +38,33 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
     order_col: str | None = None,
-    tiebreak_cols: list[str] | None = None,
-    update_cols: list[str] | None = None,
 ) -> DataFrame:
     """Generic SCD1 MERGE: latest update per key wins; unmatched keys
     insert; update nulls fall back to target values (the reference's
     column-wise ``coalesce(source.x, target.x)``,
-    ``streaming_job.py:141-144``).
-
-    ``update_cols`` restricts which columns an update may touch
-    (reference SCD1 touches only segment/status columns,
-    ``stream_dims.py:83-86``); others keep target values for matched
-    rows.
+    ``streaming_job.py:141-144``).  A column the updates lack keeps
+    its target value.
     """
     if order_col is not None:
-        updates = dedup_latest(updates, key_cols, order_col, tiebreak_cols)
+        updates = dedup_latest(updates, key_cols, order_col)
 
     data_cols = [c for c in target.columns if c not in key_cols]
-    updatable = set(update_cols) if update_cols is not None else set(data_cols)
-
-    # explicit presence markers: "this key exists on the target side"
-    # must NOT be inferred from a data column being null — a matched row
-    # whose protected column is legitimately NULL is not an insert.
     t = target.select(
         *key_cols,
         *[F.col(c).alias(f"__t_{c}") for c in data_cols],
-        F.lit(1).alias("__has_target"),
     )
     u = updates.select(
         *key_cols,
         *[F.col(c).alias(f"__u_{c}") for c in data_cols if c in updates.columns],
     )
     joined = t.join(u, on=key_cols, how="full_outer")
-    is_insert = F.col("__has_target").isNull()
-
     out_cols = [F.col(k) for k in key_cols]
     for c in data_cols:
         u_col = f"__u_{c}"
-        if c in updatable and u_col in joined.columns:
+        if u_col in joined.columns:
             out_cols.append(F.coalesce(F.col(u_col), F.col(f"__t_{c}")).alias(c))
         else:
-            # matched rows keep target; pure inserts take the update value
-            if u_col in joined.columns:
-                out_cols.append(
-                    F.when(is_insert, F.col(u_col)).otherwise(F.col(f"__t_{c}")).alias(c)
-                )
-            else:
-                out_cols.append(F.col(f"__t_{c}").alias(c))
+            out_cols.append(F.col(f"__t_{c}").alias(c))
     return joined.select(*out_cols)
 
 

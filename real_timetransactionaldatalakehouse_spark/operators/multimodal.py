@@ -65,7 +65,7 @@ def deterministic_fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[
     return out
 
 
-def fake_features_expr(payload_col: str = "payload", dim: int = FEATURE_DIM) -> F.Column:
+def fake_features_expr(dim: int = FEATURE_DIM) -> F.Column:
     """:func:`deterministic_fake_features` as a pure codegen expression
     (equivalence-tested against it).
 
@@ -79,30 +79,30 @@ def fake_features_expr(payload_col: str = "payload", dim: int = FEATURE_DIM) -> 
     feats = []
     for t in range(dim):
         block, off = t // 4, (t % 4) * 4  # byte offset within the digest
-        h = F.md5(F.concat(F.col(payload_col), F.lit(str(block).encode("ascii"))))
+        h = F.md5(F.concat(F.col("payload"), F.lit(str(block).encode("ascii"))))
         le_hex = F.concat(
             *[F.substring(h, 2 * (off + b) + 1, 2) for b in (3, 2, 1, 0)]
         )
         v = F.conv(le_hex, 16, 10).cast("long")
         feats.append(((v % 2_000_001) / 1_000_000.0 - 1.0).cast("float"))
     return F.when(
-        F.col(payload_col).isNull(),
+        F.col("payload").isNull(),
         F.array(*[F.lit(0.0).cast("float")] * dim),
     ).otherwise(F.array(*feats))
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload",
-                     dim: int = FEATURE_DIM) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads: the FAKE md5 extractor
     evaluated as a whole-stage-codegen projection
     (:func:`fake_features_expr`)."""
-    return df.withColumn("features", fake_features_expr(payload_col, dim))
+    return df.withColumn("features", fake_features_expr(FEATURE_DIM))
 
 
-def synthetic_media(spark, documents: DataFrame, n: int = 64) -> DataFrame:
+def synthetic_media(spark, documents: DataFrame) -> DataFrame:
     """Build a deterministic media table from document text bytes —
-    the test stand-in for real blob ingestion."""
-    base = documents.filter(F.col("doc_id") < n).select(
+    the test stand-in for real blob ingestion: one media row per
+    document."""
+    base = documents.select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")

@@ -55,10 +55,9 @@ def max_over_partition(df: DataFrame, key_cols: list[str], col: str, alias: str)
 
 
 def topk_per_group(df: DataFrame, group_cols: list[str], order_col: str, k: int,
-                   tiebreak_cols: list[str] | None = None, desc: bool = True) -> DataFrame:
+                   tiebreak_cols: list[str] | None = None) -> DataFrame:
     """W5: ranked top-k per group (reference Dashboard.md:48 trending)."""
-    first = F.col(order_col).desc() if desc else F.col(order_col).asc()
-    order = [first] + [F.col(c).asc() for c in (tiebreak_cols or [])]
+    order = [F.col(order_col).desc()] + [F.col(c).asc() for c in (tiebreak_cols or [])]
     w = Window.partitionBy(*group_cols).orderBy(*order)
     return (
         df.withColumn("rank", F.row_number().over(w))
@@ -66,9 +65,7 @@ def topk_per_group(df: DataFrame, group_cols: list[str], order_col: str, k: int,
     )
 
 
-def sessionize(df: DataFrame, key_col: str, ts_col: str, gap_minutes: int = 30,
-               tiebreak_cols: list[str] | None = None,
-               session_col: str = "session_id") -> DataFrame:
+def sessionize(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
     """W4: LAG-based sessionization, the reference's declared-but-unbuilt
     Silver layer (DataModel_SchemaDesign.md:47,58; moved to T+1 batch
     per PipelineArchitecture.md:217-222 to avoid streaming state).
@@ -77,9 +74,9 @@ def sessionize(df: DataFrame, key_col: str, ts_col: str, gap_minutes: int = 30,
     session index.  Scales with key cardinality (one window partition
     per user), never a global window.
     """
-    order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in (tiebreak_cols or [])]
+    order = [F.col(ts_col).asc(), F.col("event_id").asc()]
     w = Window.partitionBy(key_col).orderBy(*order)
-    gap_s = gap_minutes * 60
+    gap_s = 30 * 60
     prev = F.lag(F.col(ts_col)).over(w)
     new_session = F.when(
         prev.isNull()
@@ -87,12 +84,10 @@ def sessionize(df: DataFrame, key_col: str, ts_col: str, gap_minutes: int = 30,
         F.lit(1),
     ).otherwise(F.lit(0))
     running = F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return df.withColumn(session_col, running)
+    return df.withColumn("session_id", running)
 
 
-def _partition_offset_expr(offsets: list[tuple[int, int]],
-                           pid_col: str = "__pid",
-                           inline_max: int = 256):
+def _partition_offset_expr(offsets: list[tuple[int, int]]):
     """Per-bucket offsets as an inlined CASE expression, or ``None``
     when the caller should broadcast-join an offset table instead.
 
@@ -100,9 +95,9 @@ def _partition_offset_expr(offsets: list[tuple[int, int]],
     its local running values.  For metadata-sized bucket counts the
     offsets inline as literals — measured 4x cheaper than a broadcast
     hash join at bench scale (the join rebuilds its broadcast exchange
-    every execution, ~0.25 s/run for a 32-row table).  Past
-    ``inline_max`` the expression would bloat the plan, so the join
-    path takes over.
+    every execution, ~0.25 s/run for a 32-row table).  Past 256
+    offsets the expression would bloat the plan, so the join path
+    takes over.
 
     The CASE fails LOUDLY on a bucket id absent from the offsets pass:
     with literal-boundary bucketing every row's bucket is in
@@ -110,13 +105,13 @@ def _partition_offset_expr(offsets: list[tuple[int, int]],
     so the otherwise-branch is unreachable — the raise is a tripwire
     for an impossible state (a bug in the bucket expression), never a
     runtime mode."""
-    if len(offsets) > inline_max:
+    if len(offsets) > 256:  # inline at most 256 offsets
         return None
     if not offsets:
         return F.lit(0).cast("long")
-    e = F.when(F.col(pid_col) == offsets[0][0], F.lit(offsets[0][1]))
+    e = F.when(F.col("__b") == offsets[0][0], F.lit(offsets[0][1]))
     for pid, off in offsets[1:]:
-        e = e.when(F.col(pid_col) == pid, F.lit(off))
+        e = e.when(F.col("__b") == pid, F.lit(off))
     e = e.otherwise(
         F.raise_error(
             F.concat(
@@ -125,7 +120,7 @@ def _partition_offset_expr(offsets: list[tuple[int, int]],
                     "offsets pass (impossible under literal-boundary "
                     "bucketing - bucket-expression bug): id="
                 ),
-                F.col(pid_col).cast("string"),
+                F.col("__b").cast("string"),
             )
         ).cast("long")
     )
@@ -166,8 +161,7 @@ _MAX_BUCKETS = 512
 # comparator/optimizer overhead of extra boundaries outweighs the
 # window parallelism they buy (a 32k-row single-task window sort is
 # sub-millisecond work; a 31-boundary comparator costs ~0.5 s of
-# optimizer time PER EXECUTION).  Applied only when the caller leaves
-# ``partitions`` unset — an explicit value is an instruction.
+# optimizer time PER EXECUTION).
 _MIN_BUCKET_ROWS = 32768
 
 
@@ -279,11 +273,9 @@ def _sample_boundaries(
     dirs: list[str],
     n: int,
     total: int,
-    oversample: int = 64,
-    seed: int = 17,
 ) -> list[tuple]:
     """~``n - 1`` boundary tuples from a collected sample of the order
-    keys (metadata-sized: ``n * oversample`` rows).  The sample only
+    keys (metadata-sized: ``n * 64`` rows).  The sample only
     steers LOAD BALANCE — correctness never depends on which rows were
     sampled, because the boundaries are inlined as literals before any
     offset is computed.  Consecutive duplicate boundaries are dropped
@@ -292,9 +284,9 @@ def _sample_boundaries(
 
     if n <= 1 or total <= 1:
         return []
-    target = n * oversample
+    target = n * 64
     frac = min(1.0, target / total)
-    rows = keyed.sample(fraction=frac, seed=seed).limit(2 * target).collect()
+    rows = keyed.sample(fraction=frac, seed=17).limit(2 * target).collect()
     if not rows:
         rows = keyed.limit(target).collect()
     keys = sorted(
@@ -314,7 +306,6 @@ def _bucketed_layout(
     df: DataFrame,
     specs: list[tuple[Column, str]],
     aggs: list[Column],
-    partitions: int | None = None,
     extra_cols: list[Column] | None = None,
 ):
     """Shared front end of the prefix-sum family: persist the NARROW
@@ -336,17 +327,14 @@ def _bucketed_layout(
     # build job, and it doubles as the cache-populating action
     g = keyed.agg(F.count(F.lit(1)).alias("__total"), *aggs).collect()[0]
     total = int(g["__total"])
-    if partitions is not None:
-        n = min(partitions, _MAX_BUCKETS)
-    else:
-        # adaptive: never more buckets than _MIN_BUCKET_ROWS-row chunks
-        # of the data — extra boundaries cost optimizer time per
-        # execution and buy nothing on small inputs
-        n = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            _MAX_BUCKETS,
-            -(-total // _MIN_BUCKET_ROWS),
-        ))
+    # adaptive: never more buckets than _MIN_BUCKET_ROWS-row chunks of
+    # the data — extra boundaries cost optimizer time per execution
+    # and buy nothing on small inputs
+    n = max(1, min(
+        spark.sparkContext.defaultParallelism,
+        _MAX_BUCKETS,
+        -(-total // _MIN_BUCKET_ROWS),
+    ))
     if n == 1 or total <= 1:
         return F.lit(0).cast("int"), {0: tuple(g)[1:]}, keyed
     kspecs = [(F.col(f"__k{i}"), d) for i, (_c, d) in enumerate(specs)]
@@ -369,8 +357,7 @@ def _bucketed_layout(
     return _bucket_expr(specs, boundaries, dtypes), full, keyed
 
 
-def global_rank(df: DataFrame, order_cols: list[str], rank_col: str = "pos",
-                partitions: int | None = None) -> DataFrame:
+def global_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
     """S1: global ordering WITHOUT a single-partition window.
 
     Literal-boundary bucketing (see the block comment above): sample
@@ -391,7 +378,7 @@ def global_rank(df: DataFrame, order_cols: list[str], rank_col: str = "pos",
     spark = df.sparkSession
     specs = _order_specs(order_cols)
     bexpr, per_bucket, keyed = _bucketed_layout(
-        df, specs, [F.count(F.lit(1)).alias("cnt")], partitions
+        df, specs, [F.count(F.lit(1)).alias("cnt")]
     )
     keyed.unpersist()  # build passes done; the output plan reads df itself
     offsets, acc = [], 0
@@ -400,7 +387,7 @@ def global_rank(df: DataFrame, order_cols: list[str], rank_col: str = "pos",
         acc += int(per_bucket[b][0]) if per_bucket[b] else 0
     order_exprs = [c.asc() if d == "asc" else c.desc() for c, d in specs]
     w = Window.partitionBy("__b").orderBy(*order_exprs)
-    off_expr = _partition_offset_expr(offsets, pid_col="__b")
+    off_expr = _partition_offset_expr(offsets)
     out = df.withColumn("__b", bexpr)
     if off_expr is None:
         off_df = F.broadcast(
@@ -409,7 +396,7 @@ def global_rank(df: DataFrame, order_cols: list[str], rank_col: str = "pos",
         out = out.join(off_df, "__b")
         off_expr = F.col("__offset")
     out = (
-        out.withColumn(rank_col, F.row_number().over(w) + off_expr)
+        out.withColumn("pos", F.row_number().over(w) + off_expr)
         .drop("__b", "__offset")
     )
     # plan-contract marker only: the boundary/offset collects are real
@@ -464,105 +451,48 @@ def sliding_window_counts(df: DataFrame, ts_col: str, duration: str, slide: str,
     )
 
 
-def resample_fill(
-    df: DataFrame,
-    ts_col: str,
-    step: str = "1 minute",
-    group_cols: list[str] | None = None,
-    agg_exprs: dict[str, Column] | None = None,
-    bounds: tuple | None = None,
-    fill_zero: list[str] | None = None,
-) -> DataFrame:
-    """Time-series densify: bucket rows to ``step``, aggregate, then
-    emit EVERY bucket in the observed (or given) range — gaps become
-    zero/NULL rows instead of silently missing (downstream charting,
-    rate math and window models all break on missing buckets).
+def resample_fill(df: DataFrame, ts_col: str) -> DataFrame:
+    """Time-series densify: count rows per 1-minute bucket, then emit
+    EVERY bucket in the observed range — gaps become zero-count rows
+    instead of silently missing (downstream charting, rate math and
+    window models all break on missing buckets).
 
     The bucket spine is generated with ``sequence`` + ``explode`` from
-    ONE metadata-sized min/max agg — never a driver loop; with
-    ``group_cols`` the spine cross-joins the distinct key set (small
-    by definition for a per-key chart) and the observed aggregates
-    left-join on (key, bucket).  ``fill_zero`` names the aggregates to
-    zero-fill in gap rows (default ``["n"]``, the built-in count);
-    other aggregates keep NULL unless coalesced by the caller.
-    Explicit ``bounds`` are SNAPPED to their containing window starts
-    (r9 review fix): observed buckets are window-aligned, so an
-    unsnapped spine built from raw min/max event timestamps joined
-    nothing and silently zero/NULL-filled every bucket.
+    ONE metadata-sized min/max agg over the window-aligned observed
+    buckets — never a driver loop, and no driver action at build
+    time; the observed counts left-join on the bucket.
     """
-    aggs = agg_exprs or {"n": F.count(F.lit(1))}
     observed = (
-        df.groupBy(*(group_cols or []), F.window(F.col(ts_col), step).alias("__w"))
-        .agg(*[e.alias(name) for name, e in aggs.items()])
-        .select(
-            *(group_cols or []),
-            F.col("__w.start").alias("bucket"),
-            *[F.col(name) for name in aggs],
-        )
+        df.groupBy(F.window(F.col(ts_col), "1 minute").alias("__w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("__w.start").alias("bucket"), "n")
     )
-    spark = df.sparkSession
-    if bounds is None:
-        # bounds already snapped to window starts by the aggregation;
-        # keep them as a one-row frame so the operator stays fully
-        # lazy (no driver action at build time)
-        bounds_df = observed.agg(
-            F.min("bucket").alias("__lo"), F.max("bucket").alias("__hi")
-        )
-    else:
-        lo, hi = bounds
-        # snap to the window start CONTAINING each bound — the spine
-        # must land on the same grid as the observed buckets.  One
-        # window() per projection: Spark rejects two time-window
-        # expressions in a single select.
-        bounds_df = (
-            spark.range(1)
-            .select(
-                F.window(F.lit(str(lo)).cast("timestamp"), step)["start"].alias("__lo"),
-                F.lit(str(hi)).cast("timestamp").alias("__hi_ts"),
-            )
-            .select(
-                "__lo",
-                F.window(F.col("__hi_ts"), step)["start"].alias("__hi"),
-            )
-        )
+    bounds_df = observed.agg(
+        F.min("bucket").alias("__lo"), F.max("bucket").alias("__hi")
+    )
     spine = bounds_df.select(
         F.explode(
-            F.sequence(F.col("__lo"), F.col("__hi"), F.expr(f"INTERVAL {step}"))
+            F.sequence(F.col("__lo"), F.col("__hi"), F.expr("INTERVAL 1 minute"))
         ).alias("bucket")
     )
-    if group_cols:
-        keys = df.select(*group_cols).distinct()
-        spine = keys.crossJoin(spine)
-    out = spine.join(observed, [*(group_cols or []), "bucket"], "left")
-    # zero-fill the named count aggregates; everything else keeps NULL
-    # (a name match on the literal "n" alone left every caller-named
-    # count NULL in gap rows — the exact breakage the operator exists
-    # to prevent; r9 review fix)
-    zero_cols = set(fill_zero) if fill_zero is not None else {"n"}
-    unknown = zero_cols - set(aggs)
-    if unknown:
-        raise ValueError(f"fill_zero names not in agg_exprs: {sorted(unknown)}")
-    for name in aggs:
-        if name in zero_cols:
-            out = out.withColumn(name, F.coalesce(F.col(name), F.lit(0)))
-    return out
+    return spine.join(observed, "bucket", "left").withColumn(
+        "n", F.coalesce(F.col("n"), F.lit(0))
+    )
 
 
 def session_window_agg(
     df: DataFrame,
     ts_col: str,
     key_cols: list[str],
-    gap: str = "30 minutes",
-    aggs: dict[str, Column] | None = None,
 ) -> DataFrame:
     """T10 companion: session windows as a first-class GROUP BY unit —
     Spark's ``session_window`` (dynamic-gap event grouping) instead of
     the LAG running-sum formulation in :func:`sessionize`.  The window
-    closes when no event arrives within ``gap`` of the last one; an
+    closes when no event arrives within 30 minutes of the last one; an
     event at EXACTLY last+gap still merges (verified semantics: the
     session end is exclusive only beyond last_ts + gap).  Output rows
     are one per (key, session): ``session_start`` = first event ts,
-    ``session_end`` = last event ts + gap.
+    ``session_end`` = last event ts + gap, ``n_events``.
 
     Scale: Catalyst plans this as a sort-based session aggregation
     partitioned by the keys — work scales with per-key event counts,
@@ -571,15 +501,14 @@ def session_window_agg(
     Reference: the declared Silver session stitching
     (design_doc/DataModel_SchemaDesign.md:47,58).
     """
-    aggs = aggs or {"n_events": F.count(F.lit(1))}
     return (
-        df.groupBy(F.session_window(F.col(ts_col), gap).alias("__w"), *key_cols)
-        .agg(*[e.alias(name) for name, e in aggs.items()])
+        df.groupBy(F.session_window(F.col(ts_col), "30 minutes").alias("__w"), *key_cols)
+        .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             *key_cols,
             F.col("__w.start").alias("session_start"),
             F.col("__w.end").alias("session_end"),
-            *[F.col(name) for name in aggs],
+            "n_events",
         )
     )
 
@@ -588,7 +517,6 @@ def mode_per_group(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    out_col: str = "mode_value",
 ) -> DataFrame:
     """Deterministic MODE: most frequent value per group, ties broken
     by smallest value — built-in ``mode()`` is tie-nondeterministic
@@ -608,7 +536,7 @@ def mode_per_group(
         .filter(F.col("__rn") == 1)
         .select(
             *group_cols,
-            F.col(value_col).alias(out_col),
+            F.col(value_col).alias("mode_value"),
             F.col("n").alias("n_occurrences"),
         )
     )
@@ -618,52 +546,30 @@ def zscore_normalize(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    out_col: str = "z",
-    scale: int = 4,
-    integral: bool = False,
 ) -> DataFrame:
     """Per-group z-score feature normalization — the standard feature-
     engineering transform ((x - mean) / stddev within each group).
 
-    Group moments come from EXACT decimal accumulation (sum x and
-    sum x^2 at ``scale`` fractional digits), so the result is
-    independent of Spark's partial-agg merge order and reproducible
-    bit-for-bit across engines (built-in stddev is Welford-style and
-    float-order dependent).  The per-group stats table is broadcast
+    The value column is integral (the caller proves max(x^2) x
+    rows-per-group < 2^63), so the moment sums accumulate EXACTLY as
+    primitive longs (whole-stage codegen): the result is independent
+    of Spark's partial-agg merge order and reproducible bit-for-bit
+    across engines (built-in stddev is Welford-style and float-order
+    dependent); Spark 4 ANSI mode turns a misjudged bound into an
+    explicit overflow error.  The per-group stats table is broadcast
     back onto the rows: one shuffle for the moments agg, zero for the
     enrichment join — at 100 TB the fact side never moves.
-
-    Cross-engine caveat: the double -> decimal cast on x^2 rounds, and
-    an arbitrary-precision double can land EXACTLY on a decimal tie
-    (e.g. any multiple of 1/32 ends in ...5 at the 5th decimal), where
-    Spark rounds HALF_UP but DuckDB HALF_EVEN.  For bit-exact
-    cross-engine parity feed fixed-point inputs whose squares stay
-    exact (<= scale/2 fractional digits); within Spark the result is
-    always deterministic regardless.
 
     Degenerate groups (n = 1, or zero variance) get a NULL z instead
     of the divide-by-zero error Spark 4's default ANSI mode raises —
     the conditional guards below only evaluate the division on the
     live branch.
-
-    ``integral=True`` declares the value column integral (caller
-    proves max(x^2) x rows-per-group < 2^63): the moment sums then
-    accumulate as primitive longs (whole-stage codegen) instead of
-    boxed decimals — identical values for integral inputs, ~4x
-    cheaper; Spark 4 ANSI mode turns a misjudged bound into an
-    explicit overflow error.
     """
     n = F.count(F.lit(1))
-    if integral:
-        sx = F.sum(F.col(value_col).cast("long")).cast("double")
-        sxx = F.sum(
-            (F.col(value_col) * F.col(value_col)).cast("long")
-        ).cast("double")
-    else:
-        sx = F.sum(F.col(value_col).cast(f"decimal(28,{scale})")).cast("double")
-        sxx = F.sum(
-            (F.col(value_col) * F.col(value_col)).cast(f"decimal(28,{scale})")
-        ).cast("double")
+    sx = F.sum(F.col(value_col).cast("long")).cast("double")
+    sxx = F.sum(
+        (F.col(value_col) * F.col(value_col)).cast("long")
+    ).cast("double")
     stats = df.groupBy(*group_cols).agg(
         sx.alias("__sx"), sxx.alias("__sxx"), n.alias("__n")
     )
@@ -690,7 +596,7 @@ def zscore_normalize(
     )
     return (
         df.join(F.broadcast(stats), group_cols)
-        .withColumn(out_col, z)
+        .withColumn("z", z)
         .drop("__mean", "__sd")
     )
 
@@ -699,7 +605,6 @@ def robust_scale(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    out_col: str = "scaled",
 ) -> DataFrame:
     """Per-group robust scaling ((x - median) / IQR) — the outlier-
     resistant companion to :func:`zscore_normalize` (a handful of
@@ -737,7 +642,7 @@ def robust_scale(
     )
     return (
         df.join(F.broadcast(stats), group_cols)
-        .withColumn(out_col, scaled)
+        .withColumn("scaled", scaled)
         .drop("__med", "__iqr")
     )
 
@@ -746,16 +651,14 @@ def spike_detect(
     df: DataFrame,
     key_cols: list[str],
     ts_col: str,
-    bin_seconds: int = 600,
-    threshold: float = 3.0,
-    include_new: bool = False,
 ) -> DataFrame:
     """Traffic-spike detection per entity — the batch twin of the
     reference's "Supernova" chaos scenario (a virally boosted entity
     must surface on the dashboard; design_doc/MockEventGenerator.md:
     156-163): for each key, the event count in the LATEST time bin
     against the entity's average count over its earlier bins, flagged
-    when the ratio clears ``threshold``.
+    when the ratio clears 3.  Bins are 600 s; an entity with no earlier
+    bin has no baseline and emits no row.
 
     Plan shape (100 TB-safe): one partial+final count keyed by
     (key, bin); the single-row global MAX(bin) broadcasts back onto
@@ -771,8 +674,8 @@ def spike_detect(
     ``(a - pmod(a, b)) DIV b`` is exact floor division for any long."""
     bin_col = F.expr(
         f"(CAST(date_trunc('second', `{ts_col}`) AS LONG)"
-        f" - pmod(CAST(date_trunc('second', `{ts_col}`) AS LONG), {bin_seconds}))"
-        f" DIV {bin_seconds}"
+        f" - pmod(CAST(date_trunc('second', `{ts_col}`) AS LONG), 600))"
+        f" DIV 600"
     )
     binned = (
         df.select(*key_cols, bin_col.alias("__bin"))
@@ -793,21 +696,13 @@ def spike_detect(
         )
     )
     base_avg = F.col("__base_sum").cast("double") / F.col("__base_bins")
-    # the default compares an entity against ITS OWN history, so a key
-    # whose first-ever events all land in the latest bin has no
-    # baseline and emits no row.  include_new=True surfaces those keys
-    # too — base_avg/spike_ratio NULL, is_spike TRUE (a burst from zero
-    # history is definitionally a spike; the Supernova launch case) —
-    # as an OPT-IN because the ratio-based contract and its certified
-    # oracle are defined over entities with history (r9 review note).
     has_hist = F.col("__base_bins") > 0
-    out = per_key if include_new else per_key.filter(has_hist)
-    return out.select(
+    return per_key.filter(has_hist).select(
         *key_cols,
         "recent_cnt",
         F.when(has_hist, base_avg).alias("base_avg"),
         F.when(has_hist, F.col("recent_cnt") / base_avg).alias("spike_ratio"),
-        F.when(has_hist, F.col("recent_cnt") / base_avg > F.lit(threshold))
+        F.when(has_hist, F.col("recent_cnt") / base_avg > F.lit(3.0))
         .otherwise(F.lit(True)).alias("is_spike"),
     )
 
@@ -875,7 +770,6 @@ def grouped_percentiles_exact(
     group_col: str,
     value_col: str,
     probs: dict[str, float],
-    partitions: int | None = None,
 ) -> DataFrame:
     """EXACT interpolated percentiles per group as distributed order
     statistics — the shape that survives LOW-cardinality group sets
@@ -940,14 +834,11 @@ def grouped_percentiles_exact(
         .collect()
     )
     total = sum(int(r["__rows"]) for r in per_group)
-    if partitions is not None:
-        n = min(partitions, _MAX_BUCKETS)
-    else:
-        n = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            _MAX_BUCKETS,
-            -(-total // _MIN_BUCKET_ROWS),
-        ))
+    n = max(1, min(
+        spark.sparkContext.defaultParallelism,
+        _MAX_BUCKETS,
+        -(-total // _MIN_BUCKET_ROWS),
+    ))
     if n == 1 or total <= 1:
         bexpr = F.lit(0).cast("int")
         totals = sorted(

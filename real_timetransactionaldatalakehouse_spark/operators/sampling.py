@@ -64,8 +64,6 @@ def hash_split(
     df: DataFrame,
     id_col: str = "doc_id",
     weights: dict[str, float] | None = None,
-    seed: str = "split-v1",
-    out_col: str = "split",
 ) -> DataFrame:
     """Assign every row to a named split (train/val/test by default)
     by deterministic hash bucket — map-only, no shuffle, stable under
@@ -73,16 +71,13 @@ def hash_split(
     fraction; fractions are cumulated over the dict's insertion order
     onto 1000 hash buckets."""
     weights = weights or {"train": 0.90, "val": 0.05, "test": 0.05}
-    return df.withColumn(out_col, _split_expr(id_col, weights, seed))
+    return df.withColumn("split", _split_expr(id_col, weights, "split-v1"))
 
 
 def stratified_sample(
     df: DataFrame,
     strata_cols: list[str],
     rates: dict[tuple, float] | float,
-    id_col: str = "doc_id",
-    seed: str = "sample-v1",
-    default_rate: float = 1.0,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a hash-chosen
     fraction of rows per stratum (e.g. cap overrepresented languages
@@ -93,7 +88,7 @@ def stratified_sample(
     (``df.sample`` cannot promise either).  ``rates`` maps a stratum
     key tuple to its keep-rate, or is a single float for all strata.
     Map-only; no shuffle."""
-    bucket = split_bucket(id_col, seed)
+    bucket = split_bucket("doc_id", "sample-v1")
     if isinstance(rates, float):
         keep = bucket < int(round(rates * 1000))
     else:
@@ -115,7 +110,7 @@ def stratified_sample(
                 match = cond if match is None else match & cond
             thresh = bucket < int(round(rate * 1000))
             keep = F.when(match, thresh) if keep is None else keep.when(match, thresh)
-        keep = keep.otherwise(bucket < int(round(default_rate * 1000)))
+        keep = keep.otherwise(F.lit(True))
     return df.filter(keep)
 
 
@@ -123,12 +118,6 @@ def mix_corpus(
     df: DataFrame,
     weights: dict[str, float],
     token_budget: int,
-    source_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    token_col: str | None = None,
-    seed: str = "mix-v1",
-    buckets: int = 100_000,
 ) -> DataFrame:
     """Token-budget data mixing — the mixture primitive of LLM
     pretraining: given target mixture ``weights`` (source -> share of
@@ -146,32 +135,30 @@ def mix_corpus(
     (a source whose total is under its share contributes everything).
 
     Keep/drop is a pure function of (id, seed) (:func:`split_bucket`
-    at ``buckets`` granularity): retry-stable, layout-independent,
+    at 100,000-bucket granularity): retry-stable, layout-independent,
     and re-running with a larger budget keeps supersets (hash buckets
     nest).  Output adds ``n_tokens``.
     """
     import math
 
-    n_tok = (
-        F.col(token_col) if token_col is not None else F.size(tokens(text_col))
-    ).cast("long")
+    n_tok = F.size(tokens("text")).cast("long")
     with_tok = df.withColumn("n_tokens", n_tok)
     totals = {
         r["s"]: r["t"]
-        for r in with_tok.groupBy(F.col(source_col).alias("s"))
+        for r in with_tok.groupBy(F.col("source").alias("s"))
         .agg(F.sum("n_tokens").alias("t"))
         .collect()
         if r["s"] in weights
     }
-    bucket = split_bucket(id_col, seed, buckets)
+    bucket = split_bucket("doc_id", "mix-v1", 100_000)
     keep = None
     for src, w in weights.items():
         total = totals.get(src)
         if not total:
             continue
         # mirrored exactly by the oracle SQL: FLOOR(LEAST(w*B/total, 1.0)*buckets)
-        thresh = math.floor(min(w * token_budget / total, 1.0) * buckets)
-        cond = F.col(source_col) == F.lit(src)
+        thresh = math.floor(min(w * token_budget / total, 1.0) * 100_000)
+        cond = F.col("source") == F.lit(src)
         keep = F.when(cond, bucket < thresh) if keep is None else keep.when(cond, bucket < thresh)
     if keep is None:
         return with_tok.filter(F.lit(False))
@@ -179,25 +166,20 @@ def mix_corpus(
 
 
 def cap_per_group(df: DataFrame, group_cols: list[str], order_col: str,
-                  k: int, tiebreak_cols: list[str] | None = None,
-                  desc: bool = True) -> DataFrame:
+                  k: int) -> DataFrame:
     """Per-group balancing cap: keep at most ``k`` rows per group in a
     deterministic preference order (e.g. cap each (source, lang) cell
     so one crawl domain cannot dominate a mixture).  Executes as
     top-k-per-group — partial WindowGroupLimit keeps the shuffle at
     k rows per group per map task regardless of group skew."""
     return topk_per_group(
-        df, group_cols, order_col, k, tiebreak_cols=tiebreak_cols, desc=desc
+        df, group_cols, order_col, k, tiebreak_cols=["doc_id"]
     ).drop("rank")
 
 
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    window: int = 4,
 ) -> DataFrame:
     """Remove corpus documents sharing any winnowing fingerprint with a
     benchmark/eval set — the overlap step of training-data
@@ -222,15 +204,15 @@ def decontaminate(
         # (r13: the under-split fan lives in winnow_fingerprints
         # itself, shared with q_text_winnow; this operator measured
         # 5.1 s -> 1.5 s at sf0.1 from it, paired)
-        src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-        return winnow_fingerprints(src, text_col, k=k, window=window)
+        src = df.select("doc_id", "text")
+        return winnow_fingerprints(src, k=24, window=8)
 
     b_fp = fps(benchmark).select("fp").distinct()
     contaminated = (
         fps(corpus).join(F.broadcast(b_fp), "fp", "left_semi")
-        .select(F.col("doc_id").alias(id_col)).distinct()
+        .select("doc_id").distinct()
     )
-    return corpus.join(contaminated, id_col, "left_anti")
+    return corpus.join(contaminated, "doc_id", "left_anti")
 
 
 def _gram_hashes(
@@ -284,13 +266,10 @@ def _gram_hashes(
 def decontaminate_ngram(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
 ) -> DataFrame:
     """Token n-gram overlap decontamination — the GPT-3/Pile-style
     variant of :func:`decontaminate`: drop any corpus document sharing
-    a word ``n``-gram with the benchmark/eval set.  Winnowing (above)
+    a word 13-gram with the benchmark/eval set.  Winnowing (above)
     guarantees on raw substrings; n-gram overlap is the published
     standard for benchmark leakage and catches re-tokenized rewording
     the character fingerprints can miss at their guarantee length.
@@ -312,25 +291,20 @@ def decontaminate_ngram(
     a well-split table skips the exchange.
     """
     b = _gram_hashes(
-        benchmark, "__bid", text_col, id_col, n
+        benchmark, "__bid", "text", "doc_id", 13
     ).select("__h").distinct()
     contaminated = (
-        _gram_hashes(corpus, id_col, text_col, id_col, n)
+        _gram_hashes(corpus, "doc_id", "text", "doc_id", 13)
         .join(F.broadcast(b), "__h", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
-    return corpus.join(contaminated, id_col, "left_anti")
+    return corpus.join(contaminated, "doc_id", "left_anti")
 
 
 def pack_sequences(
     df: DataFrame,
     budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    token_col: str | None = None,
-    order_cols: list[str] | None = None,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: assign every document to the
     fixed-size context window that holds its FIRST token when the
@@ -350,9 +324,9 @@ def pack_sequences(
     cumsum within buckets, add per-bucket offsets from a metadata-
     sized collect (one SUM row per bucket).  No single-partition
     window anywhere; the only full-data exchange is the window's hash
-    partition on the bucket id.  ``order_cols`` must be a total order
-    (default: the unique id) so the layout is retry-stable, like
-    every other curation op here (no ``rand()``).
+    partition on the bucket id.  Documents pack in ``doc_id`` order,
+    a total order, so the layout is retry-stable like every other
+    curation op here (no ``rand()``).
     """
     from pyspark.sql import Window
 
@@ -360,13 +334,9 @@ def pack_sequences(
     from .text import tokens
 
     spark = df.sparkSession
-    order = order_cols or [id_col]
-    n_tok = (
-        F.col(token_col) if token_col is not None
-        else F.size(tokens(text_col))
-    ).cast("long")
-    base = df.select(F.col(id_col), *[F.col(c) for c in order if c != id_col],
-                     n_tok.alias("n_tokens")).persist()
+    order = ["doc_id"]
+    n_tok = F.size(tokens("text")).cast("long")
+    base = df.select(F.col("doc_id"), n_tok.alias("n_tokens")).persist()
     from .relational import (
         _bucketed_layout,
         _order_specs,
@@ -375,7 +345,7 @@ def pack_sequences(
 
     specs = _order_specs(order)
     bexpr, per_bucket, keyed = _bucketed_layout(
-        base, specs, [F.sum("__t").alias("t")], partitions,
+        base, specs, [F.sum("__t").alias("t")],
         extra_cols=[F.col("n_tokens").alias("__t")],
     )
     keyed.unpersist()
@@ -391,7 +361,7 @@ def pack_sequences(
     # metadata-sized bucket counts inline the offsets as literals
     # (4x cheaper than re-broadcasting a tiny join table every
     # execution); cluster-scale bucket counts broadcast-join
-    off_expr = _partition_offset_expr(offsets, pid_col="__b")
+    off_expr = _partition_offset_expr(offsets)
     joined = base.withColumn("__b", bexpr)
     if off_expr is None:
         off_df = F.broadcast(
@@ -414,9 +384,6 @@ def pack_sequences(
 def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
 ) -> DataFrame:
     """The AUDIT side of :func:`decontaminate_ngram` — the per-eval-doc
     leakage report decontamination pipelines publish next to the drop:
@@ -431,9 +398,9 @@ def contamination_report(
     (bench_id, corpus_id, gram) partial aggregation.  Corpus text
     never shuffles.
     """
-    b = _gram_hashes(benchmark, "__bid", text_col, id_col, n)
+    b = _gram_hashes(benchmark, "__bid", "text", "doc_id", 13)
     hits = (
-        _gram_hashes(corpus, "__cid", text_col, id_col, n)
+        _gram_hashes(corpus, "__cid", "text", "doc_id", 13)
         .join(F.broadcast(b), "__h")
         .groupBy("__bid")
         .agg(
@@ -442,10 +409,10 @@ def contamination_report(
         )
     )
     return (
-        benchmark.select(F.col(id_col).alias("__bid"))
+        benchmark.select(F.col("doc_id").alias("__bid"))
         .join(hits, "__bid", "left")
         .select(
-            F.col("__bid").alias(id_col),
+            F.col("__bid").alias("doc_id"),
             F.coalesce("n_contaminating_docs", F.lit(0)).alias("n_contaminating_docs"),
             F.coalesce("n_shared_grams", F.lit(0)).alias("n_shared_grams"),
         )
@@ -456,7 +423,6 @@ def _global_cumsum(
     df: DataFrame,
     value_col: str,
     order_cols: list,
-    partitions: int | None = None,
 ):
     """Global 1-based position and INCLUSIVE running sum of
     ``value_col`` over a total order, without ever funneling the data
@@ -496,7 +462,6 @@ def _global_cumsum(
         src,
         specs,
         [F.count(F.lit(1)).alias("c"), F.sum("__v").alias("s")],
-        partitions,
         extra_cols=[F.col(value_col).cast("long").alias("__v")],
     )
     keyed.unpersist()  # offsets collected; output plan reads src
@@ -517,8 +482,8 @@ def _global_cumsum(
     w = Window.partitionBy("__b").orderBy(*order_exprs).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    row_off = _partition_offset_expr(row_offsets, pid_col="__b")
-    sum_off = _partition_offset_expr(sum_offsets, pid_col="__b")
+    row_off = _partition_offset_expr(row_offsets)
+    sum_off = _partition_offset_expr(sum_offsets)
     joined = src.withColumn("__b", bexpr)
     if row_off is None:
         off_df = F.broadcast(spark.createDataFrame(
@@ -545,9 +510,6 @@ def sample_systematic(
     df: DataFrame,
     k: int,
     weight_col: str,
-    id_col: str = "doc_id",
-    order_cols: list[str] | None = None,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Systematic probability-proportional-to-size (PPS) sampling:
     pick ``k`` documents with inclusion probability proportional to a
@@ -557,8 +519,7 @@ def sample_systematic(
     (Efraimidis–Spirakis), whose float ``u^(1/w)`` keys are not
     bit-portable across engines or libm versions.
 
-    Lay the documents on a line in a fixed total order (``order_cols``,
-    default the unique id), each covering an interval of length equal
+    Lay the documents on a line in ``doc_id`` order, each covering an interval of length equal
     to its weight; drop ``k`` evenly spaced tickets on the line and
     keep every document whose interval contains a ticket.  With
     cumulative weight ``C_i`` and total ``T``, doc ``i`` is selected
@@ -576,7 +537,7 @@ def sample_systematic(
     against int64 overflow — at corpus scales beyond ~2^63/T tickets,
     switch the ticket arithmetic to DECIMAL(38,0).
     """
-    order = order_cols or [id_col]
+    order = ["doc_id"]
     # r14 (optimization, guide §2.3/§6): _global_cumsum PERSISTS its
     # input and re-reads it per execution, so project down to the
     # columns the ticket arithmetic actually reads (id, weight, order
@@ -597,10 +558,10 @@ def sample_systematic(
             prunable = False
             break
     if prunable:
-        keep = list(dict.fromkeys([id_col, weight_col, *names]))
+        keep = list(dict.fromkeys(["doc_id", weight_col, *names]))
         df = df.select(*keep)
     cum_df, _, total = _global_cumsum(
-        df, weight_col, order, partitions=partitions
+        df, weight_col, order
     )
     if total <= 0:
         raise ValueError(f"total weight must be positive, got {total}")
@@ -618,7 +579,7 @@ def sample_systematic(
         .withColumn("__nt", (hi_t - lo_t).cast("long"))
         .filter(F.col("__nt") >= 1)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             w.alias("weight"),
             F.col("__cum").alias("cum_weight"),
             F.col("__nt").alias("n_tickets"),
@@ -632,15 +593,7 @@ def sample_systematic(
     )
 
 
-def split_leakage(
-    df: DataFrame,
-    jaccard_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    weights: dict[str, float] | None = None,
-    seed: str = "split-v1",
-    **neardup_kwargs,
-) -> DataFrame:
+def split_leakage(df: DataFrame) -> DataFrame:
     """Train/eval LEAKAGE audit — the check that must pass after
     :func:`hash_split` and near-dup ingestion compose: find verified
     near-duplicate pairs whose endpoints landed in DIFFERENT splits.
@@ -668,31 +621,19 @@ def split_leakage(
     """
     from .dedup import minhash_verified_neardup_pairs
 
-    weights = weights or {"train": 0.90, "eval": 0.10}
-    pairs = minhash_verified_neardup_pairs(
-        df, text_col=text_col, id_col=id_col,
-        jaccard_threshold=jaccard_threshold, **neardup_kwargs,
-    )
+    weights = {"train": 0.90, "eval": 0.10}
+    pairs = minhash_verified_neardup_pairs(df)
     return (
         pairs.select(
             "id_a", "id_b", "jaccard",
-            _split_expr("id_a", weights, seed).alias("split_a"),
-            _split_expr("id_b", weights, seed).alias("split_b"),
+            _split_expr("id_a", weights, "split-v1").alias("split_a"),
+            _split_expr("id_b", weights, "split-v1").alias("split_b"),
         )
         .filter(F.col("split_a") != F.col("split_b"))
     )
 
 
-def leakage_safe_split(
-    df: DataFrame,
-    jaccard_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    weights: dict[str, float] | None = None,
-    seed: str = "split-v1",
-    out_col: str = "split",
-    **neardup_kwargs,
-) -> DataFrame:
+def leakage_safe_split(df: DataFrame) -> DataFrame:
     """The CONSTRUCTIVE counterpart of :func:`split_leakage` (r10):
     assign splits so near-duplicate leakage cannot occur BY
     CONSTRUCTION — every verified near-dup CLUSTER is split-atomic
@@ -722,7 +663,6 @@ def leakage_safe_split(
     """
     from .dedup import _attach_cached, neardup_cluster_keys
 
-    weights = weights or {"train": 0.90, "eval": 0.10}
     # r14 (guide §2.4): the assigner only needs each doc's effective
     # cluster key (coalesce(cluster_id, own id)), so it attaches the
     # light per-doc key table instead of the full cluster table —
@@ -730,17 +670,13 @@ def leakage_safe_split(
     # function's plan carried but never read.  The key column rides
     # the dunder convention (r10 ADVICE #3), so a caller frame that
     # already carries ``cluster_id`` is never referenced or shadowed.
-    keys = neardup_cluster_keys(
-        df, text_col, id_col, jaccard_threshold=jaccard_threshold,
-        **neardup_kwargs,
-    )
-    keyed = df.join(keys, id_col).withColumn(
+    keys = neardup_cluster_keys(df)
+    keyed = df.join(keys, "doc_id").withColumn(
         "__split_key", F.col("__cluster_key").cast("string")
     )
     out = hash_split(
-        keyed, id_col="__split_key", weights=weights, seed=seed,
-        out_col=out_col,
-    ).drop("__cluster_key", "__split_key")
+        keyed, id_col="__split_key", weights={"train": 0.90, "eval": 0.10},
+        ).drop("__cluster_key", "__split_key")
     # deps ride the RETURNED frame, not the intermediate (the same
     # propagate-don't-drop rule drop_near_duplicates gained this round)
     return _attach_cached(out, getattr(keys, "_cached_deps", []))
@@ -749,8 +685,6 @@ def leakage_safe_split(
 def training_shard_layout(
     df: DataFrame,
     shards: int,
-    id_col: str = "doc_id",
-    seed: str = "shuffle-v1",
 ) -> DataFrame:
     """Deterministic global training-order shuffle WITHOUT a global
     sort: every example gets a shard and a position inside it, such
@@ -761,8 +695,7 @@ def training_shard_layout(
     Shard and order both derive from the md5-prefix hash of
     ``(id, seed)`` (:func:`split_bucket` discipline): re-running any
     partition, appending a source, or changing executor counts cannot
-    move an example (``rand()``/``repartition`` order can and do),
-    and changing ``seed`` is a fresh epoch-level reshuffle.
+    move an example (``rand()``/``repartition`` order can and do).
 
     Scale shape: shard assignment is map-only; the position is ONE
     keyed window per shard (parallelism = ``shards``, each reducer
@@ -777,17 +710,17 @@ def training_shard_layout(
 
     from .dedup import _md5_60
 
-    h_shard = split_bucket(id_col, seed + ":shard", shards)
+    h_shard = split_bucket("doc_id", "shuffle-v1:shard", shards)
     order_h = _md5_60(
-        F.concat(F.col(id_col).cast("string"), F.lit(":" + seed + ":pos"))
+        F.concat(F.col("doc_id").cast("string"), F.lit(":shuffle-v1:pos"))
     )
     w = Window.partitionBy("shard").orderBy(
-        F.col("__oh").asc(), F.col(id_col).asc()
+        F.col("__oh").asc(), F.col("doc_id").asc()
     )
     return (
-        df.select(F.col(id_col), h_shard.alias("shard"),
+        df.select(F.col("doc_id"), h_shard.alias("shard"),
                   order_h.alias("__oh"))
         .withColumn("pos", F.row_number().over(w))
-        .select(id_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 

@@ -43,20 +43,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Sequential-fold cosine — bit-equal to the DuckDB list_reduce
-    twin.  INPUT CONTRACT: nonzero-norm vectors.  Under Spark 4's
-    default ANSI mode a zero divisor is a DIVIDE_BY_ZERO *error*, not
-    NaN, so every cosine consumer in this module assumes embeddings
-    were filtered/validated upstream — :func:`valid_embeddings` is
-    that upstream filter (r10).  ``semantic_dedup`` filters
-    ``norm > 0`` itself (a zero-vector test corpus surfaced the
-    error there); the other consumers document the assumption here —
-    a zero vector carries no direction and has no place in a cosine
-    index."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def valid_embeddings(
     df: DataFrame, vec_col: str = "embedding", dim: int | None = None
 ) -> DataFrame:
@@ -73,7 +59,8 @@ def valid_embeddings(
     narrow filter — prune-friendly wherever it lands in the plan.  A
     zero-norm check via ``exists(x != 0)`` rather than computing the
     norm: no sqrt, early-exits on the first nonzero element, and
-    avoids the (x*x) overflow corner entirely."""
+    avoids the (x*x) overflow corner entirely.  The LSH operators band
+    64-dim vectors, so ``dim=64`` is their width gate."""
     v = F.col(vec_col)
     ok = v.isNotNull()
     if dim is not None:
@@ -130,7 +117,7 @@ def knn_bruteforce(
     # cosine(a,b) folds three 64-element aggregates; factoring the two
     # norms out of the |Q| x |C| product leaves one dot fold per pair.
     # score = dot/(norm_a*norm_b) is the same expression tree as
-    # cosine(), so values stay bit-identical to the oracle.
+    # dot/(norm*norm) fold, so values stay bit-identical to the oracle.
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
@@ -201,8 +188,6 @@ def knn_topk_smallq(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force top-k, serving-shaped: the metadata-sized
     query matrix rides in an Arrow kernel closure; each candidate
@@ -218,11 +203,11 @@ def knn_topk_smallq(
     round trip on the pair space.  For |Q| at table scale use
     :func:`knn_lsh` / :func:`knn_ivf`.
     """
-    q_ids, Q = _query_matrix(queries, id_col, vec_col)
+    q_ids, Q = _query_matrix(queries, "vec_id", "embedding")
     if len(q_ids) == 0:
         return _empty_topk(candidates)
-    pairs = candidates.select(id_col, vec_col).mapInPandas(
-        _fused_lookup_kernel(q_ids, Q, k, None, id_col, vec_col),
+    pairs = candidates.select("vec_id", "embedding").mapInPandas(
+        _fused_lookup_kernel(q_ids, Q, k, None, "vec_id", "embedding"),
         schema="query_id long, neighbor_id long, score double",
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -242,10 +227,8 @@ def _fused_lookup_kernel(q_ids, Q, k: int, match_fn, id_col: str, vec_col: str):
     with the left-to-right fold (oracle-exact order), and emit the
     batch-local top-k per query over matched pairs.  The candidate
     table is scanned once; no pair space, no vector shuffle — the
-    downstream carries |partitions| x |Q| x k narrow rows.  (When
-    lookups repeat against the same corpus, persist the banded/
-    inverted table and use the join path instead — this kernel is the
-    index-free one-shot.)"""
+    downstream carries |partitions| x |Q| x k narrow rows: the
+    index-free one-shot."""
     import numpy as np
 
     q_norm = _seq_norms(Q)
@@ -346,119 +329,6 @@ def _lsh_buckets_udf(planes: int, dim: int, tables: int):
     return buckets
 
 
-def derive_planes(
-    n: int, target_bucket: int = 128, lo: int = 4, hi: int = 24
-) -> int:
-    """Default plane count for the sign-LSH family, derived from the
-    CORPUS SIZE: ``ceil(log2(n / target_bucket))`` clamped to
-    [``lo``, ``hi``] — i.e. enough hyperplanes that the expected
-    bucket holds ~``target_bucket`` vectors.  A fixed plane count
-    does not scale (VERDICT r7 #3: planes=4 -> 16 buckets per table
-    was tuned for sf0.1 recall; at the 50x replica BOTH engines faced
-    ~10^9 in-bucket candidate pairs): in-bucket pair work grows as
-    n^2 / 2^planes per table, so planes must track log2(n) to keep
-    per-bucket cost flat.  The price is recall at a fixed ``tables``
-    — per-table co-bucket probability is match^planes — which is why
-    ``tables="auto"`` (:func:`derive_tables`, r9) re-solves the table
-    count from the recall model whenever this derivation raises the
-    plane count: the two defaults compose, bounded bucket work AND
-    held recall.  Bounds:
-    ``lo`` keeps tiny corpora from degenerating to planes<=1 (every
-    pair co-buckets = brute force); ``hi=24`` caps bucket-id width
-    comfortably inside the int32 bucket column."""
-    import math
-
-    if n <= 0:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(max(n / target_bucket, 1.0)))))
-
-
-def _resolve_planes(planes, df: DataFrame, corpus_count: int | None,
-                    target_bucket: int = 128) -> int:
-    """``planes="auto"`` -> :func:`derive_planes` over the given
-    side's row count (``corpus_count`` skips the count job when the
-    caller already knows it); integers pass through unchanged.
-    NOTE: the "auto" path runs an eager ``count()`` JOB at operator
-    CONSTRUCTION time (one scan of the corpus side) — pass
-    ``corpus_count`` in pipelines that already know the size."""
-    if planes == "auto":
-        n = corpus_count if corpus_count is not None else df.count()
-        return derive_planes(int(n), target_bucket)
-    return int(planes)
-
-
-def derive_tables(
-    threshold: float,
-    planes: int,
-    target_recall: float = 0.9,
-    lo: int = 2,
-    hi: int = 64,
-) -> int:
-    """Default table count for the sign-LSH family, derived from the
-    RECALL MODEL so the OR-amplification keeps up when
-    :func:`derive_planes` raises the plane count with corpus size
-    (VERDICT r8 #3: auto-planes without auto-tables silently traded
-    recall — measured 0.929 -> 0.131 going planes 4 -> 10 at
-    threshold 0.35 with tables=16).
-
-    For a pair at cosine ``threshold`` the per-table co-bucket
-    probability is ``match^planes`` with ``match = 1 - theta/pi``
-    (sign-random-projection collision probability, Charikar 2002);
-    over ``tables`` independent tables recall is
-    ``1 - (1 - match^planes)^tables``.  This solves for the smallest
-    ``tables`` reaching ``target_recall`` at the pair the operator is
-    DESIGNED to catch (its own ``threshold``): pairs above it are hit
-    even more often.  The model is measured-accurate to ~0.04
-    absolute against the r8 recall sweep (pytest-pinned).
-
-    Cost is LINEAR in tables (band rows per vector), so ``hi`` caps
-    the spend: when even ``hi`` tables cannot reach the target —
-    moderate thresholds like 0.35 at high plane counts need hundreds
-    — the clamp fires A WARNING naming the achievable recall, because
-    silently shipping a low-recall default is the trap this function
-    exists to close; the caller should lower ``planes`` (denser
-    verify work), raise ``hi`` knowingly, or accept the stated
-    recall.  ``lo`` keeps degenerate inputs (match ~ 1) from
-    single-table flakiness."""
-    import math
-    import warnings
-
-    match = 1.0 - math.acos(max(-1.0, min(1.0, float(threshold)))) / math.pi
-    p = match ** int(planes)
-    if p >= 1.0:
-        return lo
-    if p <= 0.0 or target_recall >= 1.0:
-        # target_recall >= 1 is unreachable for ANY finite table count
-        # (the model approaches 1 only asymptotically) — same clamp+warn
-        # path as a table count past ``hi``, not a math-domain crash.
-        t = float("inf")
-    else:
-        t = math.log(1.0 - target_recall) / math.log(1.0 - p)
-    n = max(lo, min(hi, math.ceil(t) if t != float("inf") else hi))
-    if t > hi:
-        achievable = 1.0 - (1.0 - p) ** hi
-        warnings.warn(
-            f"derive_tables: target recall {target_recall} at cosine "
-            f">= {threshold} needs ~{math.ceil(t) if t != float('inf') else 'inf'} "
-            f"tables at planes={planes}; clamped to {hi} "
-            f"(achievable recall ~{achievable:.3f}). Lower planes, raise "
-            f"hi, or accept the stated recall.",
-            stacklevel=3,
-        )
-    return n
-
-
-def _resolve_tables(tables, threshold: float, planes: int,
-                    target_recall: float = 0.9) -> int:
-    """``tables="auto"`` -> :func:`derive_tables` at the operator's
-    own threshold and the RESOLVED plane count (call after
-    ``_resolve_planes`` so auto-planes and auto-tables compose);
-    integers pass through unchanged."""
-    if tables == "auto":
-        return derive_tables(threshold, planes, target_recall)
-    return int(tables)
-
-
 def _lsh_banded_narrow(df: DataFrame, id_alias: str, id_col: str,
                        vec_col: str, planes: int, dim: int,
                        tables: int) -> DataFrame:
@@ -479,171 +349,69 @@ def _lsh_banded_narrow(df: DataFrame, id_alias: str, id_col: str,
 def knn_lsh(
     queries: DataFrame,
     candidates: DataFrame,
-    k: int = 5,
-    planes: int | str = "auto",
-    tables: int | str = "auto",
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    collect_queries: bool = False,
-    corpus_count: int | None = None,
-    recall_at: float = 0.9,
-    target_recall: float = 0.9,
 ) -> DataFrame:
-    """Approximate top-k: multi-table sign-random-projection LSH
-    (OR-amplification: a pair is a candidate if it co-buckets in ANY of
-    ``tables`` independent hash tables), exact cosine re-rank within
-    candidates.
+    """Approximate top-5: multi-table sign-random-projection LSH
+    (OR-amplification: a candidate matches a query if they co-bucket
+    in ANY of 16 independent 4-plane hash tables), exact cosine
+    re-rank within the matches.
 
     Recall for a pair at angle theta: 1 - (1 - (1 - theta/pi)^planes)^tables
-    — tune planes up for selectivity, tables up for recall.  At 10^9
-    vectors each side shuffles ``tables`` small rows per vector on a
-    (table, bucket) key; the quadratic cross product never materializes.
-    ``planes="auto"`` (default) derives the plane count from the
-    candidate-side row count (:func:`derive_planes` — in-bucket pair
-    work grows n^2/2^planes per table, so a FIXED plane count stops
-    scaling past its tuned corpus size); pass ``corpus_count`` to skip
-    the count job when the size is already known.  NOTE: the auto
-    derivation runs that ``count()`` as an eager job at operator
-    CONSTRUCTION time.  ``tables="auto"`` (default, r9) closes the
-    recall side of the same loop: :func:`derive_tables` solves the
-    recall model for the table count that keeps recall >=
-    ``target_recall`` at cosine ``recall_at`` (the design point a
-    top-k caller cares about — there is no threshold parameter to
-    read it from) AFTER planes resolve, so growing the corpus raises
-    planes for bounded bucket work and tables for held recall
-    together.  MIND THE TWO 0.9-DEFAULT KNOBS: ``recall_at`` is a
-    COSINE (where on the similarity axis recall is guaranteed), NOT a
-    recall — to ask for more recall raise ``target_recall``.  RAISING
-    ``recall_at`` relaxes the design point (higher-cosine pairs
-    co-bucket more often), so the derivation returns FEWER tables and
-    recall at any looser operating threshold silently drops.
+    — planes up for selectivity, tables up for recall.
 
-    ``collect_queries=True`` is the index-free serving shape for a
-    metadata-sized query batch: the query bucket table (same bit math
-    as the executor kernel) rides in a fused lookup kernel's closure —
-    ONE streaming pass over the candidates does bucket membership,
-    exact re-rank, and batch-local top-k; no banded table, no join, no
-    vector shuffle (the OR-amplification dedup is the membership
-    test's ``any`` over tables).  Leave False when the query side is a
-    real table, or persist the banded table when lookups repeat.
+    The index-free serving shape for a metadata-sized query batch: the
+    query bucket table (same bit math as the executor kernel) rides in
+    a fused lookup kernel's closure — ONE streaming pass over the
+    candidates does bucket membership, exact re-rank, and batch-local
+    top-k; no banded table, no join, no vector shuffle (the
+    OR-amplification dedup is the membership test's ``any`` over
+    tables).
     """
-    planes = _resolve_planes(planes, candidates, corpus_count)
-    tables = _resolve_tables(tables, recall_at, planes, target_recall)
+    import numpy as np
+
+    planes, tables = 4, 16
+    q_ids, Q = _query_matrix(queries, "vec_id", "embedding")
+    if len(q_ids) == 0:
+        return _empty_topk(candidates)
+    P = _np_planes(tables * planes, 64).T
+    pows = (2 ** np.arange(planes - 1, -1, -1)).astype("int64")
+    QB = np.empty((len(q_ids), tables), dtype="int64")
+    q_bits = (Q @ P) > 0
+    for t in range(tables):
+        QB[:, t] = q_bits[:, t * planes:(t + 1) * planes] @ pows
+
+    def co_bucket(V):
+        bits = (V @ P) > 0  # identical math to _lsh_buckets_udf
+        M = np.empty((V.shape[0], tables), dtype="int64")
+        for t in range(tables):
+            M[:, t] = bits[:, t * planes:(t + 1) * planes] @ pows
+        return (M[:, None, :] == QB[None, :, :]).any(axis=2)
+
+    pairs = candidates.select("vec_id", "embedding").mapInPandas(
+        _fused_lookup_kernel(q_ids, Q, 5, co_bucket, "vec_id", "embedding"),
+        schema="query_id long, neighbor_id long, score double",
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
     )
-    if collect_queries:
-        import numpy as np
-
-        q_ids, Q = _query_matrix(queries, id_col, vec_col)
-        if len(q_ids) == 0:
-            return _empty_topk(candidates)
-        P = _np_planes(tables * planes, dim).T
-        pows = (2 ** np.arange(planes - 1, -1, -1)).astype("int64")
-        QB = np.empty((len(q_ids), tables), dtype="int64")
-        q_bits = (Q @ P) > 0
-        for t in range(tables):
-            QB[:, t] = q_bits[:, t * planes:(t + 1) * planes] @ pows
-
-        def co_bucket(V):
-            bits = (V @ P) > 0  # identical math to _lsh_buckets_udf
-            M = np.empty((V.shape[0], tables), dtype="int64")
-            for t in range(tables):
-                M[:, t] = bits[:, t * planes:(t + 1) * planes] @ pows
-            return (M[:, None, :] == QB[None, :, :]).any(axis=2)
-
-        pairs = candidates.select(id_col, vec_col).mapInPandas(
-            _fused_lookup_kernel(q_ids, Q, k, co_bucket, id_col, vec_col),
-            schema="query_id long, neighbor_id long, score double",
-        )
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "score")
-        )
-    # narrow-band form (r7): the bucket join and candidate dedup move
-    # vector-free rows; query vectors (the small side) then candidate
-    # vectors join back once by key for the exact re-rank — see
-    # semantic_contamination_lsh for the traffic arithmetic
-    c = _lsh_banded_narrow(candidates, "neighbor_id", id_col, vec_col, planes, dim, tables)
-    q = _lsh_banded_narrow(queries, "query_id", id_col, vec_col, planes, dim, tables)
-    cand = (
-        c.join(q, ["tbl", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_vec_norm"),
-    )
-    cv = candidates.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_vec_norm"),
-    )
-    scored = (
-        cand.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_vec_norm") * F.col("c_vec_norm"))).alias("score"),
-        )
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "rank", "score")
     )
 
 
-def _nearest_cells_udf(centroids, n_probe: int):
-    """Arrow-batched kernel: the ``n_probe`` nearest centroids (by
-    cosine) per vector, as an int array.  ``centroids`` (k x dim
-    float64) travels in the closure — broadcast once per executor.
-    Ties break toward the lower centroid index (argsort is stable)."""
-    import numpy as np
-
-    Cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-30
-    )
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def nearest(vecs: pd.Series) -> pd.Series:
-        V = np.vstack(vecs.to_numpy()).astype("float64")
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-        S = Vn @ Cn.T  # (n, k)
-        idx = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(idx.astype("int32")))
-
-    return nearest
-
-
-def ivf_centroids(
-    candidates: DataFrame,
-    k: int = 16,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """IVF coarse quantizer: k centroids via deterministic Lloyd
-    iterations (init = the k vectors with the smallest md5-prefix hash
-    of their id — a deterministic uniform sample, no RNG, no id-density
-    assumption, and reproducible in ANSI SQL: with ``iterations=0`` the
+def ivf_centroids(candidates: DataFrame):
+    """IVF coarse quantizer: the 16 vectors with the smallest
+    md5-prefix hash of their id — a deterministic uniform sample, no
+    RNG, no id-density assumption, and reproducible in ANSI SQL: the
     quantizer is a pure data sample any engine can reconstruct, which
-    is what makes the declared IVF query oracle-checkable).
-    Returns a (k x dim) float64 numpy matrix.
+    is what makes the declared IVF query oracle-checkable.
+    Returns a (16 x dim) float64 numpy matrix.
 
-    The init is a TakeOrdered with a k-row heap per partition (k ~ 16)
-    — constant driver memory at any table size, unlike stride-based
+    The sample is a TakeOrdered with a 16-row heap per partition —
+    constant driver memory at any table size, unlike stride-based
     sampling which needs a count() pass and funnels ~n rows through a
-    global limit on dense id spaces.  Each Lloyd iteration is one
-    vectorized assignment pass (centroid matrix in the kernel closure)
-    + one groupBy mean; the k x dim result is collected to the driver
-    between iterations — centroids are metadata-sized (k*dim doubles)
-    by construction, which is what makes k-means scalable: the
-    10^9-row table streams, the model doesn't.
+    global limit on dense id spaces.
     """
     import numpy as np
 
@@ -651,139 +419,75 @@ def ivf_centroids(
         F.substring(F.md5(F.col("cid").cast("string")), 1, 15), 16, 10
     ).cast("long")
     init = (
-        candidates.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("v"))
+        candidates.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("v"))
         .orderBy(id_hash.asc(), F.col("cid").asc())
-        .limit(k)
+        .limit(16)
         .collect()
     )
-    C = np.array([list(r.v) for r in sorted(init, key=lambda r: r.cid)], dtype="float64")
-    dim = C.shape[1]
-    for _ in range(iterations):
-        assign = _nearest_cells_udf(C, 1)
-        rows = (
-            candidates.select(
-                F.element_at(assign(F.col(vec_col)), 1).alias("cell"),
-                F.col(vec_col).alias("v"),
-            )
-            .groupBy("cell")
-            .agg(*[F.avg(F.col("v")[i].cast("double")).alias(f"d{i}") for i in range(dim)])
-            .collect()
-        )
-        for r in rows:  # cells that lost every member keep their old position
-            C[r.cell] = [r[f"d{i}"] for i in range(dim)]
-    return C
+    return np.array([list(r.v) for r in sorted(init, key=lambda r: r.cid)], dtype="float64")
 
 
 def knn_ivf(
     queries: DataFrame,
     candidates: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    collect_queries: bool = False,
 ) -> DataFrame:
-    """X3 scale path B: IVF — partition candidates by nearest centroid
-    (the inverted file), probe only the ``n_probe`` closest cells per
-    query, exact cosine re-rank within the probed cells.
+    """X3 scale path B: IVF — candidates fall in the cell of their
+    nearest centroid (the inverted file), each query probes only its 4
+    closest of 16 cells, exact cosine re-rank within the probed cells
+    (top 5).  The quantizer is the deterministic hash-sampled seed
+    vectors (:func:`ivf_centroids`) — reconstructable by any engine,
+    which is what the declared oracle query pins.
 
-    At 10^9 vectors: the inverted file is a one-off build (one
-    vectorized assignment pass, one shuffle on centroid_id); each query
-    touches ~n_probe/n_centroids of the data.  Recall is controlled by
-    n_probe.  ``iterations=0`` skips Lloyd refinement: the quantizer is
-    then the deterministic hash-sampled seed vectors — reconstructable
-    by any engine, which is what the declared oracle query pins.
-
-    ``collect_queries=True``: the index-free serving shape — probe
-    cells for the metadata-sized query batch are computed in the
-    planner (the centroid matrix already lives there), and ONE fused
-    kernel pass over the candidates does cell assignment, probe
-    membership, exact re-rank, and batch-local top-k; no inverted
-    file, no join.  Persist the inverted table and use the join path
-    when lookups repeat against the same corpus.
+    The index-free serving shape: probe cells for the metadata-sized
+    query batch are computed in the planner (the centroid matrix
+    already lives there), and ONE fused kernel pass over the candidates
+    does cell assignment, probe membership, exact re-rank, and
+    batch-local top-k; no inverted file, no join.  Each query touches
+    ~4/16 of the data; recall is controlled by the probe count.
     """
     import numpy as np
 
-    C = ivf_centroids(
-        candidates, k=n_centroids, iterations=iterations,
-        id_col=id_col, vec_col=vec_col,
+    C = ivf_centroids(candidates)
+    # arg-ranking normalization (blocked np.linalg norms are fine for
+    # it); the SCORE uses the sequential fold to stay oracle-exact
+    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
+    q_ids, Q = _query_matrix(queries, "vec_id", "embedding")
+    if len(q_ids) == 0:
+        return _empty_topk(candidates)
+    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
+    cells = np.argsort(-(Qn @ Cn.T), axis=1, kind="stable")[:, :4]
+
+    def in_probed_cell(V):
+        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
+        cell = np.argsort(-(Vn @ Cn.T), axis=1, kind="stable")[:, 0]
+        return (cell[:, None, None] == cells[None, :, :]).any(axis=2)
+
+    pairs = candidates.select("vec_id", "embedding").mapInPandas(
+        _fused_lookup_kernel(q_ids, Q, 5, in_probed_cell, "vec_id", "embedding"),
+        schema="query_id long, neighbor_id long, score double",
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    # normalization replicates _nearest_cells_udf exactly (blocked
-    # np.linalg norms are fine for an arg-ranking); the SCORE always
-    # uses the sequential fold to stay oracle-exact
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-    if collect_queries:
-        q_ids, Q = _query_matrix(queries, id_col, vec_col)
-        if len(q_ids) == 0:
-            return _empty_topk(candidates)
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
-        cells = np.argsort(-(Qn @ Cn.T), axis=1, kind="stable")[:, :n_probe]
-
-        def in_probed_cell(V):
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-            cell = np.argsort(-(Vn @ Cn.T), axis=1, kind="stable")[:, 0]
-            return (cell[:, None, None] == cells[None, :, :]).any(axis=2)
-
-        pairs = candidates.select(id_col, vec_col).mapInPandas(
-            _fused_lookup_kernel(q_ids, Q, k, in_probed_cell, id_col, vec_col),
-            schema="query_id long, neighbor_id long, score double",
-        )
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "score")
-        )
-    assign1 = _nearest_cells_udf(C, 1)
-    inv = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("centroid_id"),
-    )
-    probe = _nearest_cells_udf(C, n_probe)
-    q_probe = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-        F.explode(probe(F.col(vec_col))).alias("centroid_id"),
-    )
-    scored = (
-        inv.join(F.broadcast(q_probe), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("score"),
-        )
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "rank", "score")
     )
 
 
 def embedding_neardup_pairs(
     df: DataFrame,
-    threshold: float = 0.9,
-    max_id: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
-    threshold).  ``max_id`` bounds the oracle query; the scale path is
-    the same computation fed by LSH buckets instead of a cross join."""
-    base = df if max_id is None else df.filter(F.col(id_col) < max_id)
-    a = base.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        norm(F.col(vec_col)).alias("na"),
+    0.25) by an all-pairs cross join, so callers bound the input (the
+    declared query takes ids below 60); the scale path is the same
+    computation fed by LSH buckets instead of a cross join."""
+    a = df.select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
+        norm(F.col("embedding")).alias("na"),
     )
-    b = base.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col)).alias("nb"),
+    b = df.select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
+        norm(F.col("embedding")).alias("nb"),
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -791,7 +495,7 @@ def embedding_neardup_pairs(
             "id_a", "id_b",
             (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("score"),
         )
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= 0.25)
     )
 
 
@@ -824,46 +528,25 @@ def _exact_dup_probe(df: DataFrame, vec_col: str) -> bool:
 
 def embedding_neardup_pairs_lsh(
     df: DataFrame,
-    threshold: float = 0.9,
-    planes: int | str = "auto",
-    tables: int | str = "auto",
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    corpus_count: int | None = None,
     max_bucket: int | None = None,
-    target_recall: float = 0.9,
     validate: bool = False,
 ) -> DataFrame:
-    """Scale path for embedding near-dup: candidate pairs come from
-    multi-table sign-LSH co-bucketing instead of the all-pairs cross
-    join, then the SAME exact cosine filter runs on candidates only.
+    """Scale path for embedding near-dup (cosine >= 0.35): candidate
+    pairs come from multi-table sign-LSH co-bucketing (16 tables of 4
+    planes) instead of the all-pairs cross join, then the SAME exact
+    cosine filter runs on candidates only.
 
-    At 10^9 vectors the shuffle is ``tables`` small rows per vector on
-    (table, bucket); a pair at cosine >= 0.9 (angle <= ~26 deg) lands in
-    the same bucket of at least one of 8x8-plane tables with
-    probability ~1 - (1 - 0.86^8)^8 ~ 0.97 — recall is tunable via
-    ``tables`` without ever materializing the quadratic pair space.
+    At 10^9 vectors the shuffle is 16 small rows per vector on
+    (table, bucket); recall is set by the table count without ever
+    materializing the quadratic pair space.
 
     Plan (r7 narrow-band rewrite, same as
     :func:`semantic_contamination_lsh`): the band table is VECTOR-FREE
     (id, tbl, bucket), so the self-join and pair dedup move ~24-byte
     rows; each endpoint's embedding joins back ONCE by key for the
     exact-cosine verify — the fat form replicated every vector
-    ``tables`` times through the band build and again through the
+    16 times through the band build and again through the
     dedup exchange.
-
-    ``planes="auto"`` (default, r8) derives the plane count from the
-    corpus size (:func:`derive_planes`): in-bucket candidate pairs
-    grow n^2/2^planes per table, so the fixed planes=8 this operator
-    shipped with stops scaling past ~10^5 vectors; ``corpus_count``
-    skips the derivation's count job when known (otherwise the auto
-    path runs one eager ``count()`` at construction).
-    ``tables="auto"`` (default, r9, VERDICT r8 #3) derives the table
-    count from (``threshold``, resolved planes) via the recall model
-    (:func:`derive_tables`, target 0.9 at the operator's own
-    threshold) — without it, auto-planes held bucket work flat by
-    silently giving up recall as the corpus grew.
 
     The exact-duplicate collapse (r8) maps BYTE-IDENTICAL vectors
     to their min-id representative before banding — the embedding
@@ -927,16 +610,14 @@ def embedding_neardup_pairs_lsh(
     silently drops offending rows (see :func:`knn_bruteforce`).
 
     **Construction-time (eager) jobs** — declaring this operator runs
-    up to THREE driver-side Spark jobs before any caller action, the
+    up to TWO driver-side Spark jobs before any caller action, the
     same accepted plan-build pattern as q_knn_ivf's centroids and
-    semantic_dedup's seeds: (1) the ``planes="auto"`` corpus count
-    (skipped when ``corpus_count`` is passed), (2) the exact-duplicate
-    probe, and (3) the r13
-    verify-width sizing agg — one single-row aggregation over the
+    semantic_dedup's seeds: (1) the exact-duplicate probe, and (2) the
+    r13 verify-width sizing agg — one single-row aggregation over the
     persisted band table (sum c*(c-1)/2 over bucket sizes) that prices
     the candidate-pair volume so the pair-dedup/verify exchange width
     tracks the quadratic in-bucket blow-up instead of the input bytes.
-    Job (3) also MATERIALIZES the persisted band table at declare
+    Job (2) also MATERIALIZES the persisted band table at declare
     time; callers that only inspect the plan and never execute or
     release the result (via ``dedup.release_cached``) keep that cache
     in executor memory.  A lazy alternative (AQE coalescing over a
@@ -950,15 +631,13 @@ def embedding_neardup_pairs_lsh(
     from .dedup import _attach_cached
 
     if validate:
-        df = valid_embeddings(df, vec_col)
-    planes = _resolve_planes(planes, df, corpus_count)
-    tables = _resolve_tables(tables, threshold, planes, target_recall)
+        df = valid_embeddings(df)
     # work-proportional gate (VERDICT r8 #2): on a dup-free corpus the
     # collapse is the identity, so skip its groupBy + expansion joins
     # entirely — the plain banding below is bit-equal to the collapsed
     # form when no duplicate group exists (regardless of max_bucket:
     # identity collapse means reps == members)
-    if _exact_dup_probe(df, vec_col):
+    if _exact_dup_probe(df, "embedding"):
         # r14 (guide §2.3/§2.4, same cut as dedup._collapsed_graph):
         # (rep, group size) per member via ONE window over the vector
         # fingerprint — one scan + one keyed exchange where the old
@@ -968,9 +647,9 @@ def embedding_neardup_pairs_lsh(
         wfp = Window.partitionBy("__f1", "__f2")
         member = (
             df.select(
-                F.col(id_col).alias("__mid"),
-                F.xxhash64(F.col(vec_col)).alias("__f1"),
-                F.xxhash64(F.lit(1), F.col(vec_col)).alias("__f2"),
+                F.col("vec_id").alias("__mid"),
+                F.xxhash64(F.col("embedding")).alias("__f1"),
+                F.xxhash64(F.lit(1), F.col("embedding")).alias("__f2"),
             )
             .select(
                 "__mid",
@@ -983,12 +662,11 @@ def embedding_neardup_pairs_lsh(
             "__rep", "__n"
         )
         reps = df.join(
-            groups.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
+            groups.select(F.col("__rep").alias("vec_id")), "vec_id", "left_semi"
         )
         # representatives hold no duplicates by construction: plain
         # banding, no second probe
-        rep_pairs = _lsh_pairs(reps, threshold, planes, tables, dim, id_col,
-                               vec_col, max_bucket)
+        rep_pairs = _lsh_pairs(reps, max_bucket)
         ma, mb = member.alias("ma"), member.alias("mb")
         cross = (
             rep_pairs
@@ -1006,14 +684,14 @@ def embedding_neardup_pairs_lsh(
         # computes the same fold)
         self_scored = (
             df.join(groups.filter(F.col("__n") > 1)
-                    .select(F.col("__rep").alias(id_col)), id_col, "left_semi")
+                    .select(F.col("__rep").alias("vec_id")), "vec_id", "left_semi")
             .select(
-                F.col(id_col).alias("__rep"),
-                (dot(F.col(vec_col), F.col(vec_col))
-                 / (norm(F.col(vec_col)) * norm(F.col(vec_col))))
+                F.col("vec_id").alias("__rep"),
+                (dot(F.col("embedding"), F.col("embedding"))
+                 / (norm(F.col("embedding")) * norm(F.col("embedding"))))
                 .alias("score"),
             )
-            .filter(F.col("score") >= threshold)
+            .filter(F.col("score") >= 0.35)
         )
         within = (
             self_scored
@@ -1030,23 +708,13 @@ def embedding_neardup_pairs_lsh(
         return _attach_cached(
             out, [member] + getattr(rep_pairs, "_cached_deps", [])
         )
-    return _lsh_pairs(df, threshold, planes, tables, dim, id_col,
-                      vec_col, max_bucket)
+    return _lsh_pairs(df, max_bucket)
 
 
-def _lsh_pairs(
-    df: DataFrame,
-    threshold: float,
-    planes: int,
-    tables: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    max_bucket: int | None,
-) -> DataFrame:
-    """The plain banding of :func:`embedding_neardup_pairs_lsh` over
-    resolved ``planes``/``tables``, without the exact-duplicate
-    collapse: band, pair within buckets, verify the exact cosine."""
+def _lsh_pairs(df: DataFrame, max_bucket: int | None) -> DataFrame:
+    """The plain banding of :func:`embedding_neardup_pairs_lsh`,
+    without the exact-duplicate collapse: band, pair within buckets,
+    verify the exact cosine."""
     from .dedup import _attach_cached
 
     cached = []
@@ -1059,7 +727,7 @@ def _lsh_pairs(
     from ..sources import fan_out
 
     banded = _lsh_banded_narrow(
-        fan_out(df), "id", id_col, vec_col, planes, dim, tables
+        fan_out(df), "id", "vec_id", "embedding", 4, 64, 16
     ).persist()
     cached.append(banded)
     cond = (
@@ -1103,7 +771,7 @@ def _lsh_pairs(
     # wall).  One single-row agg over the persisted band table prices
     # the pair space exactly (sum c*(c-1)/2 — an upper bound when
     # ``max_bucket`` splits hot buckets), and the verify row width is
-    # two ``dim``-double vectors; the result clamps to the same
+    # two 64-double vectors; the result clamps to the same
     # [session layout, 4x parallelism] band ``tune_for_input`` uses,
     # so at 100 TB the cap binds (thousands of partitions, same as
     # today) and locally the width follows the actual blow-up.  The
@@ -1123,7 +791,7 @@ def _lsh_pairs(
     from ..session import SHUFFLE_TARGET_BYTES
 
     layout = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verify_bytes = int(est_pairs) * (16 * dim + 24)
+    verify_bytes = int(est_pairs) * (16 * 64 + 24)
     n_verify = int(max(layout, min(
         4 * spark.sparkContext.defaultParallelism,
         verify_bytes // SHUFFLE_TARGET_BYTES,
@@ -1135,8 +803,8 @@ def _lsh_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     vecs = df.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"),
-        norm(F.col(vec_col)).alias("__vn"),
+        F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v"),
+        norm(F.col("embedding")).alias("__vn"),
     )
     out = (
         cand.join(vecs, cand["id_a"] == vecs["__vid"])
@@ -1147,46 +815,37 @@ def _lsh_pairs(
             (dot(F.col("va"), F.col("__v")) / (F.col("na") * F.col("__vn")))
             .alias("score"),
         )
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= 0.35)
     )
     return _attach_cached(out, cached)
 
 
 def project_embeddings(
     df: DataFrame,
-    out_dim: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    out_col: str = "projected",
 ) -> DataFrame:
     """Random-projection (Johnson-Lindenstrauss) dimensionality
-    reduction: project each vector onto ``out_dim`` deterministic
+    reduction: project each vector onto 8 deterministic
     pseudo-random hyperplanes — the standard preprocessing that shrinks
     ANN index and shuffle width when the raw embedding dimension is
     overkill for recall.  Angles (hence cosine ranking) are
-    approximately preserved with distortion ~ sqrt(log n / out_dim).
+    approximately preserved with distortion ~ sqrt(log n / 8).
 
     The projection matrix is the same data-independent splitmix
     construction the LSH tables use (`_hyperplane`): reproducible on
     any engine, no RNG state, rides the plan as a literal — nothing is
-    broadcast or shuffled.  Per-row cost is ``out_dim`` sequential
+    broadcast or shuffled.  Per-row cost is 8 sequential
     folds (JVM codegen); output is ``array<double>``.
     """
-    M = _planes_matrix_expr(out_dim, dim)
-    comps = [dot(F.col(vec_col), F.element_at(M, p + 1)) for p in range(out_dim)]
+    M = _planes_matrix_expr(8, 64)
+    comps = [dot(F.col("embedding"), F.element_at(M, p + 1)) for p in range(8)]
     return df.select(
-        F.col(id_col), *[c for c in df.columns if c != id_col and c != vec_col],
-        F.array(*comps).alias(out_col),
+        F.col("vec_id"), *[c for c in df.columns if c != "vec_id" and c != "embedding"],
+        F.array(*comps).alias("projected"),
     )
 
 
 def embedding_centroids(
     df: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    dyadic_bits: int | None = None,
 ) -> DataFrame:
     """Per-label mean embedding (centroid) — the mean-pooling step of
     cluster summarization, IVF coarse-quantizer refresh, and
@@ -1195,18 +854,11 @@ def embedding_centroids(
     format; pivot back to an array with ``collect_list`` over sorted
     dims when a vector shape is needed).
 
-    By default each (label, dim) cell's values fold in ``id`` order
-    inside an aggregated array — a FIXED summation order, so the
-    result is bit-identical across partitionings and engines (float
-    addition does not reassociate here).  The array holds the label's
-    member count of scalars: fine up to ~1e6 members per label.
-
-    ``dyadic_bits=k`` is bit-exact AND partial-aggregable when the
-    caller proves every component is an exact multiple of 2^-k (any
-    float32 input whose exponents stay >= 24-k; k=43 covers
-    magnitudes down to ~1e-6, and the property is checkable once per
-    corpus): components scale to exact longs
-    (* 2^k, a power-of-two multiply, lossless), accumulate via the
+    The sum is bit-exact AND partial-aggregable because every
+    component is an exact multiple of 2^-43 (any float32 input whose
+    exponents stay >= -19 — magnitudes down to ~1e-6, a property
+    checkable once per corpus): components scale to exact longs
+    (* 2^43, a power-of-two multiply, lossless), accumulate via the
     hi/lo split-long sum (functions.xlsum — exact to 2^39 members per
     label, codegen primitives, arbitrary merge order), and the single
     double rounding happens at the final scale-back.  No per-cell
@@ -1220,47 +872,30 @@ def embedding_centroids(
     from ..sources import fan_out
 
     e = fan_out(df).select(
-        F.col(label_col).alias("label"),
-        F.col(id_col).alias("__i"),
-        F.posexplode(F.col(vec_col)).alias("dim", "__v"),
+        F.col("label").alias("label"),
+        F.posexplode(F.col("embedding")).alias("dim", "__v"),
     ).withColumn("__v", F.col("__v").cast("double"))
-    if dyadic_bits is not None:
-        from ..functions import xlsum
+    from ..functions import xlsum
 
-        scale = F.lit(float(2 ** dyadic_bits))
-        agg = e.groupBy("label", "dim").agg(
-            xlsum((F.col("__v") * scale).cast("long")).alias("__scaled"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        return agg.select(
-            "label", "dim",
-            (F.col("__scaled") / scale / F.col("n_members").cast("double"))
-            .alias("centroid"),
-            "n_members",
-        )
+    scale = F.lit(float(2 ** 43))
     agg = e.groupBy("label", "dim").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("__i").alias("i"), F.col("__v").alias("v")))
-        ).alias("__vs"),
+        xlsum((F.col("__v") * scale).cast("long")).alias("__scaled"),
         F.count(F.lit(1)).alias("n_members"),
     )
-    total = F.aggregate(F.col("__vs"), F.lit(0.0), lambda acc, x: acc + x["v"])
     return agg.select(
         "label", "dim",
-        (total / F.col("n_members").cast("double")).alias("centroid"),
+        (F.col("__scaled") / scale / F.col("n_members").cast("double"))
+        .alias("centroid"),
         "n_members",
     )
 
 
 def quantize_embeddings(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    q_max: int = 127,
 ) -> DataFrame:
     """Symmetric int8 quantization per vector (max-abs scaling) — the
     4x storage/bandwidth shrink ANN indexes ship with: ``q_i =
-    round(x_i * q_max / max|x|)``, reconstructed as ``q_i / scale``.
+    round(x_i * 127 / max|x|)``, reconstructed as ``q_i / scale``.
 
     Map-only higher-order expressions (transform / array_max), zero
     shuffles, no Python; both engines round ties away from zero, so
@@ -1270,29 +905,24 @@ def quantize_embeddings(
     published ~<1% at 127 levels; keep the float vectors for the
     re-rank stage and feed the codes to the candidate scan.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     maxabs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-    scale = F.when(maxabs > 0, F.lit(float(q_max)) / maxabs)
+    scale = F.when(maxabs > 0, F.lit(float(127)) / maxabs)
     qvec = F.when(
         maxabs > 0,
         F.transform(
             v,
-            lambda x: F.round(x.cast("double") * (F.lit(float(q_max)) / maxabs))
+            lambda x: F.round(x.cast("double") * (F.lit(float(127)) / maxabs))
             .cast("int"),
         ),
     )
     return df.select(
-        F.col(id_col), scale.alias("scale"), qvec.alias("qvec")
+        F.col("vec_id"), scale.alias("scale"), qvec.alias("qvec")
     )
 
 
 def semantic_dedup(
     df: DataFrame,
-    k: int = 8,
-    threshold: float = 0.32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_id: int | None = None,
     max_cell: int | None = None,
     validate: bool = False,
 ) -> DataFrame:
@@ -1308,7 +938,7 @@ def semantic_dedup(
 
     Spark-first shape, zero UDFs and zero extra shuffles before the
     pair join: the k seed centroids are the deterministic md5-hash
-    sample :func:`ivf_centroids` uses at ``iterations=0``
+    sample :func:`ivf_centroids` uses
     (metadata-sized, collected once at plan build, reproducible in
     ANSI SQL); cell assignment is a MAP-ONLY projection over k inline
     cosine folds against centroid literals (no k-row join, no window);
@@ -1318,7 +948,7 @@ def semantic_dedup(
     sequential left fold (:func:`dot` / :func:`norm`), so scores and
     the keep-ranking are bit-equal to the ANSI-SQL twin.
 
-    At 100 TB: raise ``k`` so cells stay join-sized (the paper runs
+    At 100 TB: raise the seed count (8 here) so cells stay join-sized (the paper runs
     50k clusters over 5B items; centroids stay metadata-sized until
     k*dim outgrows the closure, at which point assignment moves to the
     broadcast-join form).  The cell self-join shuffles each vector
@@ -1333,8 +963,7 @@ def semantic_dedup(
     unscored: the documented recall trade for bounding the quadratic
     term.  Cells at or under the cap are untouched (SemDeDup's
     in-cell exactness contract), so ``max_cell=None`` (default) is
-    the paper-faithful exact form.  ``max_id`` bounds the certifiable
-    query exactly as in :func:`embedding_neardup_pairs`.
+    the paper-faithful exact form.
 
     The exact-duplicate collapse maps BYTE-IDENTICAL vectors (128
     bits of seeded xxhash64 over the array) to one representative
@@ -1384,11 +1013,10 @@ def semantic_dedup(
     import math
 
     if validate:
-        df = valid_embeddings(df, vec_col)
-    base = df if max_id is None else df.filter(F.col(id_col) < max_id)
-    base = base.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("__vn"),
+        df = valid_embeddings(df)
+    base = df.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("__vn"),
     )
     # zero-norm vectors have no cosine neighborhood: under ANSI mode
     # their assignment division is a DIVIDE_BY_ZERO error, and no pair
@@ -1403,7 +1031,7 @@ def semantic_dedup(
     # sampling reps instead would move centroids — breaking the
     # collapse's output-equivalence argument
     seeds = (
-        base.orderBy(id_hash.asc(), F.col("id").asc()).limit(k).collect()
+        base.orderBy(id_hash.asc(), F.col("id").asc()).limit(8).collect()
     )
     groups = member = None
     # work-proportional gate (VERDICT r8 #2): zero duplicate groups ->
@@ -1447,23 +1075,29 @@ def semantic_dedup(
         )
     C = [list(r.v) for r in sorted(seeds, key=lambda r: r.id)]
     # Norms factored ONCE (r6): interpreted HOF lambdas are not
-    # constant-folded nor CSE'd, so cosine() inlined per centroid
+    # constant-folded nor CSE'd, so a cosine inlined per centroid
     # re-folded norm(v) k times per row and norm(centroid) k times per
     # row.  The centroid norms are Python floats computed with the
     # IDENTICAL left-to-right sum-of-squares fold + IEEE sqrt, so the
-    # scores stay bit-equal to the cosine() tree the oracle replicates.
+    # scores stay bit-equal to the cosine tree the oracle replicates.
     def _pynorm(cv):
         s = 0.0
         for x in cv:
             s = s + float(x) * float(x)
         return math.sqrt(s)
 
+    # the cosine is guarded although zero-norm rows are filtered out
+    # above: the optimizer pushes the join's not-null filter on the
+    # cell into that filter, and subexpression elimination evaluates
+    # the division before the ``__vn > 0`` conjunct, so an unguarded
+    # fold raised DIVIDE_BY_ZERO on a filtered zero-norm row (ANSI)
     cells = F.array(
         *[
             F.struct(
-                (
+                F.when(
+                    F.col("__vn") > 0,
                     dot(F.col("v"), F.array(*[F.lit(float(x)) for x in cv]))
-                    / (F.col("__vn") * F.lit(_pynorm(cv)))
+                    / (F.col("__vn") * F.lit(_pynorm(cv))),
                 ).alias("cos"),
                 F.lit(-i).alias("negidx"),
             )
@@ -1513,7 +1147,7 @@ def semantic_dedup(
             (dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb")))
             .alias("score"),
         )
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= 0.32)
     )
     comp = neardup_clusters(pairs.select("id_a", "id_b"))
     if collapse:
@@ -1574,15 +1208,10 @@ def semantic_dedup(
 def semantic_contamination(
     corpus: DataFrame,
     evalset: DataFrame,
-    threshold: float = 0.28,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eval_id_col: str = "vec_id",
-    eval_vec_col: str = "embedding",
     validate: bool = False,
 ) -> DataFrame:
     """Embedding-space decontamination: flag corpus members whose
-    cosine to ANY held-out eval vector clears ``threshold`` — the
+    cosine to ANY held-out eval vector clears 0.28 — the
     semantic complement of n-gram decontamination
     (``sampling.decontaminate``): paraphrases and translations share
     no 8-grams yet sit next to the eval item in embedding space, the
@@ -1611,8 +1240,8 @@ def semantic_contamination(
     :func:`knn_bruteforce`).
     """
     if validate:
-        corpus = valid_embeddings(corpus, vec_col)
-        evalset = valid_embeddings(evalset, eval_vec_col)
+        corpus = valid_embeddings(corpus)
+        evalset = valid_embeddings(evalset)
     # guarded fan before the per-pair fold work (r6): a single-split
     # corpus scan (the single-row-group bench file; small ingest
     # batches) otherwise streams EVERY |corpus| x |eval| interpreted
@@ -1621,17 +1250,17 @@ def semantic_contamination(
     from ..sources import fan_out
 
     corpus = fan_out(corpus)
-    # norms factored once per side (r6): cosine() inlined per pair
+    # norms factored once per side (r6): a cosine inlined per pair
     # re-folds both norms for every (corpus, eval) combination —
     # |eval| redundant corpus-norm folds per corpus row; the factored
     # score is the same expression tree, bit-equal to the oracle
     c = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("__vn"),
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("__vn"),
     )
     e = evalset.select(
-        F.col(eval_id_col).alias("eid"), F.col(eval_vec_col).alias("ev"),
-        norm(F.col(eval_vec_col)).alias("__en"),
+        F.col("vec_id").alias("eid"), F.col("embedding").alias("ev"),
+        norm(F.col("embedding")).alias("__en"),
     )
     hits = (
         c.crossJoin(F.broadcast(e))
@@ -1640,7 +1269,7 @@ def semantic_contamination(
             (dot(F.col("v"), F.col("ev")) / (F.col("__vn") * F.col("__en")))
             .alias("score"),
         )
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= 0.28)
     )
     return hits.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_eval_hits"),
@@ -1654,16 +1283,6 @@ def semantic_contamination(
 def semantic_contamination_lsh(
     corpus: DataFrame,
     evalset: DataFrame,
-    threshold: float = 0.28,
-    planes: int | str = "auto",
-    tables: int | str = "auto",
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eval_id_col: str = "vec_id",
-    eval_vec_col: str = "embedding",
-    corpus_count: int | None = None,
-    target_recall: float = 0.9,
     validate: bool = False,
 ) -> DataFrame:
     """Scale path for :func:`semantic_contamination`: candidate
@@ -1676,11 +1295,10 @@ def semantic_contamination_lsh(
     paraphrase expansions) or the corpus x eval product outgrows the
     cluster (the brute-force twin measured 50 s at the 50x fair
     layout for a 99k x 1k product — at 10^9 x 10^5 it is simply not
-    runnable), both sides band into (tbl, bucket) rows — ``tables``
-    small rows per vector, the only thing that shuffles — and the
-    bucket join yields candidates with recall
-    ``1 - (1 - match^planes)^tables`` (~0.97 at cosine 0.9 for 8x8;
-    window ``tables`` up for looser thresholds).  The report is the
+    runnable), both sides band into (tbl, bucket) rows — 8 small rows
+    per vector (8 tables of 8 planes), the only thing that shuffles —
+    and the bucket join yields candidates with recall
+    ``1 - (1 - match^8)^8`` (~0.97 at cosine 0.9).  The report is the
     same shape as the exact operator; hits the banding misses are the
     documented recall trade every LSH index makes.
 
@@ -1696,20 +1314,10 @@ def semantic_contamination_lsh(
     vector ~16x (band build + pair dedup, both sides); this form
     moves each exactly once.
 
-    ``planes="auto"`` (default, r8) derives the plane count from the
-    CORPUS side's row count (:func:`derive_planes`; the eval side is
-    assumed the smaller — bucket collision work is corpus-dominated);
-    ``corpus_count`` skips the derivation's count job when known
-    (otherwise the auto path runs one eager ``count()`` at
-    construction).  ``tables="auto"`` (default, r9, VERDICT r8 #3)
-    derives the table count from (``threshold``, resolved planes) via
-    the recall model (:func:`derive_tables`).  NOTE: this operator's
-    default threshold (0.28) is a MODERATE-similarity design point —
-    at scale-derived plane counts the 0.9-recall table count exceeds
-    the 64-table cap and :func:`derive_tables` warns with the
-    achievable recall; decontamination runs that need high recall at
-    loose thresholds should lower ``planes`` (paying denser verify
-    work) or treat the exact operator as the authority.
+    NOTE: the threshold (0.28) is a MODERATE-similarity design point
+    where 8x8 banding misses pairs; decontamination runs that need
+    high recall at loose thresholds should treat the exact operator
+    as the authority.
 
     ``validate=True`` (r11, VERDICT r10 #6) applies
     :func:`valid_embeddings` to BOTH sides at the gate — opt-in
@@ -1717,13 +1325,11 @@ def semantic_contamination_lsh(
     :func:`knn_bruteforce`).
     """
     if validate:
-        corpus = valid_embeddings(corpus, vec_col)
-        evalset = valid_embeddings(evalset, eval_vec_col)
-    planes = _resolve_planes(planes, corpus, corpus_count)
-    tables = _resolve_tables(tables, threshold, planes, target_recall)
-    cb = _lsh_banded_narrow(corpus, "id", id_col, vec_col, planes, dim, tables)
+        corpus = valid_embeddings(corpus)
+        evalset = valid_embeddings(evalset)
+    cb = _lsh_banded_narrow(corpus, "id", "vec_id", "embedding", 8, 64, 8)
     eb = _lsh_banded_narrow(
-        evalset, "eid", eval_id_col, eval_vec_col, planes, dim, tables
+        evalset, "eid", "vec_id", "embedding", 8, 64, 8
     )
     cand = (
         cb.join(eb, ["tbl", "bucket"])
@@ -1731,12 +1337,12 @@ def semantic_contamination_lsh(
         .dropDuplicates(["id", "eid"])
     )
     cv = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("v_norm"),
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("v_norm"),
     )
     ev = evalset.select(
-        F.col(eval_id_col).alias("eid"), F.col(eval_vec_col).alias("ev"),
-        norm(F.col(eval_vec_col)).alias("ev_norm"),
+        F.col("vec_id").alias("eid"), F.col("embedding").alias("ev"),
+        norm(F.col("embedding")).alias("ev_norm"),
     )
     # eval first (the usually-smaller side — AQE broadcasts it when it
     # fits), then one keyed attach of the corpus vectors
@@ -1748,7 +1354,7 @@ def semantic_contamination_lsh(
             (dot(F.col("v"), F.col("ev")) / (F.col("v_norm") * F.col("ev_norm")))
             .alias("score"),
         )
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= 0.28)
     )
     return hits.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_eval_hits"),

@@ -31,46 +31,46 @@ EN_STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for"]
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def tokens(text: Column | str, sep: str = " ") -> Column:
+def tokens(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, sep)
+    return F.split(c, " ")
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Corpus term frequencies: explode -> groupBy(token).count().
     Shuffle carries per-partition partial counts only."""
     return (
-        df.select(F.explode(tokens(text_col)).alias("token"))
+        df.select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """Per-document stats: char/token counts (whitespace + BPE-ish
     regex), distinct-token ratio, mean token length.  All per-row
     expressions — no shuffle."""
-    t = tokens(text_col)
+    t = tokens("text")
     n_tok = F.size(t).cast("bigint")
     n_distinct = F.size(F.array_distinct(t)).cast("bigint")
     return df.select(
         "doc_id",
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars_calc"),
+        F.length(F.col("text")).cast("bigint").alias("n_chars_calc"),
         n_tok.alias("n_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0))
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_PATTERN), 0))
         .cast("bigint")
         .alias("n_bpe_tokens"),
         n_distinct.alias("n_distinct_tokens"),
         (n_distinct.cast("double") / n_tok.cast("double")).alias("ttr"),
         (
-            (F.length(F.col(text_col)) - n_tok + 1).cast("double")
+            (F.length(F.col("text")) - n_tok + 1).cast("double")
             / n_tok.cast("double")
         ).alias("avg_token_len"),
     )
 
 
 def language_id(
-    df: DataFrame, text_col: str = "text", keep_cols: bool = False
+    df: DataFrame, keep_cols: bool = False
 ) -> DataFrame:
     """Stopword-marker language ID (X4).  Scores each language by the
     number of distinct marker tokens present; argmax with fixed
@@ -83,7 +83,7 @@ def language_id(
     computing each on its own branch and joining back by id (the r4
     q_corpus_prep shape recomputed the kept-corpus subtree three
     times)."""
-    tok_set = F.array_distinct(tokens(text_col))
+    tok_set = F.array_distinct(tokens("text"))
     scores = {
         lang: F.size(F.array_intersect(tok_set, F.array(*[F.lit(m) for m in markers])))
         for lang, markers in LANG_MARKERS
@@ -105,14 +105,14 @@ def language_id(
 
 
 def quality_score(
-    df: DataFrame, text_col: str = "text", keep_cols: bool = False
+    df: DataFrame, keep_cols: bool = False
 ) -> DataFrame:
     """Heuristic quality score in [0,1] (X4): length saturation,
     stopword ratio, type-token ratio — deterministic double arithmetic
     (same expression shape as the SQL oracle).  ``keep_cols=True``
     appends to the input columns (chainable one-scan enrichment, see
     :func:`language_id`)."""
-    t = tokens(text_col)
+    t = tokens("text")
     n_tok = F.size(t).cast("double")
     stop_ratio = (
         F.size(
@@ -132,16 +132,16 @@ def quality_score(
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprint (X4): md5 of whitespace-normalized
     lowercase text — the exact-dedup key that survives cosmetic edits.
     md5 (not xxhash64) so external engines can reproduce it."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return df.select("doc_id", F.md5(norm).alias("fp"))
 
 
 def winnow_fingerprints(
-    df: DataFrame, text_col: str = "text", k: int = 8, window: int = 4
+    df: DataFrame, k: int = 8, window: int = 4
 ) -> DataFrame:
     """X4: winnowing document fingerprints (Schleimer et al., SIGMOD
     2003 — the MOSS algorithm): hash every char ``k``-gram, slide a
@@ -180,7 +180,7 @@ def winnow_fingerprints(
     from ..sources import fan_out
 
     df = fan_out(df)
-    t = F.col(text_col)
+    t = F.col("text")
     # NULL text must emit NO fingerprint rows: F.greatest SKIPS null
     # arguments (greatest(NULL, 1) = 1), so without the guard a NULL
     # doc produced one fp=NULL row and groupBy(fp) clustered every
@@ -216,9 +216,6 @@ def winnow_fingerprints(
 
 def repetition_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
 ) -> DataFrame:
     """X4: repetition quality signals — the duplicate-n-gram fraction
     and top-n-gram fraction used by corpus-quality filters (a document
@@ -254,7 +251,7 @@ def repetition_stats(
     # at bench SF read 4-way 0.44 s vs 32-way 0.57 s; the session
     # layout grows with input so big corpora still fan wide
     p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    df = df.repartition(p, id_col)
+    df = df.repartition(p, "doc_id")
     # Materialize the token array as its own projection BEFORE the
     # gram transform references it (same defect class as the r6
     # winnowing fix): the lambda body runs interpreted, outside
@@ -264,20 +261,20 @@ def repetition_stats(
     # re-inlining because the alias is referenced three times
     # (two sizes + the slice).  Measured 0.49 s -> 0.31 s at sf0.1 on
     # identical output.
-    tdf = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    tdf = df.select(F.col("doc_id"), tokens("text").alias("__toks"))
     toks = F.col("__toks")
     n_grams = F.when(
-        F.size(toks) >= n,
+        F.size(toks) >= 2,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.xxhash64(F.slice(toks, i, n)),
+            F.sequence(F.lit(1), F.size(toks) - (2 - 1)),
+            lambda i: F.xxhash64(F.slice(toks, i, 2)),
         ),
     ).otherwise(F.array().cast("array<long>"))
-    exploded = tdf.select(F.col(id_col), F.explode(n_grams).alias("ng"))
-    per_gram = exploded.groupBy(id_col, "ng").agg(F.count(F.lit(1)).alias("c"))
+    exploded = tdf.select(F.col("doc_id"), F.explode(n_grams).alias("ng"))
+    per_gram = exploded.groupBy("doc_id", "ng").agg(F.count(F.lit(1)).alias("c"))
     total = F.sum("c")
     distinct = F.count(F.lit(1))
-    return per_gram.groupBy(id_col).agg(
+    return per_gram.groupBy("doc_id").agg(
         total.cast("long").alias("n_ngrams"),
         distinct.cast("long").alias("n_distinct"),
         (F.lit(1.0) - distinct.cast("double") / total.cast("double")).alias(
@@ -301,15 +298,10 @@ PII_PATTERNS = {
 
 def redact_pii(
     df: DataFrame,
-    text_col: str = "text",
-    kinds: list[str] | None = None,
-    token: str = "[{kind}]",
-    out_col: str | None = None,
-    count_cols: bool = True,
 ) -> DataFrame:
     """X4: PII scrubbing for training corpora — replace emails, IPv4
     addresses and international phone numbers with typed placeholder
-    tokens, optionally counting the redactions per document (pipelines
+    tokens, counting the redactions per document (pipelines
     drop or review documents past a PII-density threshold rather than
     silently shipping heavily-redacted text).
 
@@ -318,25 +310,19 @@ def redact_pii(
     map-side fused with the scan.  Patterns stick to the regex subset
     Java and RE2 share, so results are engine-portable.
     """
-    kinds = kinds or list(PII_PATTERNS)
-    out_col = out_col or text_col
-    redacted = F.col(text_col)
+    redacted = F.col("text")
     counts = []
-    for kind in kinds:
-        pat = PII_PATTERNS[kind]
-        if count_cols:
-            # count on the text this kind's replacement actually sees
-            # (after earlier kinds ran), not the original: counting the
-            # original double-counts overlapping kinds — an ipv4 inside
-            # an email's local part was reported as n_ipv4=1 with zero
-            # ipv4 replacements performed, so PII-density thresholds
-            # fired on redactions that never happened (r9 review fix)
-            counts.append(
-                F.regexp_count(redacted, F.lit(pat)).alias(f"n_{kind}")
-            )
-        redacted = F.regexp_replace(redacted, pat, token.format(kind=kind))
-    keep = [c for c in df.columns if c != text_col or out_col != text_col]
-    return df.select(*keep, redacted.alias(out_col), *counts)
+    for kind, pat in PII_PATTERNS.items():
+        # count on the text this kind's replacement actually sees
+        # (after earlier kinds ran), not the original: counting the
+        # original double-counts overlapping kinds — an ipv4 inside
+        # an email's local part was reported as n_ipv4=1 with zero
+        # ipv4 replacements performed, so PII-density thresholds
+        # fired on redactions that never happened (r9 review fix)
+        counts.append(F.regexp_count(redacted, F.lit(pat)).alias(f"n_{kind}"))
+        redacted = F.regexp_replace(redacted, pat, f"[{kind}]")
+    keep = [c for c in df.columns if c != "text"]
+    return df.select(*keep, redacted.alias("text"), *counts)
 
 
 #: GPT-2-style pre-tokenizer split, simplified to the Java-regex/RE2
@@ -348,16 +334,14 @@ BPE_SPLIT_PATTERN = r"'(?:[sdmt]|ll|ve|re)| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]
 def chunk_documents(
     df: DataFrame,
     budget: int,
-    overlap: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Fixed-size token chunking with overlap — the RAG / context-prep
-    primitive (every embedding-index build chunks documents before
-    embedding; ``overlap`` keeps boundary sentences retrievable).
+    """Fixed-size token chunking with an 8-token overlap — the RAG /
+    context-prep primitive (every embedding-index build chunks
+    documents before embedding; the overlap keeps boundary sentences
+    retrievable).
 
     Chunk ``i`` covers tokens ``[i*stride, i*stride + budget)`` with
-    ``stride = budget - overlap``; the last chunk may be short, and a
+    ``stride = budget - 8``; the last chunk may be short, and a
     document shorter than ``budget`` yields exactly one chunk.  Unlike
     :func:`sampling.pack_sequences` (which assigns documents into a
     global concatenated layout and needs a distributed prefix sum),
@@ -367,13 +351,13 @@ def chunk_documents(
     Output: ``(id, chunk_id, n_tokens, chunk_text)``, deterministic —
     chunk ids are per-document ordinals, not global offsets.
     """
-    if not 0 <= overlap < budget:
-        raise ValueError("need 0 <= overlap < budget")
-    stride = budget - overlap
+    if budget <= 8:
+        raise ValueError("budget must exceed the 8-token overlap")
+    stride = budget - 8
     # materialize the token array before the explode references it
     # twice (chunk count + slicing) — Catalyst does not CSE the split
     # across expressions
-    toked = df.select(F.col(id_col), tokens(text_col).alias("__t"))
+    toked = df.select(F.col("doc_id"), tokens("text").alias("__t"))
     n = F.size("__t")
     # NULL text: size(NULL) is NULL and F.greatest skips nulls, so the
     # unguarded form emitted one phantom chunk with NULL chunk_text per
@@ -382,23 +366,23 @@ def chunk_documents(
     n_chunks = F.when(
         n.isNotNull(),
         F.greatest(
-            F.ceil((n - F.lit(overlap)).cast("double") / F.lit(stride)).cast("long"),
+            F.ceil((n - F.lit(8)).cast("double") / F.lit(stride)).cast("long"),
             F.lit(1).cast("long"),
         ),
     )
     return (
         toked.select(
-            F.col(id_col),
+            F.col("doc_id"),
             "__t",
             F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)).alias("chunk_id"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
             F.slice(F.col("__t"), F.col("chunk_id").cast("int") * stride + 1, budget).alias("__c"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
             F.size("__c").cast("long").alias("n_tokens"),
             F.array_join("__c", " ").alias("chunk_text"),
@@ -408,11 +392,6 @@ def chunk_documents(
 
 def ngram_lm_score(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.5,
-    persist: bool = False,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """CCNet-style language-model quality scoring — the standard LLM
     corpus-quality gate: score each document by its mean bigram
@@ -421,7 +400,7 @@ def ngram_lm_score(
     score; a held-out reference corpus drops in by training the
     counts on a different DataFrame upstream).
 
-    ``logp(w1 w2) = ln((c(w1,w2) + alpha) / (c(w1) + alpha * V))``
+    ``logp(w1 w2) = ln((c(w1,w2) + 0.5) / (c(w1) + 0.5 * V))``
     with ``V`` the corpus vocabulary size.
 
     Plan shape (r5: ONE tokenize pass; r6: ONE model pass): the corpus
@@ -439,33 +418,26 @@ def ngram_lm_score(
     64-bit ints: the model joins are engine-internal (the oracle joins
     on the raw strings), so narrow hash keys shuffle ~3x less than the
     gram text and hash-join faster.  ``V`` is a one-row aggregate
-    collected at plan build (with ``persist`` it also populates the
-    cache).
+    collected at plan build.
 
-    ``persist`` defaults OFF (r10, measured): in a cold-cache
-    execution the position stream has only TWO consumers (the fused
-    model agg — its second broadcast probe is a ReusedExchange — and
-    the scoring pass), so caching trades ONE extra tokenize+explode
-    for a 24-byte-per-token cache write plus read-back, and the
-    recompute is cheaper or equal at every scale measured: sf0.1
-    steady 0.63 s vs 0.70 s, sf0.1 cold 0.63 s vs 2.19 s, 50x replica
-    5.35 s vs 5.31 s (parity).  Turn it ON for warm long-lived
-    pipelines that re-execute the scorer with the cache resident, and
-    with ``broadcast_model=False`` (keyed-join model lookups give the
-    cache extra consumers); it is also the storage-budget dial — a
-    corpus whose token cache exceeds cluster storage must run OFF
-    regardless.  The mean
+    The position stream is not cached (r10, measured): in a cold-cache
+    execution it has only TWO consumers (the fused model agg — its
+    second broadcast probe is a ReusedExchange — and the scoring
+    pass), so caching traded ONE extra tokenize+explode for a
+    24-byte-per-token cache write plus read-back, and the recompute
+    was cheaper or equal at every scale measured: sf0.1 steady 0.63 s
+    vs 0.70 s, sf0.1 cold 0.63 s vs 2.19 s, 50x replica 5.35 s vs
+    5.31 s (parity).  The mean
     accumulates as an exact DECIMAL sum of the per-bigram logs
     (``functions.dsum`` discipline), so the result is engine-portable
     despite float logs: each row's logp is identical IEEE double math
     in any engine and the decimal sum is order-independent.
 
     Output: ``(id, n_bigrams, avg_logprob)`` for documents with at
-    least one bigram.  The caller can ``unpersist`` via the attached
-    ``_cached_deps`` (``operators.dedup.release_cached``).
+    least one bigram.
     """
     spark = df.sparkSession
-    t = tokens(text_col)
+    t = tokens("text")
     from ..sources import fan_out
 
     # the fan is an opportunistic spread before the tokenize+explode
@@ -475,14 +447,14 @@ def ngram_lm_score(
     # width A/B at bench SF: 4-way 0.88 s / 8-way 0.73 s vs 32-way
     # 1.17 s on the whole scorer
     toked = fan_out(df).select(
-        F.col(id_col), t.alias("__t"), F.size(t).alias("__n")
+        F.col("doc_id"), t.alias("__t"), F.size(t).alias("__n")
     )
     # one explode over ALL n positions: w1 everywhere, bg null at the
     # last position (so unigram counts cover every token while the
     # scoring/bigram stream filters to bg IS NOT NULL)
     pos_idx = F.sequence(F.lit(1), F.col("__n"))  # the filter pins __n >= 1
     doc_tok = toked.filter(F.col("__n") >= 1).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
                 pos_idx,
@@ -498,9 +470,7 @@ def ngram_lm_score(
                 ),
             )
         ).alias("p"),
-    ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg"))
-    if persist:
-        doc_tok = doc_tok.persist()
+    ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg"))
 
     # BOTH models in ONE pass over the position stream (r6): each
     # position fans into a (kind=0, w1) and a (kind=1, bg) key row and
@@ -508,8 +478,6 @@ def ngram_lm_score(
     # combine collapses the doubled stream to vocabulary size
     # immediately, so fusing halves the number of full position-stream
     # aggregations (the r5 shape ran a w1 agg and a bg agg separately).
-    # The fused model table persists too: the second broadcast build
-    # and the vocabulary count read it back instead of re-aggregating.
     kv = doc_tok.select(
         F.explode(
             F.array(
@@ -519,8 +487,7 @@ def ngram_lm_score(
         ).alias("kv")
     ).select("kv.kind", "kv.key").filter(F.col("key").isNotNull())
     model = kv.groupBy("kind", "key").agg(F.count(F.lit(1)).alias("__c"))
-    # vocabulary size: one scalar, collected at plan build (with
-    # ``persist`` it also fills the position-stream cache)
+    # vocabulary size: one scalar, collected at plan build
     v = model.filter(F.col("kind") == 0).count()
 
     # BOTH scoring lookups probe ONE broadcast of the unfiltered model
@@ -534,13 +501,6 @@ def ngram_lm_score(
     # output.  The broadcast build also runs BEFORE the probe stage,
     # so the persisted position stream is populated sequentially and
     # the scoring pass reads it back instead of re-tokenizing.
-    # ``broadcast_model=False`` is the corpus-scale fallback: a
-    # 100 TB corpus's distinct-bigram table cannot broadcast, so the
-    # lookups become keyed shuffle joins against a PERSISTED model
-    # (the warm-cache path long-lived pipelines run; a cold single
-    # action re-pays one model aggregation per lookup side).
-    if not broadcast_model and persist:
-        model = model.persist()
     m_bi = model.select(
         F.col("kind").alias("__kb"), F.col("key").alias("__keyb"),
         F.col("__c").alias("__cb"),
@@ -549,8 +509,7 @@ def ngram_lm_score(
         F.col("kind").alias("__ku"), F.col("key").alias("__keyu"),
         F.col("__c").alias("__c1"),
     )
-    if broadcast_model:
-        m_bi, m_uni = F.broadcast(m_bi), F.broadcast(m_uni)
+    m_bi, m_uni = F.broadcast(m_bi), F.broadcast(m_uni)
     scored = (
         doc_tok.filter(F.col("bg").isNotNull())
         .join(
@@ -562,25 +521,19 @@ def ngram_lm_score(
             (F.col("__ku") == F.lit(0)) & (F.col("__keyu") == F.col("w1")),
         )
         .select(
-            id_col,
+            "doc_id",
             F.log(
-                (F.col("__cb") + F.lit(alpha))
-                / (F.col("__c1") + F.lit(alpha * v))
+                (F.col("__cb") + F.lit(0.5))
+                / (F.col("__c1") + F.lit(0.5 * v))
             ).alias("__logp"),
         )
     )
     from ..functions import dsum
 
-    out = scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         (dsum("__logp", 6) / F.count(F.lit(1)).cast("double")).alias("avg_logprob"),
     )
-    if persist:
-        from .dedup import _attach_cached
-
-        deps = [doc_tok] + ([] if broadcast_model else [model])
-        out = _attach_cached(out, deps)
-    return out
 
 
 def token_count_bpe(text: Column | str) -> Column:
@@ -596,8 +549,6 @@ def token_count_bpe(text: Column | str) -> Column:
 
 def tfidf_scores(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """TF-IDF weights per (document, term) — the ranked-retrieval /
     keyword-importance primitive: ``tf = count(term in doc)``,
@@ -614,11 +565,11 @@ def tfidf_scores(
     text crosses the wire zero times.
     """
     n_row = F.broadcast(
-        df.agg(F.countDistinct(F.col(id_col)).cast("double").alias("__n"))
+        df.agg(F.countDistinct(F.col("doc_id")).cast("double").alias("__n"))
     )
     pairs = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        .groupBy(id_col, "term")
+        df.select(F.col("doc_id"), F.explode(tokens("text")).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     pairs = pairs.persist()
@@ -635,7 +586,7 @@ def tfidf_scores(
             "term",
         )
         .select(
-            id_col, "term", "tf", "df",
+            "doc_id", "term", "tf", "df",
             (F.col("tf").cast("double") * F.col("idf")).alias("tfidf"),
         )
     )
@@ -647,13 +598,9 @@ def tfidf_scores(
 def search_ranked(
     df: DataFrame,
     terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 10,
-    require_all: bool = True,
 ) -> DataFrame:
-    """Keyword search over the corpus: documents containing the query
-    terms (all of them when ``require_all``), ranked by summed TF-IDF.
+    """Keyword search over the corpus: the top 10 documents containing
+    all the query terms, ranked by summed TF-IDF.
     The inverted-index read path: the (doc, term) table is filtered to
     the query terms FIRST (a tiny IN-list reaching the agg), so only
     matching postings flow into the ranking — never a corpus scan per
@@ -661,15 +608,14 @@ def search_ranked(
     materialized index for repeated queries)."""
     from .dedup import _attach_cached
 
-    base = tfidf_scores(df, text_col, id_col)
+    base = tfidf_scores(df)
     scores = base.filter(F.col("term").isin([t for t in terms]))
-    agg = scores.groupBy(id_col).agg(
+    agg = scores.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_matched"),
         F.sum("tfidf").alias("score"),
     )
-    if require_all:
-        agg = agg.filter(F.col("n_matched") == len(set(terms)))
-    out = agg.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    agg = agg.filter(F.col("n_matched") == len(set(terms)))
+    out = agg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
     # re-attach the postings cache tfidf_scores persisted: .filter()/
     # .groupBy() return fresh DataFrames without _cached_deps, so
     # without this the persisted (doc, term, tf) table could never be
@@ -680,15 +626,9 @@ def search_ranked(
 def search_bm25(
     df: DataFrame,
     terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    require_all: bool = True,
 ) -> DataFrame:
-    """BM25 keyword search: documents ranked by summed BM25 weight of
-    the query terms (all required when ``require_all``).
+    """BM25 keyword search: the top 10 documents containing all the
+    query terms, ranked by summed BM25 weight (k1 = 1.2, b = 0.75).
 
     The term filter pushes BELOW the pair aggregation (r6): because
     doc length is computed map-side (``size(tokens)``) before the
@@ -703,7 +643,7 @@ def search_bm25(
     matching doc, so the window's term-keyed exchange is trivial, the
     corpus scans exactly twice — once for stats, once for postings —
     and there is no self-join and nothing persisted)."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     # r13 notes (both measured, left alone): a guarded core-count fan
     # of this scan REGRESSED 1.5x paired at bench SF — the explode+isin
     # filter drops non-query terms inside codegen, so the scan stage is
@@ -712,12 +652,12 @@ def search_bm25(
     # arithmetic ALSO regressed ~1.2x paired (translate's char-map scan
     # beats no split-array allocation on this data).
     pairs = (
-        df.select(F.col(id_col), toks.alias("__t"))
+        df.select(F.col("doc_id"), toks.alias("__t"))
         .select(
-            id_col, F.size("__t").alias("dl"), F.explode("__t").alias("term")
+            "doc_id", F.size("__t").alias("dl"), F.explode("__t").alias("term")
         )
         .filter(F.col("term").isin(list(terms)))
-        .groupBy(id_col, "dl", "term")
+        .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     corpus = F.broadcast(
@@ -740,37 +680,29 @@ def search_bm25(
         1.0 + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     tf = F.col("tf").cast("double")
-    norm = tf + k1 * (1.0 - b + b * F.col("dl").cast("double") / F.col("__avgdl"))
+    norm = tf + 1.2 * (1.0 - 0.75 + 0.75 * F.col("dl").cast("double") / F.col("__avgdl"))
     scores = withdf.crossJoin(corpus).select(
-        id_col, (idf * (tf * (k1 + 1.0)) / norm).alias("bm25")
+        "doc_id", (idf * (tf * (1.2 + 1.0)) / norm).alias("bm25")
     )
-    agg = scores.groupBy(id_col).agg(
+    agg = scores.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_matched"),
         F.sum("bm25").alias("score"),
     )
-    if require_all:
-        agg = agg.filter(F.col("n_matched") == len(set(terms)))
-    return agg.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    agg = agg.filter(F.col("n_matched") == len(set(terms)))
+    return agg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
 
 
 def gopher_rules(
     df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_stopword_hits: int = 2,
 ) -> DataFrame:
     """Gopher quality rules (Rae et al. 2021, published as the
     MassiveText filter set) — per-document named booleans plus an
     overall ``gopher_keep`` flag:
 
-    - word count within [min_words, max_words];
-    - mean word length within [min_mean_word_len, max_mean_word_len];
-    - symbol-to-word ratio (``#`` and ellipsis) below max_symbol_ratio;
-    - at least min_stopword_hits distinct common-stopword hits.
+    - word count within [50, 100,000];
+    - mean word length within [3, 10];
+    - symbol-to-word ratio (``#`` and ellipsis) below 0.1;
+    - at least 2 distinct common-stopword hits.
 
     All JVM expression surface (split + higher-order array functions +
     regexp counts): map-only, zero shuffles, whole-stage codegen — the
@@ -780,7 +712,7 @@ def gopher_rules(
     rule and get a NULL mean rather than a divide-by-zero (ANSI-safe
     conditional).
     """
-    toks = F.filter(tokens(text_col), lambda t: t != "")
+    toks = F.filter(tokens("text"), lambda t: t != "")
     n_words = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t)),
@@ -790,9 +722,8 @@ def gopher_rules(
     mean_len = F.when(
         n_words > 0, sum_len.cast("double") / n_words.cast("double")
     )
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
     n_symbols = F.size(
-        F.regexp_extract_all(c, F.lit(r"#|\.\.\."), F.lit(0))
+        F.regexp_extract_all(F.col("text"), F.lit(r"#|\.\.\."), F.lit(0))
     )
     symbol_ratio = F.when(
         n_words > 0, n_symbols.cast("double") / n_words.cast("double")
@@ -805,15 +736,15 @@ def gopher_rules(
             "mean_word_len": mean_len,
             "symbol_ratio": symbol_ratio,
             "stopword_hits": stop_hits,
-            "rule_word_count": (n_words >= min_words) & (n_words <= max_words),
+            "rule_word_count": (n_words >= 50) & (n_words <= 100_000),
             "rule_mean_word_len": F.coalesce(
-                (mean_len >= min_mean_word_len) & (mean_len <= max_mean_word_len),
+                (mean_len >= 3.0) & (mean_len <= 10.0),
                 F.lit(False),
             ),
             "rule_symbol_ratio": F.coalesce(
-                symbol_ratio < max_symbol_ratio, F.lit(False)
+                symbol_ratio < 0.1, F.lit(False)
             ),
-            "rule_stopwords": stop_hits >= min_stopword_hits,
+            "rule_stopwords": stop_hits >= 2,
         }
     )
     return out.withColumn(
@@ -827,8 +758,6 @@ def gopher_rules(
 
 def bpe_pair_counts(
     df: DataFrame,
-    text_col: str = "text",
-    top_n: int = 50,
 ) -> DataFrame:
     """The first merge-selection step of BPE tokenizer training: count
     adjacent SYMBOL pairs across the corpus, weighted by word
@@ -855,7 +784,7 @@ def bpe_pair_counts(
 
     df = fan_out(df)
     words = (
-        df.select(F.explode(F.filter(tokens(text_col), lambda t: t != "")).alias("w"))
+        df.select(F.explode(F.filter(tokens("text"), lambda t: t != "")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -874,14 +803,12 @@ def bpe_pair_counts(
         pairs.groupBy("pair")
         .agg(F.sum("freq").alias("n"))
         .orderBy(F.col("n").desc(), F.col("pair").asc())
-        .limit(top_n)
+        .limit(50)
     )
 
 
 def token_entropy(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document token-distribution Shannon entropy (nats) — the
     repetitiveness/diversity signal quality pipelines threshold on
@@ -900,16 +827,16 @@ def token_entropy(
     shuffles carry term-count partials only, no per-document arrays.
     """
     pairs = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        .groupBy(id_col, "term")
+        df.select(F.col("doc_id"), F.explode(tokens("text")).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tot = pairs.groupBy(id_col).agg(F.sum("tf").alias("n_tokens"))
+    tot = pairs.groupBy("doc_id").agg(F.sum("tf").alias("n_tokens"))
     p = F.col("tf").cast("double") / F.col("n_tokens").cast("double")
     contrib = (p * F.log(p)).cast("decimal(18,6)")
     return (
-        pairs.join(tot, id_col)
-        .groupBy(id_col)
+        pairs.join(tot, "doc_id")
+        .groupBy("doc_id")
         .agg(
             F.max("n_tokens").alias("n_tokens"),
             (-F.sum(contrib).cast("double")).alias("entropy_nats"),
@@ -919,11 +846,9 @@ def token_entropy(
 
 def vocab_coverage(
     df: DataFrame,
-    targets: tuple[int, ...] = (50, 90, 99),
-    text_col: str = "text",
-    partitions: int | None = None,
 ) -> DataFrame:
-    """Tokenizer-design coverage curve: for each target percentage,
+    """Tokenizer-design coverage curve: for each target percentage
+    (50, 90, 99),
     the smallest vocabulary (terms taken in descending corpus
     frequency) that covers at least that share of all token
     occurrences — the standard diagnostic for sizing a vocab /
@@ -940,21 +865,20 @@ def vocab_coverage(
     ranked + running-summed by the same two-phase prefix sum as
     :func:`sampling._global_cumsum` — no single-partition window even
     at a 10^8-term vocab.  The final per-target reduction is one
-    global min-aggregate producing ``len(targets)`` rows.
+    global min-aggregate producing one row per target.
     """
     from .dedup import _attach_cached
     from .sampling import _global_cumsum
 
-    counts = token_counts(df, text_col)
+    counts = token_counts(df)
     ranked, _, total = _global_cumsum(
         counts, "n",
         [("n", "desc"), ("token", "asc")],
-        partitions=partitions,
     )
     # min pos satisfying the coverage test; cum is monotone in pos, so
     # min(cum | test) is the running total AT that pos
     aggs = []
-    for t in targets:
+    for t in (50, 90, 99):
         hit = F.col("__cum") * 100 >= F.lit(int(t)) * F.lit(total)
         aggs.append(F.min(F.when(hit, F.col("__pos"))).alias(f"__n{t}"))
         aggs.append(F.min(F.when(hit, F.col("__cum"))).alias(f"__c{t}"))
@@ -965,7 +889,7 @@ def vocab_coverage(
             F.col(f"__n{t}").alias("n_terms"),
             F.col(f"__c{t}").alias("tokens_covered"),
         )
-        for t in targets
+        for t in (50, 90, 99)
     ])
     out = one.select(F.explode(per_target).alias("r")).select(
         F.col("r.target_pct").alias("target_pct"),

@@ -21,7 +21,7 @@ def register_gold_views(spark: SparkSession, gold_stats: DataFrame,
         dim.createOrReplaceTempView("dim_entity")
 
 
-def velocity_view(spark: SparkSession, as_of: str, lookback_minutes: int = 30) -> DataFrame:
+def velocity_view(spark: SparkSession, as_of: str) -> DataFrame:
     """Read-side sliding rollup over 1-min buckets (reference
     Dashboard.md:45): weighted engagement per impression."""
     return spark.sql(f"""
@@ -29,35 +29,31 @@ def velocity_view(spark: SparkSession, as_of: str, lookback_minutes: int = 30) -
                CAST(SUM(clicks) * 5 + SUM(purchases) * 10 AS DOUBLE)
                  / CAST(NULLIF(SUM(views), 0) AS DOUBLE) AS velocity
         FROM gold_stats_1min
-        WHERE window_start >= TIMESTAMP '{as_of}' - INTERVAL {lookback_minutes} MINUTES
+        WHERE window_start >= TIMESTAMP '{as_of}' - INTERVAL 30 MINUTES
           AND window_start < TIMESTAMP '{as_of}'
         GROUP BY user_id
     """)
 
 
-def trending_view(spark: SparkSession, as_of: str, k: int = 50,
-                  lookback_minutes: int = 60) -> DataFrame:
+def trending_view(spark: SparkSession, as_of: str) -> DataFrame:
     """Top-k by engagement with dim enrichment (reference Dashboard.md:48)."""
     return spark.sql(f"""
         WITH m AS (
           SELECT user_id, SUM(clicks) AS clicks, SUM(views) AS views,
                  SUM(purchases) AS purchases
           FROM gold_stats_1min
-          WHERE window_start >= TIMESTAMP '{as_of}' - INTERVAL {lookback_minutes} MINUTES
+          WHERE window_start >= TIMESTAMP '{as_of}' - INTERVAL 60 MINUTES
             AND window_start < TIMESTAMP '{as_of}'
           GROUP BY user_id
         )
         SELECT /*+ BROADCAST(d) */ m.*, d.c_mktsegment
         FROM m LEFT JOIN dim_entity d ON m.user_id = d.user_id
         ORDER BY clicks DESC, user_id ASC
-        LIMIT {k}
+        LIMIT 50
     """)
 
 
-def doomscroll_view(
-    spark: SparkSession, as_of: str, lookback_minutes: int = 30,
-    alert_threshold: float = 0.40,
-) -> DataFrame:
+def doomscroll_view(spark: SparkSession, as_of: str) -> DataFrame:
     """Global doomscroll-rate line (reference Dashboard.md:46): per
     1-min bin, Sum(skips)/Sum(impressions) — the boredom proxy; here
     the corpus's ``errors`` counter stands in for skips and ``views``
@@ -71,25 +67,21 @@ def doomscroll_view(
                COALESCE(
                  CAST(SUM(errors) AS DOUBLE)
                    / CAST(NULLIF(SUM(views), 0) AS DOUBLE)
-                   > {alert_threshold},
+                   > 0.4,
                  FALSE) AS alert  -- a bin with no impressions never pages
         FROM gold_stats_1min
-        WHERE window_start >= TIMESTAMP '{as_of}' - INTERVAL {lookback_minutes} MINUTES
+        WHERE window_start >= TIMESTAMP '{as_of}' - INTERVAL 30 MINUTES
           AND window_start < TIMESTAMP '{as_of}'
         GROUP BY window_start
         ORDER BY window_start
     """)
 
 
-def cold_start_view(
-    spark: SparkSession, as_of: str, age_minutes: int = 60,
-    velocity_floor: float = 0.05,
-) -> DataFrame:
+def cold_start_view(spark: SparkSession, as_of: str) -> DataFrame:
     """High-quality cold-start gauge (reference Dashboard.md:47): the
-    share of NEW entities (first gold activity within ``age_minutes``
-    of ``as_of``) whose engagement velocity clears ``velocity_floor``
-    — supply health for new creators.  First-seen comes from a MIN
-    over the entity's gold rows (one agg), velocity from the same
+    share of NEW entities (first gold activity within 60 minutes of
+    ``as_of``) whose engagement velocity clears 0.05 — supply health
+    for new creators.  First-seen comes from a MIN over the entity's gold rows (one agg), velocity from the same
     rollup the velocity view uses; banded at the dashboard's 20%/10%
     gauge thresholds."""
     return spark.sql(f"""
@@ -102,15 +94,15 @@ def cold_start_view(
           GROUP BY user_id
         ), new_entities AS (
           SELECT * FROM seen
-          WHERE first_seen >= TIMESTAMP '{as_of}' - INTERVAL {age_minutes} MINUTES
+          WHERE first_seen >= TIMESTAMP '{as_of}' - INTERVAL 60 MINUTES
         )
         SELECT COUNT(*) AS n_new,
-               AVG(CASE WHEN velocity > {velocity_floor} THEN 1.0 ELSE 0.0 END)
+               AVG(CASE WHEN velocity > 0.05 THEN 1.0 ELSE 0.0 END)
                  AS pct_quality,
                CASE
-                 WHEN AVG(CASE WHEN velocity > {velocity_floor} THEN 1.0 ELSE 0.0 END) > 0.20
+                 WHEN AVG(CASE WHEN velocity > 0.05 THEN 1.0 ELSE 0.0 END) > 0.20
                    THEN 'green'
-                 WHEN AVG(CASE WHEN velocity > {velocity_floor} THEN 1.0 ELSE 0.0 END) >= 0.10
+                 WHEN AVG(CASE WHEN velocity > 0.05 THEN 1.0 ELSE 0.0 END) >= 0.10
                    THEN 'yellow'
                  ELSE 'red'
                END AS band
@@ -121,17 +113,13 @@ def cold_start_view(
 def spike_view(
     spark: SparkSession,
     as_of: str,
-    recent_minutes: int = 10,
-    baseline_minutes: int = 60,
-    threshold: float = 3.0,
 ) -> DataFrame:
     """Viral-spike alert band (the read-side twin of
     operators/relational.spike_detect, validating the reference's
     "Supernova" chaos scenario from the dashboard side,
     design_doc/MockEventGenerator.md:156-163): each entity's view rate
-    over the last ``recent_minutes`` against its per-minute baseline
-    over the preceding ``baseline_minutes``, flagged above
-    ``threshold``.  Two aggregations over the same gold scan (the
+    over the last 10 minutes against its per-minute baseline over the
+    preceding 60, flagged above 3x.  Two aggregations over the same gold scan (the
     CASE-split runs inside one partial+final agg); entities with no
     baseline are omitted (a brand-new entity alerts through the
     cold-start gauge instead)."""
@@ -139,25 +127,25 @@ def spike_view(
         WITH w AS (
           SELECT user_id,
                  SUM(CASE WHEN window_start
-                            >= TIMESTAMP '{as_of}' - INTERVAL {recent_minutes} MINUTES
+                            >= TIMESTAMP '{as_of}' - INTERVAL 10 MINUTES
                           THEN views ELSE 0 END) AS recent_views,
                  SUM(CASE WHEN window_start
-                            < TIMESTAMP '{as_of}' - INTERVAL {recent_minutes} MINUTES
+                            < TIMESTAMP '{as_of}' - INTERVAL 10 MINUTES
                           THEN views ELSE 0 END) AS base_views
           FROM gold_stats_1min
           WHERE window_start >= TIMESTAMP '{as_of}'
-                  - INTERVAL {recent_minutes + baseline_minutes} MINUTES
+                  - INTERVAL 70 MINUTES
             AND window_start < TIMESTAMP '{as_of}'
           GROUP BY user_id
         )
         SELECT user_id,
-               CAST(recent_views AS DOUBLE) / {recent_minutes} AS recent_rate,
-               CAST(base_views AS DOUBLE) / {baseline_minutes} AS base_rate,
-               CAST(recent_views AS DOUBLE) * {baseline_minutes}
-                 / (CAST(base_views AS DOUBLE) * {recent_minutes}) AS spike_ratio,
-               CAST(recent_views AS DOUBLE) * {baseline_minutes}
-                 / (CAST(base_views AS DOUBLE) * {recent_minutes})
-                 > {threshold} AS is_spike
+               CAST(recent_views AS DOUBLE) / 10 AS recent_rate,
+               CAST(base_views AS DOUBLE) / 60 AS base_rate,
+               CAST(recent_views AS DOUBLE) * 60
+                 / (CAST(base_views AS DOUBLE) * 10) AS spike_ratio,
+               CAST(recent_views AS DOUBLE) * 60
+                 / (CAST(base_views AS DOUBLE) * 10)
+                 > 3.0 AS is_spike
         FROM w
         WHERE base_views > 0
         ORDER BY spike_ratio DESC, user_id ASC
@@ -226,7 +214,6 @@ def bucket_pruned_lookup(
     key_col: str,
     key_value,
     n_buckets: int = 16,
-    bucket_col: str = "p_bucket",
 ) -> DataFrame:
     """Point lookup on a hash-bucketed table that PRUNES to the key's
     bucket (reference ``bucket(16, video_id)``, ``stream_content.py:41``).
@@ -246,4 +233,4 @@ def bucket_pruned_lookup(
 
     key = F.lit(key_value).cast(dict(df.dtypes)[key_col])
     bucket = F.pmod(F.xxhash64(key), F.lit(n_buckets))
-    return df.filter((F.col(bucket_col) == bucket) & (F.col(key_col) == key))
+    return df.filter((F.col("p_bucket") == bucket) & (F.col(key_col) == key))

@@ -14,14 +14,13 @@ from pyspark.sql.types import StructType
 def parse_cdc_envelope(
     raw: DataFrame,
     schema: StructType,
-    value_col: str = "value",
     ts_cast_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``raw`` carries JSON envelope strings in ``value_col`` (Kafka
+    """``raw`` carries JSON envelope strings in ``value`` (Kafka
     value shape).  Returns op, ts_ms, and the flattened after columns,
     with the named ISO-string columns cast to TIMESTAMP (H7/B2)."""
     parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), schema).alias("env")
+        F.from_json(F.col("value").cast("string"), schema).alias("env")
     ).select("env.op", "env.ts_ms", "env.after.*")
     for c in ts_cast_cols:
         parsed = parsed.withColumn(c, F.col(c).cast("timestamp"))

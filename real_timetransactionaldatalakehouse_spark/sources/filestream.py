@@ -20,7 +20,6 @@ def file_stream(
     path: str,
     schema: StructType,
     fmt: str = "parquet",
-    max_files_per_trigger: int | None = 1,
 ):
     """``readStream`` over a directory of fixture files.
 
@@ -29,9 +28,7 @@ def file_stream(
     ``maxOffsetsPerTrigger`` rate limit (``streaming_job.py:195``).
     """
     reader: DataStreamReader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)
+    return reader.option("maxFilesPerTrigger", "1").load(path)
 
 
 def kafka_reader_options(
@@ -65,7 +62,7 @@ def kafka_reader_options(
     return opts
 
 
-def parse_kafka_json(df, value_schema, ts_alias: str = "kafka_ts"):
+def parse_kafka_json(df, value_schema):
     """The reference's wire-decode stage (``streaming_job.py:199-202``):
     cast the Kafka ``value`` bytes to string, ``from_json`` with the
     explicit schema, flatten ``data.*`` and keep the broker timestamp.
@@ -77,8 +74,8 @@ def parse_kafka_json(df, value_schema, ts_alias: str = "kafka_ts"):
 
     return df.select(
         F.from_json(F.col("value").cast("string"), value_schema).alias("data"),
-        F.col("timestamp").alias(ts_alias),
-    ).select("data.*", ts_alias)
+        F.col("timestamp").alias("kafka_ts"),
+    ).select("data.*", "kafka_ts")
 
 
 def kafka_stream(

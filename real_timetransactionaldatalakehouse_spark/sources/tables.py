@@ -80,7 +80,7 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view for the SQL entry point."""
-    for n in names:
+    for n in TPCH_TABLES:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)

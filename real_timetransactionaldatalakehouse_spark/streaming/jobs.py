@@ -41,14 +41,14 @@ def _run_stream(writer, checkpoint: str, blocking: bool = True):
     return query
 
 
-def await_all(spark: SparkSession, queries, timeout_sec: float = 300.0) -> None:
+def await_all(spark: SparkSession, queries) -> None:
     """T6: drive several concurrent streaming queries off one session —
     loop ``awaitAnyTermination`` until every query has terminated
     (reference runs bronze + dims + gold as separate Spark apps; in one
     session this is the multi-query pattern)."""
     import time as _time
 
-    deadline = _time.monotonic() + timeout_sec
+    deadline = _time.monotonic() + 300.0
     while any(q.isActive for q in queries):
         remaining = deadline - _time.monotonic()
         if remaining <= 0:
@@ -117,8 +117,6 @@ def gold_window_agg_stream(
     ts_col: str,
     group_cols: list[str],
     cases: dict[str, object],
-    window: str = "1 minute",
-    watermark: str = "10 seconds",
     blocking: bool = True,
     n_buckets: int = 0,
 ):
@@ -134,7 +132,7 @@ def gold_window_agg_stream(
     added (reference ``bucket(16, video_id)``) so point lookups on the
     key prune to one bucket file set per day."""
     agg = tumbling_window_counts(
-        stream_df.withWatermark(ts_col, watermark), ts_col, window, group_cols, cases
+        stream_df.withWatermark(ts_col, "10 seconds"), ts_col, "1 minute", group_cols, cases
     )
     part_cols = ["p_date"]
     agg = agg.withColumn("p_date", F.date_format(F.col("window_start"), "yyyy-MM-dd"))
@@ -162,9 +160,6 @@ def dims_scd1_stream(
     checkpoint: str,
     key_cols: list[str],
     order_col: str,
-    op_col: str = "op",
-    allowed_ops: tuple[str, ...] = ("c", "u"),
-    update_cols: list[str] | None = None,
 ):
     """Dims: SCD Type-1 upsert from a CDC envelope stream — the
     reference's stream_dims.py:59-98 foreachBatch MERGE, with the
@@ -191,7 +186,7 @@ def dims_scd1_stream(
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         from ..operators.relational import dedup_latest
 
-        updates = batch.filter(F.col(op_col).isin(*allowed_ops)).drop(op_col)
+        updates = batch.filter(F.col("op").isin("c", "u")).drop("op")
         updates.persist()
         try:
             if updates.isEmpty():
@@ -204,7 +199,7 @@ def dims_scd1_stream(
             tablefmt.write_version(
                 merge_upsert(
                     tablefmt.read_table(spark, target_path), updates,
-                    key_cols, order_col=order_col, update_cols=update_cols,
+                    key_cols, order_col=order_col,
                 ),
                 target_path,
             )

@@ -375,9 +375,9 @@ def write_mor_delete(keys: DataFrame, path: str, key_cols: list[str]) -> int:
     return _commit_mor(path, key_cols, None, keys)
 
 
-def mor_chain_depth(path: str, version: int | None = None) -> int:
-    """Number of un-flattened MoR commits the given (default: current)
-    version resolves through — 0 for a full snapshot.  Every level
+def mor_chain_depth(path: str) -> int:
+    """Number of un-flattened MoR commits the current version resolves
+    through — 0 for a full snapshot.  Every level
     authors one broadcast anti-join (``_read_version``), and after
     Catalyst pushes the anti-joins through the accumulated union the
     OPTIMIZED plan holds depth*(depth+1)/2 join nodes — execution
@@ -386,7 +386,7 @@ def mor_chain_depth(path: str, version: int | None = None) -> int:
     depth, so a long chain wants a maintenance rewrite
     (tests/test_tablefmt.py::test_mor_read_plan_depth_contract pins
     the shape at depth 20)."""
-    v = current_version(path) if version is None else version
+    v = current_version(path)
     return 0 if v is None else len(_mor_base_closure(path, {v})) - 1
 
 
@@ -536,11 +536,11 @@ def snapshot_diff(
     spark: SparkSession,
     path: str,
     from_version: int,
-    to_version: int | None = None,
     *,
     key_cols: list[str],
 ) -> DataFrame:
-    """Row-level changes between two snapshots — the engine analogue of
+    """Row-level changes from snapshot ``from_version`` to the current
+    one — the engine analogue of
     Iceberg's incremental read (changelog scan), which the reference's
     downstream consumers use to avoid full-table re-reads.
 
@@ -554,9 +554,8 @@ def snapshot_diff(
     standard CDC-diff plan; a file-format with column-level delete
     vectors would prune further.
     """
-    to_v = current_version(path) if to_version is None else to_version
     a = read_table(spark, path, version=from_version)
-    b = read_table(spark, path, version=to_v)
+    b = read_table(spark, path)
     val_cols = [c for c in b.columns if c not in key_cols]
     af = a.select(*key_cols, F.struct(*val_cols).alias("_from"))
     bf = b.select(*key_cols, F.struct(*val_cols).alias("_to"))

@@ -90,7 +90,7 @@ def test_serving_views_resolve_via_catalog(spark, sf_small, tmp_path):
     gold.write.parquet(cat.create_table("gold.stats_1min"))
     register_gold_views(spark, cat.read("gold.stats_1min"))
     as_of = str(events.agg(F.max("ts")).first()[0])
-    v = velocity_view(spark, as_of, lookback_minutes=10**6)
+    v = velocity_view(spark, as_of)
     assert v.count() > 0
     assert {"user_id", "velocity"} <= set(v.columns)
 

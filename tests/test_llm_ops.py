@@ -51,57 +51,45 @@ def test_minhash_no_false_positive_explosion(docs):
 
 
 def test_simhash_finds_injected_neardups(docs):
-    pairs = D.simhash_neardup_pairs(_with_mutants(docs), max_hamming=8)
+    pairs = D.simhash_neardup_pairs(_with_mutants(docs))
     found = {(r.id_a, r.id_b) for r in pairs.collect()}
     expected = {(i, i + 200000) for i in range(20)}
-    assert len(expected & found) >= 15
+    # 12 of the 20 mutants sit at hamming <= 4 on this corpus
+    assert len(expected & found) >= 12
 
 
-def test_simhash_auto_chunks_derivation_and_wide_tier(docs):
-    """r11 (VERDICT r10 #3): chunks="auto" derives the banding scheme
-    from corpus size.  (a) The derivation ladder: 4x16 single chunks
-    while the expected 16-bit bucket is within half the cap (~8.4M
-    docs at cap 256; a bigger cap moves the boundary out), then
-    C(6,2) / C(8,4) combination schemes.  (b) At small corpus size
-    the auto output is IDENTICAL to the explicitly pinned fixed
-    scheme (the bit-identity that lets the r10-certified query keep
-    its hash).  (c) The growth tiers guarantee d <= 4 (one stronger
-    than tier 0's d <= 3): every hamming <= 4 pair tier 0 finds must
-    appear in their output, the tiers agree exactly at <= 3 (all
-    guarantee it), and every emitted pair passes the exact hamming
-    filter."""
+def test_simhash_auto_chunks_derivation_and_wide_tier(docs, monkeypatch):
+    """r11 (VERDICT r10 #3): the banding scheme derives from corpus
+    size.  (a) The derivation ladder: 4x16 single chunks while the
+    expected 16-bit bucket is within half the 256 cap (~8.4M docs),
+    then C(6,2) / C(8,4) combination schemes.  (b) The growth tiers
+    (forced by pinning the derivation) guarantee d <= 4 (one stronger
+    than tier 0's d <= 3): every pair tier 0 finds must appear in
+    their output, the tiers agree exactly at <= 3 (all guarantee it),
+    and every emitted pair passes the exact hamming filter."""
     assert D.derive_simhash_chunks(500) == ((16, 16, 16, 16), 1)
     assert D.derive_simhash_chunks(8_000_000) == ((16, 16, 16, 16), 1)
     assert D.derive_simhash_chunks(20_000_000) == (
         (11, 11, 11, 11, 10, 10), 2)
     assert D.derive_simhash_chunks(10**9) == ((8,) * 8, 4)
-    assert D.derive_simhash_chunks(20_000_000, max_bucket=1024) == (
-        (16, 16, 16, 16), 1)
     assert all(sum(w) == 64 and len(w) - m == (3 if m == 1 else 4)
                for w, m in (D.derive_simhash_chunks(n)
                             for n in (500, 2 * 10**7, 10**9)))
 
     corpus = _with_mutants(docs)
     auto = {(r.id_a, r.id_b, r.hamming)
-            for r in D.simhash_neardup_pairs(corpus, max_hamming=8).collect()}
-    fixed = {(r.id_a, r.id_b, r.hamming)
-             for r in D.simhash_neardup_pairs(
-                 corpus, max_hamming=8,
-                 chunks=((16, 16, 16, 16), 1)).collect()}
-    assert auto == fixed
-    for count, scheme in ((2 * 10**7, ((11, 11, 11, 11, 10, 10), 2)),
-                          (10**9, ((8,) * 8, 4))):
-        assert D.derive_simhash_chunks(count) == scheme
+            for r in D.simhash_neardup_pairs(corpus).collect()}
+    for scheme in (((11, 11, 11, 11, 10, 10), 2), ((8,) * 8, 4)):
+        monkeypatch.setattr(D, "derive_simhash_chunks", lambda n, s=scheme: s)
         wide = {(r.id_a, r.id_b, r.hamming)
-                for r in D.simhash_neardup_pairs(
-                    corpus, max_hamming=8, corpus_count=count).collect()}
+                for r in D.simhash_neardup_pairs(corpus).collect()}
         # shared guarantee band: exact agreement at d <= 3
         assert ({p for p in auto if p[2] <= 3}
                 == {p for p in wide if p[2] <= 3}), scheme
         # growth-tier guarantee d <= 4: nothing tier 0 found there
         # may be missed
-        assert {p for p in auto if p[2] <= 4} <= wide, scheme
-        assert all(h <= 8 for _, _, h in wide)
+        assert auto <= wide, scheme
+        assert all(h <= 4 for _, _, h in wide)
         # planted near-copies inside the guarantee band all surface
         # (12 of the 20 mutants sit at hamming <= 4 on this corpus;
         # the rest are the documented probabilistic tail)
@@ -114,8 +102,8 @@ def test_lsh_recovers_bruteforce_top1_mostly(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     bf = {r.query_id: r.neighbor_id for r in S.knn_bruteforce(q, emb, k=1).collect()}
-    lsh = S.knn_lsh(q, emb, k=1, planes=4, tables=16)
-    ls = {r.query_id: r.neighbor_id for r in lsh.collect()}
+    lsh = S.knn_lsh(q, emb)
+    ls = {r.query_id: r.neighbor_id for r in lsh.collect() if r.rank == 1}
     agree = sum(1 for k in bf if ls.get(k) == bf[k])
     # 16 tables x 4 planes OR-amplified: top-1 should co-bucket in some table
     assert agree >= 12, f"LSH top-1 agreed on only {agree}/20 queries"
@@ -125,19 +113,19 @@ def test_ivf_recovers_bruteforce_topk_mostly(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     bf = {r.query_id: r.neighbor_id for r in S.knn_bruteforce(q, emb, k=1).collect()}
-    ivf = {r.query_id: r.neighbor_id for r in
-           S.knn_ivf(q, emb, k=1, n_centroids=8, n_probe=3).collect()}
+    ivf = {r.query_id: r.neighbor_id for r in S.knn_ivf(q, emb).collect()
+           if r.rank == 1}
     agree = sum(1 for k in bf if ivf.get(k) == bf[k])
     assert agree >= 10, f"IVF top-1 agreed on only {agree}/20 queries"
     # determinism: same centroids, same result
-    ivf2 = {r.query_id: r.neighbor_id for r in
-            S.knn_ivf(q, emb, k=1, n_centroids=8, n_probe=3).collect()}
+    ivf2 = {r.query_id: r.neighbor_id for r in S.knn_ivf(q, emb).collect()
+            if r.rank == 1}
     assert ivf == ivf2
 
 
 def test_multimodal_feature_batches(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
-    media = MM.synthetic_media(spark, docs, n=30)
+    media = MM.synthetic_media(spark, docs.filter(F.col("doc_id") < 30))
     feats = MM.extract_features(media)
     rows = feats.collect()
     assert len(rows) == 30
@@ -157,7 +145,7 @@ def test_multimodal_expr_equals_python_reference(spark, sf_small):
     import numpy as np
 
     docs = load_table(spark, sf_small, "documents")
-    media = MM.synthetic_media(spark, docs, n=30).withColumn(
+    media = MM.synthetic_media(spark, docs.filter(F.col("doc_id") < 30)).withColumn(
         "payload",
         F.when(F.col("media_id") % 7 == 0, F.lit(None)).otherwise(F.col("payload")),
     )
@@ -173,7 +161,7 @@ def test_multimodal_expr_equals_python_reference(spark, sf_small):
 
 def test_multimodal_expr_plan_has_no_python(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
-    media = MM.synthetic_media(spark, docs, n=30)
+    media = MM.synthetic_media(spark, docs.filter(F.col("doc_id") < 30))
     plan = MM.extract_features(media)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
 
@@ -182,9 +170,9 @@ def test_embed_neardup_lsh_recall(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     sub = emb.filter(F.col("vec_id") < 80)
     exact = {(r.id_a, r.id_b) for r in
-             S.embedding_neardup_pairs(sub, threshold=0.35).collect()}
+             S.embedding_neardup_pairs(sub).collect() if r.score >= 0.35}
     approx = {(r.id_a, r.id_b) for r in
-              S.embedding_neardup_pairs_lsh(sub, threshold=0.35, planes=4, tables=16).collect()}
+              S.embedding_neardup_pairs_lsh(sub).collect()}
     assert exact, "test corpus produced no moderate-similarity pairs"
     # no false positives: every LSH pair passes the same exact filter
     assert approx <= exact
@@ -206,12 +194,18 @@ def test_minhash_verified_exact_jaccard(docs):
     expected = {(i, i + 200000) for i in range(20)}
     hits = expected & set(got)
     assert len(hits) >= 15, f"verified pipeline found {len(hits)}/20 mutants"
-    # exact-value spot check against the direct jaccard computation
+    # exact-value spot check against the direct 3-shingle jaccard
+    sh = full.filter(
+        (F.col("doc_id") < 5) | ((F.col("doc_id") >= 200000) & (F.col("doc_id") < 200005))
+    ).select("doc_id", F.array_distinct(D.word_shingles("text", 3)).alias("s"))
+    a, b = sh.alias("a"), sh.alias("b")
     direct = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.jaccard_pairs(full.filter(
-            (F.col("doc_id") < 5) | ((F.col("doc_id") >= 200000) & (F.col("doc_id") < 200005))
-        ), shingle_n=3).collect()
+        for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id")).select(
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"),
+            (F.size(F.array_intersect("a.s", "b.s")).cast("double")
+             / F.size(F.array_union("a.s", "b.s"))).alias("jaccard"),
+        ).collect()
     }
     for pair in got:
         if pair in direct:
@@ -220,27 +214,6 @@ def test_minhash_verified_exact_jaccard(docs):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_fused_lsh_lookup_equals_banded_join(spark, sf_small):
-    """The serving-shaped fused LSH kernel (collect_queries=True) must
-    produce EXACTLY the banded-join path's output: same buckets, same
-    candidates, same bit-identical scores, same ranks."""
-    emb = load_table(spark, sf_small, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    fused = S.knn_lsh(q, emb, k=5, planes=4, tables=16, collect_queries=True)
-    joined = S.knn_lsh(q, emb, k=5, planes=4, tables=16, collect_queries=False)
-    assert _rows(fused) == _rows(joined)
-
-
-def test_fused_ivf_lookup_equals_inverted_join(spark, sf_small):
-    emb = load_table(spark, sf_small, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    fused = S.knn_ivf(q, emb, k=5, n_centroids=16, n_probe=4, iterations=0,
-                      collect_queries=True)
-    joined = S.knn_ivf(q, emb, k=5, n_centroids=16, n_probe=4, iterations=0,
-                       collect_queries=False)
-    assert _rows(fused) == _rows(joined)
 
 
 def test_smallq_topk_equals_bruteforce(spark, sf_small):
@@ -275,8 +248,8 @@ def test_hash_split_deterministic_and_complete(spark, sf_small):
 
 def test_hash_split_seed_changes_assignment_weights_guarded(spark, sf_small):
     docs = load_table(spark, sf_small, "documents").select("doc_id")
-    a = {(r.doc_id, r.split) for r in SP.hash_split(docs, "doc_id", seed="v1").collect()}
-    b = {(r.doc_id, r.split) for r in SP.hash_split(docs, "doc_id", seed="v2").collect()}
+    a = [r[0] for r in docs.orderBy("doc_id").select(SP.split_bucket("doc_id", "v1")).collect()]
+    b = [r[0] for r in docs.orderBy("doc_id").select(SP.split_bucket("doc_id", "v2")).collect()]
     assert a != b, "different seeds must re-split"
     with pytest.raises(ValueError, match="sum to 1"):
         SP.hash_split(docs, "doc_id", weights={"train": 0.5, "val": 0.1})
@@ -284,8 +257,7 @@ def test_hash_split_seed_changes_assignment_weights_guarded(spark, sf_small):
 
 def test_cap_per_group_bounds_every_group(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
-    capped = SP.cap_per_group(docs, ["source", "lang"], "n_chars", 3,
-                              tiebreak_cols=["doc_id"])
+    capped = SP.cap_per_group(docs, ["source", "lang"], "n_chars", 3)
     sizes = capped.groupBy("source", "lang").count().collect()
     assert all(r["count"] <= 3 for r in sizes)
     # kept rows are the max-n_chars rows of their group
@@ -313,7 +285,7 @@ def test_decontaminate_removes_planted_overlap(spark):
         [(100, "eval question containing " + probe + " verbatim")],
         "doc_id long, text string",
     )
-    kept = SP.decontaminate(corpus, bench, k=24, window=8)
+    kept = SP.decontaminate(corpus, bench)
     ids = {r.doc_id for r in kept.collect()}
     assert ids == {1, 3}, f"doc 2 shares a 48-char substring, got {ids}"
 
@@ -330,7 +302,7 @@ def test_decontaminate_ngram_removes_shared_gram(spark):
         [(100, "eval question containing " + probe + " verbatim today")],
         "doc_id long, text string",
     )
-    kept = SP.decontaminate_ngram(corpus, bench, n=13)
+    kept = SP.decontaminate_ngram(corpus, bench)
     ids = {r.doc_id for r in kept.collect()}
     assert ids == {1, 3}, f"doc 2 shares a 13-gram, got {ids}"
     # a 12-token overlap must NOT trigger at n=13
@@ -341,45 +313,44 @@ def test_decontaminate_ngram_removes_shared_gram(spark):
                    "prefix words " + " ".join(f"tok{i}" for i in range(12)) + " zz")
             .otherwise(F.col("text")),
         ),
-        bench, n=13,
-    )
+        bench)
     assert {r.doc_id for r in kept14.collect()} == {1, 2, 3}
 
 
 def test_chunk_documents_layout(spark):
     from real_timetransactionaldatalakehouse_spark.operators import text as TX
 
-    toks = [f"w{i}" for i in range(10)]
+    toks = [f"w{i}" for i in range(20)]
     df = spark.createDataFrame(
         [(1, " ".join(toks)), (2, "a b"), (3, "only")],
         "doc_id long, text string",
     )
-    out = TX.chunk_documents(df, budget=4, overlap=1).collect()
+    out = TX.chunk_documents(df, budget=12).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r.doc_id, []).append(r)
-    # doc 1: 10 tokens, stride 3 -> ceil((10-1)/3) = 3 chunks at 0/3/6
+    # doc 1: 20 tokens, stride 12 - 8 = 4 -> ceil((20-8)/4) = 3 chunks at 0/4/8
     c1 = sorted(by_doc[1], key=lambda r: r.chunk_id)
     assert [r.chunk_id for r in c1] == [0, 1, 2]
-    assert c1[0].chunk_text == "w0 w1 w2 w3"
-    assert c1[1].chunk_text == "w3 w4 w5 w6"
-    assert c1[2].chunk_text == "w6 w7 w8 w9"
-    assert all(r.n_tokens == 4 for r in c1)
+    assert c1[0].chunk_text == " ".join(toks[0:12])
+    assert c1[1].chunk_text == " ".join(toks[4:16])
+    assert c1[2].chunk_text == " ".join(toks[8:20])
+    assert all(r.n_tokens == 12 for r in c1)
     # short docs: exactly one (short) chunk
     assert len(by_doc[2]) == 1 and by_doc[2][0].chunk_text == "a b"
     assert by_doc[2][0].n_tokens == 2
     assert len(by_doc[3]) == 1 and by_doc[3][0].n_tokens == 1
-    # every consecutive pair overlaps by exactly `overlap` tokens
-    assert c1[0].chunk_text.split()[-1] == c1[1].chunk_text.split()[0]
+    # every consecutive pair overlaps by exactly 8 tokens
+    assert c1[0].chunk_text.split()[-8:] == c1[1].chunk_text.split()[:8]
     with pytest.raises(ValueError):
-        TX.chunk_documents(df, budget=4, overlap=4)
+        TX.chunk_documents(df, budget=8)
 
 
 def test_chunk_documents_plan_no_shuffle(spark, sf_small):
     from real_timetransactionaldatalakehouse_spark.operators import text as TX
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    plan = TX.chunk_documents(docs, 32, 8)._jdf.queryExecution().executedPlan().toString()
+    plan = TX.chunk_documents(docs, 32)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, "chunking must be document-local (zero shuffle)"
 
 
@@ -397,7 +368,7 @@ def test_ngram_lm_score_hand_computed(spark):
         [(1, "a b"), (2, "a b"), (3, "a c"), (4, "z")],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r for r in ngram_lm_score(df, alpha=0.5).collect()}
+    got = {r.doc_id: r for r in ngram_lm_score(df).collect()}
     # vocab V = 4 (a, b, c, z); counts: c(a)=3, c("a b")=2, c("a c")=1
     assert set(got) == {1, 2, 3}  # doc 4 has no bigram
     lp_ab = math.log((2 + 0.5) / (3 + 0.5 * 4))
@@ -455,9 +426,8 @@ def test_fused_kernels_empty_query_side(spark, sf_small):
     q0 = emb.filter(F.col("vec_id") < 0)  # empty
     for df in (
         S.knn_topk_smallq(q0, emb, k=5),
-        S.knn_lsh(q0, emb, k=5, planes=4, tables=4, collect_queries=True),
-        S.knn_ivf(q0, emb, k=5, n_centroids=8, n_probe=2, iterations=0,
-                  collect_queries=True),
+        S.knn_lsh(q0, emb),
+        S.knn_ivf(q0, emb),
     ):
         assert df.count() == 0
         assert df.columns == ["query_id", "neighbor_id", "rank", "score"]
@@ -465,20 +435,17 @@ def test_fused_kernels_empty_query_side(spark, sf_small):
 
 def test_simhash_swar_equals_kernel(spark, sf_small):
     """The all-JVM SWAR signature aggregation must be bit-identical to
-    the Arrow kernel formulation it replaced, for both token hashes."""
+    the Arrow kernel formulation it replaced."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    for th in ("xxhash64", "md5_60"):
-        hash_fn = D.TOKEN_HASHES[th]
-        kern = docs.select(
-            F.col("doc_id").alias("id"),
-            D._simhash_sig_udf()(
-                F.transform(F.array_distinct(D.tokens("text")), hash_fn)
-            ).alias("sig"),
-        )
-        swar = D.simhash_sigs(docs, token_hash=th)
-        a = {r.id: r.sig for r in kern.collect()}
-        b = {r.id: r.sig for r in swar.collect()}
-        assert a == b and a, th
+    kern = docs.select(
+        F.col("doc_id").alias("id"),
+        D._simhash_sig_udf()(
+            F.transform(F.array_distinct(D.tokens("text")), D._md5_60)
+        ).alias("sig"),
+    )
+    a = {r.id: r.sig for r in kern.collect()}
+    b = {r.id: r.sig for r in D.simhash_sigs(docs).collect()}
+    assert a == b and a
 
 
 def test_pack_sequences_layout(spark, sf_small):
@@ -493,7 +460,7 @@ def test_pack_sequences_layout(spark, sf_small):
     budget = 512
     got = {
         r.doc_id: r
-        for r in pack_sequences(docs, budget=budget, partitions=4).collect()
+        for r in pack_sequences(docs, budget=budget).collect()
     }
     rows = sorted(
         (r.doc_id, len(r.text.split(" "))) for r in docs.collect()
@@ -522,7 +489,7 @@ def test_repetition_stats_values(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r for r in repetition_stats(df, n=2).collect()}
+    got = {r.doc_id: r for r in repetition_stats(df).collect()}
     assert set(got) == {1, 2}
     assert (got[1].n_ngrams, got[1].n_distinct) == (4, 2)
     assert got[1].dup_ngram_ratio == pytest.approx(0.5)
@@ -561,9 +528,7 @@ def test_simhash_wide_lane_counts_match_kernel(spark):
         df.select(
             F.col("doc_id").alias("id"),
             D._simhash_sig_udf()(
-                F.transform(
-                    F.array_distinct(D.tokens("text")), lambda t: F.xxhash64(t)
-                )
+                F.transform(F.array_distinct(D.tokens("text")), D._md5_60)
             ).alias("sig"),
         ).collect()[0].sig
     )
@@ -651,7 +616,7 @@ def test_verified_clusters_collapse_equivalence(docs):
     got = {
         r.id: (r.cluster_id, r.n_members)
         for r in D.verified_neardup_clusters(
-            corpus, jaccard_threshold=0.5
+            corpus
         ).collect()
     }
     want = {
@@ -683,7 +648,7 @@ def test_project_embeddings_preserves_neighbors(spark, sf_small):
         "label",
     )
     corpus = emb.unionByName(planted)
-    proj = S.project_embeddings(corpus, out_dim=16).withColumnRenamed(
+    proj = S.project_embeddings(corpus).withColumnRenamed(
         "projected", "embedding"
     )
     q_prj = proj.filter(F.col("vec_id") >= 10000)
@@ -691,8 +656,8 @@ def test_project_embeddings_preserves_neighbors(spark, sf_small):
             for r in S.knn_bruteforce(q_prj, proj, k=1).collect()}
     agree = sum(1 for q, n in top1.items() if n == q - 10000)
     assert agree >= 17, f"projection kept only {agree}/20 planted pairs"
-    a = S.project_embeddings(emb, out_dim=8).collect()
-    b = {r.vec_id: r.projected for r in S.project_embeddings(emb, out_dim=8).collect()}
+    a = S.project_embeddings(emb).collect()
+    b = {r.vec_id: r.projected for r in S.project_embeddings(emb).collect()}
     assert all(b[r.vec_id] == r.projected for r in a)
 
 
@@ -732,7 +697,7 @@ def test_bpe_pair_counts_matches_python_reference(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(corpus)], "doc_id int, text string"
     )
-    got = [(r.pair, r.n) for r in bpe_pair_counts(df, top_n=100).collect()]
+    got = [(r.pair, r.n) for r in bpe_pair_counts(df).collect()]
     freq = Counter(w for t in corpus for w in t.split())
     want = Counter()
     for w, f in freq.items():
@@ -934,28 +899,36 @@ def test_embeddings_are_dyadic_43(spark, sf_medium):
 
 def test_centroids_dyadic_matches_ordered_fold(spark, sf_small):
     """The dyadic split-long centroid must agree with the ordered-fold
-    exact centroid to within one accumulation ulp (the fold rounds at
-    every add; the dyadic path sums exactly and rounds once — the
-    dyadic value is the MORE accurate of the two)."""
+    centroid (a Python left fold in vec_id order) and with the
+    correctly rounded mean (``math.fsum``) to within one accumulation
+    ulp (the fold rounds at every add; the dyadic path sums exactly
+    and rounds once — the dyadic value is the MORE accurate of the
+    two)."""
+    import math
+
     from real_timetransactionaldatalakehouse_spark.operators.similarity import (
         embedding_centroids,
     )
     from real_timetransactionaldatalakehouse_spark.sources import load_table
 
     emb = load_table(spark, sf_small, "embeddings")
-    a = {
-        (r.label, r.dim): (r.centroid, r.n_members)
-        for r in embedding_centroids(emb, dyadic_bits=43).collect()
-    }
-    b = {
+    got = {
         (r.label, r.dim): (r.centroid, r.n_members)
         for r in embedding_centroids(emb).collect()
     }
-    assert a.keys() == b.keys() and len(a) > 0
-    for k, (ca, na) in a.items():
-        cb, nb = b[k]
-        assert na == nb
-        assert abs(ca - cb) <= 1e-12 * max(1.0, abs(ca)), (k, ca, cb)
+    cells: dict = {}
+    for r in sorted(emb.select("vec_id", "label", "embedding").collect()):
+        for d, v in enumerate(r.embedding):
+            cells.setdefault((r.label, d), []).append(float(v))
+    assert got.keys() == cells.keys() and len(got) > 0
+    for k, (c, n) in got.items():
+        vals = cells[k]
+        assert n == len(vals)
+        fold = 0.0
+        for v in vals:
+            fold += v
+        for want in (fold / n, math.fsum(vals) / n):
+            assert abs(c - want) <= 1e-12 * max(1.0, abs(c)), (k, c, want)
 
 
 def test_sample_systematic_invariants(spark, sf_small):
@@ -973,7 +946,7 @@ def test_sample_systematic_invariants(spark, sf_small):
     assert all(r.n_tickets >= 1 for r in got)
     # layout independence: a different partitioning yields the identical set
     again = sample_systematic(
-        docs.repartition(7), k=k, weight_col="n_chars", partitions=3
+        docs.repartition(7), k=k, weight_col="n_chars"
     ).collect()
     assert {(r.doc_id, r.n_tickets) for r in got} == {
         (r.doc_id, r.n_tickets) for r in again
@@ -1013,15 +986,18 @@ def test_passage_repetition_values(spark):
         passage_repetition,
     )
 
-    a = "w0 w1 w2 w3 x0 x1 x2 x3 tail"        # chunks: [w0..w3], [x0..x3]
-    b = "w0 w1 w2 w3 y0 y1 y2 y3"             # shares A's first chunk
-    c = "z0 z1 z2 z3 z0 z1 z2 z3"             # repeats its own chunk
+    def run(stem):
+        return " ".join(f"{stem}{i}" for i in range(8))
+
+    a = f"{run('w')} {run('x')} tail"         # chunks: [w0..w7], [x0..x7]
+    b = f"{run('w')} {run('y')}"              # shares A's first chunk
+    c = f"{run('z')} {run('z')}"              # repeats its own chunk
     d = "short doc"                           # no full chunk -> absent
     df = spark.createDataFrame(
         [(1, a), (2, b), (3, c), (4, d)], "doc_id long, text string"
     )
     got = {r.doc_id: (r.n_chunks, r.dup_chunks)
-           for r in passage_repetition(df, chunk=4).collect()}
+           for r in passage_repetition(df).collect()}
     assert got == {1: (2, 1), 2: (2, 1), 3: (2, 2)}
 
 
@@ -1037,7 +1013,7 @@ def test_vocab_coverage_values(spark):
         [(1, "a a a a b b b"), (2, "c c d")], "doc_id long, text string"
     )
     got = {r.target_pct: (r.n_terms, r.tokens_covered)
-           for r in vocab_coverage(df, targets=(50, 90, 99)).collect()}
+           for r in vocab_coverage(df).collect()}
     assert got == {50: (2, 7), 90: (3, 9), 99: (4, 10)}
 
 
@@ -1060,9 +1036,7 @@ def test_split_leakage_finds_cross_split_neardups(spark, sf_small):
     )
     corpus = docs.unionByName(mutated)
     weights = {"train": 0.90, "eval": 0.10}
-    leaks = split_leakage(
-        corpus, jaccard_threshold=0.5, weights=weights
-    ).collect()
+    leaks = split_leakage(corpus).collect()
     assert leaks, "constructed mutants must produce at least one leak"
     split_of = {
         r.doc_id: r.split
@@ -1106,10 +1080,6 @@ def test_training_shard_layout_is_a_permutation(spark, sf_small):
     assert {(r.doc_id, r.shard, r.pos) for r in got} == {
         (r.doc_id, r.shard, r.pos) for r in again
     }
-    other = training_shard_layout(docs, shards=8, seed="shuffle-v2").collect()
-    assert {(r.doc_id, r.shard, r.pos) for r in other} != {
-        (r.doc_id, r.shard, r.pos) for r in got
-    }
 
 
 def test_grouped_percentiles_exact_equals_plain_aggregate(spark, sf_medium):
@@ -1130,7 +1100,7 @@ def test_grouped_percentiles_exact_equals_plain_aggregate(spark, sf_medium):
     new = {r["l_returnflag"]: (r["med_price"], r["p90_price"]) for r in
            grouped_percentiles_exact(
                li, "l_returnflag", "l_extendedprice",
-               {"med_price": 0.5, "p90_price": 0.9}, partitions=5,
+               {"med_price": 0.5, "p90_price": 0.9},
            ).collect()}
     assert plain == new
 
@@ -1159,10 +1129,10 @@ def test_prefix_sum_family_stable_under_cache_drop(spark, sf_small):
     )
     ev = load_table(spark, sf_small, "events").select("event_id", "value")
     plans = {
-        "rank": global_rank(ev, ["value", "event_id"], rank_col="pos"),
-        "pack": pack_sequences(docs, budget=512, partitions=4),
+        "rank": global_rank(ev, ["value", "event_id"]),
+        "pack": pack_sequences(docs, budget=512),
         "pps": sample_systematic(docs, k=17, weight_col="n_chars"),
-        "vocab": vocab_coverage(docs, targets=(50, 90, 99)),
+        "vocab": vocab_coverage(docs),
         "pct": grouped_percentiles_exact(
             ev.withColumn("g", F.col("event_id") % 3),
             "g", "value", {"p50": 0.5, "p95": 0.95},
@@ -1174,112 +1144,6 @@ def test_prefix_sum_family_stable_under_cache_drop(spark, sf_small):
     for k in plans:
         assert before[k] == after[k], f"{k} changed after cache drop"
         assert before[k], f"{k} returned no rows"
-
-
-def test_derive_planes_scaling(spark, sf_small):
-    """planes="auto" (the r8 default for the sign-LSH family) derives
-    the plane count from corpus size: ceil(log2(n / target_bucket))
-    clamped to [4, 24] — in-bucket pair work grows n^2/2^planes per
-    table, so planes must track log2(n) for flat per-bucket cost."""
-    from real_timetransactionaldatalakehouse_spark.operators.similarity import (
-        derive_planes,
-        embedding_neardup_pairs_lsh,
-    )
-
-    assert derive_planes(0) == 4
-    assert derive_planes(100) == 4            # below target_bucket -> lo
-    assert derive_planes(128 * 16) == 4       # 2^4 buckets of 128
-    assert derive_planes(128 * 17) == 5       # ceil crosses
-    assert derive_planes(200_000) == 11       # the 50x replica case
-    assert derive_planes(10**9) == 23
-    assert derive_planes(10**12) == 24        # hi clamp
-    # monotone non-decreasing in n
-    last = 0
-    for n in [10, 10**3, 10**5, 10**7, 10**9, 10**11]:
-        p = derive_planes(n)
-        assert p >= last
-        last = p
-    # auto wiring: explicit corpus_count must produce the same pairs
-    # as the counted path, and both run end-to-end
-    emb = load_table(spark, sf_small, "embeddings")
-    n = emb.count()
-    a = {(r.id_a, r.id_b) for r in
-         embedding_neardup_pairs_lsh(emb, threshold=0.35).collect()}
-    b = {(r.id_a, r.id_b) for r in
-         embedding_neardup_pairs_lsh(
-             emb, threshold=0.35, corpus_count=n).collect()}
-    assert a == b and a, "auto-planes path returned no pairs"
-    # and the derived config equals an explicit planes=derive_planes(n)
-    c = {(r.id_a, r.id_b) for r in
-         embedding_neardup_pairs_lsh(
-             emb, threshold=0.35, planes=derive_planes(n)).collect()}
-    assert a == c
-
-
-def test_derive_tables_recall_model(spark, sf_small):
-    """tables="auto" (r9, VERDICT r8 #3): derive_tables solves
-    1 - (1 - match^planes)^tables >= target_recall for the smallest
-    table count, match = 1 - acos(threshold)/pi.  Pinned against the
-    r8 MEASURED recall sweep (SCALING.md: 2000 vectors, threshold
-    0.35, tables=16 -> recall 0.929 / 0.317 / 0.131 at planes
-    4/8/10): the model must reproduce each measured point within
-    0.06 absolute — the accuracy claim the derivation rests on."""
-    import math
-    import warnings
-
-    from real_timetransactionaldatalakehouse_spark.operators.similarity import (
-        derive_planes,
-        derive_tables,
-        embedding_neardup_pairs_lsh,
-    )
-
-    def model(threshold, planes, tables):
-        match = 1.0 - math.acos(threshold) / math.pi
-        return 1.0 - (1.0 - match ** planes) ** tables
-
-    for planes, measured in [(4, 0.929), (8, 0.317), (10, 0.131)]:
-        assert abs(model(0.35, planes, 16) - measured) < 0.06, planes
-    # the derivation hits its target where the model says it can:
-    # recall at the derived count >= target, and derived-1 < target
-    # (minimality) wherever the clamp is not binding
-    for threshold in (0.9, 0.95, 0.8):
-        for planes in (4, 8, 11, 13):
-            t = derive_tables(threshold, planes, target_recall=0.9)
-            if t < 64:  # unclamped
-                assert model(threshold, planes, t) >= 0.9, (threshold, planes)
-                if t > 2:
-                    assert model(threshold, planes, t - 1) < 0.9
-    # default near-dup design point: threshold 0.9, auto planes at the
-    # 50x replica (200k vectors -> planes 11) derives a table count
-    # that HOLDS recall >= 0.9 where the fixed 8 tables had fallen to
-    # ~0.85 and fixed 16 was overpaying at small n
-    assert derive_tables(0.9, derive_planes(200_000)) == 12
-    # moderate thresholds at high plane counts cannot reach 0.9 under
-    # the 64-table cost cap: the clamp must WARN with the achievable
-    # recall instead of silently shipping a low-recall default
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        t = derive_tables(0.35, 10, target_recall=0.9)
-        assert t == 64
-        assert any("achievable recall" in str(x.message) for x in w)
-    # target_recall >= 1.0 is unreachable for ANY finite table count
-    # (the model only approaches 1 asymptotically): same clamp+warn
-    # path, never a math-domain crash (r9 review fix)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert derive_tables(0.9, 8, target_recall=1.0) == 64
-        assert any("achievable recall" in str(x.message) for x in w)
-    # composition: tables="auto" on the operator equals the explicit
-    # derived count (planes resolves first, then tables reads it)
-    emb = load_table(spark, sf_small, "embeddings")
-    n = emb.count()
-    p = derive_planes(n)
-    auto = {(r.id_a, r.id_b) for r in embedding_neardup_pairs_lsh(
-        emb, threshold=0.9).collect()}
-    explicit = {(r.id_a, r.id_b) for r in embedding_neardup_pairs_lsh(
-        emb, threshold=0.9, planes=p,
-        tables=derive_tables(0.9, p)).collect()}
-    assert auto == explicit
 
 
 def test_embed_neardup_lsh_exact_collapse_equivalence(spark, sf_small):
@@ -1300,11 +1164,9 @@ def test_embed_neardup_lsh_exact_collapse_equivalence(spark, sf_small):
                    "embedding")
     )
     plain = {(r.id_a, r.id_b): r.score for r in
-             S._lsh_pairs(dup, 0.35, 4, 8, 64, "vec_id", "embedding",
-                          None).collect()}
+             S._lsh_pairs(dup, None).collect()}
     fast = {(r.id_a, r.id_b): r.score for r in
-            S.embedding_neardup_pairs_lsh(
-                dup, threshold=0.35, planes=4, tables=8).collect()}
+            S.embedding_neardup_pairs_lsh(dup).collect()}
     assert plain and fast
     assert plain == fast  # keys AND bit-identical scores
     # every duplicate pair must be present with its self-cosine
@@ -1327,17 +1189,12 @@ def test_embed_neardup_lsh_max_bucket(spark, sf_small):
         "vec_id", "embedding"
     )
     base = {(r.id_a, r.id_b): r.score for r in
-            S.embedding_neardup_pairs_lsh(
-                emb, threshold=0.35, planes=4, tables=8).collect()}
+            S.embedding_neardup_pairs_lsh(emb).collect()}
     nolimit = {(r.id_a, r.id_b): r.score for r in
-               S.embedding_neardup_pairs_lsh(
-                   emb, threshold=0.35, planes=4, tables=8,
-                   max_bucket=10**9).collect()}
+               S.embedding_neardup_pairs_lsh(emb, max_bucket=10**9).collect()}
     assert nolimit == base
     capped = {(r.id_a, r.id_b): r.score for r in
-              S.embedding_neardup_pairs_lsh(
-                  emb, threshold=0.35, planes=4, tables=8,
-                  max_bucket=8).collect()}
+              S.embedding_neardup_pairs_lsh(emb, max_bucket=8).collect()}
     assert set(capped) <= set(base)
     for k, v in capped.items():
         assert v == base[k]
@@ -1390,7 +1247,7 @@ def test_sample_systematic_empty_input_clean_error(spark):
     before reaching the operators' documented ValueError."""
     empty = spark.createDataFrame([], "doc_id long, w long")
     with pytest.raises(ValueError, match="weight"):
-        SP.sample_systematic(empty, k=5, weight_col="w", id_col="doc_id")
+        SP.sample_systematic(empty, k=5, weight_col="w")
 
 
 def test_verified_clusters_attach_and_release_cache(docs):
@@ -1399,7 +1256,7 @@ def test_verified_clusters_attach_and_release_cache(docs):
     persists and is released via the standard _cached_deps contract.
     r14: the collapse is ONE windowed member frame (id, rep, size) —
     groups are a filter over the same cache — so exactly one dep."""
-    out = D.verified_neardup_clusters(_with_mutants(docs), jaccard_threshold=0.5)
+    out = D.verified_neardup_clusters(_with_mutants(docs))
     deps = getattr(out, "_cached_deps", [])
     assert len(deps) == 1, "the windowed member frame must be attached"
     assert out.count() > 0
@@ -1422,10 +1279,10 @@ def test_winnow_and_chunk_null_text_emit_no_rows(spark):
         [(1, "some real document text here"), (2, None), (3, "")],
         "doc_id long, text string",
     )
-    fps = winnow_fingerprints(df, "text", k=4, window=3)
+    fps = winnow_fingerprints(df, k=4, window=3)
     assert fps.filter(F.col("doc_id") == 2).count() == 0
     assert fps.filter(F.col("doc_id") == 1).count() > 0
-    chunks = chunk_documents(df, budget=4)
+    chunks = chunk_documents(df, budget=12)
     assert chunks.filter(F.col("doc_id") == 2).count() == 0
     got3 = chunks.filter(F.col("doc_id") == 3).collect()
     assert len(got3) == 1 and got3[0].chunk_text == ""
@@ -1441,7 +1298,7 @@ def test_redact_counts_match_redactions_performed(spark):
         [(1, "reach 1.2.3.4@example.com or 10.0.0.1 today")],
         "doc_id long, text string",
     )
-    r = redact_pii(df, "text").collect()[0]
+    r = redact_pii(df).collect()[0]
     assert r.n_email == 1
     assert r.n_ipv4 == 1, "the ipv4 consumed by the email must not count"
     assert "[email]" in r.text and "[ipv4]" in r.text
@@ -1454,7 +1311,7 @@ def test_search_ranked_releases_postings_cache(docs):
     (filter/groupBy had dropped the _cached_deps attribute)."""
     from real_timetransactionaldatalakehouse_spark.operators.text import search_ranked
 
-    out = search_ranked(docs, ["the"], k=5, require_all=False)
+    out = search_ranked(docs, ["the"])
     deps = getattr(out, "_cached_deps", [])
     assert deps, "postings cache must be attached to the result"
     assert out.count() >= 0
@@ -1491,9 +1348,9 @@ def test_collapsed_graph_keeps_null_text_docs_singletons(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     kw = dict(num_hashes=8, bands=4)
     assert D.neardup_losers(df, **kw).collect() == []
-    assert D.verified_neardup_clusters(df, **kw).collect() == []
+    assert D.verified_neardup_clusters(df).collect() == []
     keys = {r.doc_id: r["__cluster_key"]
-            for r in D.neardup_cluster_keys(df, **kw).collect()}
+            for r in D.neardup_cluster_keys(df).collect()}
     assert keys == {i: i for i in range(1, 6)}
 
 
@@ -1502,15 +1359,14 @@ def test_semantic_dedup_collapse_persists_member_table(spark):
     member-expansion branches, so an engaged collapse persists it once
     and attaches it as a cached dep that release_cached frees."""
     rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
-            (3, [0.9, 0.1, 0.0]), (4, [0.0, 1.0, 0.0]),
-            (5, [0.0, 0.0, 1.0])]
+            (3, [0.0, 1.0, 0.0]), (4, [0.0, 0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = S.semantic_dedup(df, k=2, threshold=0.9)
+    out = S.semantic_dedup(df)
     deps = getattr(out, "_cached_deps", [])
     member = [d for d in deps if {"__rep", "__n", "__gn"} <= set(d.columns)]
     assert len(member) == 1 and member[0].is_cached
     got = {r.id: (r.cluster_id, r.n_members) for r in out.collect()}
-    assert got == {1: (1, 3), 2: (1, 3), 3: (1, 3)}
+    assert got == {1: (1, 2), 2: (1, 2)}
     D.release_cached(out)
     assert not member[0].is_cached
 
@@ -1539,63 +1395,59 @@ def test_valid_embeddings_enforces_cosine_contract(spark):
     assert 7 in {r.vec_id for r in S.valid_embeddings(df, "emb").collect()}
 
 
+def _vec(*head):
+    """A 64-dim embedding (the width the LSH operators band) from its
+    leading components."""
+    return [float(x) for x in head] + [0.0] * (64 - len(head))
+
+
 def test_validate_gate_on_cosine_entry_points(spark):
-    """r11 (VERDICT r10 #6): the cosine input contract is now an
-    opt-in ``validate`` parameter on the entry-points most exposed to
-    raw corpus tables.  A NULL/zero/NaN/inf-poisoned table must pass
+    """r11 (VERDICT r10 #6): the cosine input contract is an opt-in
+    ``validate`` parameter on the entry-points most exposed to raw
+    corpus tables.  A NULL/zero/NaN/inf-poisoned table must pass
     through each entry-point with ``validate=True`` and yield exactly
     the result of running on the manually pre-filtered clean subset —
     no mid-job ANSI DIVIDE_BY_ZERO, no poisoned row surviving."""
     healthy = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.95, 0.05, 0.0, 0.0]),
-        (3, [0.0, 1.0, 0.0, 0.0]),
+        (1, _vec(1.0)),
+        (2, _vec(0.95, 0.05)),
+        (3, _vec(0.0, 1.0)),
     ]
     poison = [
         (10, None),
-        (11, [0.0, 0.0, 0.0, 0.0]),
-        (12, [1.0, float("nan"), 0.0, 0.0]),
-        (13, [float("inf"), 0.0, 0.0, 0.0]),
+        (11, _vec()),
+        (12, _vec(1.0, float("nan"))),
+        (13, _vec(float("inf"))),
     ]
-    df = spark.createDataFrame(healthy + poison,
-                               "vec_id long, emb array<double>")
-    clean = S.valid_embeddings(df, "emb")
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame(healthy + poison, schema)
+    clean = S.valid_embeddings(df)
 
     def pairs(frame):
         return {(r.id_a, r.id_b, round(r.score, 9)) for r in frame.collect()}
 
     # knn_bruteforce (both sides gated)
     got = {(r.query_id, r.neighbor_id)
-           for r in S.knn_bruteforce(df, df, k=1, vec_col="emb",
-                                     validate=True).collect()}
+           for r in S.knn_bruteforce(df, df, k=1, validate=True).collect()}
     want = {(r.query_id, r.neighbor_id)
-            for r in S.knn_bruteforce(clean, clean, k=1,
-                                      vec_col="emb").collect()}
+            for r in S.knn_bruteforce(clean, clean, k=1).collect()}
     assert got == want and not ({10, 11, 12, 13} & {q for q, _ in got})
 
     # LSH banding
-    got = pairs(S.embedding_neardup_pairs_lsh(
-        df, threshold=0.9, dim=4, vec_col="emb", validate=True))
-    want = pairs(S.embedding_neardup_pairs_lsh(
-        clean, threshold=0.9, dim=4, vec_col="emb"))
+    got = pairs(S.embedding_neardup_pairs_lsh(df, validate=True))
+    want = pairs(S.embedding_neardup_pairs_lsh(clean))
     assert got == want and (1, 2) in {(a, b) for a, b, _ in got}
 
     # exact + LSH semantic decontamination (corpus AND eval gated)
     ev = spark.createDataFrame(
-        [(100, [1.0, 0.01, 0.0, 0.0]), (101, [0.0, 0.0, 0.0, 0.0]),
-         (102, [float("nan"), 1.0, 0.0, 0.0])],
-        "vec_id long, emb array<double>")
-    ev_clean = S.valid_embeddings(ev, "emb")
-    for fn, kw in (
-        (S.semantic_contamination, {}),
-        (S.semantic_contamination_lsh, {"dim": 4}),
-    ):
+        [(100, _vec(1.0, 0.01)), (101, _vec()),
+         (102, _vec(float("nan"), 1.0))], schema)
+    ev_clean = S.valid_embeddings(ev)
+    for fn in (S.semantic_contamination, S.semantic_contamination_lsh):
         got = {(r.id, r.n_eval_hits, r.top_eval_id, round(r.top_score, 9))
-               for r in fn(df, ev, threshold=0.9, vec_col="emb",
-                           eval_vec_col="emb", validate=True, **kw).collect()}
+               for r in fn(df, ev, validate=True).collect()}
         want = {(r.id, r.n_eval_hits, r.top_eval_id, round(r.top_score, 9))
-                for r in fn(clean, ev_clean, threshold=0.9, vec_col="emb",
-                            eval_vec_col="emb", **kw).collect()}
+                for r in fn(clean, ev_clean).collect()}
         assert got == want, (fn.__name__, got, want)
         assert got and all(eid == 100 for _, _, eid, _ in got)
 
@@ -1606,38 +1458,38 @@ def test_validate_gate_on_semantic_dedup(spark):
     poisoned table with validate=True yields exactly the clean
     subset's result, and the default stays off (NULL rows would
     otherwise ANSI-error in cell assignment, so defaults are compared
-    on the healthy subset plus the inert zero-norm row)."""
+    on the healthy subset plus the inert zero-norm row).  The healthy
+    rows are two exact-copy pairs, so their groups form whatever cells
+    the seed sample picks."""
     healthy = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.999, 0.01, 0.0, 0.0]),
-        (3, [0.0, 1.0, 0.0, 0.0]),
-        (4, [0.0, 0.999, 0.01, 0.0]),
+        (1, _vec(1.0)),
+        (2, _vec(1.0)),
+        (3, _vec(0.0, 1.0)),
+        (4, _vec(0.0, 1.0)),
     ]
     poison = [
         (10, None),
-        (11, [0.0, 0.0, 0.0, 0.0]),
-        (12, [1.0, float("nan"), 0.0, 0.0]),
-        (13, [float("inf"), 0.0, 0.0, 0.0]),
+        (11, _vec()),
+        (12, _vec(1.0, float("nan"))),
+        (13, _vec(float("inf"))),
     ]
-    df = spark.createDataFrame(healthy + poison,
-                               "vec_id long, emb array<double>")
-    clean = S.valid_embeddings(df, "emb")
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame(healthy + poison, schema)
+    clean = S.valid_embeddings(df)
 
     def groups(frame):
         return {(r.id, r.cluster_id, r.n_members, r.keep)
                 for r in frame.collect()}
 
-    kw = dict(k=2, threshold=0.9, vec_col="emb")
-    got = groups(S.semantic_dedup(df, validate=True, **kw))
-    want = groups(S.semantic_dedup(clean, **kw))
+    got = groups(S.semantic_dedup(df, validate=True))
+    want = groups(S.semantic_dedup(clean))
     assert got == want, (got, want)
     ids = {t[0] for t in got}
     assert ids and not ({10, 11, 12, 13} & ids)
     # default-off is unchanged: the zero-norm row is inert by the
     # pair-path contract even without the gate
     no_gate = groups(S.semantic_dedup(
-        spark.createDataFrame(healthy + [(11, [0.0, 0.0, 0.0, 0.0])],
-                              "vec_id long, emb array<double>"), **kw))
+        spark.createDataFrame(healthy + [(11, _vec())], schema)))
     assert no_gate == got
 
 
@@ -1652,10 +1504,7 @@ def test_leakage_safe_split_is_leakage_free_by_construction(spark, docs):
     from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
 
     corpus = _with_mutants(docs)  # doc i and i+200000 are near-dups
-    out = Smp.leakage_safe_split(
-        corpus, jaccard_threshold=0.5,
-        weights={"train": 0.5, "eval": 0.5}, seed="split-v9",
-    )
+    out = Smp.leakage_safe_split(corpus)
     got = {r.doc_id: r.split for r in out.collect()}
     assert len(got) == corpus.count()
     # verified near-dup pairs must not straddle
@@ -1665,20 +1514,17 @@ def test_leakage_safe_split_is_leakage_free_by_construction(spark, docs):
         if got[r.id_a] != got[r.id_b]
     ]
     assert straddle == [], straddle[:5]
-    # control: id-hash splitting leaks on this corpus at 50/50
+    # control: id-hash splitting leaks on this corpus at 90/10
     plain = {
         r.doc_id: r.split
         for r in Smp.hash_split(
-            corpus, weights={"train": 0.5, "eval": 0.5}, seed="split-v9"
+            corpus, weights={"train": 0.9, "eval": 0.1}
         ).collect()
     }
     assert any(plain[a] != plain[b] for a, b in
                ((r.id_a, r.id_b) for r in pairs.collect()))
     # deterministic across recomputation
-    again = {r.doc_id: r.split for r in Smp.leakage_safe_split(
-        corpus, jaccard_threshold=0.5,
-        weights={"train": 0.5, "eval": 0.5}, seed="split-v9",
-    ).collect()}
+    again = {r.doc_id: r.split for r in Smp.leakage_safe_split(corpus).collect()}
     assert got == again
     D.release_cached(out)
 
@@ -1694,16 +1540,14 @@ def test_leakage_safe_split_tolerates_caller_cluster_id(spark, docs):
     from real_timetransactionaldatalakehouse_spark.operators import sampling as Smp
 
     corpus = _with_mutants(docs)
-    kw = dict(jaccard_threshold=0.5,
-              weights={"train": 0.5, "eval": 0.5}, seed="split-v9")
     noisy = corpus.withColumn("cluster_id", F.lit("caller-owned"))
-    out = Smp.leakage_safe_split(noisy, **kw)
+    out = Smp.leakage_safe_split(noisy)
     assert "cluster_id" in out.columns
     rows = out.collect()
     assert rows and all(r.cluster_id == "caller-owned" for r in rows)
     clean = {
         r.doc_id: r.split
-        for r in Smp.leakage_safe_split(corpus, **kw).collect()
+        for r in Smp.leakage_safe_split(corpus).collect()
     }
     assert {r.doc_id: r.split for r in rows} == clean
     D.release_cached(out)
@@ -1722,7 +1566,7 @@ def test_substring_dup_spans_exactsubstr_semantics(spark):
     d3 = "c1 c2 c3 c4 c5 c6 c7 c8 c9 c10"     # no duplication
     df = spark.createDataFrame(
         [(1, d1), (2, d2), (3, d3)], "doc_id long, text string")
-    out = D.substring_dup_spans(df, min_gram=8)
+    out = D.substring_dup_spans(df)
     rows = {r.id: (r.span_start, r.span_end, r.n_grams)
             for r in out.collect()}
     assert set(rows) == {1, 2}
@@ -1731,11 +1575,10 @@ def test_substring_dup_spans_exactsubstr_semantics(spark):
     # intra-doc repetition: two spans, split by the unique gap tokens
     d4 = shared + " x1 x2 " + shared
     out2 = D.substring_dup_spans(
-        spark.createDataFrame([(9, d4)], "doc_id long, text string"),
-        min_gram=8)
+        spark.createDataFrame([(9, d4)], "doc_id long, text string"))
     assert sorted((r.span_start, r.span_end) for r in out2.collect()) \
         == [(1, 10), (13, 22)]
     # deterministic across recomputation
     again = {r.id: (r.span_start, r.span_end, r.n_grams)
-             for r in D.substring_dup_spans(df, min_gram=8).collect()}
+             for r in D.substring_dup_spans(df).collect()}
     assert rows == again

@@ -44,7 +44,7 @@ def _order_events(spark):
 
 def test_gold_latest_state(spark):
     ev = _order_events(spark)
-    cur = MD.build_gold_latest_state(ev, key="order_id", ts_col="event_timestamp")
+    cur = MD.build_gold_latest_state(ev)
     rows = {r.order_id: r for r in cur.collect()}
     assert len(rows) == 3  # exactly one row per key
     assert rows["A"].current_status == "ORDER_SHIPPED"
@@ -66,7 +66,7 @@ def test_bronze_vs_gold_consistency(spark):
         bronze.groupBy("order_id").count().filter(F.col("count") > 1).collect()
     )
     assert multi  # at least one order with history
-    gold = MD.build_gold_latest_state(ev, key="order_id", ts_col="event_timestamp")
+    gold = MD.build_gold_latest_state(ev)
     for r in multi:
         assert gold.filter(F.col("order_id") == r.order_id).count() == 1
 
@@ -114,12 +114,15 @@ def test_serving_views(spark, sf_small):
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     SV.register_gold_views(spark, gold, dim)
-    as_of = "2024-02-15 00:00:00"
-    v = SV.velocity_view(spark, as_of, lookback_minutes=60 * 24 * 60)
+    # the views look back 30 / 60 minutes from as_of: one minute past
+    # the last window keeps the latest windows in range
+    last = gold.agg(F.max("window_start")).first()[0]
+    recent = (last + datetime.timedelta(minutes=1)).strftime("%Y-%m-%d %H:%M:%S")
+    v = SV.velocity_view(spark, recent)
     assert v.count() > 0
-    t = SV.trending_view(spark, as_of, k=5, lookback_minutes=60 * 24 * 60)
-    rows = t.collect()
-    assert 0 < len(rows) <= 5
+    rows = SV.trending_view(spark, recent).collect()
+    assert 0 < len(rows) <= 50
+    as_of = "2024-02-15 00:00:00"
     f = SV.freshness_view(spark, as_of).collect()[0]
     assert f.lag_s > 0
 
@@ -156,7 +159,7 @@ def test_doomscroll_and_cold_start_views(spark, sf_small):
     hi = gold.agg(F.max("window_start")).first()[0] + datetime.timedelta(minutes=1)
     as_of = hi.strftime("%Y-%m-%d %H:%M:%S")
 
-    ds = doomscroll_view(spark, as_of, lookback_minutes=10).collect()
+    ds = doomscroll_view(spark, as_of).collect()
     assert ds, "no doomscroll bins in lookback"
     direct = {
         r.window_start: (r.errors, r.views)
@@ -170,7 +173,7 @@ def test_doomscroll_and_cold_start_views(spark, sf_small):
         assert r.doomscroll_rate == want
         assert bool(r.alert) == (want is not None and want > 0.40)
 
-    cs = cold_start_view(spark, as_of, age_minutes=120).first()
+    cs = cold_start_view(spark, as_of).first()
     assert cs.n_new >= 0
     if cs.n_new:
         assert 0.0 <= cs.pct_quality <= 1.0

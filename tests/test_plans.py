@@ -246,7 +246,7 @@ def test_decontaminate_ngram_broadcasts_never_cartesian(spark, sf_medium):
     docs = load_table(spark, sf_medium, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     bench = docs.filter(F.col("doc_id") % 20 == 0)
-    plan = P.formatted_plan(decontaminate_ngram(corpus, bench, n=13))
+    plan = P.formatted_plan(decontaminate_ngram(corpus, bench))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
@@ -290,9 +290,9 @@ def test_pack_sequences_no_single_partition_window(spark, sf_medium):
     )
 
     big = spark.range(0, 200_000).selectExpr(
-        "id AS doc_id", "CAST(id % 97 + 1 AS LONG) AS n_tok"
+        "id AS doc_id", "concat(repeat('w ', CAST(id % 97 AS INT)), 'w') AS text"
     )
-    df = pack_sequences(big, budget=4096, id_col="doc_id", token_col="n_tok")
+    df = pack_sequences(big, budget=4096)
     plan = P.formatted_plan(df)
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(__b" in plan, plan
@@ -520,7 +520,7 @@ def test_sample_weighted_no_single_partition(spark, sf_medium):
     big = spark.range(0, 200_000).selectExpr(
         "id AS doc_id", "CAST(id % 97 + 1 AS LONG) AS w"
     )
-    df = sample_systematic(big, k=37, weight_col="w", id_col="doc_id")
+    df = sample_systematic(big, k=37, weight_col="w")
     plan = P.formatted_plan(df)
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(__b" in plan, plan
@@ -550,7 +550,7 @@ def test_vocab_coverage_single_partition_post_agg_only(spark, sf_medium):
     big = spark.range(0, 100_000).selectExpr(
         "concat('tok', id, ' tok', CAST(id % 1000 AS STRING)) AS text"
     )
-    df = vocab_coverage(big, targets=(50, 90, 99))
+    df = vocab_coverage(big)
     plan = P.formatted_plan(df)
     assert plan.count("SinglePartition") == 1, plan
     assert "hashpartitioning(__b" in plan, plan
@@ -660,7 +660,7 @@ def test_lm_score_model_broadcast_is_reused(spark, sf_medium):
         docs = load_table(spark, sf_medium, "documents").select(
             "doc_id", "text"
         )
-        plan = P.formatted_plan(ngram_lm_score(docs, persist=False))
+        plan = P.formatted_plan(ngram_lm_score(docs))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert "ReusedExchange" in plan, plan
@@ -740,12 +740,12 @@ def test_embed_lsh_verify_width_tracks_candidate_volume(spark, sf_medium):
     layout = int(spark.conf.get("spark.sql.shuffle.partitions"))
     small = P.formatted_plan(
         S.embedding_neardup_pairs_lsh(
-            emb, threshold=0.35, planes=4, tables=16
+            emb
         )
     )
     big = P.formatted_plan(
         S.embedding_neardup_pairs_lsh(
-            rep, threshold=0.35, planes=4, tables=16
+            rep
         )
     )
     pat = r"hashpartitioning\(id_a#\d+L?, id_b#\d+L?, (\d+)\)"

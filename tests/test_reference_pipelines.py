@@ -89,7 +89,7 @@ def test_order_events_epoch_cast_and_latest_state(spark):
     df = spark.createDataFrame(rows, SC.ORDER_EVENT_SCHEMA)
     typed = df.withColumn("event_timestamp", epoch_seconds_to_ts("event_timestamp"))
     assert dict(typed.dtypes)["event_timestamp"] == "timestamp"
-    cur = MD.build_gold_latest_state(typed, key="order_id", ts_col="event_timestamp")
+    cur = MD.build_gold_latest_state(typed)
     r = cur.collect()[0]
     assert r.current_status == "PAID"
     assert r.total_amount == 99.5 and r.currency == "USD"
@@ -124,12 +124,12 @@ def test_cdc_envelope_to_scd1_dims(spark):
     creates = updates.filter(F.col("ts_ms") == 1000)
     dim = merge_upsert(
         creates, updates.filter(F.col("ts_ms") > 1000), ["user_id"],
-        order_col="ts_ms", update_cols=["ltv_segment", "is_creator", "ts_ms"],
+        order_col="ts_ms",
     )
     d = {r.user_id: r for r in dim.collect()}
     assert len(d) == 2
     assert d["u1"].ltv_segment == "VIP" and d["u1"].is_creator is True
-    assert d["u1"].register_country == "US"  # SCD1 non-update column kept
+    assert d["u1"].register_country == "US"  # a NULL update keeps the target value
     assert d["u1"].join_at == datetime.datetime(2024, 1, 1)
     assert d["u2"].ltv_segment == "Standard"
 
@@ -219,7 +219,7 @@ def test_chaos_supernova_viral_entity_captures_rank_one(spark, tmp_path):
     _chaos_gold(spark, tmp_path, rows, ["user_id"])
 
     as_of = (CHAOS_T0 + datetime.timedelta(minutes=30)).isoformat(sep=" ")
-    top = trending_view(spark, as_of, k=5, lookback_minutes=60).collect()
+    top = trending_view(spark, as_of).collect()
     assert top[0].user_id == 999, [r.user_id for r in top]  # Rank #1 capture
     assert top[0].c_mktsegment == "VIRAL"  # dim enrichment on the winner
     vel = {r.user_id: r.velocity for r in velocity_view(spark, as_of).collect()}
@@ -319,7 +319,7 @@ def test_chaos_inventory_drought_fresh_supply_decays(spark, tmp_path):
 
     def gauge(minute):
         as_of = (CHAOS_T0 + datetime.timedelta(minutes=minute)).isoformat(sep=" ")
-        return cold_start_view(spark, as_of, age_minutes=60).collect()[0]
+        return cold_start_view(spark, as_of).collect()[0]
 
     healthy, mid, dry = gauge(20), gauge(70), gauge(80)
     assert healthy.n_new == 15 and healthy.band == "green", healthy

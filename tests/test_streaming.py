@@ -193,7 +193,6 @@ def test_dims_scd1_stream_and_idempotence(spark, tmp_path):
     stream = file_stream(spark, src, df0.schema)
     dims_scd1_stream(
         stream, target, ckpt, key_cols=["user_id"], order_col="ts_ms",
-        update_cols=["ltv_segment", "is_creator", "ts_ms"],
     )
     from real_timetransactionaldatalakehouse_spark import tablefmt as TF
 
@@ -205,7 +204,7 @@ def test_dims_scd1_stream_and_idempotence(spark, tmp_path):
     assert len(dim) == 5
     assert dim["u1"].ltv_segment == "High_Potential"  # in-batch dedup kept latest
     assert dim["u1"].is_creator is True
-    assert dim["u1"].register_country == "US"  # SCD1: untouched column kept
+    assert dim["u1"].register_country == "US"  # SCD1: a NULL update keeps the target value
     assert dim["u2"].ltv_segment == "VIP"
     assert dim["u3"].ltv_segment == "Standard"  # 'd' op filtered
     # merge idempotence: re-applying batch2 changes nothing
@@ -213,7 +212,6 @@ def test_dims_scd1_stream_and_idempotence(spark, tmp_path):
     updates = df1.filter(F.col("op").isin("c", "u")).drop("op")
     again = merge_upsert(
         target_df, updates, ["user_id"], order_col="ts_ms",
-        update_cols=["ltv_segment", "is_creator", "ts_ms"],
     )
     # align column order before comparing: read_table canonicalizes to
     # the declared schema order, merge output orders by its own select
@@ -224,7 +222,6 @@ def test_dims_scd1_stream_and_idempotence(spark, tmp_path):
     dims_scd1_stream(
         file_stream(spark, src, df0.schema), target, ckpt,
         key_cols=["user_id"], order_col="ts_ms",
-        update_cols=["ltv_segment", "is_creator", "ts_ms"],
     )
     assert TF.current_version(target) == 2
 
@@ -249,7 +246,7 @@ def test_concurrent_streams_one_session_await_all(spark, events_small, tmp_path)
         ts_col="ts", group_cols=["user_id"], cases=CASES(), blocking=False,
     )
     assert q_bronze.isActive or q_gold.isActive or True  # both started
-    await_all(spark, [q_bronze, q_gold], timeout_sec=300)
+    await_all(spark, [q_bronze, q_gold])
     assert not q_bronze.isActive and not q_gold.isActive
     # bronze kept every row
     assert spark.read.parquet(str(tmp_path / "bronze")).count() == events_small.count()
@@ -334,7 +331,7 @@ def test_ewma_stream_multibatch_replay_equals_batch_oracle(spark, tmp_path):
     oracle = {
         r.user_id: r
         for r in ewma_batch_oracle(
-            df, "user_id", "ts", "value", alpha=0.3, tiebreak_col="event_id"
+            df, "user_id", "ts", "value"
         ).collect()
     }
     assert set(latest) == set(oracle) == {1, 2, 3}
@@ -397,8 +394,7 @@ def test_ewma_anomaly_stream_replay_equals_batch_oracle(spark, tmp_path):
         r.user_id: r
         for r in ewma_anomaly_batch_oracle(
             df, "user_id", "ts", "value",
-            alpha=0.3, z=3.0, min_n=3, tiebreak_col="event_id",
-        ).collect()
+            ).collect()
     }
     assert set(latest) == set(oracle) == {1, 2}
     for k in oracle:
@@ -648,7 +644,7 @@ def test_ewma_string_key_and_null_values_match_oracle(spark, tmp_path):
         if r.user_id not in latest or r.n_events > latest[r.user_id].n_events:
             latest[r.user_id] = r
     oracle = {r[0]: r for r in ewma_batch_oracle(
-        df, "user_id", "ts", "value", alpha=0.3, tiebreak_col="event_id"
+        df, "user_id", "ts", "value"
     ).collect()}
     assert latest["u1"].ewma == oracle["u1"].ewma == 20.0  # restarted
     assert latest["u2"].ewma == oracle["u2"].ewma == 4.0
@@ -660,20 +656,24 @@ def test_ewma_null_value_tied_ts_orders_like_oracle(spark, tmp_path):
     column, and a NULL value must order FIRST — Spark's struct
     comparison puts the NULL field before any value, while pandas'
     default sort put NaN last, folding the tie in the opposite order
-    (NULL-last would END the fold NULL here instead of restarting)."""
+    (NULL-last would END the fold NULL here instead of restarting).
+    The batch oracle breaks ts ties on ``event_id``, which here puts
+    the NULL row first too."""
     from real_timetransactionaldatalakehouse_spark.streaming.stateful import (
         ewma_batch_oracle,
         ewma_by_key,
     )
 
     rows = [
-        ("u1", "2024-01-01 00:00:01.000", 10.0),
-        ("u1", "2024-01-01 00:00:02.000", None),  # tied with the next row
-        ("u1", "2024-01-01 00:00:02.000", 20.0),
+        ("u1", "2024-01-01 00:00:01.000", 10.0, 1),
+        ("u1", "2024-01-01 00:00:02.000", None, 2),  # tied with the next row
+        ("u1", "2024-01-01 00:00:02.000", 20.0, 3),
     ]
     df = (
-        spark.createDataFrame(rows, "user_id string, ts_s string, value double")
-        .select("user_id", F.to_timestamp("ts_s").alias("ts"), "value")
+        spark.createDataFrame(
+            rows, "user_id string, ts_s string, value double, event_id long"
+        )
+        .select("user_id", F.to_timestamp("ts_s").alias("ts"), "value", "event_id")
     )
     src = str(tmp_path / "in")
     _write_chunks(df, src, 1, ["ts"])
@@ -693,7 +693,7 @@ def test_ewma_null_value_tied_ts_orders_like_oracle(spark, tmp_path):
     q.awaitTermination()
     assert q.exception() is None
     latest = max(emissions, key=lambda r: r.n_events)
-    oracle = ewma_batch_oracle(df, "user_id", "ts", "value", alpha=0.3).collect()[0]
+    oracle = ewma_batch_oracle(df, "user_id", "ts", "value").collect()[0]
     # NULL orders first at the tie: ... -> NULL (restart) -> 20.0
     assert oracle.ewma == 20.0
     assert latest.ewma == oracle.ewma

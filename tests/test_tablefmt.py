@@ -234,7 +234,7 @@ def test_two_streams_one_session_await_all(spark, sf_small, tmp_path):
         blocking=False,
     )
     assert q1.isActive or q2.isActive or True  # both were started
-    await_all(spark, [q1, q2], timeout_sec=180)
+    await_all(spark, [q1, q2])
     assert spark.read.parquet(out1).count() == events.count()
     assert spark.read.parquet(out2).count() > 0
 
@@ -501,7 +501,7 @@ def test_snapshot_diff_keyed_and_setwise(spark, tmp_path):
 
     keyed = {
         r.id: r._change
-        for r in TF.snapshot_diff(spark, tbl, 1, 2, key_cols=["id"]).collect()
+        for r in TF.snapshot_diff(spark, tbl, 1, key_cols=["id"]).collect()
     }
     assert keyed == {2: "update", 3: "delete", 4: "insert"}
     # changed row carries the TO side's values

@@ -127,7 +127,7 @@ def main() -> None:
     forms = [
         (
             "global_rank (q_orderby: layout + rank materialization)",
-            lambda: R.global_rank(events(), ["ts", "event_id"], rank_col="pos")
+            lambda: R.global_rank(events(), ["ts", "event_id"])
             .select("event_id", "user_id", "pos"),
             "SELECT event_id, user_id, ROW_NUMBER() OVER "
             "(ORDER BY ts ASC, event_id ASC) AS pos FROM events",
