@@ -3063,9 +3063,7 @@ def q_neardup_verified(spark, sf_dir):
     from real_timetransactionaldatalakehouse_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return D.minhash_verified_neardup_pairs(
-        _mutated_corpus(docs), jaccard_threshold=0.5
-    )
+    return D.minhash_verified_neardup_pairs(_mutated_corpus(docs))
 
 
 # Connected components over the exact >= 0.5 shingle-Jaccard pair
@@ -3264,11 +3262,7 @@ def q_embed_neardup_lsh(spark, sf_dir):
     # 4 planes x 16 tables suit the corpus's moderate-similarity pairs:
     # p(co-bucket per table) = (1 - theta/pi)^4, OR-amplified over 16
     # tables => ~0.9 recall at cosine 0.35 (theta ~ 69 deg); the static
-    # oracle's hyperplane CTE replicates them.  Certified WITH the r8 exact-vector collapse: it is
-    # bit-equal to plain banding (copies share every bucket and every
-    # expanded score is the same fold arithmetic), so the unchanged
-    # oracle pins the equivalence; the collapse is what removes the
-    # duplicate-clique straggler on re-crawl-heavy corpora (SCALING r8)
+    # oracle's hyperplane CTE replicates them.
     emb = _t(spark, sf_dir, "embeddings")
     return S.embedding_neardup_pairs_lsh(
         emb
@@ -4511,7 +4505,7 @@ def q_neardup_free_corpus(spark, sf_dir):
     # the drop set comes from the light losers path (row-identical to
     # filtering the full cluster table; the cluster-size aggregation
     # and its joins vanish from the plan)
-    drop = D.neardup_losers(corpus, jaccard_threshold=0.5).select(
+    drop = D.neardup_losers(corpus).select(
         F.col("doc_id").alias("id")
     )
     return (
@@ -4766,7 +4760,7 @@ def q_corpus_pipeline(spark, sf_dir):
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
 
     # r14 (guide §2.4): light losers path — see q_neardup_free_corpus
-    dup_drop = D.neardup_losers(corpus, jaccard_threshold=0.5).select(
+    dup_drop = D.neardup_losers(corpus).select(
         F.col("doc_id").alias("id")
     )
     deduped = corpus.join(
@@ -5037,23 +5031,9 @@ def q_semdedup(spark, sf_dir):
     oracle's all-pairs-within-cell reach CTE; the scale path is the
     same operator unbounded with k sized to the corpus.
 
-    Certified on the PRODUCTION combo (r8, VERDICT r7 #5):
-    the exact-vector collapse with ``max_cell=256`` — the 23x
-    configuration the 50x replica measured.  At certification scale no cell exceeds the
-    cap and the exact-vector collapse is output-equivalent by
-    construction, so the oracle is unchanged and the hash compare
-    pins BOTH facts (equivalence is also pytested directly).
-
-    r9 (VERDICT r8 #2): the collapse is now gated on a build-time
-    duplicate-ratio probe (similarity._exact_dup_probe) — on this
-    dup-free certification data the gate disengages and the timed
-    plan IS the plain plan (work-proportional: the r8 form paid the
-    fingerprint groupBy + expansion joins here for zero collapsed
-    rows, doubling the bench wall); on the duplicate-heavy 50x
-    replica the gate engages and the collapse runs exactly as
-    certified in r8.  Both sides of the gate are oracle-identical,
-    so this certification pins the disengaged path and the pytest
-    equivalence suite pins the engaged one."""
+    Certified with ``max_cell=256`` (r8, VERDICT r7 #5), the
+    configuration the 50x replica measured.  At certification scale
+    no cell exceeds the cap, so the oracle is the uncapped form."""
     from real_timetransactionaldatalakehouse_spark.operators import similarity as S
 
     return S.semantic_dedup(
@@ -5499,54 +5479,8 @@ def q_dedup_substring(spark, sf_dir):
 # Driver contract surface
 # =====================================================================
 
-# The driver certifies the FIRST 50 entries of queries() (r1/r2 evidence:
-# CORRECTNESS_r0{1,2}.json each hold exactly the first 50 registered names).
-# Registration order in this file is didactic (SURVEY section order), so we
-# re-rank here.
-#
-# ROTATION RULE (standing, from VERDICT r5 ask #9): once a round's window
-# is fixed (the round's CORRECTNESS_r*.json lands), no new query may enter
-# queries() and no certified query's implementation or oracle may change
-# UNLESS its name is placed at the head of the NEXT round's _CHECK_FIRST.
-# Every name rotating out must already hold a hash-green driver row from a
-# past round AND pass the sf0.001+sf0.01 pytest parity sweep.
-#
-# Round-12 window (VERDICT r11 #1, executed exactly as the r11 ledger
-# reserved it).  Head slots 1-2: the two r11-staged queries, newly
-# registered this round (q_split_assign_safe, q_dedup_substring — the
-# rotation rule's new-query head requirement; both were parity-
-# certified at sf0.001+sf0.01 throughout r11 via
-# tests/test_oracle_parity.py).  Then the 5 r8 greens at the 4-round
-# freshness bound (q_snapshot_diff q_text_tokens_bpe
-# q_trending_velocity q_ts_diff q_union_all — they MUST appear this
-# round), then the 43 OLDEST of the 45 r9-fresh greens (within an
-# equally-aged cohort "oldest" is alphabetical order — the standing
-# deterministic tiebreak since the r10 window).
-#
-# r12 changes to certified queries, all rotation-legal:
-#   - q_table_stats / q_sorted_write / q_bucket_pruned_lookup
-#     (rows-only summaries, r10 cohort) convert from boolean-column
-#     to row-dropping form per VERDICT r11 #6; they take the r13
-#     head slots reserved below.
-#   - Everything else was net-new surface (semantic_dedup
-#     validate=) that is opt-in / default-off, with certified
-#     defaults pytest-pinned unchanged.
-#
-# SLOT BUDGET after r12: freshness ledger reads 2 r9 (q_window_rank_stats
-# q_zscore_norm — displaced here, bound r13, MUST head r13), 47 r10
-# (bound r14; 3 of them — the changed rows-only summaries — MUST also
-# head r13 per the rotation rule), 50 r11 (bound r15), 50 r12 + the 3
-# changed r10 summaries certified rows-only this round = 152 total.
-# r13 window therefore = 2 displaced r9 + the 3 changed r10 summaries
-# + 7 slots reserved for new queries that were never registered (the
-# rotation ended with r14; they were deleted) + the 38 oldest
-# unchanged r10 greens; 9 youngest r10 slide to r14 (legal: r10's
-# bound is r14).  The cascade stays within bounds
-# through r15: r14 = remaining r10 + oldest r11, r15 = remaining r11
-# + oldest r12.
-# The sf0.001+sf0.01 pytest parity sweep (tests/test_oracle_parity.py)
-# remains the backstop for everything outside the window; the
-# PARITY_r*.json files are the full-registry artifacts of past rounds.
+# The driver certifies the FIRST 50 entries of queries(), so this list
+# picks them; the rest follow in registration order (SURVEY order).
 _CHECK_FIRST: list[str] = [
     # -- the 2 newly registered queries (rotation-rule head slots)
     "q_split_assign_safe",
@@ -5602,32 +5536,6 @@ _CHECK_FIRST: list[str] = [
     "q_window_lead",
     "q_window_range_frame",
 ]
-# r13 rotation queue (reserved now, FULL LIST — derived from
-# registry minus the r12/r11 windows, verified 2+3+7+38 = 50):
-# head slots in order =
-#   2 displaced r9 greens at the bound:
-#     q_window_rank_stats q_zscore_norm
-#   3 r12-changed rows-only summaries (row-dropping conversion,
-#   VERDICT r11 #6):
-#     q_table_stats q_sorted_write q_bucket_pruned_lookup
-#   7 slots for new queries (never registered; deleted)
-# then the 38 oldest r10 greens (alphabetical within the cohort):
-#     q_agg_binned_heatmap q_agg_conditional_counts q_agg_count_by_key
-#     q_agg_global q_agg_max_ts q_agg_percentile q_agg_sketches
-#     q_array_explode q_balance_cap q_chunk_documents q_coalesce
-#     q_cohort_retention q_corpus_mix q_corpus_pipeline q_cube
-#     q_embed_project q_filter_eq q_join_asof q_join_asof_nearest
-#     q_join_asof_tolerance q_join_interval q_lm_score
-#     q_neardup_clusters q_neardup_cross_corpus q_neardup_free_corpus
-#     q_neardup_minhash q_neardup_verified q_resample_fill
-#     q_sample_weighted q_scd2_history q_scd2_pointlookup
-#     q_search_ranked q_semantic_decontaminate
-#     q_semantic_topk_contaminants q_sessionize_lag q_shard_layout
-#     q_simhash_neardup q_snapshot_lifecycle
-# 9 youngest r10 slide to r14 (legal: r10's bound is r14):
-#     q_spike_detect q_split_leakage q_stratified_sample q_text_fingerprint
-#     q_text_redact q_text_repetition q_text_winnow q_trend_slope
-#     q_vocab_coverage
 
 
 def _ranked(names: dict[str, object]) -> list[str]:

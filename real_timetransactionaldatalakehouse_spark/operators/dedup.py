@@ -95,10 +95,10 @@ def exact_dedup(
     )
 
 
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Sliding word n-grams as strings, per row (no explode).
+def word_shingles(text_col: str) -> Column:
+    """Sliding word 3-grams as strings, per row (no explode).
 
-    Built by zipping ``n`` SHIFTED views of the token array: every
+    Built by zipping 3 SHIFTED views of the token array: every
     shifted view is a higher-order-function ARGUMENT, evaluated once
     per row — unlike the prior index-transform form, whose lambda body
     held the unbound token split and re-evaluated it at every position
@@ -108,6 +108,7 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     ``zip_with`` pads past the shorter side, and the final ``slice``
     restores the ``max(L - n + 1, 1)`` shingle count (short documents
     emit their whole token array as one shingle, as before)."""
+    n = 3
     t = tokens(text_col)
     sh = t
     for j in range(1, n):
@@ -285,9 +286,6 @@ def minhash_neardup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
     with_same_fp: bool = False,
 ) -> DataFrame:
@@ -308,13 +306,10 @@ def minhash_neardup_pairs(
     backstop that keeps one viral boilerplate from serializing a
     quadratic partition through a single executor.
     """
-    banded = minhash_banded(
-        df, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_n=shingle_n, include_fp=True,
-    )
+    banded = minhash_banded(df, text_col, id_col, include_fp=True)
     # Exact-duplicate shortcut: identical texts carry identical
     # signatures, so their agreement estimate is 1.0 by construction —
-    # emit the literal instead of comparing 2*num_hashes array
+    # emit the literal instead of comparing 2*32 signature array
     # elements.  On duplicate-heavy crawls (the replica's 50-copy
     # cliques, real boilerplate) the same-fp pairs DOMINATE the bucket
     # pair stream, and this turns their per-pair cost into a long
@@ -322,7 +317,7 @@ def minhash_neardup_pairs(
     # the same engine-internal-key argument as the gram pipelines.
     same_fp = F.col("p.a.fp") == F.col("p.b.fp")
     est = F.when(same_fp, F.lit(1.0)).otherwise(
-        _sig_agreement_est(F.col("p.a.sig"), F.col("p.b.sig"), num_hashes)
+        _sig_agreement_est(F.col("p.a.sig"), F.col("p.b.sig"), 32)
     )
     # Bucket-local pair generation (see _bucket_pairs): ONE shuffle
     # groups each band bucket's members, the cap drops degenerate
@@ -745,23 +740,21 @@ def minhash_verified_neardup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    jaccard_threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """X2 end-to-end: MinHash-banded candidate generation with a
-    loosened estimate gate, then EXACT shingle-set Jaccard verification
-    at the real threshold — the standard candidates-then-verify shape.
+    loosened estimate gate (0.3), then EXACT shingle-set Jaccard
+    verification at the real threshold (0.5) — the standard
+    candidates-then-verify shape.
 
-    The verify runs in the SAME space the estimator targets (word
-    ``shingle_n``-gram sets): a MinHash signature estimates shingle
-    Jaccard, so verifying token 1-gram sets would gate candidates
-    against a similarity the estimator never measured.  The exact
+    The verify runs in the SAME space the estimator targets (the word
+    3-gram sets :func:`minhash_banded` hashes): a MinHash signature
+    estimates shingle Jaccard, so verifying token 1-gram sets would
+    gate candidates against a similarity the estimator never
+    measured.  The exact
     Jaccard only ever runs on the candidate pairs (linear in
     candidates, joined back to shingle sets by id — two key shuffles);
     the estimate gate sits 0.2 below the verify threshold so estimator
-    variance (~1/sqrt(num_hashes)) does not drop true pairs.
+    variance (~1/sqrt(32 hashes)) does not drop true pairs.
 
     Exact-duplicate pairs (``same_fp`` from the candidate stage) skip
     the shingle join entirely: identical texts have identical distinct
@@ -772,10 +765,8 @@ def minhash_verified_neardup_pairs(
     O(m^2) of them), so the verify stage's array traffic drops to the
     genuinely-fuzzy remainder.
     """
-    est_gate = max(jaccard_threshold - 0.2, 0.0)
     cand = minhash_neardup_pairs(
-        df, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_n=shingle_n, jaccard_threshold=est_gate, with_same_fp=True,
+        df, text_col, id_col, jaccard_threshold=0.3, with_same_fp=True,
     ).select("id_a", "id_b", "same_fp")
     # SINGLE-PASS verify (r6): explode each candidate pair to its two
     # endpoint ids, join the shingle table ONCE, and regroup the pair
@@ -811,7 +802,7 @@ def minhash_verified_neardup_pairs(
     toks = fan_out(df).select(
         F.col(id_col).alias("id"),
         F.coalesce(
-            F.array_distinct(word_shingles(text_col, shingle_n)),
+            F.array_distinct(word_shingles(text_col)),
             F.array().cast("array<string>"),
         ).alias("tok"),
     )
@@ -842,7 +833,7 @@ def minhash_verified_neardup_pairs(
             .otherwise(inter.cast("double") / union.cast("double"))
             .alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
@@ -971,7 +962,7 @@ def verified_neardup_clusters(df: DataFrame) -> DataFrame:
     carries (fp/id, counts) rows; the anti-join side of the expansion
     is |distinct-texts|-sized.
     """
-    memb, comp = _collapsed_graph(df, "text", "doc_id", 0.5)
+    memb, comp = _collapsed_graph(df, "text", "doc_id")
     groups = memb.filter(F.col("id") == F.col("__rep")).select("__rep", "__n")
     sizes = (
         comp.join(groups, "__rep")
@@ -1004,8 +995,6 @@ def _collapsed_graph(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    jaccard_threshold: float,
-    **minhash_kwargs,
 ):
     """Shared build for the cluster-family terminals: exact-dup
     collapse, banded verified pairs over the representatives, hash-min
@@ -1050,10 +1039,7 @@ def _collapsed_graph(
         .select(F.col("id").alias(id_col)),
         id_col, "left_semi",
     )
-    pairs = minhash_verified_neardup_pairs(
-        reps, text_col, id_col, jaccard_threshold=jaccard_threshold,
-        **minhash_kwargs,
-    )
+    pairs = minhash_verified_neardup_pairs(reps, text_col, id_col)
     comp = neardup_clusters(pairs.select("id_a", "id_b")).select(
         F.col("id").alias("__rep"), "cluster_id"
     )
@@ -1064,8 +1050,6 @@ def neardup_losers(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    jaccard_threshold: float = 0.5,
-    **minhash_kwargs,
 ) -> DataFrame:
     """The drop SET of :func:`drop_near_duplicates`: every non-keeper
     member of each near-dup cluster, as a single ``(id_col)`` frame.
@@ -1082,9 +1066,7 @@ def neardup_losers(
     is row-identical to
     ``verified_neardup_clusters(...).filter(id != cluster_id)``.
     """
-    memb, comp = _collapsed_graph(
-        df, text_col, id_col, jaccard_threshold, **minhash_kwargs
-    )
+    memb, comp = _collapsed_graph(df, text_col, id_col)
     losers = (
         memb.join(comp, "__rep", "left")
         .filter(
@@ -1109,7 +1091,7 @@ def neardup_cluster_keys(df: DataFrame) -> DataFrame:
     IS the cluster id the full table would report; singletons key on
     themselves, the same value the coalesce fallback would produce).
     """
-    memb, comp = _collapsed_graph(df, "text", "doc_id", 0.5)
+    memb, comp = _collapsed_graph(df, "text", "doc_id")
     keys = memb.join(comp, "__rep", "left").select(
         F.col("id").alias("doc_id"),
         F.coalesce(F.col("cluster_id"), F.col("__rep")).alias("__cluster_key"),
@@ -1121,8 +1103,6 @@ def drop_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    jaccard_threshold: float = 0.5,
-    **minhash_kwargs,
 ) -> DataFrame:
     """Corpus-curation terminal for X2: remove every non-keeper member
     of each near-dup cluster (keeper = the component's min id), so
@@ -1143,10 +1123,7 @@ def drop_near_duplicates(
     r14: the drop set comes from :func:`neardup_losers` (row-identical
     to filtering the full cluster table) so the plan never computes
     the cluster-size aggregation this terminal ignores."""
-    losers = neardup_losers(
-        df, text_col, id_col, jaccard_threshold=jaccard_threshold,
-        **minhash_kwargs,
-    )
+    losers = neardup_losers(df, text_col, id_col)
     return _attach_cached(
         df.join(losers, id_col, "left_anti"),
         getattr(losers, "_cached_deps", []),

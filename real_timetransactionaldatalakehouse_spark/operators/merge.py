@@ -44,9 +44,17 @@ def merge_upsert(
     column-wise ``coalesce(source.x, target.x)``,
     ``streaming_job.py:141-144``).  A column the updates lack keeps
     its target value.
+
+    With ``order_col``, two different updates of one key at the same
+    ``order_col`` value are ordered by the remaining update columns,
+    in column order, so the winner does not depend on the input order
+    and re-applying a batch is a no-op.
     """
     if order_col is not None:
-        updates = dedup_latest(updates, key_cols, order_col)
+        updates = dedup_latest(
+            updates, key_cols, order_col,
+            [c for c in updates.columns if c not in key_cols and c != order_col],
+        )
 
     data_cols = [c for c in target.columns if c not in key_cols]
     t = target.select(

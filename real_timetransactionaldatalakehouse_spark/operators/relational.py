@@ -88,16 +88,14 @@ def sessionize(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
 
 
 def _partition_offset_expr(offsets: list[tuple[int, int]]):
-    """Per-bucket offsets as an inlined CASE expression, or ``None``
-    when the caller should broadcast-join an offset table instead.
+    """Per-bucket offsets as an inlined CASE expression.
 
     The two-phase prefix-sum operators add each bucket's offset to
-    its local running values.  For metadata-sized bucket counts the
-    offsets inline as literals — measured 4x cheaper than a broadcast
-    hash join at bench scale (the join rebuilds its broadcast exchange
-    every execution, ~0.25 s/run for a 32-row table).  Past 256
-    offsets the expression would bloat the plan, so the join path
-    takes over.
+    its local running values.  The bucket count is at most
+    ``_MAX_BUCKETS`` (256), so the offsets always inline as literals —
+    measured 4x cheaper than a broadcast hash join at bench scale (the
+    join rebuilds its broadcast exchange every execution, ~0.25 s/run
+    for a 32-row table).
 
     The CASE fails LOUDLY on a bucket id absent from the offsets pass:
     with literal-boundary bucketing every row's bucket is in
@@ -105,10 +103,6 @@ def _partition_offset_expr(offsets: list[tuple[int, int]]):
     so the otherwise-branch is unreachable — the raise is a tripwire
     for an impossible state (a bug in the bucket expression), never a
     runtime mode."""
-    if len(offsets) > 256:  # inline at most 256 offsets
-        return None
-    if not offsets:
-        return F.lit(0).cast("long")
     e = F.when(F.col("__b") == offsets[0][0], F.lit(offsets[0][1]))
     for pid, off in offsets[1:]:
         e = e.when(F.col("__b") == pid, F.lit(off))
@@ -139,8 +133,8 @@ def _partition_offset_expr(offsets: list[tuple[int, int]]):
 # but it materializes the frame to executor disk and times the pin
 # into every build).  Literal boundaries dissolve the problem: sample
 # order-key boundaries ONCE at plan build, inline them as literals,
-# and compute each row's bucket with a lexicographic comparator
-# expression.  Bucket counts, offsets, and per-row positions are then
+# and compute each row's bucket with a struct comparator expression.
+# Bucket counts, offsets, and per-row positions are then
 # layout-independent — any re-execution, any partitioning, any cache
 # state produces identical results — so a plain (releasable) persist
 # is a pure optimization again, not a correctness pin.
@@ -148,14 +142,16 @@ def _partition_offset_expr(offsets: list[tuple[int, int]]):
 # Cost model at 100 TB: the comparator is boundaries x fields inline
 # comparisons per row (whole-stage codegen, no shuffle); the window
 # exchange hashes on the bucket id exactly where the range exchange
-# used to be.  Bucket count is clamped to _MAX_BUCKETS: beyond that
-# the linear comparator stops paying for itself and each bucket's
-# window sort (spillable) carries data/_MAX_BUCKETS rows — the
-# documented trade; a production deployment that needs 10^5 buckets
-# would binary-search a broadcast boundary table JVM-side or bucket
-# the table by time at write.
+# used to be.  Bucket count is clamped to _MAX_BUCKETS, the most
+# offsets that inline as one CASE expression: beyond that the linear
+# comparator stops paying for itself and each bucket's window sort
+# (spillable) carries data/_MAX_BUCKETS rows — the documented trade; a
+# production deployment that needs 10^5 buckets would binary-search a
+# broadcast boundary table JVM-side or bucket the table by time at
+# write.  The order is ascending with nulls first in every key; a
+# caller that wants a descending key negates it.
 
-_MAX_BUCKETS = 512
+_MAX_BUCKETS = 256
 
 # Adaptive bucket floor: below this many rows per bucket the
 # comparator/optimizer overhead of extra boundaries outweighs the
@@ -165,112 +161,27 @@ _MAX_BUCKETS = 512
 _MIN_BUCKET_ROWS = 32768
 
 
-def _order_specs(order_cols) -> list[tuple[Column, str]]:
-    """Normalize order specs to (expr, 'asc'|'desc') pairs.  Accepts
-    column names, plain Column expressions (ascending), or
-    ``(name_or_column, 'asc'|'desc')`` tuples.  Sort-order Columns
-    (``F.col(c).desc()``) are NOT accepted — the direction must come
-    via the tuple form so the comparator can see it."""
-    specs: list[tuple[Column, str]] = []
-    for c in order_cols:
-        if isinstance(c, tuple):
-            col, d = c
-            col = F.col(col) if isinstance(col, str) else col
-            d = str(d).lower()
-            if d not in ("asc", "desc"):
-                raise ValueError(f"order direction must be asc|desc, got {d!r}")
-            specs.append((col, d))
-        elif isinstance(c, str):
-            specs.append((F.col(c), "asc"))
-        else:
-            specs.append((c, "asc"))
-    return specs
-
-
-def _lex_lt(specs: list[tuple[Column, str]], bvals: tuple) -> Column:
-    """Row strictly PRECEDES the boundary tuple in the total order.
-    Null semantics match Spark's defaults: asc = nulls first, desc =
-    nulls last — so the bucket assignment is monotone for any data."""
-    expr: Column = F.lit(False)
-    for (c, d), b in reversed(list(zip(specs, bvals))):
-        if d == "asc":
-            if b is None:
-                lt = F.lit(False)          # nothing precedes null (nulls first)
-                eq = c.isNull()
-            else:
-                lt = c.isNull() | (c < F.lit(b))
-                eq = c.eqNullSafe(F.lit(b))
-        else:
-            if b is None:
-                lt = c.isNotNull()         # non-null precedes null (nulls last)
-                eq = c.isNull()
-            else:
-                lt = c.isNotNull() & (c > F.lit(b))
-                eq = c.eqNullSafe(F.lit(b))
-        expr = lt | (eq & expr)
-    return expr
-
-
 def _bucket_expr(
-    specs: list[tuple[Column, str]],
+    cols: list[Column],
     boundaries: list[tuple],
-    dtypes: list[str] | None = None,
+    dtypes: list[str],
 ) -> Column:
     """Bucket id in [0, len(boundaries)] — the count of boundary
     tuples at or before the row.  Monotone non-decreasing in the total
     order by construction, and a pure function of the row (literal
     boundaries), so re-executions agree regardless of partitioning.
-
-    All-ascending specs with known field types use ONE struct
-    comparison per boundary (Spark's struct ordering is exactly asc
-    nulls-first per field) — ~4 plan nodes per boundary instead of the
-    ~10-node guarded lexicographic expansion, which matters because
-    the optimizer walks this expression on every execution.  Any desc
-    field falls back to the guarded form (struct ordering cannot
-    express per-field direction)."""
-    if dtypes is not None and all(d == "asc" for _c, d in specs):
-        key = F.struct(*[c for c, _d in specs])
-        e: Column = F.lit(0)
-        for b in boundaries:
-            blit = F.struct(
-                *[F.lit(v).cast(t) for v, t in zip(b, dtypes)]
-            )
-            e = e + (~(key < blit)).cast("int")
-        return e.cast("int")
-    e = F.lit(0)
+    ONE struct comparison per boundary: Spark's struct ordering is
+    exactly asc nulls-first per field."""
+    key = F.struct(*cols)
+    e: Column = F.lit(0)
     for b in boundaries:
-        e = e + (~_lex_lt(specs, b)).cast("int")
+        blit = F.struct(*[F.lit(v).cast(t) for v, t in zip(b, dtypes)])
+        e = e + (~(key < blit)).cast("int")
     return e.cast("int")
-
-
-def _boundary_cmp(dirs: list[str]):
-    """Python-side comparator matching :func:`_lex_lt`'s order (asc
-    nulls first, desc nulls last) for sorting the boundary sample."""
-    def cmp(a: tuple, b: tuple) -> int:
-        for av, bv, d in zip(a, b, dirs):
-            if av is None and bv is None:
-                continue
-            if d == "asc":
-                if av is None:
-                    return -1
-                if bv is None:
-                    return 1
-                if av != bv:
-                    return -1 if av < bv else 1
-            else:
-                if av is None:
-                    return 1
-                if bv is None:
-                    return -1
-                if av != bv:
-                    return -1 if av > bv else 1
-        return 0
-    return cmp
 
 
 def _sample_boundaries(
     keyed: DataFrame,
-    dirs: list[str],
     n: int,
     total: int,
 ) -> list[tuple]:
@@ -279,19 +190,18 @@ def _sample_boundaries(
     steers LOAD BALANCE — correctness never depends on which rows were
     sampled, because the boundaries are inlined as literals before any
     offset is computed.  Consecutive duplicate boundaries are dropped
-    (they would only create empty buckets and bloat the comparator)."""
-    import functools
-
-    if n <= 1 or total <= 1:
-        return []
+    (they would only create empty buckets and bloat the comparator).
+    Callers take this path only for ``n > 1`` buckets over
+    ``total > 1`` rows."""
     target = n * 64
     frac = min(1.0, target / total)
     rows = keyed.sample(fraction=frac, seed=17).limit(2 * target).collect()
     if not rows:
         rows = keyed.limit(target).collect()
+    # the key order of _bucket_expr: ascending, nulls first
     keys = sorted(
         (tuple(r) for r in rows),
-        key=functools.cmp_to_key(_boundary_cmp(dirs)),
+        key=lambda t: tuple((v is not None, v) for v in t),
     )
     m = len(keys)
     out: list[tuple] = []
@@ -304,7 +214,7 @@ def _sample_boundaries(
 
 def _bucketed_layout(
     df: DataFrame,
-    specs: list[tuple[Column, str]],
+    cols: list[Column],
     aggs: list[Column],
     extra_cols: list[Column] | None = None,
 ):
@@ -319,7 +229,7 @@ def _bucketed_layout(
     aggs = 3 cached reads), zero materialization of the full frame."""
     spark = df.sparkSession
     keyed = df.select(
-        *[c.alias(f"__k{i}") for i, (c, _d) in enumerate(specs)],
+        *[c.alias(f"__k{i}") for i, c in enumerate(cols)],
         *(extra_cols or []),
     ).persist()
     # job 1: ONE pass for the row count AND the global agg tuple — on
@@ -337,24 +247,19 @@ def _bucketed_layout(
     ))
     if n == 1 or total <= 1:
         return F.lit(0).cast("int"), {0: tuple(g)[1:]}, keyed
-    kspecs = [(F.col(f"__k{i}"), d) for i, (_c, d) in enumerate(specs)]
-    dirs = [d for _c, d in specs]
-    dtypes = [
-        keyed.schema[f"__k{i}"].dataType.simpleString()
-        for i in range(len(specs))
-    ]
-    key_only = keyed.select(*[f"__k{i}" for i in range(len(specs))])
-    boundaries = _sample_boundaries(key_only, dirs, n, total)  # job 2
-    bexpr = _bucket_expr(kspecs, boundaries, dtypes)
+    knames = [f"__k{i}" for i in range(len(cols))]
+    dtypes = [keyed.schema[k].dataType.simpleString() for k in knames]
+    boundaries = _sample_boundaries(keyed.select(*knames), n, total)  # job 2
+    bexpr = _bucket_expr([F.col(k) for k in knames], boundaries, dtypes)
     n_buckets = len(boundaries) + 1
     rows = (
         keyed.groupBy(bexpr.alias("__b")).agg(*aggs).collect()  # job 3
     )
     per_bucket: dict[int, tuple] = {r["__b"]: tuple(r)[1:] for r in rows}
     full = {b: per_bucket.get(b) for b in range(n_buckets)}
-    # re-express the bucket over the ORIGINAL spec expressions so the
+    # re-express the bucket over the ORIGINAL key expressions so the
     # caller can apply it to the full-width frame
-    return _bucket_expr(specs, boundaries, dtypes), full, keyed
+    return _bucket_expr(cols, boundaries, dtypes), full, keyed
 
 
 def global_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
@@ -375,29 +280,20 @@ def global_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
     window's hash partition on the bucket id; the build passes run on
     a persisted NARROW key projection, released before return.
     """
-    spark = df.sparkSession
-    specs = _order_specs(order_cols)
+    cols = [F.col(c) for c in order_cols]
     bexpr, per_bucket, keyed = _bucketed_layout(
-        df, specs, [F.count(F.lit(1)).alias("cnt")]
+        df, cols, [F.count(F.lit(1)).alias("cnt")]
     )
     keyed.unpersist()  # build passes done; the output plan reads df itself
     offsets, acc = [], 0
     for b in sorted(per_bucket):
         offsets.append((b, acc))
         acc += int(per_bucket[b][0]) if per_bucket[b] else 0
-    order_exprs = [c.asc() if d == "asc" else c.desc() for c, d in specs]
-    w = Window.partitionBy("__b").orderBy(*order_exprs)
-    off_expr = _partition_offset_expr(offsets)
-    out = df.withColumn("__b", bexpr)
-    if off_expr is None:
-        off_df = F.broadcast(
-            spark.createDataFrame(offsets, "__b int, __offset long")
-        )
-        out = out.join(off_df, "__b")
-        off_expr = F.col("__offset")
+    w = Window.partitionBy("__b").orderBy(*cols)
     out = (
-        out.withColumn("pos", F.row_number().over(w) + off_expr)
-        .drop("__b", "__offset")
+        df.withColumn("__b", bexpr)
+        .withColumn("pos", F.row_number().over(w) + _partition_offset_expr(offsets))
+        .drop("__b")
     )
     # plan-contract marker only: the boundary/offset collects are real
     # data passes at PLAN BUILD, but the prebuilt plan re-executes its
@@ -823,7 +719,6 @@ def grouped_percentiles_exact(
     # collected below stay valid under any re-execution or cache drop
     # — no pinned layout needed (the persist is an optimization; the
     # offset pass and the output pass both read the collapsed frame)
-    specs = _order_specs([group_col, value_col])
     # job 1: per-group row counts + value counts in ONE pass (also the
     # cache-populating action); the distinct-pair total drives the
     # adaptive bucket count, and on the single-bucket path the same
@@ -848,8 +743,8 @@ def grouped_percentiles_exact(
     else:
         keyed = cnt.select(g.alias("__k0"), v.alias("__k1"))
         dtypes = [gtype, df.schema[value_col].dataType.simpleString()]
-        boundaries = _sample_boundaries(keyed, ["asc", "asc"], n, total)
-        bexpr = _bucket_expr(specs, boundaries, dtypes)
+        boundaries = _sample_boundaries(keyed, n, total)
+        bexpr = _bucket_expr([g, v], boundaries, dtypes)
         # per-(bucket, group) totals: |groups| x |buckets| rows
         totals = sorted(
             ((r["__b"], r[group_col], r["t"]) for r in

@@ -22,7 +22,7 @@ operator here has an exact ANSI-SQL / DuckDB twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .relational import topk_per_group
@@ -77,7 +77,7 @@ def hash_split(
 def stratified_sample(
     df: DataFrame,
     strata_cols: list[str],
-    rates: dict[tuple, float] | float,
+    rates: dict[tuple, float],
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a hash-chosen
     fraction of rows per stratum (e.g. cap overrepresented languages
@@ -86,32 +86,28 @@ def stratified_sample(
     re-running any partition reproduces the identical sample, and a
     row's fate never depends on partition layout or visit order
     (``df.sample`` cannot promise either).  ``rates`` maps a stratum
-    key tuple to its keep-rate, or is a single float for all strata.
-    Map-only; no shuffle."""
+    key tuple to its keep-rate; other strata keep every row.  Map-only;
+    no shuffle."""
     bucket = split_bucket("doc_id", "sample-v1")
-    if isinstance(rates, float):
-        keep = bucket < int(round(rates * 1000))
-    else:
-        keep = None
-        for key, rate in rates.items():
-            key = key if isinstance(key, tuple) else (key,)
-            if len(key) != len(strata_cols):
-                # zip() would silently truncate: a key one element
-                # longer than strata_cols applies its rate to the
-                # whole prefix stratum — deterministic deletion of the
-                # WRONG strata (r9 review fix: hard error instead)
-                raise ValueError(
-                    f"rates key {key!r} has {len(key)} element(s) but "
-                    f"strata_cols has {len(strata_cols)}: {strata_cols}"
-                )
-            match = None
-            for c, v in zip(strata_cols, key):
-                cond = F.col(c) == F.lit(v)
-                match = cond if match is None else match & cond
-            thresh = bucket < int(round(rate * 1000))
-            keep = F.when(match, thresh) if keep is None else keep.when(match, thresh)
-        keep = keep.otherwise(F.lit(True))
-    return df.filter(keep)
+    keep = None
+    for key, rate in rates.items():
+        key = key if isinstance(key, tuple) else (key,)
+        if len(key) != len(strata_cols):
+            # zip() would silently truncate: a key one element
+            # longer than strata_cols applies its rate to the
+            # whole prefix stratum — deterministic deletion of the
+            # WRONG strata (r9 review fix: hard error instead)
+            raise ValueError(
+                f"rates key {key!r} has {len(key)} element(s) but "
+                f"strata_cols has {len(strata_cols)}: {strata_cols}"
+            )
+        match = None
+        for c, v in zip(strata_cols, key):
+            cond = F.col(c) == F.lit(v)
+            match = cond if match is None else match & cond
+        thresh = bucket < int(round(rate * 1000))
+        keep = F.when(match, thresh) if keep is None else keep.when(match, thresh)
+    return df.filter(keep.otherwise(F.lit(True)))
 
 
 def mix_corpus(
@@ -333,19 +329,12 @@ def pack_sequences(
     from .dedup import _attach_cached
     from .text import tokens
 
-    spark = df.sparkSession
-    order = ["doc_id"]
     n_tok = F.size(tokens("text")).cast("long")
     base = df.select(F.col("doc_id"), n_tok.alias("n_tokens")).persist()
-    from .relational import (
-        _bucketed_layout,
-        _order_specs,
-        _partition_offset_expr,
-    )
+    from .relational import _bucketed_layout, _partition_offset_expr
 
-    specs = _order_specs(order)
     bexpr, per_bucket, keyed = _bucketed_layout(
-        base, specs, [F.sum("__t").alias("t")],
+        base, [F.col("doc_id")], [F.sum("__t").alias("t")],
         extra_cols=[F.col("n_tokens").alias("__t")],
     )
     keyed.unpersist()
@@ -354,27 +343,18 @@ def pack_sequences(
         offsets.append((b, acc))
         if per_bucket[b] is not None and per_bucket[b][0] is not None:
             acc += int(per_bucket[b][0])
-    cols = [F.col(c) for c in order]
-    w = Window.partitionBy("__b").orderBy(*cols).rowsBetween(
+    w = Window.partitionBy("__b").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    # metadata-sized bucket counts inline the offsets as literals
-    # (4x cheaper than re-broadcasting a tiny join table every
-    # execution); cluster-scale bucket counts broadcast-join
-    off_expr = _partition_offset_expr(offsets)
-    joined = base.withColumn("__b", bexpr)
-    if off_expr is None:
-        off_df = F.broadcast(
-            spark.createDataFrame(offsets, "__b int, __tok_offset long")
-        )
-        joined = joined.join(off_df, "__b")
-        off_expr = F.col("__tok_offset")
-    start = F.sum("n_tokens").over(w) + off_expr - F.col("n_tokens")
+    start = (
+        F.sum("n_tokens").over(w) + _partition_offset_expr(offsets)
+        - F.col("n_tokens")
+    )
     out = (
-        joined
+        base.withColumn("__b", bexpr)
         .withColumn("pack_id", F.floor(start / F.lit(budget)))
         .withColumn("pack_pos", start % F.lit(budget))
-        .drop("__b", "__tok_offset")
+        .drop("__b")
     )
     from .dedup import _attach_layout
 
@@ -422,7 +402,7 @@ def contamination_report(
 def _global_cumsum(
     df: DataFrame,
     value_col: str,
-    order_cols: list,
+    order_cols: list[Column],
 ):
     """Global 1-based position and INCLUSIVE running sum of
     ``value_col`` over a total order, without ever funneling the data
@@ -433,10 +413,9 @@ def _global_cumsum(
     two-phase prefix sum as :func:`relational.global_rank` and
     :func:`pack_sequences`.
 
-    ``order_cols`` may mix column names, plain Column expressions
-    (ascending), and ``(name_or_column, 'asc'|'desc')`` tuples, and
-    must form a TOTAL order (unique tiebreak) so positions are
-    well-defined.
+    ``order_cols`` are Column expressions, each ascending with nulls
+    first (negate a key to descend), and must form a TOTAL order
+    (unique tiebreak) so positions are well-defined.
 
     Returns ``(out, total_rows, total_sum)``; ``out`` carries the
     input columns plus ``__pos`` and ``__cum``.  Bucketing is by
@@ -449,18 +428,12 @@ def _global_cumsum(
     """
     from pyspark.sql import Window
 
-    from .relational import (
-        _bucketed_layout,
-        _order_specs,
-        _partition_offset_expr,
-    )
+    from .relational import _bucketed_layout, _partition_offset_expr
 
-    spark = df.sparkSession
-    specs = _order_specs(order_cols)
     src = df.persist()
     bexpr, per_bucket, keyed = _bucketed_layout(
         src,
-        specs,
+        order_cols,
         [F.count(F.lit(1)).alias("c"), F.sum("__v").alias("s")],
         extra_cols=[F.col(value_col).cast("long").alias("__v")],
     )
@@ -478,27 +451,20 @@ def _global_cumsum(
             # ValueError instead of int(None) (r9 review fix)
             rows_acc += int(per_bucket[b][0] or 0)
             total_sum += int(per_bucket[b][1] or 0)
-    order_exprs = [c.asc() if d == "asc" else c.desc() for c, d in specs]
-    w = Window.partitionBy("__b").orderBy(*order_exprs).rowsBetween(
+    w = Window.partitionBy("__b").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    row_off = _partition_offset_expr(row_offsets)
-    sum_off = _partition_offset_expr(sum_offsets)
-    joined = src.withColumn("__b", bexpr)
-    if row_off is None:
-        off_df = F.broadcast(spark.createDataFrame(
-            [(p, r, s[1]) for (p, r), s in zip(row_offsets, sum_offsets)],
-            "__b int, __row_off long, __sum_off long",
-        ))
-        joined = joined.join(off_df, "__b")
-        row_off, sum_off = F.col("__row_off"), F.col("__sum_off")
     out = (
-        joined
-        .withColumn("__pos", F.row_number().over(w) + row_off)
+        src.withColumn("__b", bexpr)
         .withColumn(
-            "__cum", F.sum(F.col(value_col).cast("long")).over(w) + sum_off
+            "__pos", F.row_number().over(w) + _partition_offset_expr(row_offsets)
         )
-        .drop("__b", "__row_off", "__sum_off")
+        .withColumn(
+            "__cum",
+            F.sum(F.col(value_col).cast("long")).over(w)
+            + _partition_offset_expr(sum_offsets),
+        )
+        .drop("__b")
     )
     from .dedup import _attach_cached, _attach_layout
 
@@ -537,31 +503,14 @@ def sample_systematic(
     against int64 overflow — at corpus scales beyond ~2^63/T tickets,
     switch the ticket arithmetic to DECIMAL(38,0).
     """
-    order = ["doc_id"]
     # r14 (optimization, guide §2.3/§6): _global_cumsum PERSISTS its
     # input and re-reads it per execution, so project down to the
-    # columns the ticket arithmetic actually reads (id, weight, order
-    # keys) BEFORE the persist — the bench plan showed the FULL
-    # documents row (text included) scanned from parquet and cached
-    # for a computation that consumes 16 bytes/row.  Only applied when
-    # every order spec is a plain name or (name, dir) tuple;
-    # expression specs may reference other columns, so they keep the
-    # caller's frame.
-    names: list[str] = []
-    prunable = True
-    for c in order:
-        if isinstance(c, str):
-            names.append(c)
-        elif isinstance(c, tuple) and isinstance(c[0], str):
-            names.append(c[0])
-        else:
-            prunable = False
-            break
-    if prunable:
-        keep = list(dict.fromkeys(["doc_id", weight_col, *names]))
-        df = df.select(*keep)
+    # columns the ticket arithmetic actually reads (id, weight) BEFORE
+    # the persist — the bench plan showed the FULL documents row (text
+    # included) scanned from parquet and cached for a computation that
+    # consumes 16 bytes/row
     cum_df, _, total = _global_cumsum(
-        df, weight_col, order
+        df.select("doc_id", weight_col), weight_col, [F.col("doc_id")]
     )
     if total <= 0:
         raise ValueError(f"total weight must be positive, got {total}")

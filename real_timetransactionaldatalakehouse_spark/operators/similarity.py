@@ -499,33 +499,6 @@ def embedding_neardup_pairs(
     )
 
 
-def _exact_dup_probe(df: DataFrame, vec_col: str) -> bool:
-    """Build-time duplicate-ratio probe gating the exact-duplicate
-    collapse (VERDICT r8 #2 — make the collapse WORK-PROPORTIONAL): ONE
-    agg job compares the row count against the distinct-fingerprint
-    count (the same seeded 128-bit xxhash64 pair the collapse itself
-    keys on) and returns whether ANY byte-identical vector group
-    exists.  On a dup-free corpus the collapse is the identity map but
-    still paid a full fingerprint groupBy plus two corpus-wide joins —
-    at bench sf0.1 that doubled q_semdedup's steady wall (1.444 s vs
-    0.70 s oracle) for zero collapsed rows; gated, the dup-free plan
-    IS the plain plan (bit-equal by construction: with no duplicate
-    groups every vector is its own representative).  The probe's one
-    narrow pass (two longs per row, map-side partial distinct) is the
-    price a duplicate-heavy corpus pays ON TOP of the collapse it
-    needs anyway — O(n) against the O(n log n + joins) it buys out of
-    on the dup-free side.  Deterministic (exact counts over the data),
-    so retry- and layout-stable; runs at plan-build time like the seed
-    sample and centroid collects (a metadata-sized one-row result)."""
-    n_all, n_fp = df.agg(
-        F.count(F.lit(1)),
-        F.count_distinct(
-            F.xxhash64(F.col(vec_col)), F.xxhash64(F.lit(1), F.col(vec_col))
-        ),
-    ).first()
-    return int(n_all) != int(n_fp)
-
-
 def embedding_neardup_pairs_lsh(
     df: DataFrame,
     max_bucket: int | None = None,
@@ -547,37 +520,6 @@ def embedding_neardup_pairs_lsh(
     exact-cosine verify — the fat form replicated every vector
     16 times through the band build and again through the
     dedup exchange.
-
-    The exact-duplicate collapse (r8) maps BYTE-IDENTICAL vectors
-    to their min-id representative before banding — the embedding
-    twin of :func:`semantic_dedup`'s collapse and
-    ``dedup.verified_neardup_clusters``' clique collapse.  On a
-    re-crawl/re-render-heavy corpus (or the 50x replica, where every
-    vector has 49 exact copies) the m-cliques of identical vectors
-    dominate the band table, the bucket self-join AND the verify
-    fold-cosines, and concentrate in single tasks (identical vectors
-    share EVERY bucket).  With ``max_bucket=None`` (the tested and
-    certified combination) the collapse is OUTPUT-EQUIVALENT, bit for
-    bit, to plain banding: copies share all band buckets, so (x, y)
-    co-buckets iff their reps do; every expanded pair's score is the
-    SAME fold expression over the same vector bytes (within-group
-    pairs score dot(v,v)/(n*n) — computed once per group — and
-    cross-group pairs inherit the rep pair's fold).  With
-    ``max_bucket`` SET the collapsed output is a SUPERSET of the
-    capped plain output, not bit-equal to it: the capped plain path
-    can scatter byte-identical vectors into different subcells (the
-    subcell hash keys on the id, which differs per copy) in every
-    table and drop those within-group pairs, while the collapse path
-    always emits them — strictly better recall, same bound on per-key
-    work.  The expansion joins are narrow (id, rep) rows; only the
-    output cardinality — which both forms share — is big.
-
-    r9: the collapse is GATED on a build-time duplicate-ratio probe
-    (:func:`_exact_dup_probe`, one narrow agg job): a dup-free corpus
-    skips the fingerprint groupBy and expansion joins entirely and
-    runs the plain banding (:func:`_lsh_pairs`), which is bit-equal
-    when no duplicate group exists.  Work done now tracks duplicates
-    present.
 
     ``max_bucket`` (r8) is the HOT-BUCKET backstop for densely
     clustered embedding spaces, where near-identical (but not
@@ -609,16 +551,15 @@ def embedding_neardup_pairs_lsh(
     :func:`valid_embeddings` at the gate — opt-in because the gate
     silently drops offending rows (see :func:`knn_bruteforce`).
 
-    **Construction-time (eager) jobs** — declaring this operator runs
-    up to TWO driver-side Spark jobs before any caller action, the
-    same accepted plan-build pattern as q_knn_ivf's centroids and
-    semantic_dedup's seeds: (1) the exact-duplicate probe, and (2) the
-    r13 verify-width sizing agg — one single-row aggregation over the
-    persisted band table (sum c*(c-1)/2 over bucket sizes) that prices
-    the candidate-pair volume so the pair-dedup/verify exchange width
-    tracks the quadratic in-bucket blow-up instead of the input bytes.
-    Job (2) also MATERIALIZES the persisted band table at declare
-    time; callers that only inspect the plan and never execute or
+    **Construction-time (eager) job** — declaring this operator runs
+    ONE driver-side Spark job before any caller action, the same
+    accepted plan-build pattern as q_knn_ivf's centroids and
+    semantic_dedup's seeds: the r13 verify-width sizing agg — one
+    single-row aggregation over the persisted band table (sum
+    c*(c-1)/2 over bucket sizes) that prices the candidate-pair volume
+    so the pair-dedup/verify exchange width tracks the quadratic
+    in-bucket blow-up instead of the input bytes.  The job also
+    MATERIALIZES the persisted band table at declare time; callers that only inspect the plan and never execute or
     release the result (via ``dedup.release_cached``) keep that cache
     in executor memory.  A lazy alternative (AQE coalescing over a
     cap-width exchange) was considered and rejected: the engine's
@@ -632,91 +573,6 @@ def embedding_neardup_pairs_lsh(
 
     if validate:
         df = valid_embeddings(df)
-    # work-proportional gate (VERDICT r8 #2): on a dup-free corpus the
-    # collapse is the identity, so skip its groupBy + expansion joins
-    # entirely — the plain banding below is bit-equal to the collapsed
-    # form when no duplicate group exists (regardless of max_bucket:
-    # identity collapse means reps == members)
-    if _exact_dup_probe(df, "embedding"):
-        # r14 (guide §2.3/§2.4, same cut as dedup._collapsed_graph):
-        # (rep, group size) per member via ONE window over the vector
-        # fingerprint — one scan + one keyed exchange where the old
-        # groupBy + join-back paid two scans, two exchanges and a
-        # corpus-sized SMJ; group rows are a filter over the same
-        # cached frame
-        wfp = Window.partitionBy("__f1", "__f2")
-        member = (
-            df.select(
-                F.col("vec_id").alias("__mid"),
-                F.xxhash64(F.col("embedding")).alias("__f1"),
-                F.xxhash64(F.lit(1), F.col("embedding")).alias("__f2"),
-            )
-            .select(
-                "__mid",
-                F.min("__mid").over(wfp).alias("__rep"),
-                F.count(F.lit(1)).over(wfp).alias("__n"),
-            )
-            .persist()
-        )
-        groups = member.filter(F.col("__mid") == F.col("__rep")).select(
-            "__rep", "__n"
-        )
-        reps = df.join(
-            groups.select(F.col("__rep").alias("vec_id")), "vec_id", "left_semi"
-        )
-        # representatives hold no duplicates by construction: plain
-        # banding, no second probe
-        rep_pairs = _lsh_pairs(reps, max_bucket)
-        ma, mb = member.alias("ma"), member.alias("mb")
-        cross = (
-            rep_pairs
-            .join(ma, rep_pairs["id_a"] == F.col("ma.__rep"))
-            .join(mb, rep_pairs["id_b"] == F.col("mb.__rep"))
-            .select(
-                F.least(F.col("ma.__mid"), F.col("mb.__mid")).alias("id_a"),
-                F.greatest(F.col("ma.__mid"), F.col("mb.__mid")).alias("id_b"),
-                F.col("score"),
-            )
-        )
-        # within-group pairs: identical vectors always co-bucket; the
-        # score is the self-cosine of the shared bytes (NOT a literal
-        # 1.0 — sqrt(s)*sqrt(s) != s in general, and the ANSI twin
-        # computes the same fold)
-        self_scored = (
-            df.join(groups.filter(F.col("__n") > 1)
-                    .select(F.col("__rep").alias("vec_id")), "vec_id", "left_semi")
-            .select(
-                F.col("vec_id").alias("__rep"),
-                (dot(F.col("embedding"), F.col("embedding"))
-                 / (norm(F.col("embedding")) * norm(F.col("embedding"))))
-                .alias("score"),
-            )
-            .filter(F.col("score") >= 0.35)
-        )
-        within = (
-            self_scored
-            .join(ma, "__rep")
-            .join(mb, "__rep")
-            .filter(F.col("ma.__mid") < F.col("mb.__mid"))
-            .select(
-                F.col("ma.__mid").alias("id_a"),
-                F.col("mb.__mid").alias("id_b"),
-                "score",
-            )
-        )
-        out = cross.unionByName(within)
-        return _attach_cached(
-            out, [member] + getattr(rep_pairs, "_cached_deps", [])
-        )
-    return _lsh_pairs(df, max_bucket)
-
-
-def _lsh_pairs(df: DataFrame, max_bucket: int | None) -> DataFrame:
-    """The plain banding of :func:`embedding_neardup_pairs_lsh`,
-    without the exact-duplicate collapse: band, pair within buckets,
-    verify the exact cosine."""
-    from .dedup import _attach_cached
-
     cached = []
     # r13 (optimization, guide §2.2): guarded input-sized fan before
     # the Arrow bucket kernel — a single-row-group embeddings file
@@ -965,33 +821,6 @@ def semantic_dedup(
     in-cell exactness contract), so ``max_cell=None`` (default) is
     the paper-faithful exact form.
 
-    The exact-duplicate collapse maps BYTE-IDENTICAL vectors (128
-    bits of seeded xxhash64 over the array) to one representative
-    before assignment — the embedding twin of
-    ``dedup.verified_neardup_clusters``'s clique collapse: m exact
-    copies of a vector are an m-clique of cosine-1.0 pairs that teach
-    label propagation nothing, and on re-render/re-crawl-heavy corpora
-    they dominate both the pair stream and the propagation edge table
-    (measured on the 50x replica's 50-copy vectors: the capped run's
-    residual ~95 s was entirely this graph).  Output-equivalent to the
-    uncollapsed unbounded form: copies share cell, ``cent_cos`` and
-    every pairwise score, so components expand 1:1, ``cluster_id``
-    stays the member-min id and the keep rule ranks identically.
-    Zero-norm vectors never pair (NaN cosine) and are excluded from
-    the collapse's own-clique logic, exactly as they fall out of the
-    pair path.  With ``max_cell`` the combination is RECALL-BETTER
-    than uncollapsed+capped (copies merge regardless of subcell
-    scatter), not bit-equal to it.
-
-    r9 (VERDICT r8 #2): the collapse is GATED on a build-time
-    duplicate-ratio probe (:func:`_exact_dup_probe`) so its cost is
-    work-proportional — a dup-free corpus (the common case outside
-    re-crawl pipelines; also the sf0.1 bench data, where the
-    unconditional pass doubled this operator's steady wall for zero
-    collapsed rows) skips the fingerprint groupBy and both expansion
-    joins and runs the plain plan, which produces the identical
-    output when no duplicate group exists.
-
     ``validate=True`` (r12, VERDICT r11 #5 — the one cosine
     entry-point the r11 pass missed) applies :func:`valid_embeddings`
     at the gate, matching its three sibling entry-points: a
@@ -1004,11 +833,9 @@ def semantic_dedup(
 
     Output: ``(id, cell, cluster_id, n_members, keep)`` for every
     member of a duplicate group; singletons never enter the pair graph
-    and are implicit keeps (``dedup.neardup_clusters`` contract).  An
-    engaged collapse persists its member table and attaches it as a
-    cached dep (release via ``dedup.release_cached``).
+    and are implicit keeps (``dedup.neardup_clusters`` contract).
     """
-    from .dedup import _attach_cached, neardup_clusters
+    from .dedup import neardup_clusters
 
     import math
 
@@ -1026,53 +853,9 @@ def semantic_dedup(
     id_hash = F.conv(
         F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
     ).cast("long")
-    # seeds ALWAYS sample the full base (not the collapsed reps): the
-    # seed rule is part of the operator's deterministic contract, and
-    # sampling reps instead would move centroids — breaking the
-    # collapse's output-equivalence argument
     seeds = (
         base.orderBy(id_hash.asc(), F.col("id").asc()).limit(8).collect()
     )
-    groups = member = None
-    # work-proportional gate (VERDICT r8 #2): zero duplicate groups ->
-    # the collapse is the identity map -> the plain path below produces
-    # the identical output without the fingerprint groupBy or the
-    # expansion joins.  The probe is one narrow agg job at plan-build
-    # time (see _exact_dup_probe).
-    collapse = _exact_dup_probe(base, "v")
-    if collapse:
-        # 128-bit seeded hash of the raw vector: copies collapse to the
-        # min-id representative; the (fp, id) exchange never carries
-        # vectors (exact_dedup discipline).  r14 (guide §2.3/§2.4):
-        # (rep, group size, group norm) per member via ONE window over
-        # the fingerprint instead of groupBy + join-back — one scan and
-        # one keyed exchange, not two of each plus an SMJ; group rows
-        # are the id == rep filter of the same frame.  Persisted: the
-        # groups, lone and sizes branches and the member expansion all
-        # read it, and each cold read would rerun the window exchange
-        # (same as dedup._collapsed_graph).
-        wfp = Window.partitionBy("__f1", "__f2")
-        member = (
-            base.select(
-                "id",
-                F.xxhash64(F.col("v")).alias("__f1"),
-                F.xxhash64(F.lit(1), F.col("v")).alias("__f2"),
-                F.col("__vn"),
-            )
-            .select(
-                "id",
-                F.min("id").over(wfp).alias("__rep"),
-                F.count(F.lit(1)).over(wfp).alias("__n"),
-                F.min("__vn").over(wfp).alias("__gn"),
-            )
-            .persist()
-        )
-        groups = member.filter(F.col("id") == F.col("__rep")).select(
-            "__rep", "__n", "__gn"
-        )
-        base = base.join(
-            groups.select(F.col("__rep").alias("id")), "id", "left_semi"
-        )
     C = [list(r.v) for r in sorted(seeds, key=lambda r: r.id)]
     # Norms factored ONCE (r6): interpreted HOF lambdas are not
     # constant-folded nor CSE'd, so a cosine inlined per centroid
@@ -1150,59 +933,17 @@ def semantic_dedup(
         .filter(F.col("score") >= 0.32)
     )
     comp = neardup_clusters(pairs.select("id_a", "id_b"))
-    if collapse:
-        # expand representative components back to every copy: copies
-        # share cell, cent_cos and all pair scores, so cluster_id (min
-        # member id: each rep is its group's min) and the keep ranking
-        # reproduce the uncollapsed output exactly; exact-copy groups
-        # (n >= 2, nonzero norm) whose rep has no fuzzy edge are their
-        # own cosine-1.0 cliques, zero-norm groups never pair
-        comp_r = comp.select(F.col("id").alias("__rep"), "cluster_id")
-        sizes = (
-            comp_r.join(groups.select("__rep", "__n"), "__rep")
-            .groupBy("cluster_id")
-            .agg(F.sum("__n").alias("n_members"))
-        )
-        # r14 (guide §2.4): per-rep info (graph reps with cluster+size,
-        # lone exact-copy groups as self-clusters) unions on the
-        # metadata-sized side first; members expand through ONE join
-        # instead of one per branch (same cut as
-        # dedup.verified_neardup_clusters)
-        lone = (
-            groups.filter((F.col("__n") >= 2) & (F.col("__gn") > 0))
-            .join(comp_r.select("__rep"), "__rep", "left_anti")
-            .select(
-                "__rep",
-                F.col("__rep").alias("cluster_id"),
-                F.col("__n").alias("n_members"),
-            )
-        )
-        rep_info = comp_r.join(sizes, "cluster_id").select(
-            "__rep", "cluster_id", "n_members"
-        ).unionByName(lone)
-        members = (
-            member.select("id", "__rep")
-            .join(rep_info, "__rep")
-            .join(
-                assigned.select(
-                    F.col("id").alias("__rep"), "cell", "cent_cos"
-                ),
-                "__rep",
-            )
-        )
-    else:
-        members = comp.join(assigned.select("id", "cell", "cent_cos"), "id")
+    members = comp.join(assigned.select("id", "cell", "cent_cos"), "id")
     wk = Window.partitionBy("cluster_id").orderBy(
         F.col("cent_cos").asc(), F.col("id").asc()
     )
-    out = members.select(
+    return members.select(
         "id",
         "cell",
         "cluster_id",
         "n_members",
         (F.row_number().over(wk) == 1).alias("keep"),
     )
-    return _attach_cached(out, [member]) if collapse else out
 
 
 def semantic_contamination(

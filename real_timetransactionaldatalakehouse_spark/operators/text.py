@@ -871,9 +871,9 @@ def vocab_coverage(
     from .sampling import _global_cumsum
 
     counts = token_counts(df)
+    # descending frequency: rank by -n ascending, ties by token
     ranked, _, total = _global_cumsum(
-        counts, "n",
-        [("n", "desc"), ("token", "asc")],
+        counts, "n", [-F.col("n"), F.col("token")]
     )
     # min pos satisfying the coverage test; cum is monotone in pos, so
     # min(cum | test) is the running total AT that pos

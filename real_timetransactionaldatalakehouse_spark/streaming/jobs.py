@@ -184,23 +184,19 @@ def dims_scd1_stream(
     spark = stream_df.sparkSession
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..operators.relational import dedup_latest
-
         updates = batch.filter(F.col("op").isin("c", "u")).drop("op")
         updates.persist()
         try:
             if updates.isEmpty():
                 return
-            if not tablefmt.is_versioned(target_path):
-                tablefmt.write_version(
-                    dedup_latest(updates, key_cols, order_col), target_path
-                )
-                return
+            # the first batch merges into an empty table of its schema
+            target = (
+                tablefmt.read_table(spark, target_path)
+                if tablefmt.is_versioned(target_path)
+                else spark.createDataFrame([], updates.schema)
+            )
             tablefmt.write_version(
-                merge_upsert(
-                    tablefmt.read_table(spark, target_path), updates,
-                    key_cols, order_col=order_col,
-                ),
+                merge_upsert(target, updates, key_cols, order_col=order_col),
                 target_path,
             )
         finally:
@@ -320,10 +316,6 @@ def neardup_ingest_stream(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     blocking: bool = True,
 ):
     """Streaming near-dup-free corpus ingestion — the Kappa shape of
@@ -364,19 +356,13 @@ def neardup_ingest_stream(
         survivors = batch.filter(
             F.col(text_col).isNotNull()
         ).dropDuplicates([text_col])
-        survivors = D.drop_near_duplicates(
-            survivors, text_col, id_col,
-            jaccard_threshold=jaccard_threshold,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        )
+        survivors = D.drop_near_duplicates(survivors, text_col, id_col)
         banded = D.minhash_banded(
             survivors.select(id_col, text_col), text_col, id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
         ).persist()
         try:
             _ingest_batch(
-                spark, survivors, banded, corpus_path, index_path,
-                id_col, num_hashes, jaccard_threshold,
+                spark, survivors, banded, corpus_path, index_path, id_col,
             )
         finally:
             # T8 discipline: a failed write must not leak the persisted
@@ -387,15 +373,15 @@ def neardup_ingest_stream(
             D.release_cached(survivors)
 
     def _ingest_batch(spark, survivors, banded, corpus_path, index_path,
-                      id_col, num_hashes, jaccard_threshold):
+                      id_col):
         try:
             idx = spark.read.parquet(index_path)
         except Exception:
             idx = None
         if idx is not None:
-            est = D._sig_agreement_est(
-                F.col("sig"), F.col("__hist_sig"), num_hashes
-            )
+            # minhash_banded's 32 hashes; the same 0.5 Jaccard gate as
+            # the in-batch pass
+            est = D._sig_agreement_est(F.col("sig"), F.col("__hist_sig"), 32)
             dup_ids = (
                 banded.join(
                     idx.select(
@@ -403,7 +389,7 @@ def neardup_ingest_stream(
                     ),
                     ["band", "bhash"],
                 )
-                .filter(est >= jaccard_threshold)
+                .filter(est >= 0.5)
                 .select(F.col("id").alias(id_col))
                 .distinct()
             )

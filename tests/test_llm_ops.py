@@ -189,7 +189,7 @@ def test_minhash_verified_exact_jaccard(docs):
     3-gram-shingle space the estimator targets) and still recover the
     injected mutants."""
     full = _with_mutants(docs)
-    verified = D.minhash_verified_neardup_pairs(full, jaccard_threshold=0.5)
+    verified = D.minhash_verified_neardup_pairs(full)
     got = {(r.id_a, r.id_b): r.jaccard for r in verified.collect()}
     expected = {(i, i + 200000) for i in range(20)}
     hits = expected & set(got)
@@ -197,7 +197,7 @@ def test_minhash_verified_exact_jaccard(docs):
     # exact-value spot check against the direct 3-shingle jaccard
     sh = full.filter(
         (F.col("doc_id") < 5) | ((F.col("doc_id") >= 200000) & (F.col("doc_id") < 200005))
-    ).select("doc_id", F.array_distinct(D.word_shingles("text", 3)).alias("s"))
+    ).select("doc_id", F.array_distinct(D.word_shingles("text")).alias("s"))
     a, b = sh.alias("a"), sh.alias("b")
     direct = {
         (r.id_a, r.id_b): r.jaccard
@@ -579,7 +579,7 @@ def test_drop_near_duplicates_keeps_cluster_keeper(docs):
     nat_losers = {
         r.id
         for r in D.neardup_clusters(
-            D.minhash_verified_neardup_pairs(docs, jaccard_threshold=0.5)
+            D.minhash_verified_neardup_pairs(docs)
         ).filter(F.col("id") != F.col("cluster_id")).collect()
     }
     base_ids = {r.doc_id for r in docs.select("doc_id").collect()}
@@ -622,7 +622,7 @@ def test_verified_clusters_collapse_equivalence(docs):
     want = {
         r.id: (r.cluster_id, r.n_members)
         for r in D.neardup_clusters(
-            D.minhash_verified_neardup_pairs(corpus, jaccard_threshold=0.5)
+            D.minhash_verified_neardup_pairs(corpus)
         ).collect()
     }
     assert got == want
@@ -1017,6 +1017,51 @@ def test_vocab_coverage_values(spark):
     assert got == {50: (2, 7), 90: (3, 9), 99: (4, 10)}
 
 
+def test_vocab_coverage_multi_bucket_matches_python(spark, monkeypatch):
+    """The coverage curve ranks terms by the NEGATED count (descending
+    frequency, ties by token) through the literal-boundary prefix sum.
+    With the bucket floor patched low, the negated key spans several
+    buckets, and the curve must still equal a Python reference."""
+    from real_timetransactionaldatalakehouse_spark.operators import (
+        relational as R,
+    )
+    from real_timetransactionaldatalakehouse_spark.operators.text import (
+        vocab_coverage,
+    )
+
+    # 600 terms with counts 1..13: many ties, so the token order matters
+    counts = {f"t{i:03d}": 1 + (i * 7919) % 13 for i in range(600)}
+    df = spark.createDataFrame(
+        [(i, " ".join([tok] * n)) for i, (tok, n) in enumerate(counts.items())],
+        "doc_id long, text string",
+    )
+    total = sum(counts.values())
+    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+    want = {}
+    for t in (50, 90, 99):
+        cum = 0
+        for pos, (_tok, n) in enumerate(ranked, 1):
+            cum += n
+            if cum * 100 >= t * total:
+                want[t] = (pos, cum)
+                break
+    sampled, sample = [], R._sample_boundaries
+
+    def spy(*args):
+        sampled.append(sample(*args))
+        return sampled[-1]
+
+    monkeypatch.setattr(R, "_MIN_BUCKET_ROWS", 64)
+    monkeypatch.setattr(R, "_sample_boundaries", spy)
+    got = {r.target_pct: (r.n_terms, r.tokens_covered)
+           for r in vocab_coverage(df).collect()}
+    assert sampled and sampled[0], "the vocabulary must span several buckets"
+    # the boundaries are negated counts: the first bucket holds the most
+    # frequent terms
+    assert all(b[0] < 0 for b in sampled[0]), sampled[0]
+    assert got == want
+
+
 def test_split_leakage_finds_cross_split_neardups(spark, sf_small):
     """Mutant docs hash to other buckets than their originals, so the
     audit must surface at least one cross-split near-dup pair; every
@@ -1046,9 +1091,8 @@ def test_split_leakage_finds_cross_split_neardups(spark, sf_small):
     }
     verified = {
         tuple(sorted((r.id_a, r.id_b)))
-        for r in D.minhash_verified_neardup_pairs(
-            corpus, jaccard_threshold=0.5
-        ).select("id_a", "id_b").collect()
+        for r in D.minhash_verified_neardup_pairs(corpus)
+        .select("id_a", "id_b").collect()
     }
     for r in leaks:
         assert split_of[r.id_a] != split_of[r.id_b]
@@ -1146,35 +1190,6 @@ def test_prefix_sum_family_stable_under_cache_drop(spark, sf_small):
         assert before[k], f"{k} returned no rows"
 
 
-def test_embed_neardup_lsh_exact_collapse_equivalence(spark, sf_small):
-    """The exact-duplicate collapse must be bit-equal to the plain
-    banding on a duplicate-heavy corpus (every vector given one exact
-    copy with a shifted id): same pairs, same fold scores - copies
-    share every band bucket and every expanded pair's score is the
-    same arithmetic over the same vector bytes."""
-    from real_timetransactionaldatalakehouse_spark.operators import (
-        similarity as S,
-    )
-
-    emb = load_table(spark, sf_small, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    dup = emb.unionByName(
-        emb.select((F.col("vec_id") + 10_000_000).alias("vec_id"),
-                   "embedding")
-    )
-    plain = {(r.id_a, r.id_b): r.score for r in
-             S._lsh_pairs(dup, None).collect()}
-    fast = {(r.id_a, r.id_b): r.score for r in
-            S.embedding_neardup_pairs_lsh(dup).collect()}
-    assert plain and fast
-    assert plain == fast  # keys AND bit-identical scores
-    # every duplicate pair must be present with its self-cosine
-    n_groups = emb.count()
-    within = [(a, b) for (a, b) in fast if b - a == 10_000_000]
-    assert len(within) == n_groups
-
-
 def test_embed_neardup_lsh_max_bucket(spark, sf_small):
     """Hot-bucket split cap: a cap above every bucket size is a no-op
     (bit-equal output); a tiny cap yields a SUBSET of the uncapped
@@ -1199,6 +1214,56 @@ def test_embed_neardup_lsh_max_bucket(spark, sf_small):
     for k, v in capped.items():
         assert v == base[k]
     assert capped, "tiny cap still finds in-subcell pairs"
+
+
+def test_vector_operators_on_exact_copies(spark, sf_small):
+    """Byte-identical vector copies go through the plain paths.  The
+    LSH operator pairs every two copies with the vector's self-cosine
+    (the same fold over the same bytes); semantic dedup with no cap
+    puts each copy group in one cluster, and every cluster keeps one
+    member; zero vectors never pair."""
+    emb = load_table(spark, sf_small, "embeddings").filter(
+        F.col("vec_id") < 300
+    ).select("vec_id", "embedding")
+    copies = emb.filter(F.col("vec_id") < 40).select(
+        (F.col("vec_id") + 700000).alias("vec_id"), "embedding"
+    )
+    copies2 = emb.filter(F.col("vec_id") < 10).select(
+        (F.col("vec_id") + 800000).alias("vec_id"), "embedding"
+    )
+    corpus = emb.unionByName(copies).unionByName(copies2)
+    v = F.col("embedding")
+    self_cos = {
+        r.vec_id: r.s
+        for r in emb.filter(F.col("vec_id") < 40).select(
+            "vec_id", (S.dot(v, v) / (S.norm(v) * S.norm(v))).alias("s")
+        ).collect()
+    }
+    groups = {i: [i, i + 700000] + ([i + 800000] if i < 10 else [])
+              for i in range(40)}
+
+    pairs = {(r.id_a, r.id_b): r.score
+             for r in S.embedding_neardup_pairs_lsh(corpus).collect()}
+    for i, ids in groups.items():
+        for a in ids:
+            for b in ids:
+                if a < b:
+                    assert pairs.get((a, b)) == self_cos[i], (a, b)
+
+    dim = len(emb.first().embedding)
+    zeros = spark.createDataFrame(
+        [(900000, [0.0] * dim), (900001, [0.0] * dim)],
+        "vec_id long, embedding array<double>",
+    ).select("vec_id", F.col("embedding").cast(emb.schema["embedding"].dataType))
+    rows = S.semantic_dedup(corpus.unionByName(zeros)).collect()
+    cluster = {r.id: r.cluster_id for r in rows}
+    assert 900000 not in cluster and 900001 not in cluster
+    for ids in groups.values():
+        assert len({cluster.get(x) for x in ids}) == 1 and ids[0] in cluster, ids
+    keeps: dict = {}
+    for r in rows:
+        keeps[r.cluster_id] = keeps.get(r.cluster_id, 0) + int(r.keep)
+    assert set(keeps.values()) == {1}
 
 
 def test_minhash_tolerates_null_text(spark):
@@ -1329,8 +1394,7 @@ def test_minhash_null_text_emits_no_rows(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     banded = D.minhash_banded(df, num_hashes=8, bands=4)
     assert banded.filter(F.col("id").isin(1, 2)).count() == 0
-    pairs = D.minhash_neardup_pairs(df, num_hashes=8, bands=4,
-                                    jaccard_threshold=0.1)
+    pairs = D.minhash_neardup_pairs(df, jaccard_threshold=0.1)
     ids = {x for r in pairs.collect() for x in (r.id_a, r.id_b)}
     assert 1 not in ids and 2 not in ids
     # the real near-dup pair still surfaces
@@ -1346,29 +1410,11 @@ def test_collapsed_graph_keeps_null_text_docs_singletons(spark):
             (4, "alpha beta gamma delta epsilon"),
             (5, "zeta eta theta iota kappa")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(num_hashes=8, bands=4)
-    assert D.neardup_losers(df, **kw).collect() == []
+    assert D.neardup_losers(df).collect() == []
     assert D.verified_neardup_clusters(df).collect() == []
     keys = {r.doc_id: r["__cluster_key"]
             for r in D.neardup_cluster_keys(df).collect()}
     assert keys == {i: i for i in range(1, 6)}
-
-
-def test_semantic_dedup_collapse_persists_member_table(spark):
-    """The collapse's member table feeds the group, lone, size and
-    member-expansion branches, so an engaged collapse persists it once
-    and attaches it as a cached dep that release_cached frees."""
-    rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
-            (3, [0.0, 1.0, 0.0]), (4, [0.0, 0.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = S.semantic_dedup(df)
-    deps = getattr(out, "_cached_deps", [])
-    member = [d for d in deps if {"__rep", "__n", "__gn"} <= set(d.columns)]
-    assert len(member) == 1 and member[0].is_cached
-    got = {r.id: (r.cluster_id, r.n_members) for r in out.collect()}
-    assert got == {1: (1, 2), 2: (1, 2)}
-    D.release_cached(out)
-    assert not member[0].is_cached
 
 
 def test_valid_embeddings_enforces_cosine_contract(spark):
@@ -1508,7 +1554,7 @@ def test_leakage_safe_split_is_leakage_free_by_construction(spark, docs):
     got = {r.doc_id: r.split for r in out.collect()}
     assert len(got) == corpus.count()
     # verified near-dup pairs must not straddle
-    pairs = D.minhash_verified_neardup_pairs(corpus, jaccard_threshold=0.5)
+    pairs = D.minhash_verified_neardup_pairs(corpus)
     straddle = [
         (r.id_a, r.id_b) for r in pairs.collect()
         if got[r.id_a] != got[r.id_b]

@@ -579,7 +579,7 @@ def test_neardup_ingest_stream_drops_cross_batch_dups(spark, tmp_path):
     stream = file_stream(
         spark, src, spark.createDataFrame([], "doc_id long, text string").schema
     )
-    neardup_ingest_stream(stream, corpus, index, ckpt, jaccard_threshold=0.5)
+    neardup_ingest_stream(stream, corpus, index, ckpt)
 
     kept = {r.doc_id for r in spark.read.parquet(corpus).collect()}
     assert 1 in kept and 2 in kept and 12 in kept
@@ -594,7 +594,7 @@ def test_neardup_ingest_stream_drops_cross_batch_dups(spark, tmp_path):
     stream2 = file_stream(
         spark, src, spark.createDataFrame([], "doc_id long, text string").schema
     )
-    neardup_ingest_stream(stream2, corpus, index, ckpt, jaccard_threshold=0.5)
+    neardup_ingest_stream(stream2, corpus, index, ckpt)
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == kept
 
 

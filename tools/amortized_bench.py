@@ -33,7 +33,10 @@ but the replica duplicates TEXT N-fold — every document gains N-1
 exact copies, so near-dup queries measure the degenerate-duplicate
 path (bucket caps and pair generation under N-cliques).  That is a
 legitimate stress (real crawls are full of exact dups) but not the
-same workload as N-times-more UNIQUE text.  Structurally quadratic
+same workload as N-times-more UNIQUE text.  The same holds for the
+embeddings: every vector gains N-1 byte-identical copies, and the
+vector operators have no exact-copy shortcut, so q_embed_neardup_lsh
+and q_semdedup pay the N-clique pair load.  Structurally quadratic
 oracles (bench.ORACLE_SKIP) are never run here.
 """
 
